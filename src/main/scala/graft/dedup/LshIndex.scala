@@ -3,7 +3,6 @@ package graft.dedup
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.similarity.IvfCommon
 import graft.store.PartitionedStore
 
 /** A PERSISTED, incrementally-maintained MinHash-LSH dedup index — the op
@@ -14,7 +13,7 @@ import graft.store.PartitionedStore
   * re-derives the corpus's band buckets per batch, O(corpus) compute every
   * delivery; this persists the exploded (band, bh, doc) bucket rows once
   * and maintains them, completing the maintained-index story the ANN side
-  * already has ([[graft.similarity.IvfIndex]]): dedup against 100 TB of
+  * already has ([[graft.similarity.IvfCore]]): dedup against 100 TB of
   * history costs O(batch) per delivery, not O(history).
   *
   * Layout: a [[PartitionedStore]] keyed by (band, bh) — the bucket IS the
@@ -74,7 +73,7 @@ final class LshIndex(val spark: SparkSession, val root: String,
     val touched = store.touchedBy(b)
     if (touched.isEmpty) return Nil
     val existing = store.readPartitions(touched).select(col("doc")).distinct()
-    val guarded = IvfCommon.guardReplays(b, existing, "doc")
+    val guarded = PartitionedStore.guardReplays(b, existing, "doc")
       .select(col("band"), col("bh"), col("doc"))
     store.append(touched, guarded)
     touched
@@ -86,13 +85,12 @@ final class LshIndex(val spark: SparkSession, val root: String,
     * read, anti-joined and rewritten. Absent ids fail loudly unless
     * waived. Returns the number of index ROWS removed (≈ bands × docs). */
   def remove(victims: DataFrame, requirePresent: Boolean = true): Long =
-    IvfCommon.removeFrom(store, bucketsOf(victims), "doc",
+    store.removeIds(bucketsOf(victims), "doc",
       Seq(col("band"), col("bh"), col("doc")), requirePresent)
 
   /** Compact partitions fragmented past `maxDirs` append dirs
-    * ([[graft.similarity.IvfIndex.compact]]'s contract). */
-  def compact(maxDirs: Int = 1): Seq[Int] =
-    IvfCommon.compactStore(store, maxDirs)
+    * ([[PartitionedStore.compact]]). */
+  def compact(maxDirs: Int = 1): Seq[Int] = store.compact(maxDirs)
 
   /** Candidate duplicate pairs of a new batch AGAINST the index: distinct
     * (corpus_doc, new_doc) sharing ≥1 band bucket — the exact output of

@@ -38,25 +38,17 @@ object AnnQueries {
     val append = e.filter(col("vec_id") % 10 === 9)
     val erase = e.filter(col("vec_id") % 10 === 5)
     val batch = e.filter(col("vec_id") % 10 === 0)
-    if (pq) {
-      // the PQ-coded flavor (q:dd21): same lifecycle, (cell,id,code)-only
-      // candidate scan, exhaustive rerank makes the threshold exact
-      val idx = new graft.similarity.IvfPqIndex(s,
-        graft.util.Scratch.dir(scratch), nPartitions = nPartitions,
-        m = 8, k = 16)
-      idx.build(base, cents)
-      idx.append(append, cents, maxDriftRatio = 4.0)
-      idx.remove(erase, cents)
-      idx.neighborsWithin(batch, cents, minSim = 0.30, nprobe = nprobe,
-        rerank = Int.MaxValue)
-    } else {
-      val idx = new graft.similarity.IvfIndex(s,
-        graft.util.Scratch.dir(scratch), nPartitions = nPartitions)
-      idx.build(base, cents)
-      idx.append(append, cents, maxDriftRatio = 4.0)
-      idx.remove(erase, cents)
-      idx.neighborsWithin(batch, cents, minSim = 0.30, nprobe = nprobe)
-    }
+    // the PQ-coded flavor (q:dd21): same lifecycle, (cell,id,code)-only
+    // candidate scan, exhaustive rerank makes the threshold exact
+    val codec: graft.similarity.CellCodec =
+      if (pq) graft.similarity.PqCodec(m = 8, k = 16)
+      else graft.similarity.RawCodec
+    val idx = new graft.similarity.IvfCore(s,
+      graft.util.Scratch.dir(scratch), nPartitions = nPartitions, codec)
+    idx.build(base, cents)
+    idx.append(append, cents, maxDriftRatio = 4.0)
+    idx.remove(erase, cents)
+    idx.neighborsWithin(batch, cents, minSim = 0.30, nprobe = nprobe)
   }
 
   /** dd20 at the SCALE config the BENCH_SCALE gate measures: cells ∝ √n
@@ -289,8 +281,9 @@ object AnnQueries {
     // would break it --------------------------------------------------------
     "st31_stream_rotating_serve" -> { (s, dir) =>
       val e = Tables.t(s, dir, "embeddings")
-      val rot = new graft.similarity.RotatingIvfIndex(s,
-        graft.util.Scratch.dir("graft_st31"), nPartitions = 8)
+      val rot = new graft.similarity.RotatingIvf(s,
+        graft.util.Scratch.dir("graft_st31"), nPartitions = 8,
+        graft.similarity.RawCodec)
       // staging the query stream and training the mid-stream retrain's
       // centroids depend only on the frozen corpus: run both concurrently
       // with the live build and the early serve batches (guide §2.6 —
@@ -323,8 +316,9 @@ object AnnQueries {
     "ann17_online_rebuild" -> { (s, dir) =>
       val e = Tables.t(s, dir, "embeddings")
       val half = e.filter(col("vec_id") % 2 === 0)
-      val rot = new graft.similarity.RotatingIvfIndex(s,
-        graft.util.Scratch.dir("graft_ann17"), nPartitions = 8)
+      val rot = new graft.similarity.RotatingIvf(s,
+        graft.util.Scratch.dir("graft_ann17"), nPartitions = 8,
+        graft.similarity.RawCodec)
       // the NEXT generation's retrain depends only on the frozen corpus —
       // train it concurrently with the live generation's build+append
       // (guide §2.6; this is the production rebuild-while-serving shape:
@@ -349,8 +343,9 @@ object AnnQueries {
     "ann18_pq_online_rebuild" -> { (s, dir) =>
       val e = Tables.t(s, dir, "embeddings")
       val half = e.filter(col("vec_id") % 2 === 0)
-      val rot = new graft.similarity.RotatingIvfPqIndex(s,
-        graft.util.Scratch.dir("graft_ann18"), nPartitions = 8, m = 8, k = 16)
+      val rot = new graft.similarity.RotatingIvf(s,
+        graft.util.Scratch.dir("graft_ann18"), nPartitions = 8,
+        graft.similarity.PqCodec(m = 8, k = 16))
       // retrain for the next generation concurrently with build+append
       // (guide §2.6 — see ann17)
       val retrain = graft.util.Async.future(graft.similarity.KMeans
@@ -359,8 +354,7 @@ object AnnQueries {
         "embedding", k = 8, iters = 3))
       rot.append(e.filter(col("vec_id") % 4 === 1), maxDriftRatio = 4.0)
       rot.rebuild(e, retrain.join())
-      rot.serve(e.filter(col("vec_id") < 8), kTop = 3, nprobe = 8,
-          rerank = Int.MaxValue)
+      rot.serve(e.filter(col("vec_id") < 8), k = 3, nprobe = 8)
         .orderBy("q_id", "rank")
     },
     // ---- ann16: the PQ-CODED maintained index — ann14's lifecycle at
@@ -378,13 +372,13 @@ object AnnQueries {
       val base = e.filter(col("vec_id") % 4 <= 1)
       val cents = graft.similarity.KMeans.train(base, "vec_id", "embedding",
         k = 8, iters = 3)
-      val idx = new graft.similarity.IvfPqIndex(s,
-        graft.util.Scratch.dir("graft_ann16"), nPartitions = 8, m = 8, k = 16)
+      val idx = new graft.similarity.IvfCore(s,
+        graft.util.Scratch.dir("graft_ann16"), nPartitions = 8,
+        graft.similarity.PqCodec(m = 8, k = 16))
       idx.build(base, cents)
       idx.append(e.filter(col("vec_id") % 4 === 2), cents, maxDriftRatio = 4.0)
       idx.append(e.filter(col("vec_id") % 4 === 3), cents, maxDriftRatio = 4.0)
-      idx.serve(e.filter(col("vec_id") < 8), cents, kTop = 3, nprobe = 8,
-          rerank = Int.MaxValue)
+      idx.serve(e.filter(col("vec_id") < 8), cents, k = 3, nprobe = 8)
         .orderBy("q_id", "rank")
     },
     // Product quantization: train 8×16 sub-codebooks (one Lloyd's job per

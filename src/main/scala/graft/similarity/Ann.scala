@@ -289,10 +289,15 @@ object Ann {
       cellCol).drop("d2")
 
   /** [[assignCells]] keeping the squared distance TO the winning cell as a
-    * `d2` column — the per-vector quantization error [[IvfIndex]] persists
+    * `d2` column — the per-vector quantization error [[IvfCore]] persists
     * so quantizer-drift detection (batch mean d2 vs train-time mean d2)
     * never re-scores the corpus. Same argmin, same tie-break, one extra
-    * double per row. */
+    * double per row.
+    *
+    * Degenerate inputs: a null vector, or one whose dimension matches no
+    * centroid, fails the job naming its id (checked inside the same
+    * projection — no extra job). Only an EMPTY centroid set yields zero
+    * rows, the contract of the old broadcast inner join. */
   def assignCellsWithDist(corpus: DataFrame, centroids: DataFrame,
       idCol: String = "vec_id", vecCol: String = "embedding",
       centId: String = "cent_id", centVec: String = "cent_vec",
@@ -303,17 +308,18 @@ object Ann {
     // corpus shuffle (see [[centsRow]])
     corpus.select(col(idCol), col(vecCol))
       .crossJoin(broadcast(centsRow(centroids, centId, centVec)))
+      // centsRow's agg always yields one row, an EMPTY array for an empty
+      // centroid frame: drop those rows (the empty-centroids contract)
+      .filter(size(col("__cs")) > 0)
       .select(col(idCol), col(vecCol),
         nearest_cell(col(vecCol), col("__cs")).as("__nc"))
-      // empty-centroids contract (ADVICE r15): the old broadcast inner
-      // join emitted zero rows for an empty centroid frame; centsRow's
-      // agg always yields one row with an empty array and nearest_cell
-      // then returns null — drop those rows so the contract is preserved
-      // (a no-op narrow filter when centroids exist: __nc is non-null for
-      // every fixed-dim vector then)
-      .filter(col("__nc").isNotNull)
       .select(col(idCol), col(vecCol),
-        col("__nc.cent").as(cellCol), col("__nc.d2").as("d2"))
+        when(col("__nc").isNotNull, col("__nc.cent")).otherwise(raise_error(
+          concat(lit("IVF assignment: the vector of id "),
+            col(idCol).cast("string"),
+            lit(" is null or does not match the centroid dimension"))))
+          .as(cellCol),
+        col("__nc.d2").as("d2"))
   }
 
   /** Serving path over a PERSISTED IVF index: `stored` is the corpus
@@ -353,7 +359,7 @@ object Ann {
     * `nprobe` nearest cells — (q_id, q_vec, cent) rows plus their schema.
     * Bounded driver state by the broadcast-query contract (≤ nprobe ×
     * |queries| rows). ONE derivation shared by [[ivfTopKPruned]] and
-    * [[IvfIndex.serve]], so the cells the store-side partition prune reads
+    * [[IvfCore.serve]], so the cells the store-side partition prune reads
     * and the cells the candidate join matches can never fork. */
   private[similarity] def collectProbes(queries: DataFrame,
       centroids: DataFrame, nprobe: Int, qId: String, qVec: String,
@@ -386,7 +392,7 @@ object Ann {
   }
 
   /** The scored-candidate half of a probed serve, shared by the ranked
-    * ([[rankOverProbes]]) and threshold ([[IvfIndex.neighborsWithin]])
+    * ([[rankOverProbes]]) and threshold ([[IvfCore.neighborsWithin]])
     * consumers: prune the stored corpus to the probed cells, equi-join the
     * broadcast probe set on the cell key, exact cosine per (query,
     * candidate) — `(q_id, c_id, sim)`. */

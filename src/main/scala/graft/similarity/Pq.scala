@@ -100,7 +100,7 @@ object Pq {
     array((0 until m).map(s => slice(vec, s * subDim + 1, subDim)): _*)
 
   /** Codebooks as a (sub, cent, cv) frame — the training join's side AND
-    * the persisted layout [[IvfPqIndex]] round-trips. */
+    * the persisted layout [[PqCodec]] round-trips. */
   private[similarity] def codebookFrame(spark: SparkSession,
       cents: IndexedSeq[IndexedSeq[Seq[Double]]]): DataFrame = {
     val rows = for {

@@ -2,7 +2,7 @@ package graft.store
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Manifest-committed, hash-partitioned keyed state — the partitioned-
@@ -265,9 +265,9 @@ final class PartitionedStore(val spark: SparkSession, val root: String,
 
   /** Per-partition data-dir count — the fragmentation metric an [[append]]
     * grows and a [[refresh]] collapses back to 1. Exposed so compaction
-    * policy (e.g. [[graft.similarity.IvfIndex.compact]]) never re-parses
-    * the manifest's private entry encoding: a change to the ';'-joined
-    * dir-list format stays inside this class. */
+    * policy ([[compact]]) never re-parses the manifest's private entry
+    * encoding: a change to the ';'-joined dir-list format stays inside
+    * this class. */
   def dirCounts(): Map[Int, Int] =
     manifest().map { case (i, e) => i -> entryDirs(e).size }
 
@@ -279,7 +279,7 @@ final class PartitionedStore(val spark: SparkSession, val root: String,
 
   /** The pinned schema currently in force — the cheap metadata accessor
     * (two small files) for callers that need column types WITHOUT
-    * planning a read over every data dir ([[graft.similarity.IvfIndex]]
+    * planning a read over every data dir ([[graft.similarity.IvfCore]]
     * resolves its cell type per serve through this). */
   def schema: org.apache.spark.sql.types.StructType = storedSchema
 
@@ -336,7 +336,13 @@ final class PartitionedStore(val spark: SparkSession, val root: String,
 
   /** Initialize: route every row to its partition, one data dir per
     * partition id (all ids present, so later refreshes can address any
-    * partition). Overwrites any existing state. */
+    * partition). Overwrites any existing state.
+    *
+    * Ordering contract: the main partitioned write below is the FIRST
+    * action on `df`. A caller may ride an `Observation` on `df` (the IVF
+    * drift baseline does), and an Observation reports the metrics of the
+    * first action that runs the plan — so any other action on `df` here
+    * (the schema-carrying empty write) must come after it. */
   def init(df: DataFrame): Unit = {
     require(keyCols.forall(df.columns.contains),
       s"state must carry the key columns $keyCols")
@@ -376,15 +382,7 @@ final class PartitionedStore(val spark: SparkSession, val root: String,
     *
     * I/O: write O(|touched partitions' rows|); nothing else moves. */
   def refresh(touched: Seq[Int], newState: DataFrame): Unit = {
-    // schema drift check BEFORE any write: a refresh whose frame decayed
-    // (e.g. a lost DECIMAL cast → DOUBLE) would otherwise COMMIT parquet
-    // the pinned-schema read path can never decode again — persistent
-    // corruption behind an "atomic" switch
-    require(newState.schema.map(f => (f.name, f.dataType)) ==
-      storedSchema.map(f => (f.name, f.dataType)),
-      s"refresh schema ${newState.schema.simpleString} does not match the " +
-        s"store's pinned schema ${storedSchema.simpleString} " +
-        "(adding columns is evolve()'s job)")
+    requirePinnedSchema("refresh", newState)
     commitTouched(touched, newState, evolvedTo = None, appendMode = false)
   }
 
@@ -393,7 +391,7 @@ final class PartitionedStore(val spark: SparkSession, val root: String,
     * data dir (the Delta-style "add file" commit), existing dirs untouched,
     * so write I/O is O(|delta|) regardless of how large the touched
     * partitions already are. That is the maintenance primitive for
-    * append-mostly state ([[graft.similarity.IvfIndex]]'s daily embedding
+    * append-mostly state ([[graft.similarity.IvfCore]]'s daily embedding
     * batches): a batch spread uniformly over every partition appends in
     * O(batch), where [[refresh]] — whose contract is FULL new content —
     * would rewrite the whole store. The next [[refresh]]/[[evolve]] of a
@@ -401,11 +399,22 @@ final class PartitionedStore(val spark: SparkSession, val root: String,
     * caller's (append does not dedup against existing rows); same atomic
     * manifest swap, version CAS, retention and crash behavior as refresh. */
   def append(touched: Seq[Int], delta: DataFrame): Unit = {
-    require(delta.schema.map(f => (f.name, f.dataType)) ==
-      storedSchema.map(f => (f.name, f.dataType)),
-      s"append schema ${delta.schema.simpleString} does not match the " +
-        s"store's pinned schema ${storedSchema.simpleString}")
+    requirePinnedSchema("append", delta)
     commitTouched(touched, delta, evolvedTo = None, appendMode = true)
+  }
+
+  /** Schema drift check BEFORE any write: a frame whose schema decayed
+    * (e.g. a lost DECIMAL cast → DOUBLE) would otherwise COMMIT parquet
+    * the pinned-schema read path can never decode again — persistent
+    * corruption behind an "atomic" switch. Names and data types must match
+    * exactly (nested nullability included, which the tree form shows). */
+  private def requirePinnedSchema(op: String, df: DataFrame): Unit = {
+    val pinned = storedSchema
+    require(df.schema.map(f => (f.name, f.dataType)) ==
+      pinned.map(f => (f.name, f.dataType)),
+      s"$op schema does not match the store's pinned schema (adding " +
+        s"columns is evolve()'s job) — $op:\n${df.schema.treeString}" +
+        s"pinned:\n${pinned.treeString}")
   }
 
   /** ADDITIVE schema evolution: commit the `touched` partitions (full new
@@ -665,6 +674,52 @@ final class PartitionedStore(val spark: SparkSession, val root: String,
       .collect().map(_.getInt(0)).toSeq.sorted
   }
 
+  /** Compact every partition whose dir list grew past `maxDirs` appends
+    * back to one dir — the OPTIMIZE lever bounding append-path read
+    * amplification. Returns the compacted ids (empty = no commit). */
+  def compact(maxDirs: Int): Seq[Int] = {
+    require(maxDirs >= 1, s"maxDirs must be >= 1: $maxDirs")
+    val frag = dirCounts().collect { case (i, n) if n > maxDirs => i }
+      .toSeq.sorted
+    if (frag.nonEmpty) refresh(frag, readPartitions(frag))
+    frag
+  }
+
+  /** Erasure by id: `routed` carries the victims' ids with their key
+    * columns (re-derived from the same inputs that placed them, so only
+    * touched partitions move). ONE id-column-pruned pass counts removed
+    * and missing ids; the only full read of the touched partitions is the
+    * refresh write itself, which keeps `storedCols`. Empty batches are
+    * 0-row no-ops. Returns the rows removed. */
+  def removeIds(routed: DataFrame, idCol: String, storedCols: Seq[Column],
+      requirePresent: Boolean): Long = {
+    val touched = touchedBy(routed)
+    if (touched.isEmpty) return 0L
+    val current = readPartitions(touched)
+    val victimIds = routed.select(col(idCol))
+    val stats = current.select(col(idCol)).withColumn("__c", lit(1))
+      .join(victimIds.distinct().withColumn("__v", lit(1)), Seq(idCol), "full")
+      .agg(
+        sum(when(col("__c").isNotNull && col("__v").isNotNull, 1L)
+          .otherwise(0L)).as("removed"),
+        sum(when(col("__c").isNull, 1L).otherwise(0L)).as("missing"))
+      .collect()(0)
+    val removed = if (stats.isNullAt(0)) 0L else stats.getLong(0)
+    val missing = if (stats.isNullAt(1)) 0L else stats.getLong(1)
+    if (requirePresent && missing > 0) {
+      // error path only: name a small sample of the absent ids
+      val sample = victimIds
+        .join(current.select(col(idCol)), Seq(idCol), "left_anti")
+        .limit(5).collect().map(_.get(0))
+      throw new IllegalArgumentException(
+        s"remove batch names $missing ids not in the index: " +
+          sample.mkString(", "))
+    }
+    refresh(touched,
+      current.join(victimIds, Seq(idCol), "left_anti").select(storedCols: _*))
+    removed
+  }
+
   // the shared walk-and-delete (fd-safe, IOException-swallowing — a
   // teardown's cleanup failure must never mask the commit error it is
   // cleaning up after)
@@ -673,6 +728,20 @@ final class PartitionedStore(val spark: SparkSession, val root: String,
 }
 
 object PartitionedStore {
+  /** The replay guard FUSED into an append's write lineage: left-join the
+    * delta onto the touched partitions' ids and poison any id that
+    * already exists, so a replayed batch fails the write loudly (the
+    * commit tears the partial down) without a separate pre-pass. */
+  def guardReplays(delta: DataFrame, existingIds: DataFrame,
+      idCol: String): DataFrame =
+    delta.join(existingIds.select(col(idCol), lit(1).as("__dup")),
+        Seq(idCol), "left")
+      .withColumn(idCol,
+        when(col("__dup").isNull, col(idCol))
+          .otherwise(raise_error(concat(
+            lit("append batch replays an id already in the index: "),
+            col(idCol).cast("string")))))
+
   // one commit monitor per normalized store root, JVM-wide: two
   // PartitionedStore instances over the same directory (the realistic
   // in-process race — e.g. two scheduled refreshes of one maintained view)

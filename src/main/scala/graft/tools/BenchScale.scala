@@ -826,10 +826,10 @@ object BenchScale {
     // BLACKOUT would show as during ≈ the whole rebuild wall time). ------
     def rotateGate(dir: String, tag: String):
         (Double, Double, Double, Double, Int) = {
-      import graft.similarity.{KMeans, RotatingIvfIndex}
+      import graft.similarity.{KMeans, RawCodec, RotatingIvf}
       val e = spark.read.parquet(s"$dir/embeddings.parquet")
-      val rot = new RotatingIvfIndex(spark,
-        graft.util.Scratch.dir(s"graft_sc_rot_$tag"), nPartitions = 8)
+      val rot = new RotatingIvf(spark,
+        graft.util.Scratch.dir(s"graft_sc_rot_$tag"), nPartitions = 8, RawCodec)
       rot.build(e, KMeans.train(e, "vec_id", "embedding", k = 8, iters = 2))
       val q = e.filter(col("vec_id") < 16)
       def serveOnce(): Double = time(rot.serve(q, k = 5, nprobe = 2).count())

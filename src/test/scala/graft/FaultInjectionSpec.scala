@@ -5,14 +5,14 @@ import java.nio.file.{Files, Path, Paths}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.similarity.{Ann, IvfIndex, KMeans, RotatingIvfIndex}
+import graft.similarity.{Ann, IvfCore, IvfIndex, KMeans, PqCodec, RawCodec, RotatingIvf}
 import graft.store.PartitionedStore
 
 /** Crash-point injection over the commit protocols: every documented
   * crash window in [[PartitionedStore]] commits (orphan `manifest.v<N>`,
   * link-before-schema ordering, sweep-after-visibility), [[IvfIndex]]
   * build (meta-invalidated-before-init) and
-  * [[graft.similarity.GenRotator]] rotate (build-before-swap,
+  * [[graft.similarity.RotatingIvf]] rebuild (build-before-swap,
   * pointer-tmp, promote-before-reclaim) is EXECUTED, not just reasoned
   * about in comments. Mechanism: the production classes expose a no-op
   * `onStep` seam after each ordered commit step; the spec's hook copies
@@ -341,7 +341,7 @@ class FaultInjectionSpec extends AnyFunSuite {
     val base = emb.filter(col("vec_id") % 2 === 0)
     val cents = KMeans.train(base, "vec_id", "embedding", k = 4, iters = 2)
     val root = Files.createTempDirectory("graft_fault_ivfpq").toString
-    val idx = new graft.similarity.IvfPqIndex(spark, root, 4, m = 8, k = 16)
+    val idx = new IvfCore(spark, root, 4, PqCodec(m = 8, k = 16))
     idx.build(base, cents)
     val baseCount = idx.store.read().count()
     val snaps = scala.collection.mutable.Map[String, Path]()
@@ -355,8 +355,8 @@ class FaultInjectionSpec extends AnyFunSuite {
 
     val q = emb.filter(col("vec_id") < 4)
     for ((step, snap) <- snaps) {
-      val s = new graft.similarity.IvfPqIndex(spark, snap.toString, 4,
-        m = 8, k = 16)
+      val s = new IvfCore(spark, snap.toString, 4,
+        PqCodec(m = 8, k = 16))
       // the window's whole point: the meta file is the ONLY path to the
       // codebook pairing (subDim rides it), so after `codebooksWritten` —
       // new codebooks on disk, stored codes still from the OLD books —
@@ -391,7 +391,7 @@ class FaultInjectionSpec extends AnyFunSuite {
     }
   }
 
-  // ---- GenRotator rotate windows ------------------------------------------
+  // ---- RotatingIvf rebuild windows ----------------------------------------
 
   test("rotate killed after EACH ordered step: the pointer resolves a " +
       "whole generation (old before the swap, new after), orphan builds " +
@@ -405,7 +405,7 @@ class FaultInjectionSpec extends AnyFunSuite {
     val q = emb.filter(col("vec_id") < 4)
     val corp1 = emb.filter(col("vec_id") % 2 === 0)
     val root = Files.createTempDirectory("graft_fault_rot").toString
-    val rot = new RotatingIvfIndex(spark, root, nPartitions = 4)
+    val rot = new RotatingIvf(spark, root, nPartitions = 4, RawCodec)
     rot.build(corp1, cents(corp1))
     val g1 = rot.currentGen()
     rot.rebuild(emb, cents(emb))
@@ -428,7 +428,7 @@ class FaultInjectionSpec extends AnyFunSuite {
 
     // -- killed after the new generation is built, before the swap ---------
     for (step <- Seq("genBuilt", "ptrWritten")) {
-      val s = new RotatingIvfIndex(spark, snaps(step).toString, 4)
+      val s = new RotatingIvf(spark, snaps(step).toString, 4, RawCodec)
       assert(s.currentGen() === g2, s"$step: pointer moved before the swap")
       assert(pairs(s.serve(q, k = 3, nprobe = 4)) === exact2,
         s"$step: old view does not serve end to end")
@@ -447,7 +447,7 @@ class FaultInjectionSpec extends AnyFunSuite {
 
     // -- killed after the swap, before the reclaim --------------------------
     locally {
-      val s = new RotatingIvfIndex(spark, snaps("promoted").toString, 4)
+      val s = new RotatingIvf(spark, snaps("promoted").toString, 4, RawCodec)
       assert(s.currentGen() === g3, "the swap IS the promote")
       assert(pairs(s.serve(q, k = 3, nprobe = 4)) === exact3)
       assert(gens(s.root) === Set(g1, g2, g3),

@@ -183,6 +183,45 @@ class IvfIndexSpec extends AnyFunSuite {
     assert(e2.getMessage.contains("not built"))
   }
 
+  test("a null or wrong-dimension vector fails build, append and remove " +
+      "naming its id; only an empty centroid set assigns 0 rows") {
+    val base = emb.filter(col("vec_id") % 2 === 0)
+    val cents = KMeans.train(base, "vec_id", "embedding", k = 4, iters = 2)
+    val badId = 1000003L
+    val nullVec = lit(null).cast(emb.schema("embedding").dataType)
+    val shortVec = slice(col("embedding"), 1, 63) // 63-d against 64-d cells
+    def withBad(df: org.apache.spark.sql.DataFrame,
+        vec: org.apache.spark.sql.Column) =
+      df.select("vec_id", "embedding").unionByName(emb.limit(1).select(
+        lit(badId).as("vec_id"),
+        vec.as("embedding")))
+    def failsNaming(op: String)(body: => Any): Unit = {
+      val e = intercept[Exception](body)
+      assert(Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null).take(8)
+        .exists(t => t.getMessage != null &&
+          t.getMessage.contains(s"vector of id $badId")),
+        s"$op: degenerate vector not named: ${e.getMessage}")
+    }
+    for ((kind, vec) <- Seq("null" -> nullVec, "63-d" -> shortVec)) {
+      failsNaming(s"build/$kind")(newIndex(4).build(withBad(base, vec), cents))
+      val idx = newIndex(4)
+      idx.build(base, cents)
+      val v = idx.store.version()
+      failsNaming(s"append/$kind")(idx.append(
+        withBad(emb.filter(col("vec_id") % 2 === 1).limit(3), vec), cents))
+      failsNaming(s"remove/$kind")(idx.remove(
+        withBad(base.limit(3), vec), cents))
+      assert(idx.store.version() === v, s"$kind: a failed op committed")
+    }
+    // the empty-centroids contract: no cell to assign to, so no rows —
+    // degenerate vectors included
+    val noCells = cents.limit(0)
+    assert(Ann.assignCellsWithDist(emb, noCells).count() === 0L)
+    assert(Ann.assignCellsWithDist(withBad(emb.limit(2), nullVec), noCells)
+      .count() === 0L)
+  }
+
   test("randomized append/remove/compact lifecycle tracks a brute-force " +
       "model (fixed seed) — exhaustive serve exact after every op") {
     val rnd = new scala.util.Random(97)

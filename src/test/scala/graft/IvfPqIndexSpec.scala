@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.similarity.{Ann, IvfPqIndex, KMeans}
+import graft.similarity.{Ann, IvfCore, KMeans, PqCodec}
 
 /** The PQ-coded maintained index (q:ann16): exhaustive config is exact
   * after appends, bounded configs keep useful recall while reading a
@@ -15,9 +15,9 @@ class IvfPqIndexSpec extends AnyFunSuite {
   private lazy val spark = TestSession.spark
   private lazy val emb = Tables.t(spark, TestSession.sf, "embeddings").cache()
 
-  private def newIndex(nPartitions: Int = 8) = new IvfPqIndex(spark,
+  private def newIndex(nPartitions: Int = 8) = new IvfCore(spark,
     Files.createTempDirectory("graft_ivfpqidx").toString, nPartitions,
-    m = 8, k = 16)
+    PqCodec(m = 8, k = 16))
 
   private def pairs(df: org.apache.spark.sql.DataFrame) =
     df.select("q_id", "c_id", "rank").collect()
@@ -96,7 +96,7 @@ class IvfPqIndexSpec extends AnyFunSuite {
     // the PQ flavor's remediation is the PQ rotator (codebooks re-freeze
     // with the quantizer), not the raw-vector one
     assert(e.getMessage.contains("drift") &&
-      e.getMessage.contains("RotatingIvfPqIndex.rebuild"))
+      e.getMessage.contains("RotatingIvf.rebuild swaps a fresh IVF-PQ build"))
     val replay = intercept[Exception] {
       idx.append(emb.filter(col("vec_id") % 2 === 0).limit(3), cents)
     }

@@ -36,6 +36,16 @@ class PartitionedRollupSpec extends AnyFunSuite {
     assert(ps0.readPartitions(Seq(0, 3)).count() === 0L)
   }
 
+  test("init's partitioned write is the first action on its frame: an " +
+      "Observation riding init counts every row") {
+    val ps = newStore()
+    val rows = (1L to 100L).map(i => (i % 7, i))
+    val obs = org.apache.spark.sql.Observation()
+    ps.init(state(rows).observe(obs, count(lit(1)).as("n")))
+    assert(obs.get("n") === rows.size.toLong)
+    assert(ps.read().count() === rows.size.toLong)
+  }
+
   test("refresh rewrites touched partitions only — untouched bytes identical") {
     val ps = newStore()
     val rows = (0L until 64L).map(i => (i, i * 10))

@@ -679,12 +679,12 @@ class PlanSpec extends AnyFunSuite {
 
   test("ann16 PQ-coded serve: the ADC scan reads codes, never raw vectors " +
       "(column-pruned), and the rerank leg fetches vectors without codes") { uncached {
-    import graft.similarity.{IvfPqIndex, KMeans}
+    import graft.similarity.{IvfCore, KMeans, PqCodec}
     val e = Tables.t(spark, TestSession.sf, "embeddings")
     val cents = KMeans.train(e, "vec_id", "embedding", k = 4, iters = 2)
-    val idx = new IvfPqIndex(spark,
+    val idx = new IvfCore(spark,
       graft.util.Scratch.dir("graft_plan_ann16"), nPartitions = 4,
-      m = 8, k = 16)
+      PqCodec(m = 8, k = 16))
     idx.build(e, cents)
     val plan = explainFormatted(idx.serve(e.filter(col("vec_id") < 4), cents,
       kTop = 3, nprobe = 2, rerank = 8))

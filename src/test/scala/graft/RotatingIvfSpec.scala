@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.similarity.{Ann, KMeans, RotatingIvfIndex, RotatingIvfPqIndex}
+import graft.similarity.{Ann, KMeans, PqCodec, RawCodec, RotatingIvf}
 
 /** Online rebuild with serving continuity (q:ann17): the pointer swap is
   * the promote, serves resolve old-or-new generations atomically (never a
@@ -30,7 +30,7 @@ class RotatingIvfSpec extends AnyFunSuite {
       "atomically; appends land in the live generation; old gens reclaimed " +
       "with one-predecessor grace") {
     val root = Files.createTempDirectory("graft_rotivf").toString
-    val rot = new RotatingIvfIndex(spark, root, nPartitions = 8)
+    val rot = new RotatingIvf(spark, root, nPartitions = 8, RawCodec)
     val half = emb.filter(col("vec_id") % 2 === 0)
     rot.build(half, KMeans.train(half, "vec_id", "embedding", k = 8, iters = 2))
     val q = emb.filter(col("vec_id") < 8)
@@ -44,7 +44,7 @@ class RotatingIvfSpec extends AnyFunSuite {
     val e = intercept[IllegalStateException] {
       rot.append(shifted, maxDriftRatio = 3.0)
     }
-    assert(e.getMessage.contains("RotatingIvfIndex.rebuild"))
+    assert(e.getMessage.contains("RotatingIvf.rebuild"))
     // the rebuild: full corpus, retrained centroids, no blackout
     rot.rebuild(emb, KMeans.train(emb, "vec_id", "embedding", k = 8, iters = 2))
     assert(rot.currentGen() !== g1)
@@ -68,8 +68,8 @@ class RotatingIvfSpec extends AnyFunSuite {
       "serves stay exact across the swap; appends land in the new " +
       "generation under its own frozen models") {
     val root = Files.createTempDirectory("graft_rotpq").toString
-    val rot = new RotatingIvfPqIndex(spark, root, nPartitions = 8,
-      m = 8, k = 16)
+    val rot = new RotatingIvf(spark, root, nPartitions = 8,
+      PqCodec(m = 8, k = 16))
     val half = emb.filter(col("vec_id") % 2 === 0)
     rot.build(half, KMeans.train(half, "vec_id", "embedding", k = 8, iters = 2))
     val q = emb.filter(col("vec_id") < 8)
@@ -109,8 +109,8 @@ class RotatingIvfSpec extends AnyFunSuite {
     val rnd = new scala.util.Random(101)
     val allIds = emb.select("vec_id").collect().map(_.getLong(0)).toVector
     val root = Files.createTempDirectory("graft_rotpq_life").toString
-    val rot = new RotatingIvfPqIndex(spark, root, nPartitions = 8,
-      m = 8, k = 16)
+    val rot = new RotatingIvf(spark, root, nPartitions = 8,
+      PqCodec(m = 8, k = 16))
     var present = allIds.filter(_ % 4 == 0).toSet
     def dfOf(ids: Set[Long]) = emb.filter(col("vec_id").isInCollection(ids))
     def retrain(ids: Set[Long]) =
@@ -165,7 +165,7 @@ class RotatingIvfSpec extends AnyFunSuite {
       "the PROMOTED generation — never silently stranded in the superseded " +
       "one") {
     val root = Files.createTempDirectory("graft_rotivf").toString
-    val rot = new RotatingIvfIndex(spark, root, nPartitions = 4)
+    val rot = new RotatingIvf(spark, root, nPartitions = 4, RawCodec)
     val half = emb.filter(col("vec_id") % 2 === 0)
     rot.build(half, KMeans.train(half, "vec_id", "embedding", k = 4, iters = 2))
     val g1 = rot.currentGen()
@@ -208,7 +208,7 @@ class RotatingIvfSpec extends AnyFunSuite {
       "writer lock, as a second writer process would) fails the append " +
       "LOUDLY naming the stranded batch — never a silent vanish") {
     val root = Files.createTempDirectory("graft_rotivf").toString
-    val rot = new RotatingIvfIndex(spark, root, nPartitions = 4)
+    val rot = new RotatingIvf(spark, root, nPartitions = 4, RawCodec)
     val half = emb.filter(col("vec_id") % 2 === 0)
     rot.build(half, KMeans.train(half, "vec_id", "embedding", k = 4, iters = 2))
     val g1 = rot.currentGen()
@@ -244,7 +244,7 @@ class RotatingIvfSpec extends AnyFunSuite {
   test("a serve racing a live rebuild reads the OLD generation or the NEW " +
       "one end-to-end — never a mix of quantizer and data") {
     val root = Files.createTempDirectory("graft_rotivf").toString
-    val rot = new RotatingIvfIndex(spark, root, nPartitions = 4)
+    val rot = new RotatingIvf(spark, root, nPartitions = 4, RawCodec)
     val a = emb.filter(col("vec_id") % 2 === 0)
     rot.build(a, KMeans.train(a, "vec_id", "embedding", k = 4, iters = 2))
     val q = emb.filter(col("vec_id") < 4)
@@ -299,17 +299,18 @@ class RotatingIvfSpec extends AnyFunSuite {
           col("q.embedding"), col("c.embedding")) >= 0.30)
       .select(col("c.vec_id").as("corpus_id"), col("q.vec_id").as("new_id")))
     assert(want.nonEmpty, "threshold too high — vacuous test")
-    val rot = new RotatingIvfIndex(spark,
-      Files.createTempDirectory("graft_rotivf_nw").toString, nPartitions = 8)
+    val rot = new RotatingIvf(spark,
+      Files.createTempDirectory("graft_rotivf_nw").toString, nPartitions = 8,
+      RawCodec)
     rot.build(corpus, KMeans.train(corpus, "vec_id", "embedding", k = 4, iters = 2))
     assert(pset(rot.neighborsWithin(batch, minSim = 0.30, nprobe = 4)) === want)
     // retrain 4 → 8 cells: the exhaustive config is exact under EITHER
     // generation, so the swap cannot show through
     rot.rebuild(corpus, KMeans.train(corpus, "vec_id", "embedding", k = 8, iters = 2))
     assert(pset(rot.neighborsWithin(batch, minSim = 0.30, nprobe = 8)) === want)
-    val rotPq = new RotatingIvfPqIndex(spark,
+    val rotPq = new RotatingIvf(spark,
       Files.createTempDirectory("graft_rotivfpq_nw").toString,
-      nPartitions = 8, m = 8, k = 16)
+      nPartitions = 8, PqCodec(m = 8, k = 16))
     rotPq.build(corpus, KMeans.train(corpus, "vec_id", "embedding", k = 4, iters = 2))
     assert(pset(rotPq.neighborsWithin(batch, minSim = 0.30, nprobe = 4,
       rerank = Int.MaxValue)) === want)
