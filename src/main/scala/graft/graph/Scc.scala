@@ -79,7 +79,7 @@ object Scc {
       // channel pair; IterTrunc's checkpoint-path counter is synchronized.
       val curE = e
       val curNodes = nodes
-      val mfF = java.util.concurrent.CompletableFuture.supplyAsync(() =>
+      val mfF = graft.util.Async.future(
         minLabels(curE, curNodes, maxHops, chansF))
       val mb = minLabels(e.select(col("v").as("u"), col("u").as("v")),
         nodes, maxHops, chansB)

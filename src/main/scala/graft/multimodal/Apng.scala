@@ -1,13 +1,14 @@
 package graft.multimodal
 
 import java.awt.image.BufferedImage
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
+import java.io.ByteArrayOutputStream
 import java.util.zip.CRC32
-
-import javax.imageio.ImageIO
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
+
+import graft.util.Blobs
+import graft.util.Blobs.{be16, be32, readBe16, readBe32}
 
 /** Animated-PNG video codec on pure JDK parts — the INTER-FRAME
   * entropy-coded format [[Gif]] (intra-frame LZW) and [[Avi]] (intra-frame
@@ -40,29 +41,16 @@ import org.apache.spark.sql.types._
   * Frame rasters ride ImageIO both ways (the [[Gif.encodeFrame]] splice
   * pattern): encode = write the patch as a standalone PNG and slice out
   * its IDAT zlib stream; decode = rebuild a standalone PNG around the
-  * frame's data (IHDR with the fcTL dims + IDAT + IEND) and `ImageIO.read`
-  * it — so compression and decompression are the JDK's real zlib, never
-  * re-implemented here. All parsing is sequential over one blob inside
-  * `mapPartitions` — narrow, batch-amortized, no shuffle.
+  * frame's data (IHDR with the fcTL dims + IDAT + IEND) and decode it
+  * with the pooled PNG reader ([[ImageIo]]) — so compression and
+  * decompression are the JDK's real zlib, never re-implemented here. All
+  * parsing is sequential over one blob on the [[Blobs]] seam — narrow, no
+  * shuffle.
   */
 object Apng {
 
   private val Signature =
     Array[Byte](0x89.toByte, 'P', 'N', 'G', '\r', '\n', 0x1a, '\n')
-
-  private def be32(v: Int): Array[Byte] = Array(
-    ((v >>> 24) & 0xff).toByte, ((v >>> 16) & 0xff).toByte,
-    ((v >>> 8) & 0xff).toByte, (v & 0xff).toByte)
-
-  private def be16(v: Int): Array[Byte] =
-    Array(((v >>> 8) & 0xff).toByte, (v & 0xff).toByte)
-
-  private def readBe32(b: Array[Byte], off: Int): Int =
-    ((b(off) & 0xff) << 24) | ((b(off + 1) & 0xff) << 16) |
-      ((b(off + 2) & 0xff) << 8) | (b(off + 3) & 0xff)
-
-  private def readBe16(b: Array[Byte], off: Int): Int =
-    ((b(off) & 0xff) << 8) | (b(off + 1) & 0xff)
 
   private def writeChunk(out: ByteArrayOutputStream, typ: String,
       data: Array[Byte]): Unit = {
@@ -91,26 +79,9 @@ object Apng {
     out.toByteArray
   }
 
-  // One PNG writer per task thread (guide §4.5; see Avi.jpegWriter — the
-  // per-call ImageIO.write walks the synchronized IIORegistry AND may
-  // route through a disk-backed stream cache). writer.write(img) with a
-  // memory-cached output is the same default-parameter encode path →
-  // byte-identical output.
-  private val pngWriter = new ThreadLocal[javax.imageio.ImageWriter] {
-    override def initialValue(): javax.imageio.ImageWriter =
-      ImageIO.getImageWritersByFormatName("png").next()
-  }
-
   /** Encode one RGBA raster via ImageIO and keep only its zlib stream. */
-  private def encodeRaster(img: BufferedImage): Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
-    val out = new javax.imageio.stream.MemoryCacheImageOutputStream(bos)
-    val w = pngWriter.get()
-    w.setOutput(out)
-    w.write(img)
-    out.close()
-    idatOf(bos.toByteArray)
-  }
+  private def encodeRaster(img: BufferedImage): Array[Byte] =
+    idatOf(ImageIo.write("png", img))
 
   // dispose/blend operator codes, per the spec
   val DisposeNone = 0
@@ -303,21 +274,7 @@ object Apng {
       be32(f.width) ++ be32(f.height) ++ Array[Byte](8, 6, 0, 0, 0))
     writeChunk(out, "IDAT", f.data)
     writeChunk(out, "IEND", Array.empty[Byte])
-    val iis = new javax.imageio.stream.MemoryCacheImageInputStream(
-      new ByteArrayInputStream(out.toByteArray))
-    val r = pngReader.get()
-    r.setInput(iis, true, true)
-    try r.read(0) finally iis.close()
-  }
-
-  // One PNG reader per task thread (guide §4.5; see pngWriter): the
-  // per-call ImageIO.read walks the synchronized IIORegistry per frame
-  // and may route through a disk-backed stream cache. A forced reader
-  // throws where ImageIO.read returned null — both degrade to the null
-  // sum in the NonFatal-guarded caller.
-  private val pngReader = new ThreadLocal[javax.imageio.ImageReader] {
-    override def initialValue(): javax.imageio.ImageReader =
-      ImageIO.getImageReadersByFormatName("png").next()
+    ImageIo.read("png", out.toByteArray)
   }
 
   /** The APNG output-buffer state machine, exact integer math throughout:
@@ -411,9 +368,10 @@ object Apng {
   /** One-pass facts + per-frame composition ([[Gif.extractVideoFrameFeatures]]'
     * shape): demux once per blob, decode every frame (composition needs
     * them all — the inter-frame point), emit one row per frame with the
-    * fcTL facts and the composed-canvas luma sum. 1 record → N rows inside
-    * mapPartitions — narrow, no shuffle. `delay_cs` is the fcTL delay in
-    * centiseconds (delay_den 0 reads as 100, per spec). */
+    * fcTL facts and the composed-canvas luma sum. 1 record → N rows on the
+    * [[Blobs]] seam — narrow, no shuffle; NULL or unparseable content
+    * contributes 0 rows. `delay_cs` is the fcTL delay in centiseconds
+    * (delay_den 0 reads as 100, per spec). */
   val FrameFeatureType: StructType = StructType(Seq(
     StructField("canvas_w", IntegerType),
     StructField("canvas_h", IntegerType),
@@ -426,29 +384,14 @@ object Apng {
     StructField("composed_luma", LongType)))
 
   def extractFrameFeatures(df: DataFrame, idCol: String,
-      contentCol: String): DataFrame = {
-    val src = df.select(org.apache.spark.sql.functions.col(idCol),
-      org.apache.spark.sql.functions.col(contentCol))
-    val idField = src.schema.head
-    implicit val enc: org.apache.spark.sql.Encoder[Row] =
-      org.apache.spark.sql.Encoders.row(StructType(
-        idField +: FrameFeatureType.fields.toSeq))
-    src.mapPartitions { it =>
-      it.flatMap { r =>
-        val bytes = r.getAs[Array[Byte]](1)
-        if (bytes == null) Iterator.empty
-        else parse(bytes) match {
-          case None => Iterator.empty
-          case Some(p) =>
-            val sums = composedLumaSums(p)
-            val n = p.frames.size.toLong
-            p.frames.iterator.zip(sums.iterator).map { case (f, s) =>
-              val den = if (f.delayDen == 0) 100 else f.delayDen
-              Row(r.get(0), p.width, p.height, n, f.idx, f.y,
-                f.delayNum * 100 / den, f.dispose, f.blend, s)
-            }
+      contentCol: String): DataFrame =
+    Blobs.explode(df, idCol, contentCol, FrameFeatureType) { bytes =>
+      parse(bytes).iterator.flatMap { p =>
+        p.frames.iterator.zip(composedLumaSums(p).iterator).map { case (f, s) =>
+          val den = if (f.delayDen == 0) 100 else f.delayDen
+          Row(p.width, p.height, p.frames.size.toLong, f.idx, f.y,
+            f.delayNum * 100 / den, f.dispose, f.blend, s)
         }
       }
-    }(enc)
-  }
+    }
 }

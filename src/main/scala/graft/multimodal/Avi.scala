@@ -1,13 +1,15 @@
 package graft.multimodal
 
 import java.awt.image.BufferedImage
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
+import java.io.ByteArrayOutputStream
 
-import javax.imageio.stream.MemoryCacheImageOutputStream
-import javax.imageio.{IIOImage, ImageIO, ImageWriteParam}
+import javax.imageio.ImageWriteParam
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
+
+import graft.util.Blobs
+import graft.util.Blobs.{le32, readLe32}
 
 /** MJPEG-in-AVI video codec on pure JDK parts — the COMPRESSED-video
   * counterpart of [[Y4m]] (which is raw planes): AVI is a RIFF container
@@ -25,21 +27,12 @@ import org.apache.spark.sql.types._
   * RIFF 'AVI ' { LIST 'hdrl' { 'avih'(56) LIST 'strl' { 'strh'(56)
   *   'strf'(40) } } LIST 'movi' { '00dc' <jpeg> ... } }
   * }}}
-  * All parsing is sequential over one blob inside `mapPartitions` —
-  * narrow, batch-amortized, no shuffle; JPEG decode runs only on the
-  * frames a sampler keeps.
+  * All parsing is sequential over one blob on the [[Blobs]] seam —
+  * narrow, no shuffle; JPEG decode runs only on the sampled frames.
   */
 object Avi {
 
   private def fourCC(s: String): Array[Byte] = s.getBytes("US-ASCII")
-
-  private def le32(v: Int): Array[Byte] = Array(
-    (v & 0xff).toByte, ((v >> 8) & 0xff).toByte,
-    ((v >> 16) & 0xff).toByte, ((v >> 24) & 0xff).toByte)
-
-  private def readLe32(b: Array[Byte], off: Int): Int =
-    (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8) |
-      ((b(off + 2) & 0xff) << 16) | ((b(off + 3) & 0xff) << 24)
 
   private def isCC(b: Array[Byte], off: Int, cc: String): Boolean =
     off + 4 <= b.length && b(off) == cc.charAt(0).toByte &&
@@ -50,37 +43,13 @@ object Avi {
     * At that quality the JDK encoder's quantization tables are all ones,
     * so a CONSTANT-luma block round-trips bit-exactly (DC-only DCT) —
     * which is what lets an external oracle predict decoded luma sums;
-    * arbitrary rasters decode with normal (lossy) JPEG error. */
-  // One JPEG writer per task thread (guide §4.5: heavyweight state once
-  // per task, not per row): the per-call `getImageWritersByFormatName`
-  // walks the synchronized IIORegistry — under a spread 32-thread encode
-  // stage the registry monitor serializes every frame (measured: mm9
-  // task-time exploding >10x under concurrency). Same writer class, same
-  // explicit-quality param per call → byte-identical output.
-  private val jpegWriter = new ThreadLocal[javax.imageio.ImageWriter] {
-    override def initialValue(): javax.imageio.ImageWriter =
-      ImageIO.getImageWritersByFormatName("jpeg").next()
-  }
-
-  // One JPEG reader per task thread (guide §4.5; see jpegWriter). A
-  // forced reader throws where ImageIO.read returned null — both degrade
-  // to the null sum in the NonFatal-guarded caller.
-  private val jpegReader = new ThreadLocal[javax.imageio.ImageReader] {
-    override def initialValue(): javax.imageio.ImageReader =
-      ImageIO.getImageReadersByFormatName("jpeg").next()
-  }
-
+    * arbitrary rasters decode with normal (lossy) JPEG error. The
+    * explicit-quality param is built per call on the pooled writer. */
   private[multimodal] def encodeJpeg(img: BufferedImage): Array[Byte] = {
-    val w = jpegWriter.get()
-    val p = w.getDefaultWriteParam
+    val p = ImageIo.writer("jpeg").getDefaultWriteParam
     p.setCompressionMode(ImageWriteParam.MODE_EXPLICIT)
     p.setCompressionQuality(1.0f)
-    val bos = new ByteArrayOutputStream()
-    val out = new MemoryCacheImageOutputStream(bos)
-    w.setOutput(out)
-    w.write(null, new IIOImage(img, null, null), p)
-    out.close()
-    bos.toByteArray
+    ImageIo.write("jpeg", img, p)
   }
 
   /** Encode payload bytes as an MJPEG AVI: byte k of the payload becomes
@@ -207,29 +176,29 @@ object Avi {
     * the first malformed chunk — a truncated tail never yields a phantom
     * frame. */
   def frames(bytes: Array[Byte], hd: Header): Iterator[(Int, Array[Byte])] =
-    new Iterator[(Int, Array[Byte])] {
-      private var pos = hd.moviStart
-      private var idx = 0
-      private var nextJpeg: Array[Byte] = advance()
-      private def advance(): Array[Byte] = {
-        while (pos + 8 <= hd.moviEnd) {
-          val size = readLe32(bytes, pos + 4)
-          if (size < 0 || pos + 8L + size > hd.moviEnd) return null
-          val isFrame = isCC(bytes, pos, "00dc") || isCC(bytes, pos, "00db")
-          val start = pos + 8
-          pos += 8 + size + (size & 1)
-          if (isFrame)
-            return java.util.Arrays.copyOfRange(bytes, start, start + size)
-        }
-        null
+    sampled(bytes, hd, everyN = 1)
+
+  /** [[frames]]' walk without the copies: (offset, size) per frame chunk. */
+  private def frameSpans(bytes: Array[Byte], hd: Header): Iterator[(Int, Int)] =
+    Iterator.unfold(hd.moviStart) { pos =>
+      if (pos + 8 > hd.moviEnd) None
+      else {
+        val size = readLe32(bytes, pos + 4)
+        if (size < 0 || pos + 8L + size > hd.moviEnd) None
+        else Some(((pos, size), pos + 8 + size + (size & 1)))
       }
-      def hasNext: Boolean = nextJpeg != null
-      def next(): (Int, Array[Byte]) = {
-        val out = (idx, nextJpeg)
-        idx += 1
-        nextJpeg = advance()
-        out
-      }
+    }.collect {
+      case (pos, size) if isCC(bytes, pos, "00dc") || isCC(bytes, pos, "00db") =>
+        (pos + 8, size)
+    }
+
+  /** (frame index, JPEG bytes) of every `everyN`-th frame; skipped frames
+    * are demuxed, never copied. */
+  private def sampled(bytes: Array[Byte], hd: Header,
+      everyN: Int): Iterator[(Int, Array[Byte])] =
+    frameSpans(bytes, hd).zipWithIndex.collect {
+      case ((start, size), k) if k % everyN == 0 =>
+        (k, java.util.Arrays.copyOfRange(bytes, start, start + size))
     }
 
   /** Container facts per AVI blob; all-null row when unparseable. */
@@ -242,51 +211,31 @@ object Avi {
   def videoFeatures(bytes: Array[Byte]): Row = parseHeader(bytes) match {
     case None => Row(null, null, null, null)
     case Some(hd) =>
-      Row(hd.width, hd.height, hd.usPerFrame, frames(bytes, hd).size.toLong)
+      Row(hd.width, hd.height, hd.usPerFrame,
+        frameSpans(bytes, hd).size.toLong)
   }
 
   def extractVideoFeatures(df: DataFrame, idCol: String,
       contentCol: String): DataFrame =
-    Multimodal.extractRowFeatures(df, idCol, contentCol, VideoFeatureType,
-      videoFeatures)
-
-  /** Real keyframe-style sampling through the generic
-    * [[Multimodal.FrameSampler]] seam: every `everyN`-th `00dc` JPEG.
-    * Demux only — no JPEG decode for skipped frames. */
-  final case class AviFrameSampler(everyN: Int) extends Multimodal.FrameSampler {
-    require(everyN > 0, "everyN must be positive")
-    def sampleBatch(batch: Seq[Array[Byte]]): Seq[Seq[(Int, Array[Byte])]] =
-      batch.map { bytes =>
-        parseHeader(bytes) match {
-          case None => Seq.empty
-          case Some(hd) => frames(bytes, hd).filter(_._1 % everyN == 0).toSeq
-        }
-      }
-  }
+    Blobs.facts(df, idCol, contentCol, VideoFeatureType)(videoFeatures)
 
   /** Per-sampled-frame features through the REAL JPEG decoder:
-    * (id, frame_idx, luma_sum) where luma_sum is the integer sum over the
-    * decoded frame's first raster band. Un-decodable frames emit a null
-    * sum (visible, not silently dropped). Demux + decode + sum run inside
-    * one mapPartitions pass — 1 record → N rows, no shuffle. */
+    * (id, frame_idx, luma_sum) for every `everyN`-th `00dc` JPEG, where
+    * luma_sum is the integer sum over the decoded frame's first raster
+    * band. Skipped frames are demuxed, never decoded; un-decodable frames
+    * emit a null sum (visible, not silently dropped). One pass on the
+    * [[Blobs]] seam — 1 record → N rows, no shuffle. */
   val FrameFeatureType: StructType = StructType(Seq(
     StructField("frame_idx", IntegerType),
     StructField("luma_sum", LongType)))
 
   def extractFrameFeatures(df: DataFrame, idCol: String, contentCol: String,
       everyN: Int = 1): DataFrame = {
-    val sampled = Multimodal.sampleFrames(df, idCol, contentCol,
-      AviFrameSampler(everyN))
-    val idField = sampled.schema.head
-    implicit val enc: org.apache.spark.sql.Encoder[Row] =
-      org.apache.spark.sql.Encoders.row(StructType(
-        idField +: FrameFeatureType.fields.toSeq))
-    sampled.mapPartitions { it =>
-      it.map { r =>
-        val jpeg = r.getAs[Array[Byte]](2) // (id, frame_idx, frame)
-        Row(r.get(0), r.getInt(1), lumaSum(jpeg))
-      }
-    }(enc)
+    require(everyN > 0, "everyN must be positive")
+    Blobs.explode(df, idCol, contentCol, FrameFeatureType) { bytes =>
+      parseHeader(bytes).iterator.flatMap(hd => sampled(bytes, hd, everyN)
+        .map { case (idx, jpeg) => Row(idx, lumaSum(jpeg)) })
+    }
   }
 
   /** Decoded first-raster-band integer sum; null for an un-decodable
@@ -296,11 +245,7 @@ object Avi {
     * kill the whole partition's task. */
   private def lumaSum(jpeg: Array[Byte]): java.lang.Long =
     try {
-      val iis = new javax.imageio.stream.MemoryCacheImageInputStream(
-        new ByteArrayInputStream(jpeg))
-      val r = jpegReader.get()
-      r.setInput(iis, true, true)
-      val img = try r.read(0) finally iis.close()
+      val img = ImageIo.read("jpeg", jpeg)
       if (img == null) null
       else {
         var s = 0L
@@ -320,36 +265,21 @@ object Avi {
     * evaluated the content lineage twice — for an MJPEG synthesis pipeline
     * that means JPEG-encoding every frame of every video TWICE — and then
     * paid a join shuffle to re-unite columns that sat in the same byte
-    * array all along. 1 record → N rows, no shuffle. */
+    * array all along. 1 record → N rows, no shuffle; NULL or unparseable
+    * content contributes 0 rows. */
   val VideoFrameFeatureType: StructType = StructType(
     VideoFeatureType.fields.toSeq ++ FrameFeatureType.fields.toSeq)
 
   def extractVideoFrameFeatures(df: DataFrame, idCol: String,
       contentCol: String, everyN: Int = 1): DataFrame = {
     require(everyN > 0, "everyN must be positive")
-    val src = df.select(org.apache.spark.sql.functions.col(idCol),
-      org.apache.spark.sql.functions.col(contentCol))
-    val idField = src.schema.head
-    implicit val enc: org.apache.spark.sql.Encoder[Row] =
-      org.apache.spark.sql.Encoders.row(StructType(
-        idField +: VideoFrameFeatureType.fields.toSeq))
-    src.mapPartitions { it =>
-      it.flatMap { r =>
-        val bytes = r.getAs[Array[Byte]](1)
-        // NULL content rows follow the unparseable-bytes contract
-        // (contribute 0 rows), not an NPE in the task
-        if (bytes == null) Iterator.empty
-        else parseHeader(bytes) match {
-          case None => Iterator.empty
-          case Some(hd) =>
-            val all = frames(bytes, hd).toIndexedSeq
-            val n = all.size.toLong
-            all.iterator.filter(_._1 % everyN == 0).map { case (idx, jpeg) =>
-              Row(r.get(0), hd.width, hd.height, hd.usPerFrame, n, idx,
-                lumaSum(jpeg))
-            }
+    Blobs.explode(df, idCol, contentCol, VideoFrameFeatureType) { bytes =>
+      parseHeader(bytes).iterator.flatMap { hd =>
+        val n = frameSpans(bytes, hd).size.toLong
+        sampled(bytes, hd, everyN).map { case (idx, jpeg) =>
+          Row(hd.width, hd.height, hd.usPerFrame, n, idx, lumaSum(jpeg))
         }
       }
-    }(enc)
+    }
   }
 }

@@ -1,8 +1,9 @@
 package graft.multimodal
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
+
+import graft.util.Blobs
 
 /** Short-time spectral analysis over the REAL WAV round-trip: a hand-rolled
   * iterative radix-2 FFT turned into a framed spectrogram — the full-spectrum
@@ -23,8 +24,8 @@ import org.apache.spark.sql.types._
   * predicts `peak_bin` (and the exact high-sample count) from the integer
   * phase formula without replicating floating point.
   *
-  * Scale shape: batched `mapPartitions` codec+DSP work, narrow — scales with
-  * input bytes only, like every mm operator. Frame rows per record are
+  * Scale shape: per-record codec+DSP work on the [[Blobs]] seam, narrow —
+  * scales with input bytes only, like every mm operator. Frame rows per record are
   * bounded by payload length / FrameLen (no unbounded explode).
   */
 object Fft {
@@ -136,38 +137,24 @@ object Spectrogram {
 
   /** Decode each WAV blob, split into [[FrameLen]]-sample frames (trailing
     * partial frame dropped), FFT each frame, and report the dominant
-    * non-DC bin — one output row per (record, frame). Undecodable blobs
-    * contribute 0 rows. */
+    * non-DC bin — one output row per (record, frame). Undecodable or NULL
+    * blobs contribute 0 rows. */
   def extractSpectrogram(df: DataFrame, idCol: String,
-      contentCol: String): DataFrame = {
-    require(df.schema(contentCol).dataType == BinaryType,
-      s"$contentCol must be BINARY; got " +
-        df.schema(contentCol).dataType.simpleString)
-    val src = df.select(col(idCol), col(contentCol))
-    val idField = src.schema.head
-    implicit val enc: org.apache.spark.sql.Encoder[Row] =
-      Encoders.row(StructType(idField +: FrameFeatureType.fields.toSeq))
-    src.mapPartitions { it =>
-      it.flatMap { r =>
-        Multimodal.WavDecoder.samples8(r.getAs[Array[Byte]](1)) match {
-          case Some(xs) if xs.length >= FrameLen =>
-            val nFrames = xs.length / FrameLen
-            Iterator.tabulate(nFrames) { j =>
-              val frame = Array.tabulate(FrameLen)(i =>
-                xs(j * FrameLen + i).toDouble)
-              val mag = Fft.magnitudes(frame)
-              var peak = 1
-              var k = 2
-              while (k < mag.length) {
-                if (mag(k) > mag(peak)) peak = k
-                k += 1
-              }
-              Row(r.get(0), j, FrameLen,
-                frame.count(_ > 0).toLong, peak)
-            }
-          case _ => Iterator.empty
+      contentCol: String): DataFrame =
+    Blobs.explode(df, idCol, contentCol, FrameFeatureType) { bytes =>
+      Multimodal.WavDecoder.samples8(bytes).iterator.flatMap { xs =>
+        Iterator.tabulate(xs.length / FrameLen) { j =>
+          val frame = Array.tabulate(FrameLen)(i =>
+            xs(j * FrameLen + i).toDouble)
+          val mag = Fft.magnitudes(frame)
+          var peak = 1
+          var k = 2
+          while (k < mag.length) {
+            if (mag(k) > mag(peak)) peak = k
+            k += 1
+          }
+          Row(j, FrameLen, frame.count(_ > 0).toLong, peak)
         }
       }
-    }(enc)
-  }
+    }
 }

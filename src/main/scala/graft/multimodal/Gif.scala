@@ -1,12 +1,13 @@
 package graft.multimodal
 
 import java.awt.image.BufferedImage
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
-
-import javax.imageio.ImageIO
+import java.io.ByteArrayOutputStream
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
+
+import graft.util.Blobs
+import graft.util.Blobs.{le16, readLe16}
 
 /** Animated-GIF video codec on pure JDK parts — the second REAL
   * entropy-coded format next to [[Avi]]'s MJPEG: GIF pixel data is
@@ -29,17 +30,10 @@ import org.apache.spark.sql.types._
   *     0x2C <left top w h packed> [LCT] <lzwMinCode> <sub-blocks> 0x00 )*
   * 0x3B
   * }}}
-  * All parsing is sequential over one blob inside `mapPartitions` —
-  * narrow, batch-amortized, no shuffle; LZW decode runs only on the frames
-  * a sampler keeps.
+  * All parsing is sequential over one blob on the [[Blobs]] seam —
+  * narrow, no shuffle; LZW decode runs only on the sampled frames.
   */
 object Gif {
-
-  private def le16(v: Int): Array[Byte] =
-    Array((v & 0xff).toByte, ((v >> 8) & 0xff).toByte)
-
-  private def readLe16(b: Array[Byte], off: Int): Int =
-    (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8)
 
   /** The JDK's single-frame GIF encode, reduced to the parts the animation
     * mux needs: the palette, the LZW-coded image data (min-code byte +
@@ -49,27 +43,12 @@ object Gif {
   private[multimodal] final case class FrameData(
       palette: Array[Byte], lzw: Array[Byte], interlaced: Boolean)
 
-  // One GIF writer per task thread (guide §4.5; see Avi.jpegWriter):
-  // per-call ImageIO.write walks the synchronized IIORegistry and may
-  // route through a disk-backed stream cache. Same default-parameter
-  // encode path → byte-identical output.
-  private val gifWriter = new ThreadLocal[javax.imageio.ImageWriter] {
-    override def initialValue(): javax.imageio.ImageWriter =
-      ImageIO.getImageWritersByFormatName("gif").next()
-  }
-
   /** Encode one raster as a single-frame GIF via ImageIO and slice out its
     * palette + LZW data. The JDK writer emits a GCT for indexed/gray
     * input; the image descriptor never carries an LCT then, but both
     * placements are handled (effective palette = LCT if present else GCT). */
   private[multimodal] def encodeFrame(img: BufferedImage): FrameData = {
-    val bos = new ByteArrayOutputStream()
-    val out = new javax.imageio.stream.MemoryCacheImageOutputStream(bos)
-    val w = gifWriter.get()
-    w.setOutput(out)
-    w.write(img)
-    out.close()
-    val b = bos.toByteArray
+    val b = ImageIo.write("gif", img)
     // header(6) + LSD(7)
     val packed = b(10) & 0xff
     var pos = 13
@@ -286,19 +265,7 @@ object Gif {
     out.write(if (f.interlaced) 0x40 else 0) // no LCT; interlace preserved
     out.write(f.lzw, 0, f.lzw.length)
     out.write(0x3b)
-    val iis = new javax.imageio.stream.MemoryCacheImageInputStream(
-      new ByteArrayInputStream(out.toByteArray))
-    val r = gifReader.get()
-    r.setInput(iis, true, true)
-    try r.read(0) finally iis.close()
-  }
-
-  // One GIF reader per task thread (guide §4.5; see gifWriter). A forced
-  // reader throws where ImageIO.read returned null — both degrade to the
-  // null sum in the NonFatal-guarded caller.
-  private val gifReader = new ThreadLocal[javax.imageio.ImageReader] {
-    override def initialValue(): javax.imageio.ImageReader =
-      ImageIO.getImageReadersByFormatName("gif").next()
+    ImageIo.read("gif", out.toByteArray)
   }
 
   /** Palette-resolved luma sum (blue channel — R=G=B for a gray palette);
@@ -325,7 +292,8 @@ object Gif {
   /** One-pass facts + sampled-frame features ([[Avi.extractVideoFrameFeatures]]'
     * shape): demux once per blob, LZW-decode only every `everyN`-th frame,
     * emit (id, width, height, n_frames, frame_idx, delay_cs, luma_sum).
-    * 1 record → N rows inside mapPartitions — narrow, no shuffle. */
+    * 1 record → N rows on the [[Blobs]] seam — narrow, no shuffle; NULL or
+    * unparseable content contributes 0 rows. */
   val VideoFrameFeatureType: StructType = StructType(Seq(
     StructField("width", IntegerType),
     StructField("height", IntegerType),
@@ -337,27 +305,13 @@ object Gif {
   def extractVideoFrameFeatures(df: DataFrame, idCol: String,
       contentCol: String, everyN: Int = 1): DataFrame = {
     require(everyN > 0, "everyN must be positive")
-    val src = df.select(org.apache.spark.sql.functions.col(idCol),
-      org.apache.spark.sql.functions.col(contentCol))
-    val idField = src.schema.head
-    implicit val enc: org.apache.spark.sql.Encoder[Row] =
-      org.apache.spark.sql.Encoders.row(StructType(
-        idField +: VideoFrameFeatureType.fields.toSeq))
-    src.mapPartitions { it =>
-      it.flatMap { r =>
-        val bytes = r.getAs[Array[Byte]](1)
-        // NULL content rows follow the unparseable-bytes contract
-        // (contribute 0 rows), not an NPE in the task
-        if (bytes == null) Iterator.empty
-        else parse(bytes) match {
-          case None => Iterator.empty
-          case Some(p) =>
-            val n = p.frames.size.toLong
-            p.frames.iterator.filter(_.idx % everyN == 0).map { f =>
-              Row(r.get(0), p.width, p.height, n, f.idx, f.delayCs, lumaSum(f))
-            }
+    Blobs.explode(df, idCol, contentCol, VideoFrameFeatureType) { bytes =>
+      parse(bytes).iterator.flatMap { p =>
+        p.frames.iterator.filter(_.idx % everyN == 0).map { f =>
+          Row(p.width, p.height, p.frames.size.toLong, f.idx, f.delayCs,
+            lumaSum(f))
         }
       }
-    }(enc)
+    }
   }
 }

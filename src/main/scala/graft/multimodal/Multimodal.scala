@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.util.Blobs
+
 /** Multimodal columns: image/audio/video as opaque `binary` columns with a
   * typed metadata struct, plus a batched decode/feature-extract seam.
   *
@@ -24,12 +26,14 @@ import org.apache.spark.sql.types._
   *
   *  - media bytes stay in one `content: binary` column (never exploded into
   *    rows), with `media_meta` struct alongside;
-  *  - decode / feature-extract runs in `mapPartitions` over *batches* of
-  *    records (the JVM analog of a Pandas-UDF `mapInPandas`: the decoder is
-  *    handed a batch iterator so vectorized/native libs amortize setup per
-  *    batch, not per record);
-  *  - batch size is a config; output schema is declared up front so the
-  *    plan's schema is static regardless of decoder internals.
+  *  - the pluggable [[MediaDecoder]]/[[MediaTransform]]/[[FrameSampler]]
+  *    seams run in `mapPartitions` over *batches* of records (the JVM analog
+  *    of a Pandas-UDF `mapInPandas`: vectorized/native libs amortize setup
+  *    per batch, not per record); batch size is a config;
+  *  - the real JDK codecs have no per-batch setup, so their per-record
+  *    operators ride the one [[graft.util.Blobs]] seam; either way the
+  *    output schema is declared up front, static regardless of decoder
+  *    internals.
   */
 object Multimodal {
 
@@ -241,7 +245,7 @@ object Multimodal {
     * per record (narrow, no shuffle). */
   def extractImageHashes(df: DataFrame, idCol: String,
       contentCol: String): DataFrame =
-    extractRowFeatures(df, idCol, contentCol, ImageHashType, aHash64)
+    Blobs.facts(df, idCol, contentCol, ImageHashType)(aHash64)
 
   /** Deterministic token-raster PNG: pixel j of the 8×8 gray image is the
     * low byte of `String.hashCode` of the quantile-sampled sorted-distinct
@@ -266,23 +270,7 @@ object Multimodal {
       img.setRGB(j % 8, j / 8, (v << 16) | (v << 8) | v)
       j += 1
     }
-    val bos = new java.io.ByteArrayOutputStream()
-    val out = new javax.imageio.stream.MemoryCacheImageOutputStream(bos)
-    val w = tokenPngWriter.get()
-    w.setOutput(out)
-    w.write(img)
-    out.close()
-    bos.toByteArray
-  }
-
-  // One PNG writer per task thread (guide §4.5; see Avi.jpegWriter): the
-  // per-call ImageIO.write walks the synchronized IIORegistry and may
-  // route through a disk-backed stream cache — both serialize a spread
-  // multi-thread encode stage. Same default-parameter encode path →
-  // byte-identical PNGs.
-  private val tokenPngWriter = new ThreadLocal[javax.imageio.ImageWriter] {
-    override def initialValue(): javax.imageio.ImageWriter =
-      javax.imageio.ImageIO.getImageWritersByFormatName("png").next()
+    ImageIo.write("png", img)
   }
 
   val LumaHistogramType: StructType = StructType(Seq(
@@ -293,7 +281,7 @@ object Multimodal {
     * gray rasters make red == luma exactly). Undecodable → null bins. */
   def extractImageHistograms(df: DataFrame, idCol: String,
       contentCol: String): DataFrame =
-    extractRowFeatures(df, idCol, contentCol, LumaHistogramType, { bytes =>
+    Blobs.facts(df, idCol, contentCol, LumaHistogramType) { bytes =>
       ImageIoDecoder.decode(bytes) match {
         case None => Row(null, null, null, null)
         case Some(img) =>
@@ -309,7 +297,7 @@ object Multimodal {
           }
           Row(bins(0), bins(1), bins(2), bins(3))
       }
-    })
+    }
 
   val AugmentFeatureType: StructType = StructType(Seq(
     StructField("wsum_orig", LongType),
@@ -328,7 +316,7 @@ object Multimodal {
     * work like every codec stage. */
   def augmentImages(df: DataFrame, idCol: String,
       contentCol: String): DataFrame =
-    extractRowFeatures(df, idCol, contentCol, AugmentFeatureType, { bytes =>
+    Blobs.facts(df, idCol, contentCol, AugmentFeatureType) { bytes =>
       ImageIoDecoder.decode(bytes) match {
         case None => Row(null, null, null)
         case Some(img) =>
@@ -363,7 +351,7 @@ object Multimodal {
           val rot90 = make(h, w)((x, y) => img.getRGB(y, h - 1 - x))
           Row(wsum(img), wsum(hflip), wsum(rot90))
       }
-    })
+    }
 
   val EdgeFeatureType: StructType = StructType(Seq(
     StructField("grad_sum", LongType),
@@ -376,7 +364,7 @@ object Multimodal {
     * oracle can replay it pixel-for-pixel). Undecodable content → nulls. */
   def extractEdgeFeatures(df: DataFrame, idCol: String, contentCol: String,
       edgeThreshold: Int = 255): DataFrame =
-    extractRowFeatures(df, idCol, contentCol, EdgeFeatureType, { bytes =>
+    Blobs.facts(df, idCol, contentCol, EdgeFeatureType) { bytes =>
       ImageIoDecoder.decode(bytes) match {
         case None => Row(null, null, null)
         case Some(img) =>
@@ -404,7 +392,7 @@ object Multimodal {
           }
           Row(sum, mx, ne)
       }
-    })
+    }
 
   /** Real resize: ImageIO decode → nearest-neighbor scale → PNG re-encode.
     * Nearest-neighbor (not Graphics2D filtering) so the output raster is
@@ -430,37 +418,16 @@ object Multimodal {
               }
               y += 1
             }
-            val bos = new java.io.ByteArrayOutputStream()
-            javax.imageio.ImageIO.write(out, "png", bos)
-            bos.toByteArray
+            ImageIo.write("png", out)
         }
       }
-  }
-
-  /** Shared per-row feature-extraction wrapper: (id, features(bytes)) via
-    * mapPartitions — narrow, no shuffle. Per-row, not batched: these JDK
-    * decoders have no per-batch setup to amortize — decoders that do should
-    * go through the batched [[extractFeatures]] seam. */
-  private[multimodal] def extractRowFeatures(df: DataFrame, idCol: String,
-      contentCol: String, featureType: StructType,
-      features: Array[Byte] => Row): DataFrame = {
-    val idIdx = df.schema.fieldIndex(idCol)
-    val contentIdx = df.schema.fieldIndex(contentCol)
-    val outSchema = StructType(df.schema(idIdx) +: featureType.fields.toSeq)
-    implicit val enc: Encoder[Row] = Encoders.row(outSchema)
-    df.mapPartitions { it =>
-      it.map { r =>
-        val f = features(r.getAs[Array[Byte]](contentIdx))
-        Row.fromSeq(r.get(idIdx) +: f.toSeq)
-      }
-    }(enc)
   }
 
   /** Image feature extraction over the REAL decoder: one [[ImageFeatureType]]
     * row per record. */
   def extractImageFeatures(df: DataFrame, idCol: String,
       contentCol: String): DataFrame =
-    extractRowFeatures(df, idCol, contentCol, ImageFeatureType,
+    Blobs.facts(df, idCol, contentCol, ImageFeatureType)(
       ImageIoDecoder.imageFeatures)
 
   // ---- audio: REAL WAV encode/decode via JDK-builtin javax.sound --------
@@ -472,25 +439,30 @@ object Multimodal {
     * batched, narrow. */
   final case class PcmWavEncoder(sampleRate: Int) extends MediaTransform {
     def transformBatch(batch: Seq[Array[Byte]]): Seq[Array[Byte]] =
-      batch.map { pcm =>
-        // RIFF chunks are word-aligned: odd-sized data gets a pad byte that
-        // counts toward the RIFF size but NOT the data chunk size
-        val pad = pcm.length % 2
-        val bb = java.nio.ByteBuffer.allocate(44 + pcm.length + pad)
-          .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-        bb.put("RIFF".getBytes("US-ASCII")).putInt(36 + pcm.length + pad)
-          .put("WAVE".getBytes("US-ASCII"))
-          .put("fmt ".getBytes("US-ASCII")).putInt(16)
-          .putShort(1)                 // PCM
-          .putShort(1)                 // mono
-          .putInt(sampleRate)
-          .putInt(sampleRate)          // byte rate (1 byte/frame)
-          .putShort(1)                 // block align
-          .putShort(8)                 // bits per sample
-          .put("data".getBytes("US-ASCII")).putInt(pcm.length)
-          .put(pcm)
-        bb.array()
-      }
+      batch.map(pcm => wav(pcm, sampleRate, channels = 1, bits = 8, frame = 1))
+  }
+
+  /** A canonical 44-byte-header PCM WAV around `pcm`; `frame` is the
+    * bytes per sample frame (the block align). */
+  private def wav(pcm: Array[Byte], rate: Int, channels: Int, bits: Int,
+      frame: Int): Array[Byte] = {
+    // RIFF chunks are word-aligned: odd-sized data gets a pad byte that
+    // counts toward the RIFF size but NOT the data chunk size
+    val pad = pcm.length % 2
+    val bb = java.nio.ByteBuffer.allocate(44 + pcm.length + pad)
+      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    bb.put("RIFF".getBytes("US-ASCII")).putInt(36 + pcm.length + pad)
+      .put("WAVE".getBytes("US-ASCII"))
+      .put("fmt ".getBytes("US-ASCII")).putInt(16)
+      .putShort(1)                 // PCM
+      .putShort(channels.toShort)
+      .putInt(rate)
+      .putInt(rate * frame)        // byte rate
+      .putShort(frame.toShort)     // block align
+      .putShort(bits.toShort)      // bits per sample
+      .put("data".getBytes("US-ASCII")).putInt(pcm.length)
+      .put(pcm)
+    bb.array()
   }
 
   /** Real audio resample (decimation): decode the WAV container with
@@ -503,9 +475,9 @@ object Multimodal {
   final case class WavDecimator(factor: Int) extends MediaTransform {
     require(factor >= 1, s"factor must be >= 1: $factor")
     def transformBatch(batch: Seq[Array[Byte]]): Seq[Array[Byte]] =
-      batch.map { wav =>
+      batch.map { bytes =>
         val in = javax.sound.sampled.AudioSystem.getAudioInputStream(
-          new java.io.ByteArrayInputStream(wav))
+          new java.io.ByteArrayInputStream(bytes))
         try {
           val fmt = in.getFormat
           val pcm = in.readAllBytes()
@@ -525,29 +497,11 @@ object Multimodal {
             i += 1
           }
           val outRate = (fmt.getSampleRate / factor).toInt
-          if (fs == 1) PcmWavEncoder(outRate).transformBatch(Seq(dec)).head
-          else {
-            // multi-byte frames (16-bit and/or stereo): PcmWavEncoder's
-            // fixed 8-bit-mono header would mislabel the payload, so write
-            // a header that preserves the decoded format
-            val channels = math.max(1, fmt.getChannels)
-            val bits     = math.max(8, fmt.getSampleSizeInBits)
-            val pad = dec.length % 2
-            val bb = java.nio.ByteBuffer.allocate(44 + dec.length + pad)
-              .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-            bb.put("RIFF".getBytes("US-ASCII")).putInt(36 + dec.length + pad)
-              .put("WAVE".getBytes("US-ASCII"))
-              .put("fmt ".getBytes("US-ASCII")).putInt(16)
-              .putShort(1)
-              .putShort(channels.toShort)
-              .putInt(outRate)
-              .putInt(outRate * fs)
-              .putShort(fs.toShort)
-              .putShort(bits.toShort)
-              .put("data".getBytes("US-ASCII")).putInt(dec.length)
-              .put(dec)
-            bb.array()
-          }
+          // multi-byte frames (16-bit and/or stereo) keep the decoded
+          // format; a fixed 8-bit-mono header would mislabel the payload
+          if (fs == 1) wav(dec, outRate, channels = 1, bits = 8, frame = 1)
+          else wav(dec, outRate, math.max(1, fmt.getChannels),
+            math.max(8, fmt.getSampleSizeInBits), fs)
         } finally in.close()
       }
   }
@@ -584,10 +538,7 @@ object Multimodal {
     def samples8(bytes: Array[Byte]): Option[Array[Int]] = {
       if (bytes == null || bytes.length < 12) return None
       def ascii4(o: Int): String = new String(bytes, o, 4, "US-ASCII")
-      def u16(o: Int): Int = (bytes(o) & 0xff) | ((bytes(o + 1) & 0xff) << 8)
-      def u32(o: Int): Long =
-        (bytes(o) & 0xffL) | ((bytes(o + 1) & 0xffL) << 8) |
-          ((bytes(o + 2) & 0xffL) << 16) | ((bytes(o + 3) & 0xffL) << 24)
+      def u16(o: Int): Int = Blobs.readLe16(bytes, o)
       if (ascii4(0) != "RIFF" || ascii4(8) != "WAVE") return None
       var off = 12
       var fmtOk = false
@@ -595,9 +546,8 @@ object Multimodal {
       var dataLen = -1
       while (off + 8 <= bytes.length && (!fmtOk || dataOff < 0)) {
         val id = ascii4(off)
-        val sz = u32(off + 4)
-        if (sz > Int.MaxValue) return None
-        val n = sz.toInt
+        val n = Blobs.readLe32(bytes, off + 4)
+        if (n < 0) return None // a u32 size past Int.MaxValue
         if (id != "data" && off + 8 + n > bytes.length) return None
         id match {
           case "fmt " =>
@@ -678,7 +628,7 @@ object Multimodal {
     * row per record. */
   def extractAudioFeatures(df: DataFrame, idCol: String,
       contentCol: String): DataFrame =
-    extractRowFeatures(df, idCol, contentCol, AudioFeatureType,
+    Blobs.facts(df, idCol, contentCol, AudioFeatureType)(
       WavDecoder.audioFeatures)
 
   /** Char-class amplitude modulation: lowercase letters map below the 8-bit
@@ -706,38 +656,27 @@ object Multimodal {
 
   /** Analysis-frame decomposition over [[WavDecoder]]: each record's 8-bit
     * unsigned mono PCM split into consecutive `frameLen`-sample windows
-    * (partial tail kept). Narrow (mapPartitions flatMap), unparseable or
-    * NULL content contributes 0 rows. */
+    * (partial tail kept). An explode operator on the [[Blobs]] seam:
+    * unparseable or NULL content contributes 0 rows. */
   def extractAudioFrameFeatures(df: DataFrame, idCol: String,
       contentCol: String, frameLen: Int = 100): DataFrame = {
     require(frameLen > 0, "frameLen must be positive")
-    val src = df.select(org.apache.spark.sql.functions.col(idCol),
-      org.apache.spark.sql.functions.col(contentCol))
-    val idField = src.schema.head
-    implicit val enc: Encoder[Row] =
-      Encoders.row(StructType(idField +: AudioFrameFeatureType.fields.toSeq))
-    src.mapPartitions { it =>
-      it.flatMap { r =>
-        val bytes = r.getAs[Array[Byte]](1)
-        val samples = if (bytes == null) None else WavDecoder.samples8(bytes)
-        samples match {
-          case None => Iterator.empty
-          case Some(ss) =>
-            ss.grouped(frameLen).zipWithIndex.map { case (fr, fi) =>
-              var energy = 0L
-              var zc = 0L
-              var i = 0
-              while (i < fr.length) {
-                val v = fr(i).toLong
-                energy += v * v
-                if (i > 0 && fr(i - 1) * v < 0) zc += 1
-                i += 1
-              }
-              Row(r.get(0), fi, fr.length, energy, zc)
-            }
+    Blobs.explode(df, idCol, contentCol, AudioFrameFeatureType) { bytes =>
+      WavDecoder.samples8(bytes).iterator.flatMap { ss =>
+        ss.grouped(frameLen).zipWithIndex.map { case (fr, fi) =>
+          var energy = 0L
+          var zc = 0L
+          var i = 0
+          while (i < fr.length) {
+            val v = fr(i).toLong
+            energy += v * v
+            if (i > 0 && fr(i - 1) * v < 0) zc += 1
+            i += 1
+          }
+          Row(fi, fr.length, energy, zc)
         }
       }
-    }(enc)
+    }
   }
 
   val ImagePatchFeatureType: StructType = StructType(Seq(
@@ -751,53 +690,41 @@ object Multimodal {
     * into a `patchW` × `patchH` grid (edge patches keep their partial
     * size), one row per patch with exact integer luma stats — the
     * patchify step in front of a vision encoder, row-major patch order.
-    * Narrow (mapPartitions flatMap); NULL or undecodable content
-    * contributes 0 rows, matching [[extractAudioFrameFeatures]]'s
-    * contract. */
+    * An explode operator on the [[Blobs]] seam: NULL or undecodable content
+    * contributes 0 rows, matching [[extractAudioFrameFeatures]]. */
   def extractImagePatches(df: DataFrame, idCol: String, contentCol: String,
       patchW: Int = 4, patchH: Int = 4): DataFrame = {
     require(patchW > 0 && patchH > 0, "patch dims must be positive")
-    val src = df.select(org.apache.spark.sql.functions.col(idCol),
-      org.apache.spark.sql.functions.col(contentCol))
-    val idField = src.schema.head
-    implicit val enc: Encoder[Row] =
-      Encoders.row(StructType(idField +: ImagePatchFeatureType.fields.toSeq))
-    src.mapPartitions { it =>
-      it.flatMap { r =>
-        val bytes = r.getAs[Array[Byte]](1)
-        val dec = if (bytes == null) None else ImageIoDecoder.decode(bytes)
-        dec match {
-          case None => Iterator.empty
-          case Some(img) =>
-            val w = img.getWidth
-            val h = img.getHeight
-            val nCols = (w + patchW - 1) / patchW
-            val nRows = (h + patchH - 1) / patchH
-            Iterator.tabulate(nRows * nCols) { p =>
-              val py = p / nCols
-              val px = p % nCols
-              var sum = 0L
-              var mn = 255
-              var mx = 0
-              var n = 0
-              var y = py * patchH
-              while (y < math.min((py + 1) * patchH, h)) {
-                var x = px * patchW
-                while (x < math.min((px + 1) * patchW, w)) {
-                  val v = (img.getRGB(x, y) >> 16) & 0xff
-                  sum += v
-                  n += 1
-                  if (v < mn) mn = v
-                  if (v > mx) mx = v
-                  x += 1
-                }
-                y += 1
-              }
-              Row(r.get(0), p, n, sum, mn, mx)
+    Blobs.explode(df, idCol, contentCol, ImagePatchFeatureType) { bytes =>
+      ImageIoDecoder.decode(bytes).iterator.flatMap { img =>
+        val w = img.getWidth
+        val h = img.getHeight
+        val nCols = (w + patchW - 1) / patchW
+        val nRows = (h + patchH - 1) / patchH
+        Iterator.tabulate(nRows * nCols) { p =>
+          val py = p / nCols
+          val px = p % nCols
+          var sum = 0L
+          var mn = 255
+          var mx = 0
+          var n = 0
+          var y = py * patchH
+          while (y < math.min((py + 1) * patchH, h)) {
+            var x = px * patchW
+            while (x < math.min((px + 1) * patchW, w)) {
+              val v = (img.getRGB(x, y) >> 16) & 0xff
+              sum += v
+              n += 1
+              if (v < mn) mn = v
+              if (v > mx) mx = v
+              x += 1
             }
+            y += 1
+          }
+          Row(p, n, sum, mn, mx)
         }
       }
-    }(enc)
+    }
   }
 
   /** Run the decoder over batches of `batchSize` records (mapPartitions —

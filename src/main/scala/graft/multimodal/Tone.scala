@@ -1,8 +1,9 @@
 package graft.multimodal
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
+
+import graft.util.Blobs
 
 /** Spectral tone analysis over the REAL WAV round-trip: synthesize a
   * square-wave tone per record (integer-exact sample math), wrap it with
@@ -20,8 +21,8 @@ import org.apache.spark.sql.types._
   * predicts the detected index (and the exact high-sample count, from
   * the same integer phase formula) without replicating floating point.
   *
-  * Scale shape: batched `mapPartitions` codec work, narrow, like every
-  * mm operator — scales with input bytes only.
+  * Scale shape: per-record codec work on the [[Blobs]] seam, narrow, like
+  * every mm operator — scales with input bytes only.
   */
 object Tone {
 
@@ -73,27 +74,14 @@ object Tone {
     StructField("tone_idx", IntegerType)))
 
   /** Decode each WAV blob and classify its dominant candidate tone;
-    * undecodable blobs contribute 0 rows. */
+    * undecodable or NULL blobs contribute 0 rows. */
   def extractToneFeatures(df: DataFrame, idCol: String,
-      contentCol: String): DataFrame = {
-    require(df.schema(contentCol).dataType == BinaryType,
-      s"$contentCol must be BINARY; got " +
-        df.schema(contentCol).dataType.simpleString)
-    val src = df.select(col(idCol), col(contentCol))
-    val idField = src.schema.head
-    implicit val enc: org.apache.spark.sql.Encoder[Row] =
-      Encoders.row(StructType(idField +: ToneFeatureType.fields.toSeq))
-    src.mapPartitions { it =>
-      it.flatMap { r =>
-        Multimodal.WavDecoder.samples8(r.getAs[Array[Byte]](1)) match {
-          case Some(xs) if xs.nonEmpty =>
-            val powers = Freqs.map(f => goertzelPower(xs, Rate, f.toDouble))
-            val best = powers.indexOf(powers.max)
-            Iterator.single(Row(r.get(0), xs.length.toLong,
-              xs.count(_ > 0).toLong, best))
-          case _ => Iterator.empty
-        }
+      contentCol: String): DataFrame =
+    Blobs.explode(df, idCol, contentCol, ToneFeatureType) { bytes =>
+      Multimodal.WavDecoder.samples8(bytes).filter(_.nonEmpty).map { xs =>
+        val powers = Freqs.map(f => goertzelPower(xs, Rate, f.toDouble))
+        Row(xs.length.toLong, xs.count(_ > 0).toLong,
+          powers.indexOf(powers.max))
       }
-    }(enc)
-  }
+    }
 }

@@ -3,6 +3,8 @@ package graft.multimodal
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
 
+import graft.util.Blobs
+
 /** Minimal YUV4MPEG2 (Y4M) video codec — the video analog of the WAV path:
   * a pure-JDK container with NO entropy coding (an ASCII stream header,
   * then `FRAME\n` + fixed-size raw planes per frame), so real demux /
@@ -15,8 +17,8 @@ import org.apache.spark.sql.types._
   * Layout per the public Y4M spec (mjpegtools):
   * `YUV4MPEG2 W<w> H<h> F<num>:<den> [Ip A1:1 C420]\n` then per frame
   * `FRAME[ params]\n` + Y plane (w·h bytes) + U + V (subsampled per the
-  * colorspace tag). All parsing here is sequential over one blob inside
-  * `mapPartitions` — narrow, batch-amortized, no shuffle.
+  * colorspace tag). All parsing here is sequential over one blob on the
+  * [[Blobs]] seam — narrow, no shuffle.
   */
 object Y4m {
 
@@ -105,35 +107,29 @@ object Y4m {
     }
   }
 
-  /** Walk the frame markers, yielding (frame index, Y plane). Chroma
-    * planes are skipped, not copied. Stops at the first malformed or
-    * truncated frame (a partial tail never yields a phantom frame). */
-  def frames(bytes: Array[Byte], hd: Header): Iterator[(Int, Array[Byte])] =
-    new Iterator[(Int, Array[Byte])] {
-      private var pos = hd.dataStart
-      private var idx = 0
-      private var nextFrame: Array[Byte] = advance()
-      private def advance(): Array[Byte] = {
-        val markerEnd = pos + FrameMagic.length
-        if (markerEnd > bytes.length ||
-          new String(bytes, pos, FrameMagic.length, "US-ASCII") != FrameMagic)
-          return null
+  /** Walk the frame markers, yielding each frame's Y-plane offset in
+    * `bytes`; nothing is copied. Stops at the first malformed or truncated
+    * frame (a partial tail never yields a phantom frame). */
+  def planeOffsets(bytes: Array[Byte], hd: Header): Iterator[Int] =
+    Iterator.unfold(hd.dataStart) { pos =>
+      val markerEnd = pos + FrameMagic.length
+      if (markerEnd > bytes.length ||
+        new String(bytes, pos, FrameMagic.length, "US-ASCII") != FrameMagic)
+        None
+      else {
         // frame params (rare) run to the newline; planes follow it
         var nl = markerEnd
         while (nl < bytes.length && bytes(nl) != '\n'.toByte) nl += 1
-        if (nl >= bytes.length || nl + 1 + hd.frameSize > bytes.length)
-          return null
-        val y = java.util.Arrays.copyOfRange(bytes, nl + 1, nl + 1 + hd.ySize)
-        pos = nl + 1 + hd.frameSize
-        y
+        if (nl >= bytes.length || nl + 1 + hd.frameSize > bytes.length) None
+        else Some((nl + 1, nl + 1 + hd.frameSize))
       }
-      def hasNext: Boolean = nextFrame != null
-      def next(): (Int, Array[Byte]) = {
-        val out = (idx, nextFrame)
-        idx += 1
-        nextFrame = advance()
-        out
-      }
+    }
+
+  /** (frame index, Y plane) per frame, the plane copied out of `bytes`;
+    * chroma planes are skipped, not copied. */
+  def frames(bytes: Array[Byte], hd: Header): Iterator[(Int, Array[Byte])] =
+    planeOffsets(bytes, hd).zipWithIndex.map { case (off, k) =>
+      (k, java.util.Arrays.copyOfRange(bytes, off, off + hd.ySize))
     }
 
   /** Container facts per video blob; all-null row when the bytes aren't a
@@ -148,101 +144,96 @@ object Y4m {
   def videoFeatures(bytes: Array[Byte]): Row = parseHeader(bytes) match {
     case None => Row(null, null, null, null, null)
     case Some(hd) =>
-      Row(hd.width, hd.height, hd.fpsNum, hd.fpsDen, frames(bytes, hd).size.toLong)
+      Row(hd.width, hd.height, hd.fpsNum, hd.fpsDen,
+        planeOffsets(bytes, hd).size.toLong)
   }
 
   /** Video feature extraction over the REAL demuxer: one
     * [[VideoFeatureType]] row per record (narrow, no shuffle). */
   def extractVideoFeatures(df: DataFrame, idCol: String,
       contentCol: String): DataFrame =
-    Multimodal.extractRowFeatures(df, idCol, contentCol, VideoFeatureType,
-      videoFeatures)
+    Blobs.facts(df, idCol, contentCol, VideoFeatureType)(videoFeatures)
 
-  /** Real keyframe-style sampling through the generic
-    * [[Multimodal.FrameSampler]] seam: every `everyN`-th decoded Y plane.
-    * Un-parseable blobs yield no frames. */
-  final case class Y4mFrameSampler(everyN: Int) extends Multimodal.FrameSampler {
-    require(everyN > 0, "everyN must be positive")
-    def sampleBatch(batch: Seq[Array[Byte]]): Seq[Seq[(Int, Array[Byte])]] =
-      batch.map { bytes =>
-        parseHeader(bytes) match {
-          case None => Seq.empty
-          case Some(hd) =>
-            frames(bytes, hd).filter(_._1 % everyN == 0).toSeq
-        }
-      }
-  }
-
-  /** Per-sampled-frame features: (id, frame_idx, luma_sum) where luma_sum
-    * is the exact integer sum of the frame's Y-plane bytes — the video
-    * analog of [[Multimodal.WavDecoder]]'s amplitude sum, reproducible by
-    * an oracle without float drift. 1 record → N rows, demux + sum inside
-    * one mapPartitions pass (bounded by batch, no shuffle). */
+  /** Per-sampled-frame features: (id, frame_idx, luma_sum) for every
+    * `everyN`-th Y plane, where luma_sum is the exact integer sum of the
+    * plane's bytes — the video analog of [[Multimodal.WavDecoder]]'s
+    * amplitude sum, reproducible by an oracle without float drift. Demux +
+    * sum in one pass on the [[Blobs]] seam: 1 record → N rows, no shuffle;
+    * NULL or unparseable content contributes 0 rows. */
   val FrameFeatureType: StructType = StructType(Seq(
     StructField("frame_idx", IntegerType),
     StructField("luma_sum", LongType)))
 
+  private def lumaSum(bytes: Array[Byte], off: Int, hd: Header): Long = {
+    var sum = 0L
+    var i = off
+    while (i < off + hd.ySize) { sum += bytes(i) & 0xff; i += 1 }
+    sum
+  }
+
+  /** (frame index, Y-plane offset) of every `everyN`-th frame. */
+  private def sampled(bytes: Array[Byte], hd: Header,
+      everyN: Int): Iterator[(Int, Int)] =
+    planeOffsets(bytes, hd).zipWithIndex.collect {
+      case (off, k) if k % everyN == 0 => (k, off)
+    }
+
+  def extractFrameFeatures(df: DataFrame, idCol: String, contentCol: String,
+      everyN: Int = 1): DataFrame = {
+    require(everyN > 0, "everyN must be positive")
+    Blobs.explode(df, idCol, contentCol, FrameFeatureType) { bytes =>
+      parseHeader(bytes).iterator.flatMap(hd => sampled(bytes, hd, everyN)
+        .map { case (k, off) => Row(k, lumaSum(bytes, off, hd)) })
+    }
+  }
+
+  /** One-pass facts + sampled-frame features ([[Avi.extractVideoFrameFeatures]]'
+    * shape): per sampled frame, the container facts and its luma sum. The
+    * facts⋈frames alternative demuxes (and, behind an encoder, Y4M-encodes)
+    * every video twice and shuffles to rejoin. NULL or unparseable content
+    * contributes 0 rows. */
+  val VideoFrameFeatureType: StructType = StructType(
+    VideoFeatureType.fields.toSeq ++ FrameFeatureType.fields.toSeq)
+
+  def extractVideoFrameFeatures(df: DataFrame, idCol: String,
+      contentCol: String, everyN: Int = 1): DataFrame = {
+    require(everyN > 0, "everyN must be positive")
+    Blobs.explode(df, idCol, contentCol, VideoFrameFeatureType) { bytes =>
+      parseHeader(bytes).iterator.flatMap { hd =>
+        val n = planeOffsets(bytes, hd).size.toLong
+        sampled(bytes, hd, everyN).map { case (k, off) =>
+          Row(hd.width, hd.height, hd.fpsNum, hd.fpsDen, n, k,
+            lumaSum(bytes, off, hd))
+        }
+      }
+    }
+  }
+
   /** Temporal (frame-to-frame) features: (id, frame_idx, delta_sum) where
     * delta_sum = Σ|Y_k[i] − Y_{k−1}[i]| — the classic scene-change /
-    * motion-intensity signal. One pass per record inside mapPartitions
-    * (narrow, no shuffle): frames decode sequentially and only the
-    * previous Y plane is held, so memory is O(frame), not O(video). Rows
-    * start at frame_idx 1; single-frame or undecodable records emit none. */
+    * motion-intensity signal. One pass per record on the [[Blobs]] seam
+    * (narrow, no shuffle): planes are read in place in the blob and only
+    * the previous plane's offset is held, so no plane is copied. Rows
+    * start at frame_idx 1; single-frame, undecodable or NULL records emit
+    * none. */
   val TemporalFeatureType: StructType = StructType(Seq(
     StructField("frame_idx", IntegerType),
     StructField("delta_sum", LongType)))
 
   def extractTemporalFeatures(df: DataFrame, idCol: String,
-      contentCol: String): DataFrame = {
-    val idIdx = df.schema.fieldIndex(idCol)
-    val cIdx = df.schema.fieldIndex(contentCol)
-    val idField = df.schema(idIdx)
-    implicit val enc: org.apache.spark.sql.Encoder[Row] =
-      org.apache.spark.sql.Encoders.row(StructType(
-        idField +: TemporalFeatureType.fields.toSeq))
-    df.mapPartitions { it =>
-      it.flatMap { r =>
-        val bytes = r.getAs[Array[Byte]](cIdx)
-        // null content: parseHeader returns None (unparseable contract)
-        parseHeader(bytes) match {
-          case None => Iterator.empty[Row]
-          case Some(hd) =>
-            var prev: Array[Byte] = null
-            frames(bytes, hd).flatMap { case (k, y) =>
-              val out =
-                if (prev == null) Iterator.empty[Row]
-                else {
-                  var sum = 0L
-                  var i = 0
-                  while (i < y.length) {
-                    sum += math.abs((y(i) & 0xff) - (prev(i) & 0xff)); i += 1
-                  }
-                  Iterator.single(Row(r.get(idIdx), k, sum))
-                }
-              prev = y
-              out
+      contentCol: String): DataFrame =
+    Blobs.explode(df, idCol, contentCol, TemporalFeatureType) { bytes =>
+      parseHeader(bytes).iterator.flatMap { hd =>
+        planeOffsets(bytes, hd).sliding(2).withPartial(false).zipWithIndex
+          .map { case (Seq(prev, cur), k) =>
+            var sum = 0L
+            var i = 0
+            while (i < hd.ySize) {
+              sum += math.abs((bytes(cur + i) & 0xff) - (bytes(prev + i) & 0xff))
+              i += 1
             }
-        }
+            Row(k + 1, sum)
+          }
       }
-    }(enc)
-  }
-
-  def extractFrameFeatures(df: DataFrame, idCol: String, contentCol: String,
-      everyN: Int = 1): DataFrame = {
-    val sampler = Y4mFrameSampler(everyN)
-    val sampled = Multimodal.sampleFrames(df, idCol, contentCol, sampler)
-    val idField = sampled.schema.head
-    implicit val enc: org.apache.spark.sql.Encoder[Row] =
-      org.apache.spark.sql.Encoders.row(StructType(
-        idField +: FrameFeatureType.fields.toSeq))
-    sampled.mapPartitions { it =>
-      it.map { r =>
-        val y = r.getAs[Array[Byte]](2) // (id, frame_idx, frame)
-        var sum = 0L
-        var i = 0
-        while (i < y.length) { sum += y(i) & 0xff; i += 1 }
-        Row(r.get(0), r.getInt(1), sum)
-      }
-    }(enc)
-  }
+    }
 }

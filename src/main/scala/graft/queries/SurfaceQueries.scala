@@ -450,17 +450,16 @@ object SurfaceQueries {
     // 8×8 C420 Y planes under a YUV4MPEG2 header (Y4mEncoder), demux with
     // the pure-JDK parser, emit container facts + every-2nd-frame exact
     // luma sums. Like mm4, the oracle predicts every feature independently
-    // from the text, so a header-layout or demux bug cannot cancel out ----
+    // from the text, so a header-layout or demux bug cannot cancel out.
+    // One-pass facts+frames (mm9's shape): a facts⋈frames join would
+    // Y4M-encode every video twice and shuffle to rejoin ----
     "mm6_video_frames" -> { (s, dir) =>
       val docs = Tables.t(s, dir, "documents")
         .withColumn("content", substring(col("text"), 1, 384).cast("binary"))
       val vids = Multimodal.resizeContent(docs, "content",
         graft.multimodal.Y4m.Y4mEncoder(width = 8, height = 8))
-      val facts = graft.multimodal.Y4m
-        .extractVideoFeatures(vids, "doc_id", "content")
-      val frames = graft.multimodal.Y4m
-        .extractFrameFeatures(vids, "doc_id", "content", everyN = 2)
-      facts.join(frames, "doc_id")
+      graft.multimodal.Y4m
+        .extractVideoFrameFeatures(vids, "doc_id", "content", everyN = 2)
         .select(col("doc_id"), col("width"), col("height"), col("fps_num"),
           col("fps_den"), col("n_frames"), col("frame_idx"), col("luma_sum"))
         .orderBy("doc_id", "frame_idx")

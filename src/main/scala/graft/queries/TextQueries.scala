@@ -916,8 +916,7 @@ object TextQueries {
     // leg's per-action tail leaves idle (guide §2.6 — the Scc pattern).
     // Values are unchanged: both legs are deterministic and share no
     // state (separate IterTrunc instances).
-    val nearDupsF =
-      java.util.concurrent.CompletableFuture.supplyAsync(() => nearDups)
+    val nearDupsF = graft.util.Async.future(nearDups)
     // 1) dd18: duplicated-substring removal → cleaned token count
     val cleaned = DedupQueries.dupSpanMask(docs).groupBy("doc_id")
       .agg(count(when(col("rm").isNull, 1)).as("n_tokens"))

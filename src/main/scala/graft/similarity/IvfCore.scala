@@ -84,7 +84,15 @@ class IvfCore[C <: CellCodec](val spark: SparkSession, val root: String,
   /** Build (overwriting any existing index): assign every corpus vector to
     * its nearest frozen centroid, train the codec's model, persist per
     * cell via the store's init, and commit the drift baseline by the
-    * meta-file swap. */
+    * meta-file swap.
+    *
+    * Poisoned-corpus contract: with [[RawCodec]] a null or wrong-dimension
+    * vector is first evaluated by the store's init write, i.e. after the
+    * previous meta was invalidated (the PQ codec meets it earlier, in
+    * `Pq.train`). Catching it sooner would cost a corpus-sized pass. So
+    * the build fails naming the vector's id, the previous index then reads
+    * "not built" although its data is intact, and a clean rebuild recovers
+    * it. */
   def build(corpus: DataFrame, centroids: DataFrame): Unit = {
     // validate BEFORE invalidating anything: an empty rebuild corpus (an
     // upstream filter bug) must fail HERE, while the previous index's data

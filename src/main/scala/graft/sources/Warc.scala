@@ -4,9 +4,10 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util.zip.{GZIPInputStream, GZIPOutputStream}
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
+
+import graft.util.Blobs
 
 /** WARC (ISO 28500) web-archive ingestion — the first step of every
   * web-corpus training-data pipeline (CommonCrawl ships WARC). Hand-muxed/
@@ -18,7 +19,7 @@ import org.apache.spark.sql.types._
   *
   * Scale shape: the archive blob is the unit of work (exactly how real
   * WARC files arrive — thousands of records per ~1 GB file); parsing is a
-  * narrow per-blob `flatMap` inside `mapPartitions`, so a 100 TB crawl
+  * narrow per-blob explode on the [[Blobs]] seam, so a 100 TB crawl
   * parses with zero shuffle before the first content operator. Truncated/
   * garbage/NULL archives follow the engine's unparseable-content contract
   * (0 rows). The reference's closest surface is its binary S4 passthrough
@@ -120,23 +121,9 @@ object Warc {
     StructField("status", IntegerType),
     StructField("body", StringType)))
 
-  /** One archive blob row → 0..N typed record rows; narrow flatMap. */
-  def readArchives(df: DataFrame, idCol: String, contentCol: String): DataFrame = {
-    require(df.schema(contentCol).dataType == BinaryType,
-      s"$contentCol must be BINARY (archive blobs); " +
-        s"got ${df.schema(contentCol).dataType.simpleString}")
-    val src = df.select(col(idCol), col(contentCol))
-    val idField = src.schema.head
-    implicit val enc: org.apache.spark.sql.Encoder[Row] =
-      Encoders.row(StructType(idField +: RecordType.fields.toSeq))
-    src.mapPartitions { it =>
-      it.flatMap { r =>
-        parseArchive(r.getAs[Array[Byte]](1)) match {
-          case None => Iterator.empty
-          case Some(recs) =>
-            recs.iterator.map(w => Row(r.get(0), w.url, w.status, w.body))
-        }
-      }
-    }(enc)
-  }
+  /** One archive blob row → 0..N typed record rows; narrow explode. */
+  def readArchives(df: DataFrame, idCol: String, contentCol: String): DataFrame =
+    Blobs.explode(df, idCol, contentCol, RecordType) { bytes =>
+      parseArchive(bytes).iterator.flatten.map(w => Row(w.url, w.status, w.body))
+    }
 }

@@ -4,9 +4,10 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util.zip.{ZipEntry, ZipInputStream, ZipOutputStream}
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
+
+import graft.util.Blobs
 
 /** ZIP archive ingestion — the document-bundle companion to [[Warc]]
   * (corpus drops and scraped-site dumps commonly arrive as ZIPs of text
@@ -15,9 +16,9 @@ import org.apache.spark.sql.types._
   * whole-archive gzip layout.
   *
   * Scale shape: identical to [[Warc.readArchives]] — the archive blob is
-  * the unit of work and parsing is a narrow per-blob flatMap inside
-  * `mapPartitions`, so a shelf of ZIPs unpacks with zero shuffle before
-  * the first content operator. The streaming `ZipInputStream` walk reads
+  * the unit of work and parsing is a narrow per-blob explode on the
+  * [[Blobs]] seam, so a shelf of ZIPs unpacks with zero shuffle before the
+  * first content operator. The streaming `ZipInputStream` walk reads
   * local headers in file order (no need to buffer the central directory),
   * and a malformed/truncated/NULL blob follows the engine's
   * unparseable-content contract: parsed entries up to the corruption are
@@ -85,23 +86,10 @@ object Zips {
     StructField("body", StringType)))
 
   /** One archive blob row → 0..N typed entry rows (UTF-8 decoded bodies);
-    * narrow flatMap, same contract as [[Warc.readArchives]]. */
-  def readZips(df: DataFrame, idCol: String, contentCol: String): DataFrame = {
-    require(df.schema(contentCol).dataType == BinaryType,
-      s"$contentCol must be BINARY (ZIP blobs); " +
-        s"got ${df.schema(contentCol).dataType.simpleString}")
-    val src = df.select(col(idCol), col(contentCol))
-    val idField = src.schema.head
-    implicit val enc: org.apache.spark.sql.Encoder[Row] =
-      Encoders.row(StructType(idField +: EntryType.fields.toSeq))
-    src.mapPartitions { it =>
-      it.flatMap { r =>
-        parseZip(r.getAs[Array[Byte]](1)) match {
-          case None => Iterator.empty
-          case Some(es) => es.iterator.map(e =>
-            Row(r.get(0), e.name, e.body.length.toLong, new String(e.body, UTF_8)))
-        }
-      }
-    }(enc)
-  }
+    * narrow explode, same contract as [[Warc.readArchives]]. */
+  def readZips(df: DataFrame, idCol: String, contentCol: String): DataFrame =
+    Blobs.explode(df, idCol, contentCol, EntryType) { bytes =>
+      parseZip(bytes).iterator.flatten.map(e =>
+        Row(e.name, e.body.length.toLong, new String(e.body, UTF_8)))
+    }
 }

@@ -1,20 +1,49 @@
 package graft.util
 
+import java.util.concurrent.{CompletableFuture, ExecutorService, Executors}
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.util.control.NonFatal
+
 /** Driver-thread overlap for INDEPENDENT deterministic legs of one query
   * (guide §2.6): Spark's scheduler happily runs several jobs at once —
   * actions are only sequential because driver code calls them
   * sequentially. A leg whose value does not depend on any other leg
   * (a retrain for the NEXT index generation, a stream-input staging
-  * write) can run on a pooled thread so its stages back-fill the cores
-  * the calling thread's per-action tail leaves idle.
+  * write, one of SCC's two colorings) can run on a pooled thread so its
+  * stages back-fill the cores the calling thread's per-action tail leaves
+  * idle.
   *
   * Use only for legs with no shared mutable state; values must be
   * identical regardless of execution order (all graft legs are
   * deterministic functions of their frozen inputs). Job
   * descriptions/groups are thread-local, so concurrent legs stay
   * correctly labeled in the UI.
+  *
+  * Legs run on one dedicated pool of [[PoolSize]] named daemon threads
+  * (`graft-async-N`), never the JVM common ForkJoinPool. A leg started
+  * from a pool thread runs inline on that thread, so no leg ever waits on
+  * a pool slot and nested use cannot deadlock. A leg's exception surfaces
+  * at `join()` either way.
   */
 object Async {
-  def future[A](body: => A): java.util.concurrent.CompletableFuture[A] =
-    java.util.concurrent.CompletableFuture.supplyAsync(() => body)
+
+  /** The widest overlap any query has: two legs beside its own thread. */
+  val PoolSize = 2
+
+  private final class LegThread(r: Runnable, n: Int)
+      extends Thread(r, s"graft-async-$n") {
+    setDaemon(true)
+  }
+
+  private val threads = new AtomicInteger()
+
+  private val pool: ExecutorService = Executors.newFixedThreadPool(PoolSize,
+    (r: Runnable) => new LegThread(r, threads.incrementAndGet()))
+
+  def future[A](body: => A): CompletableFuture[A] =
+    if (Thread.currentThread().isInstanceOf[LegThread])
+      try CompletableFuture.completedFuture(body)
+      catch { case NonFatal(e) => CompletableFuture.failedFuture[A](e) }
+    else CompletableFuture.supplyAsync(() => body, pool)
 }

@@ -222,6 +222,39 @@ class IvfIndexSpec extends AnyFunSuite {
       .count() === 0L)
   }
 
+  test("poisoned-corpus rebuild (raw codec): fails after the meta " +
+      "invalidation naming the id, data intact, a clean rebuild recovers") {
+    val base = emb.filter(col("vec_id") % 2 === 0)
+    val cents = KMeans.train(base, "vec_id", "embedding", k = 4, iters = 2)
+    val idx = newIndex(4)
+    idx.build(base, cents)
+    val q = emb.filter(col("vec_id") < 4)
+    val before = pairs(idx.serve(q, cents, k = 3, nprobe = 4))
+    val baseline = idx.trainMeanD2
+    val v = idx.store.version()
+    val steps = scala.collection.mutable.ArrayBuffer.empty[String]
+    idx.onStep = steps += _
+    val badId = 1000003L
+    val poisoned = base.select("vec_id", "embedding").unionByName(
+      emb.limit(1).select(lit(badId).as("vec_id"),
+        lit(null).cast(emb.schema("embedding").dataType).as("embedding")))
+    val e = intercept[Exception](idx.build(poisoned, cents))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => t.getMessage != null &&
+        t.getMessage.contains(s"vector of id $badId")), s"id not named: $e")
+    // the window: the check rides store.init, after the invalidation
+    assert(steps.contains("metaInvalidated") && !steps.contains("storeInit"),
+      s"steps: $steps")
+    assert(intercept[IllegalArgumentException](idx.trainMeanD2).getMessage
+      .contains("not built"))
+    assert(idx.store.version() === v, "the failed init committed")
+    steps.clear()
+    idx.build(base, cents)
+    assert(steps.contains("storeInit"))
+    assert(math.abs(idx.trainMeanD2 - baseline) <= 1e-9 * math.abs(baseline))
+    assert(pairs(idx.serve(q, cents, k = 3, nprobe = 4)) === before)
+  }
+
   test("randomized append/remove/compact lifecycle tracks a brute-force " +
       "model (fixed seed) — exhaustive serve exact after every op") {
     val rnd = new scala.util.Random(97)

@@ -240,6 +240,99 @@ class MultimodalSpec extends AnyFunSuite {
     assert(graft.multimodal.Gif.parse(null).isEmpty)
     assert(Multimodal.ImageIoDecoder.decode(null).isEmpty)
     assert(Multimodal.WavDecoder.samples8(null).isEmpty)
+
+    // the Blobs seam, per operator: fact extractors give one all-null row
+    // for a NULL or garbage blob, explode operators give 0 rows, and a
+    // STRING content column fails at call time — no job — naming it
+    import graft.multimodal.{Apng, Avi, Gif, Spectrogram, Tone, Y4m}
+    import graft.sources.{Warc, Zips}
+    type Op = (org.apache.spark.sql.DataFrame, String, String) =>
+      org.apache.spark.sql.DataFrame
+    val facts: Seq[(String, Op)] = Seq(
+      "extractImageFeatures" -> (Multimodal.extractImageFeatures(_, _, _)),
+      "extractImageHashes" -> (Multimodal.extractImageHashes(_, _, _)),
+      "extractImageHistograms" -> (Multimodal.extractImageHistograms(_, _, _)),
+      "augmentImages" -> (Multimodal.augmentImages(_, _, _)),
+      "extractEdgeFeatures" -> (Multimodal.extractEdgeFeatures(_, _, _)),
+      "extractAudioFeatures" -> (Multimodal.extractAudioFeatures(_, _, _)),
+      "Y4m.extractVideoFeatures" -> (Y4m.extractVideoFeatures(_, _, _)),
+      "Avi.extractVideoFeatures" -> (Avi.extractVideoFeatures(_, _, _)))
+    val explodes: Seq[(String, Op)] = Seq(
+      "extractAudioFrameFeatures" -> (Multimodal.extractAudioFrameFeatures(_, _, _)),
+      "extractImagePatches" -> (Multimodal.extractImagePatches(_, _, _)),
+      "Apng.extractFrameFeatures" -> (Apng.extractFrameFeatures(_, _, _)),
+      "Avi.extractFrameFeatures" -> (Avi.extractFrameFeatures(_, _, _)),
+      "Avi.extractVideoFrameFeatures" -> (Avi.extractVideoFrameFeatures(_, _, _)),
+      "Gif.extractVideoFrameFeatures" -> (Gif.extractVideoFrameFeatures(_, _, _)),
+      "Y4m.extractFrameFeatures" -> (Y4m.extractFrameFeatures(_, _, _)),
+      "Y4m.extractVideoFrameFeatures" -> (Y4m.extractVideoFrameFeatures(_, _, _)),
+      "Y4m.extractTemporalFeatures" -> (Y4m.extractTemporalFeatures(_, _, _)),
+      "Tone.extractToneFeatures" -> (Tone.extractToneFeatures(_, _, _)),
+      "Spectrogram.extractSpectrogram" -> (Spectrogram.extractSpectrogram(_, _, _)),
+      "Warc.readArchives" -> (Warc.readArchives(_, _, _)),
+      "Zips.readZips" -> (Zips.readZips(_, _, _)))
+    val blobs = mediaDf(Seq(2 -> null, 3 -> Array[Byte](9, 9, 9, 9)))
+    val strings = Seq((1, "not bytes")).toDF("id", "text_blob")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      for ((name, op) <- facts ++ explodes) {
+        val e = intercept[IllegalArgumentException](op(strings, "id", "text_blob"))
+        assert(e.getMessage.contains("text_blob must be BINARY"), s"$name: $e")
+      }
+      org.apache.spark.sql.graftbridge.ListenerBridge
+        .waitUntilEmpty(spark.sparkContext)
+      assert(jobs.get === 0, "a STRING content column ran a job")
+    } finally spark.sparkContext.removeSparkListener(listener)
+    for ((name, op) <- facts) {
+      val rows = op(blobs, "id", "content").collect()
+      assert(rows.map(_.getInt(0)).sorted.toSeq === Seq(2, 3), name)
+      rows.foreach(r => assert((1 until r.length).forall(r.isNullAt),
+        s"$name: id ${r.getInt(0)} has a non-null fact"))
+    }
+    for ((name, op) <- explodes)
+      assert(op(blobs, "id", "content").count() === 0L, name)
+  }
+
+  test("Blobs over a Row mapPartitions: no extra (de)serialization, columns by name") {
+    import graft.multimodal.Y4m
+    import org.apache.spark.sql.catalyst.plans.logical.{DeserializeToObject, SerializeFromObject}
+    val s2 = spark
+    import s2.implicits._
+    // id and content sit behind another column: a positional read is wrong
+    val df = Seq(("a", Array.tabulate[Byte](200)(i => (i * 3).toByte), 7),
+      ("b", null.asInstanceOf[Array[Byte]], 8)).toDF("tag", "content", "id")
+    val vids = Multimodal.resizeContent(df, "content", Y4m.Y4mEncoder(8, 8))
+    val direct = Y4m.extractVideoFrameFeatures(vids, "id", "content")
+    val narrow = Y4m.extractVideoFrameFeatures(
+      vids.select("id", "content"), "id", "content")
+    val plan = direct.queryExecution.optimizedPlan
+    assert(plan.collect { case s: SerializeFromObject => s }.size === 1, plan)
+    assert(plan.collect { case d: DeserializeToObject => d }.size === 1, plan)
+    assert(direct.columns.toSeq === "id" +: Y4m.VideoFrameFeatureType.fieldNames.toSeq)
+    val rows = direct.collect().map(_.toSeq).sortBy(_(6).asInstanceOf[Int])
+    assert(rows.map(r => (r(0), r(5), r(6))).toSeq ===
+      Seq((7, 3L, 0), (7, 3L, 1), (7, 3L, 2))) // 3 whole 64-byte planes; null → 0 rows
+    assert(rows.map(_.toSeq).toSeq ===
+      narrow.collect().map(_.toSeq).sortBy(_(6).asInstanceOf[Int]).toSeq)
+  }
+
+  test("ImageIo pool: one writer per thread and format, reused") {
+    import graft.multimodal.ImageIo
+    val mine = ImageIo.writer("png")
+    assert(ImageIo.writer("png") eq mine)
+    assert(ImageIo.reader("png") eq ImageIo.reader("png"))
+    assert(!(ImageIo.writer("gif") eq mine))
+    var theirs: javax.imageio.ImageWriter = null
+    val t = new Thread(() => theirs = ImageIo.writer("png"))
+    t.start(); t.join()
+    assert(theirs != null && !(theirs eq mine))
   }
 
   test("WavDecoder yields null features for non-audio bytes, row preserved") {
@@ -281,8 +374,9 @@ class MultimodalSpec extends AnyFunSuite {
     val feat = Y4m.videoFeatures(y4m)
     assert(feat === Row(8, 8, 25, 1, 3L))
 
-    // generic FrameSampler seam: every 2nd frame
-    val sampled = Y4m.Y4mFrameSampler(everyN = 2).sampleBatch(Seq(y4m)).head
+    // frame sampling on the operator: every 2nd frame
+    val sampled = Y4m.extractFrameFeatures(mediaDf(Seq(1 -> y4m)), "id", "content",
+      everyN = 2).collect().map(r => (r.getInt(1), r.getLong(2))).sortBy(_._1).toSeq
     assert(sampled.map(_._1) === Seq(0, 2))
   }
 
