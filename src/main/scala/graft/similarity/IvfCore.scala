@@ -1,12 +1,12 @@
 package graft.similarity
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StructField, StructType}
 
-import graft.store.PartitionedStore
+import graft.store.{Commit, PartitionedStore}
 
 /** A PERSISTED, incrementally-maintained IVF index — the op a real serving
   * pipeline runs daily: append a new embedding batch into the persisted
@@ -122,10 +122,7 @@ class IvfCore[C <: CellCodec](val spark: SparkSession, val root: String,
       "has no drift baseline")
     val body = s"""{"train_mean_d2":${mean.get},${codec.metaFields(model)}""" +
       s""""n_partitions":$nPartitions}"""
-    val tmp = Paths.get(root, s".meta_tmp${System.nanoTime()}")
-    Files.write(tmp, body.getBytes("UTF-8"))
-    Files.move(tmp, metaPath,
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    Commit.replaceFile(metaPath, ".meta_tmp", body.getBytes("UTF-8"))
   }
 
   /** Append a batch under the FROZEN models: assign, drift-check, encode
@@ -190,8 +187,7 @@ class IvfCore[C <: CellCodec](val spark: SparkSession, val root: String,
     * config); bounded nprobe reads ~nprobe/C of the index; `rerank` bounds
     * the PQ codec's ADC cut (raw scores are already exact). */
   def serve(queries: DataFrame, centroids: DataFrame,
-      @deprecatedName("kTop", "0.1.0") k: Int, nprobe: Int,
-      rerank: Int = Int.MaxValue): DataFrame = {
+      k: Int, nprobe: Int, rerank: Int = Int.MaxValue): DataFrame = {
     require(k >= 1 && nprobe >= 1 && rerank >= k,
       s"need k >= 1, nprobe >= 1, rerank >= k: $k/$nprobe/$rerank")
     // bounded-heap rank: candidates never cross a shuffle

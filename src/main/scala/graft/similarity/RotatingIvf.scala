@@ -1,8 +1,10 @@
 package graft.similarity
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import graft.store.Commit
 
 /** Drift-triggered ONLINE rebuild for a maintained [[IvfCore]] of any
   * codec — serving continuity across a retrain. A rebuild IN PLACE would
@@ -28,10 +30,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * ONCE; every other op reads the live generation's persisted copy, so a
   * caller can never pair gen-N queries with gen-M data.
   *
-  * Writer contract: all mutations of one root serialize on a per-root JVM
-  * monitor (the [[graft.store.PartitionedStore]] commit-lock shape), so an
-  * in-process append waits out a concurrent rebuild and lands in the
-  * PROMOTED generation. Across PROCESSES the supported deployment is one
+  * Writer contract: all mutations of one root serialize on the root's
+  * writer monitor ([[graft.store.Commit.lock]], the one the store commits
+  * use), so an in-process append waits out a concurrent rebuild and lands
+  * in the PROMOTED generation. Across PROCESSES the supported deployment is one
   * writer (unlimited readers); a second process promoting mid-write is
   * caught by a post-commit pointer re-check that fails the write LOUDLY
   * naming the stranded batch instead of letting it silently vanish at the
@@ -44,7 +46,7 @@ final class RotatingIvf[C <: CellCodec](val spark: SparkSession,
 
   private def rootPath: Path = Paths.get(root)
   private def pointerPath: Path = rootPath.resolve("current")
-  private def writerLock: Object = RotatingIvf.lock(rootPath)
+  private def writerLock: Object = Commit.lock(rootPath)
 
   /** Test-only fault-injection seam: invoked after each ordered step of a
     * rebuild (`centroidsPersisted`, `genBuilt`, `ptrWritten`, `promoted`)
@@ -87,7 +89,9 @@ final class RotatingIvf[C <: CellCodec](val spark: SparkSession,
     * build there AGAINST THE PERSISTED COPY while the live one keeps
     * serving, promote with one atomic pointer rename, then reclaim all but
     * the new generation and its predecessor. Holds the writer lock end to
-    * end, so two rebuilds never interleave their promotes. */
+    * end, so two rebuilds never interleave their promotes. The reclaim is
+    * best-effort: once promoted the rebuild stands, and a failed reclaim
+    * is logged and retried by the next rebuild. */
   def rebuild(corpus: DataFrame, centroids: DataFrame): Unit =
     writerLock.synchronized {
       Files.createDirectories(rootPath)
@@ -100,21 +104,16 @@ final class RotatingIvf[C <: CellCodec](val spark: SparkSession,
       // persist quantizer X while assigning the data under quantizer Y
       genIndex(gen).build(corpus, genCentroids(gen))
       onStep("genBuilt")
-      val tmp = rootPath.resolve(s".ptr${System.nanoTime()}")
-      Files.write(tmp, gen.getBytes("UTF-8"))
-      onStep("ptrWritten")
-      Files.move(tmp, pointerPath,
-        StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+      Commit.replaceFile(pointerPath, ".ptr", gen.getBytes("UTF-8"),
+        onStep("ptrWritten"))
       onStep("promoted")
       val keep = Set(gen) ++ prev
-      import scala.jdk.CollectionConverters._
-      val s = Files.list(rootPath)
-      val stale = try s.iterator().asScala.filter { p =>
+      Commit.bestEffort(s"[RotatingIvf] reclaim at $root failed ($gen stands; " +
+          "the next rebuild retries)")(Commit.sweep(rootPath)(_.filter { p =>
         val name = p.getFileName.toString
         (Files.isDirectory(p) && name.startsWith("gen") &&
           !keep.contains(name)) || name.startsWith(".ptr")
-      }.toSeq finally s.close()
-      stale.foreach(graft.util.Scratch.deleteRecursive)
+      }))
     }
 
   /** One mutation against the live generation under the writer lock,
@@ -158,8 +157,8 @@ final class RotatingIvf[C <: CellCodec](val spark: SparkSession,
     guardedWrite("compact")(g => genIndex(g).compact(maxDirs))
 
   /** [[IvfCore.serve]] over the live generation. */
-  def serve(queries: DataFrame, @deprecatedName("kTop", "0.1.0") k: Int,
-      nprobe: Int, rerank: Int = Int.MaxValue): DataFrame = {
+  def serve(queries: DataFrame, k: Int, nprobe: Int,
+      rerank: Int = Int.MaxValue): DataFrame = {
     val (ix, cents) = current()
     ix.serve(queries, cents, k, nprobe, rerank)
   }
@@ -171,15 +170,4 @@ final class RotatingIvf[C <: CellCodec](val spark: SparkSession,
     val (ix, cents) = current()
     ix.neighborsWithin(batch, cents, minSim, nprobe, rerank)
   }
-}
-
-private[graft] object RotatingIvf {
-  // one writer monitor per normalized rotating root, JVM-wide — two
-  // wrappers over one directory serialize on the SAME object. Bounded by
-  // the distinct roots the Spark driver opens; never reclaimed
-  // (reclaiming would reintroduce the race).
-  private val locks =
-    new java.util.concurrent.ConcurrentHashMap[Path, Object]()
-  private def lock(root: Path): Object =
-    locks.computeIfAbsent(root.toAbsolutePath.normalize, _ => new Object)
 }

@@ -1,7 +1,6 @@
 package graft.store
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import java.util.Comparator
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
@@ -65,10 +64,8 @@ final class BucketStore(spark: SparkSession, rootDir: String) {
 
   private def writePointer(root: Path, role: String, target: String): Unit = {
     Files.createDirectories(root)
-    val tmp = root.resolve("_PTR_" + role + ".tmp" + System.nanoTime())
-    Files.write(tmp, target.getBytes("UTF-8"))
-    Files.move(tmp, root.resolve("_PTR_" + role),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    Commit.replaceFile(root.resolve("_PTR_" + role), "_PTR_" + role + ".tmp",
+      target.getBytes("UTF-8"))
   }
 
   private def stageDir(b: Bucket, stage: String, buffer: Option[String]): Path = {
@@ -227,17 +224,24 @@ final class BucketStore(spark: SparkSession, rootDir: String) {
     * which nothing here renames or deletes — StoreCrudSpec's concurrent
     * promote test runs this race for real.
     *
-    * In-process promotes of one stage serialize on a per-root JVM monitor
-    * (the PartitionedStore doctrine; cross-process, one writer process is
-    * the supported deployment), which makes the closing ORPHAN SWEEP safe:
-    * a crash between the ordered steps strands a `v_*` dir no pointer
-    * references (and possibly a `_PTR_*.tmp*` file) — unreachable, since
-    * v_ dirs are only ever addressed through pointers — and the next
-    * promote of the stage reclaims them, so crashes never leak data-sized
-    * dirs (FaultInjectionSpec executes each window). */
-  def promote(b: Bucket, stage: String, buffer: String): Unit = {
+    * In-process promotes of one stage serialize on the stage root's
+    * [[Commit.lock]] (cross-process, one writer process is the supported
+    * deployment), which makes the closing ORPHAN SWEEP safe: a crash
+    * between the ordered steps strands a `v_*` dir no pointer references
+    * (and possibly a `_PTR_*.tmp*` file) — unreachable, since v_ dirs are
+    * only ever addressed through pointers — and the next promote of the
+    * stage reclaims them, so crashes never leak data-sized dirs
+    * (FaultInjectionSpec executes each window). Once the buffer pointer is
+    * re-aimed the promote stands: the sweep is best-effort, and a failed
+    * one is logged and retried by the next promote. */
+  def promote(b: Bucket, stage: String, buffer: String): Unit =
+    promoteThen(b, stage, buffer)(())
+
+  /** [[promote]], then `reclaim` inside its best-effort post-switch block. */
+  private def promoteThen(b: Bucket, stage: String, buffer: String)(
+      reclaim: => Unit): Unit = {
     val root = stageRoot(b, stage)
-    BucketStore.promoteLock(root).synchronized {
+    Commit.lock(root).synchronized {
       val curName = readPointer(root, "current").getOrElse("current")
       val bufRole = roleName(Some(buffer))
       val bufName = readPointer(root, bufRole).getOrElse(bufRole)
@@ -254,8 +258,14 @@ final class BucketStore(spark: SparkSession, rootDir: String) {
       writePointer(root, "current", newName) // the atomic visibility switch
       onStep("currentSwitched")
       writePointer(root, bufRole, curName)
-      onStep("bufferRepointed")
-      sweepOrphans(root)
+      Commit.bestEffort(s"[BucketStore] post-promote reclaim at $root failed " +
+          "(the promote stands; the next promote's sweep retries)") {
+        // seam inside the best-effort block: the promote is already
+        // visible, so even a throwing hook must not fail it
+        onStep("bufferRepointed")
+        sweepOrphans(root)
+        reclaim
+      }
     }
   }
 
@@ -264,44 +274,31 @@ final class BucketStore(spark: SparkSession, rootDir: String) {
     * write strands exactly one), pointer tmp files (a crash inside
     * writePointer's two steps), and INTERNAL transient buffers — the
     * `buffer_rewrite_/zorder_/compact_` dirs and pointers bufferAndPromote
-    * always deletes on completion, so any survivor not in the JVM-wide
-    * in-flight registry is a crashed commit's leftovers (same
-    * registry-vs-sweep shape as PartitionedStore's in-flight stamps; a
-    * registry lost with a crashed PROCESS just defers the reclaim to the
-    * next process's promote). Runs under the promote lock; never touches
+    * always deletes on completion, so any survivor not registered in
+    * [[Commit.inFlight]] is a crashed commit's leftovers (a registry lost
+    * with a crashed PROCESS just defers the reclaim to the next process's
+    * promote). Runs under the promote lock; never touches
     * literal-named dirs (legacy layout), USER-named buffers (ping-pong
     * parking is long-lived by design), or anything a live pointer
     * references. */
-  private def sweepOrphans(root: Path): Unit = {
-    if (!Files.exists(root)) return
-    val entries = {
-      val s = Files.list(root)
-      try s.iterator().asScala.toList finally s.close()
-    }
+  private def sweepOrphans(root: Path): Unit = Commit.sweep(root) { entries =>
     def internal(n: String) = BucketStore.InternalBufferPrefixes.exists(n.startsWith)
-    def inFlight(n: String) = BucketStore.inFlightBuffers
-      .contains(root.toAbsolutePath.normalize.toString + "/" + n)
-    // stale internal buffer pointers first: each names the demoted dir a
-    // crashed bufferAndPromote would have deleted — drop the pointer so
-    // the dir pass below sees that dir unreferenced
-    val stalePtrs = entries.filter { p =>
+    def role(p: Path) = p.getFileName.toString.stripPrefix("_PTR_")
+    // stale internal buffer pointers go first: each names the demoted dir a
+    // crashed bufferAndPromote would have deleted, so that dir counts as
+    // unreferenced below (the sweep skips in-flight dirs itself; a pointer
+    // is in flight under its role name)
+    val (stalePtrs, livePtrs) = entries.filter { p =>
       val n = p.getFileName.toString
-      n.startsWith("_PTR_") && !n.contains(".tmp") &&
-        internal(n.stripPrefix("_PTR_")) && !inFlight(n.stripPrefix("_PTR_"))
-    }
-    stalePtrs.foreach(Files.deleteIfExists(_))
-    val referenced = entries
-      .filter(_.getFileName.toString.startsWith("_PTR_"))
-      .filterNot(_.getFileName.toString.contains(".tmp"))
-      .diff(stalePtrs)
+      n.startsWith("_PTR_") && !n.contains(".tmp")
+    }.partition(p => internal(role(p)) && !Commit.isInFlight(root, role(p)))
+    val referenced = livePtrs
       .map(p => new String(Files.readAllBytes(p), "UTF-8").trim).toSet
-    entries.foreach { p =>
+    stalePtrs ++ entries.filter { p =>
       val name = p.getFileName.toString
-      if (name.contains("_PTR_") && name.contains(".tmp"))
-        Files.deleteIfExists(p)
-      else if (Files.isDirectory(p) && !referenced.contains(name) &&
-          (name.startsWith("v_") || (internal(name) && !inFlight(name))))
-        deleteDir(p)
+      (name.contains("_PTR_") && name.contains(".tmp")) ||
+        (Files.isDirectory(p) && !referenced.contains(name) &&
+          (name.startsWith("v_") || internal(name)))
     }
   }
 
@@ -310,7 +307,7 @@ final class BucketStore(spark: SparkSession, rootDir: String) {
     * different dirs). */
   private def deleteBuffer(b: Bucket, stage: String, buffer: String): Unit = {
     val root = stageRoot(b, stage)
-    deleteDir(stageDir(b, stage, Some(buffer)))
+    Commit.deleteTree(stageDir(b, stage, Some(buffer)))
     Files.deleteIfExists(root.resolve("_PTR_" + roleName(Some(buffer))))
   }
 
@@ -325,32 +322,33 @@ final class BucketStore(spark: SparkSession, rootDir: String) {
     * run the buffer write, promote only if it succeeded, and tear the
     * partial buffer down if it failed — a throwing write job (bad source
     * row, merge cardinality violation, executor loss) must leave the
-    * current stage byte-identical AND not accumulate orphan buffer dirs. */
+    * current stage byte-identical AND not accumulate orphan buffer dirs.
+    * Cleanup never changes the outcome: a failing teardown cannot replace
+    * the write's own error, and once the switch landed the reclaim is
+    * best-effort (the PartitionedStore rule). */
   private def bufferAndPromote(b: Bucket, stage: String, prefix: String)(
       writeBuf: Option[String] => Unit): Unit = {
     val buf = prefix + System.nanoTime()
     // register as in-flight BEFORE any data lands: a concurrent promote's
     // orphan sweep must not reclaim this commit's live buffer as crash
     // debris (the PartitionedStore in-flight-stamp shape)
-    val key = stageRoot(b, stage).toAbsolutePath.normalize.toString +
-      "/" + roleName(Some(buf))
-    BucketStore.inFlightBuffers.add(key)
-    try {
+    Commit.inFlight(stageRoot(b, stage), roleName(Some(buf))) {
       try writeBuf(Some(buf))
       catch {
         case e: Throwable =>
-          deleteBuffer(b, stage, buf) // promote never ran
+          // promote never ran
+          try deleteBuffer(b, stage, buf)
+          catch { case c: Exception => e.addSuppressed(c) }
           throw e
       }
       onStep("bufferWritten")
-      promote(b, stage, buf)
       // reclaim the superseded primary immediately (post-promote, the buffer
       // role resolves to it). In-flight jobs that resolved the OLD current
       // before the switch race only with this deletion — the same window the
       // reference has between alias swap and old-index delete; a deployment
       // wanting zero-race long readers defers this to a retention sweep.
-      deleteBuffer(b, stage, buf)
-    } finally BucketStore.inFlightBuffers.remove(key)
+      promoteThen(b, stage, buf)(deleteBuffer(b, stage, buf))
+    }
   }
 
   /** Small-file compaction: rewrite a stage so each time partition lands in
@@ -392,6 +390,7 @@ final class BucketStore(spark: SparkSession, rootDir: String) {
     val dir = stageDir(b, stage, None)
     if (!Files.exists(dir)) 0L
     else {
+      import scala.jdk.CollectionConverters._
       val s = Files.walk(dir)
       try s.iterator().asScala
         .count(p => p.getFileName.toString.endsWith(".parquet"))
@@ -405,62 +404,30 @@ final class BucketStore(spark: SparkSession, rootDir: String) {
     (b.dataSchema.temporal, b.dataSchema.storage.flatMap(_.existAgeMax)) match {
       case (Some(TemporalSchema(_, period)), Some(maxAge)) =>
         val cutoff = period.truncate(now.minus(maxAge))
-        val dir = stageDir(b, stage, None)
-        if (!Files.exists(dir)) return 0
-        val ls = Files.list(dir)
-        val entries = try ls.iterator().asScala.toSeq finally ls.close()
-        val doomed = entries.filter { p =>
+        val doomed = Commit.list(stageDir(b, stage, None)).filter { p =>
           val n = p.getFileName.toString
           n.startsWith(PartitionCol + "=") &&
             n.stripPrefix(PartitionCol + "=") < cutoff
         }
-        doomed.foreach(deleteDir)
+        doomed.foreach(Commit.deleteTree)
         doomed.size
       case _ => 0
     }
   }
 
   /** U12 deleteDatastore — drop the whole bucket dir. */
-  def deleteDatastore(b: Bucket): Unit = deleteDir(bucketRoot(b))
-
-  private def deleteDir(p: Path): Unit =
-    if (Files.exists(p)) {
-      val s = Files.walk(p)
-      try s.sorted(Comparator.reverseOrder[Path]())
-        .iterator().asScala.foreach(Files.delete)
-      finally s.close()
-    }
-
-  private implicit class IterAsScala[T](it: java.util.Iterator[T]) {
-    def asScala: Iterator[T] = new Iterator[T] {
-      def hasNext = it.hasNext; def next() = it.next()
-    }
-  }
+  def deleteDatastore(b: Bucket): Unit = Commit.deleteTree(bucketRoot(b))
 }
 
 object BucketStore {
   /** Name of the derived time-partition column. */
   val PartitionCol = "p_time"
 
-  // one promote monitor per normalized stage root, JVM-wide (the
-  // PartitionedStore.commitLock shape): concurrent promotes of one stage
-  // serialize, making the post-promote orphan sweep race-free in-process.
-  // Bounded by the number of stage roots the driver opens; never reclaimed.
-  private val promoteLocks =
-    new java.util.concurrent.ConcurrentHashMap[Path, Object]()
-  private[store] def promoteLock(root: Path): Object =
-    promoteLocks.computeIfAbsent(root.toAbsolutePath.normalize, _ => new Object)
-
   /** The TRANSIENT buffer prefixes bufferAndPromote creates and always
     * deletes on completion — the only buffer names the orphan sweep may
     * reclaim. User-named buffers (ping-pong parking) are never touched. */
   private[store] val InternalBufferPrefixes =
     Seq("buffer_rewrite_", "buffer_zorder_", "buffer_compact_")
-
-  // root-qualified role names of buffer commits between first write and
-  // end-of-delete: the orphan sweep skips these (see bufferAndPromote)
-  private[store] val inFlightBuffers: java.util.Set[String] =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
   /** Reference codecs gzip/snappy/framed-snappy
     * (`HfdsDataWriteService.java:642-660`) → parquet compression codecs. */

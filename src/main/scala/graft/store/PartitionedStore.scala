@@ -1,6 +1,6 @@
 package graft.store
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -62,7 +62,8 @@ import org.apache.spark.sql.functions._
   * version decodable with the schema in force at its commit.
   *
   * Writer guard: commits carry a version CAS — each commit records the
-  * manifest version it read, and re-checks it under a per-root JVM lock
+  * manifest version it read, and re-checks it under the root's writer
+  * monitor ([[Commit.lock]], shared with the other pointer-swap protocols)
   * immediately before the atomic swap. Two racing commits therefore
   * resolve exactly-one-wins: the loser throws
   * `ConcurrentModificationException` naming both versions, its partial
@@ -89,6 +90,7 @@ import org.apache.spark.sql.functions._
 final class PartitionedStore(val spark: SparkSession, val root: String,
     val keyCols: Seq[String], val nPartitions: Int,
     val retainVersions: Int = 2) {
+  import PartitionedStore._
   require(nPartitions > 0, "nPartitions must be positive")
   require(keyCols.nonEmpty, "at least one key column")
   require(retainVersions >= 1, "retainVersions must be >= 1")
@@ -113,15 +115,11 @@ final class PartitionedStore(val spark: SparkSession, val root: String,
       .fromJson(new String(Files.readAllBytes(p), "UTF-8"))
       .asInstanceOf[org.apache.spark.sql.types.StructType]
 
-  /** Small-file write with the same atomicity discipline as the manifest:
-    * tmp + ATOMIC_MOVE, so a racing reader sees the old bytes or the new
-    * bytes, never a truncated file. */
-  private def writeFileAtomic(p: Path, body: Array[Byte]): Unit = {
-    val tmp = rootPath.resolve(s".tmp${System.nanoTime()}")
-    Files.write(tmp, body)
-    Files.move(tmp, p,
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-  }
+  /** Small-file write with the same atomicity discipline as the manifest,
+    * so a racing reader sees the old bytes or the new, never a truncated
+    * file. */
+  private def writeFileAtomic(p: Path, body: Array[Byte]): Unit =
+    Commit.replaceFile(p, ".tmp", body)
 
   /** State schema as persisted at init. Every read supplies it explicitly:
     * whether Spark emits a schema-bearing parquet file for an EMPTY write
@@ -156,22 +154,11 @@ final class PartitionedStore(val spark: SparkSession, val root: String,
   private def versionedSchemaPath(n: Int): Path =
     rootPath.resolve(s"schema.v$n.json")
 
-  /** Root entries whose name matches `pattern` — the ONE listing loop
-    * behind the versioned-manifest, versioned-schema and stamp-dir scans
-    * (stream closed either way; missing root = empty). */
-  private def listRoot(pattern: String, dirsOnly: Boolean = false): Seq[Path] = {
-    if (!Files.exists(rootPath)) return Nil
-    val s = Files.list(rootPath)
-    try {
-      import scala.jdk.CollectionConverters._
-      s.iterator().asScala.filter(p =>
-        p.getFileName.toString.matches(pattern) &&
-          (!dirsOnly || Files.isDirectory(p))).toSeq
-    } finally s.close()
-  }
-
   private def listVersionedSchemas(): Seq[Path] =
-    listRoot("schema\\.v\\d+\\.json")
+    Commit.list(rootPath).filter(named(VersionedSchema))
+
+  private def named(pattern: String)(p: Path): Boolean =
+    p.getFileName.toString.matches(pattern)
 
   /** The schema in force at `version`: the newest `schema.v<m>.json` with
     * m ≤ version ([[evolve]] writes one per evolution; [[refresh]] writes
@@ -222,12 +209,8 @@ final class PartitionedStore(val spark: SparkSession, val root: String,
 
   /** Swap the current-manifest pointer — the one atomic visibility switch
     * every reader resolves. */
-  private def swapPointer(body: String): Unit = {
-    val tmp = rootPath.resolve(s"manifest.tmp${System.nanoTime()}")
-    Files.write(tmp, body.getBytes("UTF-8"))
-    Files.move(tmp, manifestPath,
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-  }
+  private def swapPointer(body: String): Unit =
+    Commit.replaceFile(manifestPath, "manifest.tmp", body.getBytes("UTF-8"))
 
   private def writeManifest(entries: Map[Int, String], version: Int): Unit = {
     Files.createDirectories(rootPath)
@@ -373,7 +356,7 @@ final class PartitionedStore(val spark: SparkSession, val root: String,
   }
 
   private def listVersionedManifests(): Seq[Path] =
-    listRoot("manifest\\.v\\d+")
+    Commit.list(rootPath).filter(named(VersionedManifest))
 
   /** Partitioned refresh: `newState` carries the FULL new content of the
     * `touched` partitions (and only those — rows are re-routed and checked
@@ -464,206 +447,191 @@ final class PartitionedStore(val spark: SparkSession, val root: String,
     val stamp = s"refresh${System.nanoTime()}"
     var schemaWrittenAt: Option[Int] = None
     var linkedVersion: Option[Int] = None
-    // register the stamp as in-flight BEFORE any data lands: a concurrent
-    // winner's retention sweep must not reclaim this commit's
-    // written-but-not-yet-committed dirs as "unreferenced garbage"
-    PartitionedStore.inFlightStamps.add(stampKey(stamp))
-    try {
-      val routed = newState.withColumn(PartCol, partitionId)
-      val touchedSet = touched.toSet
-      // loud misroute check INSIDE the job: a new-state row hashing to an
-      // undeclared partition would silently vanish from the view otherwise
-      val guarded = routed.withColumn(PartCol,
-        when(col(PartCol).isInCollection(touchedSet),
-          col(PartCol))
-          .otherwise(raise_error(concat(
-            lit("refresh row routed to undeclared partition "),
-            col(PartCol).cast("string")))))
-      guarded.repartition(math.min(touched.size, 200), col(PartCol))
-        .write.mode("overwrite").partitionBy(PartCol)
-        .parquet(rootPath.resolve(stamp).toString)
-      val emptyDir = s"$stamp/__empty"
-      if (!appendMode)
-        newState.limit(0).write.mode("overwrite").parquet(dirFor(emptyDir))
-      onStep("dataWritten")
-      val entries = old ++ touched.flatMap { i =>
-        val sub = s"$stamp/$PartCol=$i"
-        val wrote = Files.exists(rootPath.resolve(sub))
-        if (!appendMode) Some(i -> (if (wrote) sub else emptyDir))
-        else if (!wrote) None // empty delta slice: partition unchanged
-        else {
-          // ADD the new dir to the partition's list; a schema-carrying
-          // shared empty placeholder is superseded by real data
-          val prev = entryDirs(old(i)).filterNot(_.endsWith("/__empty"))
-          Some(i -> (prev :+ sub).mkString(";"))
+    // register the stamp as in-flight BEFORE any data lands, and keep it
+    // there through this commit's own sweep: a concurrent winner's
+    // retention sweep must not reclaim this commit's written-but-not-yet-
+    // committed dirs as "unreferenced garbage". Once committed the stamp is
+    // manifest-referenced (the keep set protects it), so even a swallowed
+    // sweep failure leaves no reclaim hazard.
+    Commit.inFlight(rootPath, stamp) {
+      try {
+        val routed = newState.withColumn(PartCol, partitionId)
+        val touchedSet = touched.toSet
+        // loud misroute check INSIDE the job: a new-state row hashing to an
+        // undeclared partition would silently vanish from the view otherwise
+        val guarded = routed.withColumn(PartCol,
+          when(col(PartCol).isInCollection(touchedSet),
+            col(PartCol))
+            .otherwise(raise_error(concat(
+              lit("refresh row routed to undeclared partition "),
+              col(PartCol).cast("string")))))
+        guarded.repartition(math.min(touched.size, 200), col(PartCol))
+          .write.mode("overwrite").partitionBy(PartCol)
+          .parquet(rootPath.resolve(stamp).toString)
+        val emptyDir = s"$stamp/__empty"
+        if (!appendMode)
+          newState.limit(0).write.mode("overwrite").parquet(dirFor(emptyDir))
+        onStep("dataWritten")
+        val entries = old ++ touched.flatMap { i =>
+          val sub = s"$stamp/$PartCol=$i"
+          val wrote = Files.exists(rootPath.resolve(sub))
+          if (!appendMode) Some(i -> (if (wrote) sub else emptyDir))
+          else if (!wrote) None // empty delta slice: partition unchanged
+          else {
+            // ADD the new dir to the partition's list; a schema-carrying
+            // shared empty placeholder is superseded by real data
+            val prev = entryDirs(old(i)).filterNot(_.endsWith("/__empty"))
+            Some(i -> (prev :+ sub).mkString(";"))
+          }
+        }.toMap
+        // writer guard (version CAS): serialize the visibility switch per
+        // store root within this JVM, and re-read the manifest version
+        // UNDER the lock — a concurrent commit that landed since this one
+        // read `oldVersion` fails HERE, loudly, before it can last-write-win
+        // the manifest (and before the sweep below could reclaim the
+        // winner's dirs). In-process racers are therefore strictly
+        // exactly-one-wins; a cross-process racer that slips past the
+        // re-read is caught by writeManifest's hard-link arbiter (exactly
+        // one process can CREATE manifest.v<N+1>), closing the
+        // check-to-rename window the re-read alone would leave. The schema
+        // step sits
+        // INSIDE the lock, after the check: a CAS loser must never
+        // overwrite (evolve) or orphan-clear (refresh) the winner's
+        // just-committed schema.v<N+1>.json.
+        Commit.lock(rootPath).synchronized {
+          val nowVersion = parseManifest(manifestPath)._1
+          if (nowVersion != oldVersion)
+            throw new java.util.ConcurrentModificationException(
+              s"concurrent commit detected on store at $root: read version " +
+                s"$oldVersion but the manifest is now at $nowVersion — this " +
+                "refresh loses; re-derive the delta against the current " +
+                "version and retry")
+          onStep("casChecked")
+          // the versioned-manifest link is BOTH the immutable copy and the
+          // cross-process arbiter — it lands BEFORE the schema step so a
+          // cross-process racer that slipped past the re-read dies before it
+          // can overwrite (evolve) or orphan-clear (refresh) the winner's
+          // just-committed schema.v<N+1>.json. The link is reader-invisible
+          // until the pointer swap (readAsOf refuses versions beyond the
+          // pointer), so the swap below stays the one visibility switch.
+          val body = manifestBody(entries, oldVersion + 1)
+          linkVersionedManifest(body, oldVersion + 1)
+          linkedVersion = Some(oldVersion + 1)
+          // stale-writer guard (cross-process): the arbiter only arbitrates
+          // names still ON DISK — a writer in another process stalled since
+          // its CAS re-read for >= retainVersions commits can re-link an
+          // already-swept manifest.v<N+1> and would then swap the pointer
+          // BACKWARDS over reclaimed dirs. Re-read the pointer AFTER the
+          // link: once this commit holds the v<N+1> name no other process
+          // can commit any further version (each must link its own next
+          // version, whose number passes THROUGH N+1), so this re-read is
+          // race-free — a moved pointer proves this writer stalled past the
+          // retention window and must abort (teardown removes only its own
+          // re-created link, which the sweep had already reclaimed).
+          val postLink = parseManifest(manifestPath)._1
+          if (postLink != oldVersion)
+            throw new java.util.ConcurrentModificationException(
+              s"stale writer on store at $root: read version $oldVersion " +
+                s"but the manifest advanced to $postLink before this " +
+                "commit's versioned-manifest link — the arbiter file for " +
+                s"version ${oldVersion + 1} was already swept (retention), " +
+                "so this commit would have rolled the pointer backwards; " +
+                "it loses — re-derive the delta against the current " +
+                "version and retry")
+          onStep("linkedManifest")
+          // an evolution's versioned schema is resolvable BEFORE any reader
+          // can see the manifest that needs it; a non-evolve commit clears
+          // any orphan at its version (a crash between an evolution's schema
+          // write and its manifest swap leaves one, which would otherwise
+          // mis-type this commit's time-travel reads)
+          evolvedTo match {
+            case Some(sc) =>
+              // a store initialized by pre-versioning code has no
+              // schema.v1.json; snapshot the current pointer as v1 BEFORE
+              // the first evolution's versioned schema lands, or readAsOf
+              // of pre-evolution versions would fall through schemaAsOf's
+              // pointer fallback and resolve the EVOLVED schema — showing
+              // the added column (as NULL) before it existed
+              if (listVersionedSchemas().isEmpty)
+                writeFileAtomic(versionedSchemaPath(1),
+                  Files.readAllBytes(schemaPath))
+              schemaWrittenAt = Some(oldVersion + 1)
+              writeFileAtomic(
+                versionedSchemaPath(oldVersion + 1), sc.json.getBytes("UTF-8"))
+            case None =>
+              Files.deleteIfExists(versionedSchemaPath(oldVersion + 1)); ()
+          }
+          onStep("schemaStep")
+          swapPointer(body) // the single atomic visibility switch
         }
-      }.toMap
-      // writer guard (version CAS): serialize the visibility switch per
-      // store root within this JVM, and re-read the manifest version
-      // UNDER the lock — a concurrent commit that landed since this one
-      // read `oldVersion` fails HERE, loudly, before it can last-write-win
-      // the manifest (and before the sweep below could reclaim the
-      // winner's dirs). In-process racers are therefore strictly
-      // exactly-one-wins; a cross-process racer that slips past the
-      // re-read is caught by writeManifest's hard-link arbiter (exactly
-      // one process can CREATE manifest.v<N+1>), closing the
-      // check-to-rename window the re-read alone would leave. The schema
-      // step sits
-      // INSIDE the lock, after the check: a CAS loser must never
-      // overwrite (evolve) or orphan-clear (refresh) the winner's
-      // just-committed schema.v<N+1>.json.
-      PartitionedStore.commitLock(rootPath).synchronized {
-        val nowVersion = parseManifest(manifestPath)._1
-        if (nowVersion != oldVersion)
-          throw new java.util.ConcurrentModificationException(
-            s"concurrent commit detected on store at $root: read version " +
-              s"$oldVersion but the manifest is now at $nowVersion — this " +
-              "refresh loses; re-derive the delta against the current " +
-              "version and retry")
-        onStep("casChecked")
-        // the versioned-manifest link is BOTH the immutable copy and the
-        // cross-process arbiter — it lands BEFORE the schema step so a
-        // cross-process racer that slipped past the re-read dies before it
-        // can overwrite (evolve) or orphan-clear (refresh) the winner's
-        // just-committed schema.v<N+1>.json. The link is reader-invisible
-        // until the pointer swap (readAsOf refuses versions beyond the
-        // pointer), so the swap below stays the one visibility switch.
-        val body = manifestBody(entries, oldVersion + 1)
-        linkVersionedManifest(body, oldVersion + 1)
-        linkedVersion = Some(oldVersion + 1)
-        // stale-writer guard (cross-process): the arbiter only arbitrates
-        // names still ON DISK — a writer in another process stalled since
-        // its CAS re-read for >= retainVersions commits can re-link an
-        // already-swept manifest.v<N+1> and would then swap the pointer
-        // BACKWARDS over reclaimed dirs. Re-read the pointer AFTER the
-        // link: once this commit holds the v<N+1> name no other process
-        // can commit any further version (each must link its own next
-        // version, whose number passes THROUGH N+1), so this re-read is
-        // race-free — a moved pointer proves this writer stalled past the
-        // retention window and must abort (teardown removes only its own
-        // re-created link, which the sweep had already reclaimed).
-        val postLink = parseManifest(manifestPath)._1
-        if (postLink != oldVersion)
-          throw new java.util.ConcurrentModificationException(
-            s"stale writer on store at $root: read version $oldVersion " +
-              s"but the manifest advanced to $postLink before this " +
-              "commit's versioned-manifest link — the arbiter file for " +
-              s"version ${oldVersion + 1} was already swept (retention), " +
-              "so this commit would have rolled the pointer backwards; " +
-              "it loses — re-derive the delta against the current " +
-              "version and retry")
-        onStep("linkedManifest")
-        // an evolution's versioned schema is resolvable BEFORE any reader
-        // can see the manifest that needs it; a non-evolve commit clears
-        // any orphan at its version (a crash between an evolution's schema
-        // write and its manifest swap leaves one, which would otherwise
-        // mis-type this commit's time-travel reads)
-        evolvedTo match {
-          case Some(sc) =>
-            // a store initialized by pre-versioning code has no
-            // schema.v1.json; snapshot the current pointer as v1 BEFORE
-            // the first evolution's versioned schema lands, or readAsOf
-            // of pre-evolution versions would fall through schemaAsOf's
-            // pointer fallback and resolve the EVOLVED schema — showing
-            // the added column (as NULL) before it existed
-            if (listVersionedSchemas().isEmpty)
-              writeFileAtomic(versionedSchemaPath(1),
-                Files.readAllBytes(schemaPath))
-            schemaWrittenAt = Some(oldVersion + 1)
-            writeFileAtomic(
-              versionedSchemaPath(oldVersion + 1), sc.json.getBytes("UTF-8"))
-          case None =>
-            Files.deleteIfExists(versionedSchemaPath(oldVersion + 1)); ()
-        }
-        onStep("schemaStep")
-        swapPointer(body) // the single atomic visibility switch
+      } catch {
+        case e: Throwable =>
+          // commit never became visible (the pointer swap is the try's last
+          // act): tear the partial refresh dirs down, plus the versioned
+          // manifest and schema IF THIS COMMIT created them — the link
+          // arbiter guarantees they are ours, and a CAS/arbiter loser that
+          // never linked must not delete a winner's files. Manifest pointer
+          // (and so every reader) stays on the old view.
+          Commit.deleteTreeQuiet(rootPath.resolve(stamp))
+          linkedVersion.foreach(v =>
+            Files.deleteIfExists(versionedManifestPath(v)))
+          schemaWrittenAt.foreach(v =>
+            Files.deleteIfExists(versionedSchemaPath(v)))
+          throw e
       }
-    } catch {
-      case e: Throwable =>
-        // commit never became visible (the pointer swap is the try's last
-        // act): tear the partial refresh dirs down, plus the versioned
-        // manifest and schema IF THIS COMMIT created them — the link
-        // arbiter guarantees they are ours, and a CAS/arbiter loser that
-        // never linked must not delete a winner's files. Manifest pointer
-        // (and so every reader) stays on the old view.
-        deleteDirQuiet(rootPath.resolve(stamp))
-        linkedVersion.foreach(v =>
-          Files.deleteIfExists(versionedManifestPath(v)))
-        schemaWrittenAt.foreach(v =>
-          Files.deleteIfExists(versionedSchemaPath(v)))
-        PartitionedStore.inFlightStamps.remove(stampKey(stamp))
-        throw e
+      // POST-commit maintenance. The commit stands from here on — nothing
+      // below may surface as a commit failure to the caller (a thrown sweep
+      // after the swap would report a SUCCESSFUL refresh as failed, and a
+      // caller's retry of an append would double-apply its delta), so the
+      // whole block is best-effort: errors are logged and left for the next
+      // commit's sweep to retry. It ALSO re-takes the commit lock: two
+      // successful back-to-back commits from different threads would
+      // otherwise race their sweeps (one deleting a manifest.v file between
+      // the other's list and parse).
+      Commit.bestEffort(s"[PartitionedStore] post-commit maintenance at $root " +
+          s"failed (commit v${oldVersion + 1} stands; next commit retries the " +
+          "sweep)")(Commit.lock(rootPath).synchronized {
+        // seam sits in the BEST-EFFORT block, not the commit try: the commit
+        // is already visible, so even a throwing hook must never trigger the
+        // teardown above (which would delete a committed version's files)
+        onStep("pointerSwapped")
+        // current-schema pointer: once the manifest swapped, the evolution
+        // is committed and must never be rolled back by the catch above. A
+        // reader between the two swaps sees the old schema over the new
+        // manifest — pruned columns, never a decode error.
+        evolvedTo.foreach(sc =>
+          writeFileAtomic(schemaPath, sc.json.getBytes("UTF-8")))
+        // retention sweep (same bounded race with in-flight readers as
+        // BucketStore.bufferAndPromote): versions older than the last
+        // `retainVersions` lose their manifest.v file, then any stamp dir
+        // referenced by NO retained manifest is reclaimed — so readAsOf
+        // stays total over exactly the retained window. retainVersions = 1
+        // keeps only the new commit: the old behavior, eager reclaim.
+        val newVersion = oldVersion + 1
+        val keepFrom = math.max(1, newVersion - retainVersions + 1)
+        Commit.sweep(rootPath) { entries =>
+          val (stale, retained) = entries.filter(named(VersionedManifest))
+            .partition(p =>
+              p.getFileName.toString.stripPrefix("manifest.v").toInt < keepFrom)
+          val keep = retained.flatMap(p => parseManifest(p)._2.values)
+            .flatMap(entryDirs).map(e => e.split("/")(0)).toSet
+          // reclaim candidates = EVERY stamp dir on disk, not just the
+          // previous manifest's (whose dirs are still retained at
+          // retainVersions >= 2 — sweeping only from `old` left the dirs of
+          // the version FALLING OUT of the window unreclaimed forever, a
+          // per-refresh disk leak) — EXCEPT stamps a concurrent commit
+          // registered as in-flight, which the sweep never offers: its data
+          // may be written while its manifest is not yet swapped. A stamp
+          // left in-flight by a crashed PROCESS dies with that process's
+          // registry, so the next process's sweep still reclaims it. The
+          // stale manifests go first: a stamp dir is never reclaimed while
+          // a manifest naming it survives.
+          stale ++ entries.filter(p => named(StampDir)(p) &&
+            Files.isDirectory(p) && !keep.contains(p.getFileName.toString))
+        }
+      })
     }
-    // POST-commit maintenance. The commit stands from here on — nothing
-    // below may surface as a commit failure to the caller (a thrown sweep
-    // after the swap would report a SUCCESSFUL refresh as failed, and a
-    // caller's retry of an append would double-apply its delta), so the
-    // whole block is best-effort: errors are logged and left for the next
-    // commit's sweep to retry. It ALSO re-takes the commit lock: two
-    // successful back-to-back commits from different threads would
-    // otherwise race their sweeps (one deleting a manifest.v file between
-    // the other's list and parse).
-    try PartitionedStore.commitLock(rootPath).synchronized {
-      // seam sits in the BEST-EFFORT block, not the commit try: the commit
-      // is already visible, so even a throwing hook must never trigger the
-      // teardown above (which would delete a committed version's files)
-      onStep("pointerSwapped")
-      // current-schema pointer: once the manifest swapped, the evolution
-      // is committed and must never be rolled back by the catch above. A
-      // reader between the two swaps sees the old schema over the new
-      // manifest — pruned columns, never a decode error.
-      evolvedTo.foreach(sc =>
-        writeFileAtomic(schemaPath, sc.json.getBytes("UTF-8")))
-      // retention sweep (same bounded race with in-flight readers as
-      // BucketStore.bufferAndPromote): versions older than the last
-      // `retainVersions` lose their manifest.v file, then any stamp dir
-      // referenced by NO retained manifest is reclaimed — so readAsOf
-      // stays total over exactly the retained window. retainVersions = 1
-      // keeps only the new commit: the old behavior, eager reclaim.
-      val newVersion = oldVersion + 1
-      val keepFrom = math.max(1, newVersion - retainVersions + 1)
-      listVersionedManifests().foreach { p =>
-        val v = p.getFileName.toString.stripPrefix("manifest.v").toInt
-        if (v < keepFrom) Files.deleteIfExists(p)
-      }
-      val keep = listVersionedManifests()
-        .flatMap(p => parseManifest(p)._2.values)
-        .flatMap(entryDirs).map(e => e.split("/")(0)).toSet
-      // reclaim candidates = EVERY stamp dir on disk, not just the
-      // previous manifest's (whose dirs are still retained at
-      // retainVersions >= 2 — sweeping only from `old` left the dirs of
-      // the version FALLING OUT of the window unreclaimed forever, a
-      // per-refresh disk leak) — EXCEPT stamps a concurrent commit
-      // registered as in-flight: its data may be written while its
-      // manifest is not yet swapped, and reclaiming it here would hand
-      // the racer a committed manifest over deleted dirs. A stamp left
-      // in-flight by a crashed PROCESS dies with that process's registry,
-      // so the next process's sweep still reclaims it (no leak
-      // regression); within the supported one-writer-process contract the
-      // registry is authoritative.
-      listStampDirs().filterNot(d => keep.contains(d.getFileName.toString))
-        .filterNot(d => PartitionedStore.inFlightStamps
-          .contains(stampKey(d.getFileName.toString)))
-        .foreach(deleteDirQuiet)
-    } catch {
-      case e: Exception => System.err.println(
-        s"[PartitionedStore] post-commit maintenance at $root failed " +
-          s"(commit v${oldVersion + 1} stands; next commit retries the " +
-          s"sweep): $e")
-    } finally
-      // deregister LAST: once committed the stamp is manifest-referenced
-      // (the keep set protects it), so even a swallowed sweep failure
-      // leaves no reclaim hazard — only garbage the next sweep collects
-      PartitionedStore.inFlightStamps.remove(stampKey(stamp))
   }
-
-  /** Root-qualified stamp identity for the JVM-wide in-flight registry —
-    * two stores over different roots never mask each other's sweeps. */
-  private def stampKey(stamp: String): String =
-    rootPath.toAbsolutePath.normalize.toString + "/" + stamp
-
-  private def listStampDirs(): Seq[Path] =
-    listRoot("(init|refresh)\\d+", dirsOnly = true)
 
   /** Touched-partition ids of a delta, derived WITHOUT touching state —
     * bounded by nPartitions, so the driver-side collect is a few ints. */
@@ -719,12 +687,6 @@ final class PartitionedStore(val spark: SparkSession, val root: String,
       current.join(victimIds, Seq(idCol), "left_anti").select(storedCols: _*))
     removed
   }
-
-  // the shared walk-and-delete (fd-safe, IOException-swallowing — a
-  // teardown's cleanup failure must never mask the commit error it is
-  // cleaning up after)
-  private def deleteDirQuiet(p: Path): Unit =
-    graft.util.Scratch.deleteRecursive(p)
 }
 
 object PartitionedStore {
@@ -742,22 +704,9 @@ object PartitionedStore {
             lit("append batch replays an id already in the index: "),
             col(idCol).cast("string")))))
 
-  // one commit monitor per normalized store root, JVM-wide: two
-  // PartitionedStore instances over the same directory (the realistic
-  // in-process race — e.g. two scheduled refreshes of one maintained view)
-  // serialize their visibility switches on the SAME object, making the
-  // version CAS in commitTouched exactly-one-wins rather than
-  // best-effort. Entries are a Path + Object per distinct store root —
-  // bounded by the number of stores the driver ever opens, never reclaimed
-  // (reclaiming would reintroduce the race it exists to close).
-  private val commitLocks =
-    new java.util.concurrent.ConcurrentHashMap[Path, Object]()
-  private[store] def commitLock(root: Path): Object =
-    commitLocks.computeIfAbsent(root.toAbsolutePath.normalize, _ => new Object)
-
-  // root-qualified stamp names of commits between first-data-write and
-  // end-of-sweep: the retention sweep skips these, so a winner can never
-  // reclaim a concurrent racer's not-yet-committed dirs (see commitTouched)
-  private[store] val inFlightStamps: java.util.Set[String] =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  // root entry names: the immutable per-version manifests and schemas, and
+  // the stamp dirs init and each commit write their data under
+  private val VersionedManifest = "manifest\\.v\\d+"
+  private val VersionedSchema = "schema\\.v\\d+\\.json"
+  private val StampDir = "(init|refresh)\\d+"
 }

@@ -56,21 +56,10 @@ object Streams {
   private def withStreamConf[A](spark: SparkSession,
       statePartitions: Option[Int],
       stateStoreProvider: Option[String] = None)(body: => A): A = {
-    // Callers that pass None historically inherited the session's batch
-    // shuffle-partition count (= local cores) as the state-store count —
-    // exactly the "inherited from whatever batch default" anti-pattern
-    // this method's doc warns about. SPARK_GRAFT_STATE_PARTITIONS sizes
-    // the stores deliberately instead (guide §2.2: fewer, larger
-    // partitions — every store is per-batch file I/O on the checkpoint);
-    // results are partitioning-independent (per-key state), only the
-    // store count changes. Unset = previous behavior. Production: set to
-    // ≈ peak keys / target keys-per-store for the deployment.
-    val resolved = statePartitions.orElse(
-      sys.env.get("SPARK_GRAFT_STATE_PARTITIONS").flatMap(_.toIntOption))
-    resolved.foreach(k =>
+    statePartitions.foreach(k =>
       require(k > 0, s"statePartitions must be positive: $k"))
     val overrides =
-      resolved.map("spark.sql.shuffle.partitions" -> _.toString).toList ++
+      statePartitions.map("spark.sql.shuffle.partitions" -> _.toString).toList ++
       stateStoreProvider.map(
         "spark.sql.streaming.stateStore.providerClass" -> _).toList
     if (overrides.isEmpty) body

@@ -27,20 +27,11 @@ object Scratch {
     deleteRecursive(p)
   }
 
-  /** Best-effort recursive delete — the ONE walk-and-delete idiom for the
-    * whole engine (the walk stream holds a directory fd: close it either
-    * way, or a cleanup-heavy driver leaks one per call until "Too many
-    * open files"). Missing path and I/O failures are no-ops. */
+  /** Best-effort recursive delete ([[graft.store.Commit.deleteTreeQuiet]],
+    * the engine's one walk-and-delete): missing path and I/O failures are
+    * no-ops. */
   def deleteRecursive(p: java.nio.file.Path): Unit =
-    try {
-      import scala.jdk.CollectionConverters._
-      if (Files.exists(p)) {
-        val walk = Files.walk(p)
-        try walk.iterator().asScala.toSeq.reverse
-          .foreach(f => Files.deleteIfExists(f))
-        finally walk.close()
-      }
-    } catch { case _: java.io.IOException => () }
+    graft.store.Commit.deleteTreeQuiet(p)
 
   private val dirs =
     new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()

@@ -214,6 +214,51 @@ class FaultInjectionSpec extends AnyFunSuite {
     }
   }
 
+  test("GRACEFUL failure AFTER the visibility switch (hook throws): the " +
+      "commit stands, and the next commit sweeps what the skipped reclaim " +
+      "left") {
+    // PartitionedStore: a throwing pointerSwapped hook
+    locally {
+      val root = Files.createTempDirectory("graft_fault_grace_post").toString
+      val store = newStore(root)
+      store.init(kv(40, 1))
+      store.onStep = s =>
+        if (s == "pointerSwapped") throw new RuntimeException("planted@pointerSwapped")
+      store.refresh(0 until 4, kv(40, 2)) // the swap landed: no error
+      store.onStep = _ => ()
+      assert(store.version() === 2 && rows(store.read()) === rows(kv(40, 2)))
+      assert(rows(store.readAsOf(1)) === rows(kv(40, 1)))
+    }
+    // BucketStore: a throwing bufferRepointed hook
+    locally {
+      import graft.model.Bucket
+      import graft.store.BucketStore
+      val rootDir = Files.createTempDirectory("graft_fault_grace_bucket").toString
+      val store = new BucketStore(spark, rootDir)
+      val b = Bucket("/test/fault_post")
+      val stage = Paths.get(rootDir, b.signature, "processed").toString
+      def gen(tag: Int) = spark.range(100).select(lit(tag).as("g"), col("id"))
+      def content = store.read(b).groupBy("g").count().collect()
+        .map(r => (r.getInt(0), r.getLong(1))).toSeq
+      store.write(b, gen(0))
+      store.rewrite(b, "processed")(_ => gen(1))
+      store.onStep = s =>
+        if (s == "bufferRepointed") throw new RuntimeException("planted@bufferRepointed")
+      store.rewrite(b, "processed")(_ => gen(2)) // the switch landed: no error
+      store.onStep = _ => ()
+      assert(content === Seq((2, 100L)))
+      // the skipped reclaim left the demoted primary and its stale pointer
+      assert(listNames(stage, "v_").size === 2)
+      assert(listNames(stage, "_PTR_buffer_rewrite_").nonEmpty)
+      // the next rewrite commits and sweeps that debris
+      store.rewrite(b, "processed")(_ => gen(3))
+      assert(content === Seq((3, 100L)))
+      assert(listNames(stage, "v_").size === 1)
+      assert(listNames(stage, "").filter(n => n.startsWith("buffer_rewrite_") ||
+        n.startsWith("_PTR_buffer_rewrite_") || n.contains(".tmp")).isEmpty)
+    }
+  }
+
   // ---- BucketStore buffer/promote windows ----------------------------------
 
   test("BucketStore rewrite killed after EACH ordered step: readers resolve " +
@@ -366,7 +411,7 @@ class FaultInjectionSpec extends AnyFunSuite {
       assert(e.getMessage.contains("not built"), s"$step: ${e.getMessage}")
       intercept[IllegalArgumentException] { s.codebooks() }
       intercept[IllegalArgumentException] {
-        s.serve(q, cents, kTop = 3, nprobe = 4, rerank = Int.MaxValue)
+        s.serve(q, cents, k = 3, nprobe = 4, rerank = Int.MaxValue)
       }
       intercept[IllegalArgumentException] {
         s.neighborsWithin(q, cents, minSim = 0.30, nprobe = 4,
@@ -380,7 +425,7 @@ class FaultInjectionSpec extends AnyFunSuite {
       // recovery: a fresh build restores the full contract, exactly
       s.build(base, cents)
       assert(s.trainMeanD2 > 0.0)
-      val got = s.serve(q, cents, kTop = 3, nprobe = 4,
+      val got = s.serve(q, cents, k = 3, nprobe = 4,
           rerank = Int.MaxValue)
         .select("q_id", "c_id").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet

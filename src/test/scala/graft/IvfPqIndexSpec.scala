@@ -39,7 +39,7 @@ class IvfPqIndexSpec extends AnyFunSuite {
     assert(r2 > 0.25 && r2 < 4.0, s"in-distribution drift ratio: $r2")
     val q = emb.filter(col("vec_id") < 8)
     val exact = pairs(Ann.bruteForceTopK(q, emb, k = 3))
-    assert(pairs(idx.serve(q, cents, kTop = 3, nprobe = 8,
+    assert(pairs(idx.serve(q, cents, k = 3, nprobe = 8,
       rerank = Int.MaxValue)) === exact)
     // appended rows carry codes from the SAME frozen codebooks the build
     // trained: every stored code re-derives identically under them
@@ -65,13 +65,13 @@ class IvfPqIndexSpec extends AnyFunSuite {
     idx.build(emb, cents)
     val q = emb.filter(col("vec_id") < 8)
     val exact = topPairs(Ann.bruteForceTopK(q, emb, k = 3))
-    val approx = idx.serve(q, cents, kTop = 3, nprobe = 2, rerank = 16)
+    val approx = idx.serve(q, cents, k = 3, nprobe = 2, rerank = 16)
     val recall = (topPairs(approx) & exact).size.toDouble / exact.size
     assert(recall >= 0.5, s"recall@3 = $recall")
     // directory-level prune: a 1-query, nprobe=1 serve touches fewer files
     val all = idx.store.read().inputFiles.toSet
     val served = idx.serve(emb.filter(col("vec_id") === 0), cents,
-      kTop = 3, nprobe = 1, rerank = 8)
+      k = 3, nprobe = 1, rerank = 8)
     val touched = served.inputFiles.filter(all.contains).toSet
     assert(touched.nonEmpty && touched.size < all.size,
       s"nprobe=1 read ${touched.size} of ${all.size} index files — no prune")
@@ -84,7 +84,7 @@ class IvfPqIndexSpec extends AnyFunSuite {
     val idx = newIndex(4)
     idx.build(base, cents)
     val q = emb.filter(col("vec_id") < 4)
-    val before = pairs(idx.serve(q, cents, kTop = 3, nprobe = 4,
+    val before = pairs(idx.serve(q, cents, k = 3, nprobe = 4,
       rerank = Int.MaxValue))
     val v1 = idx.store.version()
     val shifted = emb.filter(col("vec_id") % 2 === 1)
@@ -104,7 +104,7 @@ class IvfPqIndexSpec extends AnyFunSuite {
       .takeWhile(_ != null).take(8)
       .exists(t => t.getMessage != null && t.getMessage.contains("replays")))
     assert(idx.store.version() === v1)
-    assert(pairs(idx.serve(q, cents, kTop = 3, nprobe = 4,
+    assert(pairs(idx.serve(q, cents, k = 3, nprobe = 4,
       rerank = Int.MaxValue)) === before)
     // erasure: victims out, exhaustive serve ≡ exact over survivors
     val victims = emb.filter(col("vec_id") % 8 === 2) // ⊂ the built half
@@ -112,7 +112,7 @@ class IvfPqIndexSpec extends AnyFunSuite {
     assert(removed === victims.count())
     val survivors = emb.filter(col("vec_id") % 2 === 0 &&
       col("vec_id") % 8 =!= 2)
-    assert(pairs(idx.serve(q, cents, kTop = 3, nprobe = 4,
+    assert(pairs(idx.serve(q, cents, k = 3, nprobe = 4,
       rerank = Int.MaxValue)) ===
       pairs(Ann.bruteForceTopK(q, survivors, k = 3)))
     // and an empty erasure batch is a no-op

@@ -687,7 +687,7 @@ class PlanSpec extends AnyFunSuite {
       PqCodec(m = 8, k = 16))
     idx.build(e, cents)
     val plan = explainFormatted(idx.serve(e.filter(col("vec_id") < 4), cents,
-      kTop = 3, nprobe = 2, rerank = 8))
+      k = 3, nprobe = 2, rerank = 8))
     // the index store's scans: the ADC leg must carry the code column and
     // NOT the 64-float embedding (PQ's entire memory/IO point — at 100 TB
     // the scan reads ~bytes per vector, not the vector); the rerank leg

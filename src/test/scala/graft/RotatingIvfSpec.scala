@@ -73,7 +73,7 @@ class RotatingIvfSpec extends AnyFunSuite {
     val half = emb.filter(col("vec_id") % 2 === 0)
     rot.build(half, KMeans.train(half, "vec_id", "embedding", k = 8, iters = 2))
     val q = emb.filter(col("vec_id") < 8)
-    assert(pairs(rot.serve(q, kTop = 3, nprobe = 8, rerank = Int.MaxValue))
+    assert(pairs(rot.serve(q, k = 3, nprobe = 8, rerank = Int.MaxValue))
       === pairs(Ann.bruteForceTopK(q, half, k = 3)))
     val g1 = rot.currentGen()
     // the swap: full corpus, retrained centroids, NEW codebooks trained on
@@ -81,7 +81,7 @@ class RotatingIvfSpec extends AnyFunSuite {
     rot.rebuild(emb, KMeans.train(emb, "vec_id", "embedding", k = 8, iters = 2))
     assert(rot.currentGen() !== g1)
     assert(gens(root) === Set(g1, rot.currentGen()), "predecessor retained")
-    assert(pairs(rot.serve(q, kTop = 3, nprobe = 8, rerank = Int.MaxValue))
+    assert(pairs(rot.serve(q, k = 3, nprobe = 8, rerank = Int.MaxValue))
       === pairs(Ann.bruteForceTopK(q, emb, k = 3)))
     // append encodes under the NEW generation's frozen models and serves
     // exactly alongside the rebuilt corpus
@@ -93,7 +93,7 @@ class RotatingIvfSpec extends AnyFunSuite {
       .filter(col("vec_id") >= 1000000L).count() === extra.count())
     // erasure + bounded-config recall still hold through the rotator
     assert(rot.remove(extra) === extra.count())
-    val exact = rot.serve(q, kTop = 3, nprobe = 2, rerank = 16)
+    val exact = rot.serve(q, k = 3, nprobe = 2, rerank = 16)
       .select("q_id", "c_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val want = Ann.bruteForceTopK(q, emb, k = 3)
@@ -118,7 +118,7 @@ class RotatingIvfSpec extends AnyFunSuite {
     rot.build(dfOf(present), retrain(present))
     val q = emb.filter(col("vec_id") < 8)
     def check(tag: String): Unit = {
-      val got = pairs(rot.serve(q, kTop = 3, nprobe = 8, rerank = Int.MaxValue))
+      val got = pairs(rot.serve(q, k = 3, nprobe = 8, rerank = Int.MaxValue))
       val want = pairs(Ann.bruteForceTopK(q, dfOf(present), k = 3))
       assert(got === want, s"serve diverged from the model after $tag " +
         s"(|present| = ${present.size}, gen = ${rot.currentGen()})")
