@@ -34,6 +34,9 @@ object GraftSession {
       // interpreted, so this is catastrophic, not just redundant).
       .config("spark.sql.optimizer.excludedRules",
         "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
+      // local files through graft.store.LocalFs: Hadoop's local file
+      // system without a forked `chmod` per file and directory written
+      .config("spark.hadoop.fs.file.impl", classOf[graft.store.LocalFs].getName)
 
   def local(): SparkSession = {
     // default to every core (the driver contract is local[32]); tests and

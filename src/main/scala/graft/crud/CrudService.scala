@@ -13,15 +13,19 @@ import graft.store.BucketStore
   * bucket's Parquet store:
   *
   *  - reads compile the query DSL to a filtered/sorted/limited scan
-  *    (lifecycle SURVEY §3.1);
+  *    (lifecycle SURVEY §3.1); every read-only spec path — spec reads and
+  *    counts, and the existence probes and pre-counts of updates and
+  *    deletes — scans only the time partitions the query can match
+  *    ([[BucketStore.timeSlice]]), and each call resolves the stage once;
   *  - `storeObjects(replace_if_present=true)` is merge-by-`_id` (J3);
   *    `=false` is create-if-absent (D3, ES `OpType.CREATE` semantics,
   *    `ElasticsearchCrudService.java:241`);
   *  - updates/deletes are declarative rewrites via [[UpdateCompiler]]
   *    committed with the store's buffer-promote (atomic swap);
-  *  - `optimizeQuery` (U13) is a no-op returning true: Parquet min-max stats
-  *    + partition pruning replace Mongo's background index builds
-  *    (`MongoDbCrudService.java:298-348`).
+  *  - `optimizeQuery` (U13) is a no-op returning true: the time-partition
+  *    pruning above and Parquet min-max stats stand in for Mongo's
+  *    background index builds (`MongoDbCrudService.java:298-348`); no index
+  *    narrows a lookup on any other field.
   *
   * `_id`: string key column, auto-generated (`uuid()`) when absent on store —
   * reference `_id` injection (`MongoDbCrudService.java:169-184`).
@@ -31,6 +35,11 @@ final class CrudService(store: BucketStore, bucket: Bucket, stage: String = "pro
   val IdCol = "_id"
 
   private def table: DataFrame = store.read(bucket, stage)
+
+  /** The rows of `t` that match `q`, scanning only the time partitions `q`
+    * can match. */
+  private def matching(t: DataFrame, q: QueryComponent): DataFrame =
+    store.timeSlice(bucket, t, q).filter(QueryCompiler.compileFor(t, q))
 
   // ---- write path ---------------------------------------------------------
 
@@ -132,18 +141,17 @@ final class CrudService(store: BucketStore, bucket: Bucket, stage: String = "pro
     table.filter(col(IdCol).isin(ids: _*))
 
   def getObjectBySpec(q: QueryComponent): Option[Row] =
-    QueryCompiler.run(table, q).head(1).headOption
+    getObjectsBySpec(q).head(1).headOption
 
   def getObjectsBySpec(q: QueryComponent): DataFrame =
-    QueryCompiler.run(table, q)
+    store.readForQuery(bucket, q, stage)
 
   def countObjects(): Long = table.count()
 
   /** server-side count with optional limit cap (Mongo `count` with `limit`,
     * `MongoDbCrudService.java:450-474`). */
-  def countObjectsBySpec(q0: QueryComponent): Long = {
-    val q = QueryCompiler.coerceDates(table, q0)
-    val filtered = table.filter(QueryCompiler.compile(q))
+  def countObjectsBySpec(q: QueryComponent): Long = {
+    val filtered = matching(table, q)
     q.meta.limit.map(n => filtered.limit(n).count()).getOrElse(filtered.count())
   }
 
@@ -160,9 +168,10 @@ final class CrudService(store: BucketStore, bucket: Bucket, stage: String = "pro
     * filter pushes down to the scan). */
   def updateObjectsBySpec(q0: QueryComponent, u: UpdateComponent,
       upsert: Boolean = false): Long = {
-    val q = QueryCompiler.coerceDates(table, q0)
+    val t = table
+    val q = QueryCompiler.coerceDates(t, q0)
     if (upsert) {
-      val matched = table.filter(QueryCompiler.compile(q)).count()
+      val matched = matching(t, q0).count()
       if (matched == 0) {
         storeObjects(upsertSeed(q, u), replacePresent = true)
       } else {
@@ -173,7 +182,7 @@ final class CrudService(store: BucketStore, bucket: Bucket, stage: String = "pro
     } else {
       // cheap existence probe first (pushed-down filter, first-match exit):
       // a zero-match update must not pay a full-table rewrite
-      if (table.filter(QueryCompiler.compile(q)).isEmpty) return 0L
+      if (matching(t, q0).isEmpty) return 0L
       val obs = org.apache.spark.sql.Observation()
       store.rewrite(bucket, stage) { cur =>
         val observed = cur.observe(obs, sum(
@@ -204,9 +213,9 @@ final class CrudService(store: BucketStore, bucket: Bucket, stage: String = "pro
     * projected (`MongoDbCrudService.java:531-555`). */
   def updateAndReturnObjectBySpec(q0: QueryComponent, u: UpdateComponent,
       returnBefore: Boolean = false, fields: Seq[String] = Nil): Option[Row] = {
-    val q = QueryCompiler.coerceDates(table, q0)
-    val pred = QueryCompiler.compile(q)
-    val before = table.filter(pred).head(1).headOption
+    val t = table
+    val q = QueryCompiler.coerceDates(t, q0)
+    val before = matching(t, q0).head(1).headOption
     if (before.isEmpty) return None
     store.rewrite(bucket, stage)(cur =>
       UpdateCompiler.applyUpdate(cur, QueryCompiler.compile(q), u))
@@ -217,7 +226,7 @@ final class CrudService(store: BucketStore, bucket: Bucket, stage: String = "pro
         val src = before.get
         val key = if (src.schema.fieldNames.contains(IdCol))
           table.filter(col(IdCol) === src.getAs[String](IdCol))
-        else table.filter(QueryCompiler.compile(q))
+        else matching(table, q0)
         key.head(1).headOption
       }
     image.map { r =>
@@ -234,12 +243,13 @@ final class CrudService(store: BucketStore, bucket: Bucket, stage: String = "pro
     * references the scan twice (self anti-join), which an observation may
     * not straddle. */
   def deleteObjectsBySpec(q0: QueryComponent): Long = {
-    val q = QueryCompiler.coerceDates(table, q0)
+    val t = table
+    val q = QueryCompiler.coerceDates(t, q0)
     q.meta.limit match {
     case None =>
       // existence probe: a miss (e.g. deleteObjectById of an absent id)
       // must not rewrite the whole table
-      if (table.filter(QueryCompiler.compile(q)).isEmpty) return 0L
+      if (matching(t, q0).isEmpty) return 0L
       val obs = org.apache.spark.sql.Observation()
       store.rewrite(bucket, stage) { cur =>
         val observed = cur.observe(obs, sum(
@@ -249,7 +259,7 @@ final class CrudService(store: BucketStore, bucket: Bucket, stage: String = "pro
       }
       Option(obs.get("deleted")).collect { case n: Long => n }.getOrElse(0L)
     case Some(k) =>
-      val deleted = table.filter(QueryCompiler.compile(q)).limit(k).count()
+      val deleted = matching(t, q0).limit(k).count()
       store.rewrite(bucket, stage)(cur => UpdateCompiler.deleteBySpec(cur, q))
       deleted
   } }
@@ -285,6 +295,7 @@ final class CrudService(store: BucketStore, bucket: Bucket, stage: String = "pro
   /** U12 */
   def deleteDatastore(): Unit = store.deleteDatastore(bucket)
 
-  /** U13 optimizeQuery — intentional no-op (Parquet stats + pruning). */
+  /** U13 optimizeQuery — intentional no-op: time-partition pruning and
+    * Parquet stats are all the indexing there is (see the class doc). */
   def optimizeQuery(fields: Seq[String]): Boolean = true
 }

@@ -1,9 +1,13 @@
 package graft.store
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.util.concurrent.ConcurrentHashMap
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.model._
 
@@ -149,10 +153,51 @@ final class BucketStore(spark: SparkSession, rootDir: String) {
     writeZOrdered(b, df, Seq(colA, colB), numFiles, stage)
 
   /** Read a stage; the partition column stays available for explicit
-    * time-slice predicates (partition pruning shows in the scan). */
+    * time-slice predicates (partition pruning shows in the scan).
+    *
+    * Schema reuse: inferring a Parquet schema is a Spark job of its own,
+    * so the schema inferred for a listing of the resolved dir's data files
+    * (path, size) is kept, per session, under the stage root and role, and
+    * a read whose listing matches it supplies that schema instead of
+    * inferring again ([[PartitionedStore.read]]'s explicit-schema form).
+    * No invalidation is needed: every writer lands new files (Spark names
+    * each output file uniquely) or removes some — an append, a
+    * rewrite/promote to a fresh `v_` dir, [[compact]], [[ageOut]], a write
+    * by another store instance or process — so any change to the stage
+    * changes the listing and re-infers. One entry per root and role, so
+    * superseded `v_` dirs leave nothing behind. Each call still builds a
+    * fresh relation, so two reads self-join safely. */
   def read(b: Bucket, stage: String = "processed",
-      buffer: Option[String] = None): DataFrame =
-    spark.read.parquet(stageDir(b, stage, buffer).toString)
+      buffer: Option[String] = None): DataFrame = {
+    val root = stageRoot(b, stage)
+    val dir = stageDir(b, stage, buffer)
+    val key = (root.toAbsolutePath.normalize.toString, roleName(buffer))
+    val cache = schemaCache(spark)
+    val files = dataFiles(root, dir)
+    Option(cache.get(key)).filter(e => files.contains(e._1)) match {
+      case Some((_, schema)) => spark.read.schema(schema).parquet(dir.toString)
+      case None =>
+        val df = spark.read.parquet(dir.toString)
+        files.foreach(f => cache.put(key, (f, df.schema)))
+        df
+    }
+  }
+
+  /** The files a scan of `dir` reads, as (path under `root`, size), sorted:
+    * names Spark skips (`_temporary` output, `.crc` sidecars) are left out.
+    * None when the dir holds no data file or cannot be listed (say, a
+    * concurrent rewrite reclaimed it); such a read infers as before. */
+  private def dataFiles(root: Path, dir: Path): Option[Vector[(String, Long)]] =
+    try {
+      def hidden(n: String) = n.startsWith(".") || (n.startsWith("_") && !n.contains("="))
+      val s = Files.walk(dir)
+      val files =
+        try s.iterator().asScala.filter(p => Files.isRegularFile(p) &&
+            dir.relativize(p).iterator().asScala.forall(n => !hidden(n.toString)))
+          .map(p => (root.relativize(p).toString, Files.size(p))).toVector.sorted
+        finally s.close() // Files.walk holds directory fds until closed
+      Some(files).filter(_.nonEmpty)
+    } catch { case _: java.io.IOException | _: java.io.UncheckedIOException => None }
 
   /** Storage path of a stage's current dir — the cross-process handle the
     * python bridge manifests by signature (X5,
@@ -162,34 +207,39 @@ final class BucketStore(spark: SparkSession, rootDir: String) {
   def stagePath(b: Bucket, stage: String = "processed"): String =
     stageDir(b, stage, None).toAbsolutePath.toString
 
-  /** F12 read path: apply a DSL query to a stage with the query's implied
-    * date range turned into a PARTITION predicate first. [[graft.dsl.TimeSlice]]
-    * extracts a sound time interval from the query tree; truncating its ends
-    * with the bucket's grouping period gives partition-value bounds
-    * (lexicographic order == chronological for every period format), so
-    * Catalyst prunes whole partition directories before the row predicate
-    * runs — the Spark-native form of the reference's query-driven index
-    * enumeration (`ElasticsearchContext.java:199-236`). Records with a null
-    * time (the `__unknown__` partition) can never satisfy a time-bounded
-    * query, so pruning them when a hi bound exists is sound; with only a lo
-    * bound the string compare keeps `__unknown__` and the row filter drops
-    * its rows. */
+  /** F12 read path: apply a DSL query (filter, sort, limit, projection)
+    * to a stage narrowed by [[timeSlice]] — the Spark-native form of the
+    * reference's query-driven index enumeration
+    * (`ElasticsearchContext.java:199-236`). The stage's schema is reused as
+    * [[read]] describes, so an unchanged stage costs the query's own scan
+    * job only. */
   def readForQuery(b: Bucket, q: graft.dsl.QueryComponent,
-      stage: String = "processed", buffer: Option[String] = None): DataFrame = {
-    val base = read(b, stage, buffer)
-    val sliced = b.dataSchema.temporal match {
-      case Some(TemporalSchema(tf, period)) if base.columns.contains(PartitionCol) =>
+      stage: String = "processed", buffer: Option[String] = None): DataFrame =
+    graft.dsl.QueryCompiler.run(timeSlice(b, read(b, stage, buffer), q), q)
+
+  /** `df`, a read of one of `b`'s stages, filtered to the time partitions
+    * `q` can match, with no other clause applied — for callers that filter,
+    * count or probe on their own. [[graft.dsl.TimeSlice]] extracts a sound
+    * time interval from the query tree; truncating its ends with the
+    * bucket's grouping period gives partition-value bounds (lexicographic
+    * order == chronological for every period format), so Catalyst prunes
+    * whole partition directories before the row predicate runs. Records
+    * with a null time (the `__unknown__` partition) can never satisfy a
+    * time-bounded query, so pruning them when a hi bound exists is sound;
+    * with only a lo bound the string compare keeps `__unknown__` and the
+    * row filter drops its rows. */
+  def timeSlice(b: Bucket, df: DataFrame, q: graft.dsl.QueryComponent): DataFrame =
+    b.dataSchema.temporal match {
+      case Some(TemporalSchema(tf, period)) if df.columns.contains(PartitionCol) =>
         graft.dsl.TimeSlice.bounds(q, tf) match {
-          case (None, None) => base
+          case (None, None) => df
           case (lo, hi) =>
             val preds = lo.map(i => col(PartitionCol) >= lit(period.truncate(i))) ++
               hi.map(i => col(PartitionCol) <= lit(period.truncate(i)))
-            base.filter(preds.reduce(_ && _))
+            df.filter(preds.reduce(_ && _))
         }
-      case _ => base
+      case _ => df
     }
-    graft.dsl.QueryCompiler.run(sliced, q)
-  }
 
   def exists(b: Bucket, stage: String = "processed",
       buffer: Option[String] = None): Boolean =
@@ -386,17 +436,9 @@ final class BucketStore(spark: SparkSession, rootDir: String) {
   }
 
   /** Count of parquet data files in a stage (diagnostic for compaction). */
-  def parquetFileCount(b: Bucket, stage: String): Long = {
-    val dir = stageDir(b, stage, None)
-    if (!Files.exists(dir)) 0L
-    else {
-      import scala.jdk.CollectionConverters._
-      val s = Files.walk(dir)
-      try s.iterator().asScala
-        .count(p => p.getFileName.toString.endsWith(".parquet"))
-      finally s.close() // Files.walk holds directory fds until closed
-    }
-  }
+  def parquetFileCount(b: Bucket, stage: String): Long =
+    dataFiles(stageRoot(b, stage), stageDir(b, stage, None))
+      .fold(0L)(_.count(_._1.endsWith(".parquet")).toLong)
 
   /** Retention: drop whole time partitions older than `existAgeMax`
     * (partition-level delete — no data rewrite, like dir-level age-out). */
@@ -422,6 +464,20 @@ final class BucketStore(spark: SparkSession, rootDir: String) {
 object BucketStore {
   /** Name of the derived time-partition column. */
   val PartitionCol = "p_time"
+
+  private type SchemaCache =
+    ConcurrentHashMap[(String, String), (Vector[(String, Long)], StructType)]
+
+  /** [[BucketStore.read]]'s inferred schemas, per session, keyed by
+    * (stage root, role); weak keys let a stopped session's entries go. */
+  private val schemas = new java.util.WeakHashMap[SparkSession, SchemaCache]()
+
+  private def schemaCache(spark: SparkSession): SchemaCache =
+    schemas.synchronized(schemas.computeIfAbsent(spark, _ => new SchemaCache()))
+
+  /** The (stage root, role) keys holding a reused schema in `spark`. */
+  private[graft] def cachedSchemaKeys(spark: SparkSession): Set[(String, String)] =
+    schemaCache(spark).keySet.asScala.toSet
 
   /** The TRANSIENT buffer prefixes bufferAndPromote creates and always
     * deletes on completion — the only buffer names the orphan sweep may

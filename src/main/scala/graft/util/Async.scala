@@ -5,6 +5,9 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import scala.util.control.NonFatal
 
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftbridge.LocalPropertiesBridge
+
 /** Driver-thread overlap for INDEPENDENT deterministic legs of one query
   * (guide §2.6): Spark's scheduler happily runs several jobs at once —
   * actions are only sequential because driver code calls them
@@ -16,9 +19,14 @@ import scala.util.control.NonFatal
   *
   * Use only for legs with no shared mutable state; values must be
   * identical regardless of execution order (all graft legs are
-  * deterministic functions of their frozen inputs). Job
-  * descriptions/groups are thread-local, so concurrent legs stay
-  * correctly labeled in the UI.
+  * deterministic functions of their frozen inputs).
+  *
+  * A leg runs under the Spark local properties (job description and
+  * group, scheduler pool) of the thread that submitted it. Those are
+  * thread-local and a thread copies its creator's only once, at creation,
+  * so a pooled thread left alone would label every later leg's jobs with
+  * whatever phase first created it. The pool thread's own properties are
+  * put back when the leg ends.
   *
   * Legs run on one dedicated pool of [[PoolSize]] named daemon threads
   * (`graft-async-N`), never the JVM common ForkJoinPool. A leg started
@@ -45,5 +53,13 @@ object Async {
     if (Thread.currentThread().isInstanceOf[LegThread])
       try CompletableFuture.completedFuture(body)
       catch { case NonFatal(e) => CompletableFuture.failedFuture[A](e) }
-    else CompletableFuture.supplyAsync(() => body, pool)
+    else {
+      val carried = SparkSession.getActiveSession
+        .orElse(SparkSession.getDefaultSession)
+        .map(s => (s.sparkContext, LocalPropertiesBridge.capture(s.sparkContext)))
+      CompletableFuture.supplyAsync(() => carried match {
+        case Some((sc, props)) => LocalPropertiesBridge.withProperties(sc, props)(body)
+        case None => body
+      }, pool)
+    }
 }

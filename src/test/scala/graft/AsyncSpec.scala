@@ -1,14 +1,18 @@
 package graft
 
-import java.util.concurrent.{CompletionException, CountDownLatch, TimeUnit}
+import java.util.concurrent.{CompletionException, ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.util.Async
 
 /** The bounded driver-thread overlap pool: legs run on named pool threads,
-  * nested legs run inline (so a saturated pool cannot deadlock), and a
-  * leg's exception surfaces at `join()`. */
+  * nested legs run inline (so a saturated pool cannot deadlock), a leg's
+  * exception surfaces at `join()`, and a leg runs under its submitter's
+  * Spark local properties. */
 class AsyncSpec extends AnyFunSuite {
 
   private def threadName = Thread.currentThread().getName
@@ -46,6 +50,47 @@ class AsyncSpec extends AnyFunSuite {
         .takeWhile(_ != null).toSeq.last
       assert(root.isInstanceOf[IllegalStateException] &&
         root.getMessage === "leg failed", s"nested=$nested: $e")
+    }
+  }
+
+  test("a leg's jobs carry its submitter's job description, not the pool thread's") {
+    val spark = TestSession.spark
+    val sc = spark.sparkContext
+    val Desc = "spark.job.description"
+    /** One leg per pool slot, all running at once, so each slot runs one. */
+    def onEverySlot[A](body: => A): Seq[A] = {
+      val all = new CountDownLatch(Async.PoolSize)
+      (1 to Async.PoolSize).map(_ => Async.future {
+        all.countDown()
+        assert(all.await(30, TimeUnit.SECONDS), "pool slots not all busy")
+        body
+      }).map(_.get(60, TimeUnit.SECONDS))
+    }
+    val seen = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        seen.add(String.valueOf(j.properties.getProperty(Desc))); ()
+      }
+    }
+    try {
+      // a pool thread first created now copies Y as its own properties
+      sc.setJobDescription("async-Y")
+      onEverySlot(())
+      sc.setJobDescription("async-X")
+      // drain first, so no earlier job's queued start reaches the listener
+      org.apache.spark.sql.graftbridge.ListenerBridge.waitUntilEmpty(sc)
+      sc.addSparkListener(listener)
+      val labels = onEverySlot { spark.range(10).count(); sc.getLocalProperty(Desc) }
+      assert(labels === Seq.fill(Async.PoolSize)("async-X"))
+      org.apache.spark.sql.graftbridge.ListenerBridge.waitUntilEmpty(sc)
+      assert(seen.asScala.toSet === Set("async-X"))
+      // no description at the submitter: none in the leg either
+      sc.setJobDescription(null)
+      assert(onEverySlot(sc.getLocalProperty(Desc)) ===
+        Seq.fill(Async.PoolSize)(null))
+    } finally {
+      sc.removeSparkListener(listener)
+      sc.setJobDescription(null)
     }
   }
 }

@@ -3,6 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.graph.Bfs
+import graft.util.Scratch
 
 /** Multi-source BFS: exact hop levels on known graphs, directed vs
   * undirected traversal, hop cutoff and early exit, and the checkpointDir
@@ -85,7 +86,7 @@ class BfsSpec extends AnyFunSuite {
   }
 
   test("checkpointDir mode: same levels, both channels cleaned eagerly") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_bfs")
+    val dir = java.nio.file.Paths.get(Scratch.dir("graft_bfs"))
     try {
       val edges = df2((1L until 12L).map(i => (i, i + 1)))
       val local = toMap(Bfs.hopLevels(edges, df1(Seq(1L)), maxHops = 20))

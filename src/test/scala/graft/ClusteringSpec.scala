@@ -3,6 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.dedup.Clustering
+import graft.util.Scratch
 
 /** Connected-components hardening: the parquet-round-trip checkpointDir mode
   * (labels identical to the localCheckpoint path, eager cleanup of
@@ -23,7 +24,7 @@ class ClusteringSpec extends AnyFunSuite {
   }
 
   private def withTempDir[A](prefix: String)(f: java.nio.file.Path => A): A = {
-    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    val dir = java.nio.file.Paths.get(Scratch.dir(prefix))
     try f(dir)
     finally {
       val walk = java.nio.file.Files.walk(dir)

@@ -6,6 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.dedup.TextDedup
 import graft.functions.{GraftFunctions, TextFunctions}
 import graft.similarity.Ann
+import graft.util.Scratch
 
 class DedupAnnSpec extends AnyFunSuite {
   private lazy val spark = TestSession.spark
@@ -181,7 +182,7 @@ class DedupAnnSpec extends AnyFunSuite {
     import graft.dedup.Clustering
     val spark2 = spark
     import spark2.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
+    val dir = Scratch.dir("graft_ckpt")
     val edges = (1L until 30L).map(i => (i, i + 1)).toDF("a", "b")
     val nodes = (1L to 30L).toDF("node")
     val got = Clustering.connectedComponents(edges, nodes, maxIters = 20,
@@ -310,7 +311,7 @@ class DedupAnnSpec extends AnyFunSuite {
     import graft.similarity.KMeans
     val cents = KMeans.train(emb, "vec_id", "embedding", k = 8, iters = 3)
     val assigned = Ann.assignCells(emb, cents)
-    val idx = java.nio.file.Files.createTempDirectory("graft_ivfp").toString
+    val idx = Scratch.dir("graft_ivfp")
     assigned.write.mode("overwrite").partitionBy("cell").parquet(idx)
     val stored = spark.read.parquet(idx)
     val oneQ = emb.filter(col("vec_id") === 0)

@@ -7,6 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.similarity.{Ann, IvfCore, IvfIndex, KMeans, PqCodec, RawCodec, RotatingIvf}
 import graft.store.PartitionedStore
+import graft.util.Scratch
 
 /** Crash-point injection over the commit protocols: every documented
   * crash window in [[PartitionedStore]] commits (orphan `manifest.v<N>`,
@@ -38,7 +39,7 @@ class FaultInjectionSpec extends AnyFunSuite {
 
   /** Byte-copy `src` into a fresh temp dir — the simulated crash image. */
   private def crashImage(src: String, tag: String): Path = {
-    val dst = Files.createTempDirectory(s"graft_crash_$tag")
+    val dst = Paths.get(Scratch.dir(s"graft_crash_$tag"))
     import scala.jdk.CollectionConverters._
     val srcP = Paths.get(src)
     val w = Files.walk(srcP)
@@ -71,7 +72,7 @@ class FaultInjectionSpec extends AnyFunSuite {
   test("store commit killed after EACH ordered step: old view resolves, " +
       "orphans are never acknowledged, the documented remediation unblocks, " +
       "recovery sweeps spare the survivor's files") {
-    val root = Files.createTempDirectory("graft_fault_store").toString
+    val root = Scratch.dir("graft_fault_store")
     val store = newStore(root)
     store.init(kv(40, 1))               // v1
     store.refresh(0 until 4, kv(40, 2)) // v2
@@ -152,7 +153,7 @@ class FaultInjectionSpec extends AnyFunSuite {
 
   test("evolve killed between its versioned-schema write and the pointer " +
       "swap: no phantom column, the orphan schema is cleared by recovery") {
-    val root = Files.createTempDirectory("graft_fault_evolve").toString
+    val root = Scratch.dir("graft_fault_evolve")
     val store = newStore(root)
     store.init(kv(40, 1)) // v1
     val c1 = rows(store.read())
@@ -191,7 +192,7 @@ class FaultInjectionSpec extends AnyFunSuite {
       "the failing commit's own files and the next commit needs no manual " +
       "remediation — unlike a crash") {
     for (step <- Seq("dataWritten", "casChecked", "linkedManifest")) {
-      val root = Files.createTempDirectory(s"graft_fault_grace").toString
+      val root = Scratch.dir(s"graft_fault_grace")
       val store = newStore(root)
       store.init(kv(40, 1))
       val c1 = rows(store.read())
@@ -219,7 +220,7 @@ class FaultInjectionSpec extends AnyFunSuite {
       "left") {
     // PartitionedStore: a throwing pointerSwapped hook
     locally {
-      val root = Files.createTempDirectory("graft_fault_grace_post").toString
+      val root = Scratch.dir("graft_fault_grace_post")
       val store = newStore(root)
       store.init(kv(40, 1))
       store.onStep = s =>
@@ -233,7 +234,7 @@ class FaultInjectionSpec extends AnyFunSuite {
     locally {
       import graft.model.Bucket
       import graft.store.BucketStore
-      val rootDir = Files.createTempDirectory("graft_fault_grace_bucket").toString
+      val rootDir = Scratch.dir("graft_fault_grace_bucket")
       val store = new BucketStore(spark, rootDir)
       val b = Bucket("/test/fault_post")
       val stage = Paths.get(rootDir, b.signature, "processed").toString
@@ -266,7 +267,7 @@ class FaultInjectionSpec extends AnyFunSuite {
       "next promote's orphan sweep reclaims every crash leftover") {
     import graft.model.Bucket
     import graft.store.BucketStore
-    val rootDir = Files.createTempDirectory("graft_fault_bucket").toString
+    val rootDir = Scratch.dir("graft_fault_bucket")
     val store = new BucketStore(spark, rootDir)
     val b = Bucket("/test/fault")
     def gen(tag: Int) =
@@ -339,7 +340,7 @@ class FaultInjectionSpec extends AnyFunSuite {
     val emb = Tables.t(spark, TestSession.sf, "embeddings").cache()
     val base = emb.filter(col("vec_id") % 2 === 0)
     val cents = KMeans.train(base, "vec_id", "embedding", k = 4, iters = 2)
-    val root = Files.createTempDirectory("graft_fault_ivf").toString
+    val root = Scratch.dir("graft_fault_ivf")
     val idx = new IvfIndex(spark, root, 4)
     idx.build(base, cents)
     val baseCount = idx.store.read().count()
@@ -385,7 +386,7 @@ class FaultInjectionSpec extends AnyFunSuite {
     val emb = Tables.t(spark, TestSession.sf, "embeddings").cache()
     val base = emb.filter(col("vec_id") % 2 === 0)
     val cents = KMeans.train(base, "vec_id", "embedding", k = 4, iters = 2)
-    val root = Files.createTempDirectory("graft_fault_ivfpq").toString
+    val root = Scratch.dir("graft_fault_ivfpq")
     val idx = new IvfCore(spark, root, 4, PqCodec(m = 8, k = 16))
     idx.build(base, cents)
     val baseCount = idx.store.read().count()
@@ -449,7 +450,7 @@ class FaultInjectionSpec extends AnyFunSuite {
         .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     val q = emb.filter(col("vec_id") < 4)
     val corp1 = emb.filter(col("vec_id") % 2 === 0)
-    val root = Files.createTempDirectory("graft_fault_rot").toString
+    val root = Scratch.dir("graft_fault_rot")
     val rot = new RotatingIvf(spark, root, nPartitions = 4, RawCodec)
     rot.build(corp1, cents(corp1))
     val g1 = rot.currentGen()

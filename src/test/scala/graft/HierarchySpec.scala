@@ -3,6 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.Hierarchy
+import graft.util.Scratch
 
 /** Hierarchy.explode beyond the q:h1/h2 oracle path: cycle detection, the
   * maxDepth boundary (a tree of depth EXACTLY maxDepth is complete and
@@ -60,7 +61,7 @@ class HierarchySpec extends AnyFunSuite {
   }
 
   test("cluster-checkpoint mode produces the same closure") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_hier_ckpt").toString
+    val dir = Scratch.dir("graft_hier_ckpt")
     val es = Seq((1L, 0L), (2L, 0L), (3L, 1L), (4L, 3L))
     assert(explodeMap(es, ckpt = Some(dir)) == explodeMap(es))
   }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.similarity.{Ann, IvfIndex, KMeans}
+import graft.util.Scratch
 
 /** The incrementally-maintained persisted IVF index (q:ann14): append ≡
   * rebuild at every config, crash/drift/replay failures leave the index
@@ -16,7 +17,7 @@ class IvfIndexSpec extends AnyFunSuite {
   private lazy val emb = Tables.t(spark, TestSession.sf, "embeddings").cache()
 
   private def newIndex(nPartitions: Int = 8) = new IvfIndex(spark,
-    Files.createTempDirectory("graft_ivfidx").toString, nPartitions)
+    Scratch.dir("graft_ivfidx"), nPartitions)
 
   private def pairs(df: org.apache.spark.sql.DataFrame) =
     df.select("q_id", "c_id", "rank").collect()

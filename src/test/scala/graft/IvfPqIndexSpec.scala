@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.similarity.{Ann, IvfCore, KMeans, PqCodec}
+import graft.util.Scratch
 
 /** The PQ-coded maintained index (q:ann16): exhaustive config is exact
   * after appends, bounded configs keep useful recall while reading a
@@ -16,7 +17,7 @@ class IvfPqIndexSpec extends AnyFunSuite {
   private lazy val emb = Tables.t(spark, TestSession.sf, "embeddings").cache()
 
   private def newIndex(nPartitions: Int = 8) = new IvfCore(spark,
-    Files.createTempDirectory("graft_ivfpqidx").toString, nPartitions,
+    Scratch.dir("graft_ivfpqidx"), nPartitions,
     PqCodec(m = 8, k = 16))
 
   private def pairs(df: org.apache.spark.sql.DataFrame) =

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.dedup.{LshIndex, TextDedup}
+import graft.util.Scratch
 
 /** The persisted maintained LSH dedup index (q:dd19): append ≡ rebuild ≡
   * the one-shot two-sided band join, a randomized lifecycle tracks the
@@ -17,7 +18,7 @@ class LshIndexSpec extends AnyFunSuite {
   private lazy val docs = Tables.t(spark, TestSession.sf, "documents").cache()
 
   private def newIndex(nPartitions: Int = 8) = new LshIndex(spark,
-    Files.createTempDirectory("graft_lshidx").toString, nPartitions)
+    Scratch.dir("graft_lshidx"), nPartitions)
 
   private def pairs(df: org.apache.spark.sql.DataFrame) =
     df.select("corpus_doc", "new_doc").collect()

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.MergeInto
+import graft.util.Scratch
 
 /** Three-clause MERGE semantics on hand-built rows: every clause fires,
   * delete wins over update, unlisted insert columns go null, and the
@@ -81,7 +82,7 @@ class MergeIntoSpec extends AnyFunSuite {
     import java.nio.file.{Files, Paths}
     val target = (0L until 400L).map(i => (i, i * 10.0, s"s${i % 3}"))
       .toDF("k", "v", "s")
-    val root = Files.createTempDirectory("graft_pmerge").toString
+    val root = Scratch.dir("graft_pmerge")
     val store = new graft.store.PartitionedStore(spark, root, Seq("k"), 8)
     store.init(target)
     // a source spanning matched keys (380..399) and inserts (400..419),

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -9,6 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.model.Bucket
 import graft.ops.MultiWriter
 import graft.store.BucketStore
+import graft.util.Scratch
 
 /** S11 multi-writer fan-out: the primary is written once, every secondary
   * target and sink receives exactly the primary's rows, and the upstream
@@ -23,7 +22,7 @@ class MultiWriterSpec extends AnyFunSuite {
   test("emitAll: primary written once, secondaries and sinks see exactly " +
       "its rows, the upstream plan executes once") {
     val store = new BucketStore(spark,
-      Files.createTempDirectory("graft_multiwriter").toString)
+      Scratch.dir("graft_multiwriter"))
     // every upstream row evaluation bumps the accumulator: a second
     // execution of the plan (per target) would double it
     val evaluated = spark.sparkContext.longAccumulator("upstream_rows")

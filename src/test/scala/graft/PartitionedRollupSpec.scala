@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.store.PartitionedStore
+import graft.util.Scratch
 
 /** The partitioned-rewrite contract (SCALE.md §5's upgrade path, shipped):
   * refresh writes ONLY the touched partitions, commits all of them in one
@@ -16,7 +17,7 @@ class PartitionedRollupSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def newStore(n: Int = 8) = {
-    val root = Files.createTempDirectory("graft_pstore").toString
+    val root = Scratch.dir("graft_pstore")
     new PartitionedStore(spark, root, Seq("k"), n)
   }
 
@@ -134,7 +135,7 @@ class PartitionedRollupSpec extends AnyFunSuite {
   }
 
   test("time travel: readAsOf resolves each retained commit exactly; version diff = changeset") {
-    val root = Files.createTempDirectory("graft_pstore").toString
+    val root = Scratch.dir("graft_pstore")
     val ps = new PartitionedStore(spark, root, Seq("k"), 8,
       retainVersions = 3)
     val rows = (0L until 64L).map(i => (i, i * 10))
@@ -162,7 +163,7 @@ class PartitionedRollupSpec extends AnyFunSuite {
   }
 
   test("retention: versions beyond the window are vacuumed and fail loudly; retain=1 is eager") {
-    val root = Files.createTempDirectory("graft_pstore").toString
+    val root = Scratch.dir("graft_pstore")
     val ps = new PartitionedStore(spark, root, Seq("k"), 8,
       retainVersions = 1)
     ps.init(state(Seq((1L, 10L), (2L, 20L), (3L, 30L))))
@@ -176,7 +177,7 @@ class PartitionedRollupSpec extends AnyFunSuite {
   }
 
   test("a reader pinned to an old version survives a concurrent refresh (retained window)") {
-    val root = Files.createTempDirectory("graft_pstore").toString
+    val root = Scratch.dir("graft_pstore")
     val ps = new PartitionedStore(spark, root, Seq("k"), 8) // retain = 2
     ps.init(state(Seq((1L, 10L), (2L, 20L))))
     val pinned = ps.readAsOf(1) // lazy — resolves v1's dirs at collect time
@@ -188,7 +189,7 @@ class PartitionedRollupSpec extends AnyFunSuite {
   }
 
   test("re-init restarts the lineage at v1 — stale versioned manifests do not resolve") {
-    val root = Files.createTempDirectory("graft_pstore").toString
+    val root = Scratch.dir("graft_pstore")
     val ps = new PartitionedStore(spark, root, Seq("k"), 8,
       retainVersions = 5)
     ps.init(state(Seq((1L, 10L))))
@@ -202,7 +203,7 @@ class PartitionedRollupSpec extends AnyFunSuite {
   test("retention: a version falling OUT of a retain>=2 window has its " +
       "exclusive stamp dirs reclaimed (not just retain=1's eager path)") {
     import scala.jdk.CollectionConverters._
-    val root = Files.createTempDirectory("graft_pstore").toString
+    val root = Scratch.dir("graft_pstore")
     val ps = new PartitionedStore(spark, root, Seq("k"), 4,
       retainVersions = 2)
     def stamps(): Set[String] = {
@@ -232,7 +233,7 @@ class PartitionedRollupSpec extends AnyFunSuite {
 
   test("schema evolution: additive column committed with touched partitions " +
       "only; old rows read NULL; time travel keeps each version's schema") {
-    val root = Files.createTempDirectory("graft_pstore").toString
+    val root = Scratch.dir("graft_pstore")
     val ps = new PartitionedStore(spark, root, Seq("k"), 8,
       retainVersions = 4)
     ps.init(state(Seq((1L, 10L), (2L, 20L), (3L, 30L), (4L, 40L)))) // v1
@@ -281,7 +282,7 @@ class PartitionedRollupSpec extends AnyFunSuite {
 
   test("append commit: O(delta) write — existing dirs stay referenced and " +
       "untouched, read = old ∪ delta, refresh compacts, time travel holds") {
-    val root = Files.createTempDirectory("graft_pstore").toString
+    val root = Scratch.dir("graft_pstore")
     val ps = new PartitionedStore(spark, root, Seq("k"), 4,
       retainVersions = 3)
     val base = (0L until 32L).map(i => (i, i))
@@ -331,7 +332,7 @@ class PartitionedRollupSpec extends AnyFunSuite {
     // sweep must NOT have reclaimed the loser's in-flight stamp dirs
     // mid-write (the in-flight registry), and the winner's commit must be
     // fully intact afterwards.
-    val root = Files.createTempDirectory("graft_pstore").toString
+    val root = Scratch.dir("graft_pstore")
     val ps = new PartitionedStore(spark, root, Seq("k"), 4)
     val all = (0L until 32L).map(i => (i, i))
     ps.init(state(all)) // v1
@@ -373,7 +374,7 @@ class PartitionedRollupSpec extends AnyFunSuite {
   test("cross-process commit arbiter: a pre-existing manifest.v<N+1> (a " +
       "second writer process, or a crashed writer's orphan) makes the " +
       "commit lose loudly and tear down — and never deletes the file") {
-    val root = Files.createTempDirectory("graft_pstore").toString
+    val root = Scratch.dir("graft_pstore")
     val ps = new PartitionedStore(spark, root, Seq("k"), 4)
     val all = (0L until 32L).map(i => (i, i))
     ps.init(state(all)) // v1
@@ -413,7 +414,7 @@ class PartitionedRollupSpec extends AnyFunSuite {
 
   test("first evolve of a pre-versioning store snapshots v1's schema — " +
       "time travel never shows a column before it existed") {
-    val root = Files.createTempDirectory("graft_pstore").toString
+    val root = Scratch.dir("graft_pstore")
     val ps = new PartitionedStore(spark, root, Seq("k"), 4,
       retainVersions = 4)
     ps.init(state(Seq((1L, 10L), (2L, 20L)))) // v1
@@ -440,7 +441,7 @@ class PartitionedRollupSpec extends AnyFunSuite {
     // This is the round's riskiest surface (';'-joined dir lists feeding
     // read/readAsOf/readPartitions/vacuum) under sequencing no single
     // hand-written case covers.
-    val root = Files.createTempDirectory("graft_pstore").toString
+    val root = Scratch.dir("graft_pstore")
     val ps = new PartitionedStore(spark, root, Seq("k"), 3,
       retainVersions = 3)
     var seed = 0x5DEECE66DL

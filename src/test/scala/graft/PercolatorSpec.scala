@@ -5,6 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.dsl.Query
 import graft.ops.Percolator
+import graft.util.Scratch
 
 /** Percolation semantics: multi-match fan-out, NULL-predicate exclusion
   * (a NULL-valued clause is a non-match, the WHERE-clause rule), no row
@@ -144,9 +145,9 @@ class PercolatorSpec extends AnyFunSuite {
         .rangeIn("value", lo, lo + 7.0)
     }
     val data = (1L to 400L).map(i => (i, types((i % 4).toInt), (i % 97).toDouble))
-    val src = java.nio.file.Files.createTempDirectory("graft_perc_src").toString
-    val out = java.nio.file.Files.createTempDirectory("graft_perc_out").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_perc_ck").toString
+    val src = Scratch.dir("graft_perc_src")
+    val out = Scratch.dir("graft_perc_out")
+    val ckpt = Scratch.dir("graft_perc_ck")
     data.toDF("event_id", "event_type", "value").write.mode("append").parquet(src)
     val stream = spark.readStream
       .schema("event_id LONG, event_type STRING, value DOUBLE").parquet(src)

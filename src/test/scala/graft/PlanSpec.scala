@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.dsl.{Query, QueryCompiler}
+import graft.util.Scratch
 
 /** Physical-plan assertions — the scale contract. Every DSL-compiled read
   * must push predicates and projections into the parquet scan; small-dim
@@ -96,7 +97,7 @@ class PlanSpec extends AnyFunSuite {
 
   test("bucket store time partitions prune on partition predicates") {
     val store = new graft.store.BucketStore(spark,
-      java.nio.file.Files.createTempDirectory("graft_prune").toString)
+      Scratch.dir("graft_prune"))
     val b = graft.model.Bucket("/prune/events", graft.model.DataSchema(
       temporal = Some(graft.model.TemporalSchema("ts", graft.model.GroupingPeriod.Daily))))
     store.write(b, Tables.t(spark, TestSession.sf, "events"))
@@ -120,7 +121,7 @@ class PlanSpec extends AnyFunSuite {
 
   test("F12: DSL date range becomes a partition filter and skips files") {
     val store = new graft.store.BucketStore(spark,
-      java.nio.file.Files.createTempDirectory("graft_f12spec").toString)
+      Scratch.dir("graft_f12spec"))
     val b = graft.model.Bucket("/f12/events", graft.model.DataSchema(
       temporal = Some(graft.model.TemporalSchema("ts", graft.model.GroupingPeriod.Daily))))
     store.write(b, Tables.t(spark, TestSession.sf, "events"))
@@ -222,7 +223,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("co-bucketed tables join without a shuffle exchange") {
-    val root = java.nio.file.Files.createTempDirectory("graft_buck").toString
+    val root = Scratch.dir("graft_buck")
     val store = new graft.store.BucketStore(spark, root)
     val orders = Tables.t(spark, TestSession.sf, "orders")
     val customer = Tables.t(spark, TestSession.sf, "customer")

@@ -8,6 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.model.Bucket
 import graft.sql.SqlSurface
 import graft.store.BucketStore
+import graft.util.Scratch
 
 /** X5 EXECUTED: a real python interpreter runs a real PySpark job against a
   * bucket this session wrote, through the manifest half of the catalog
@@ -22,7 +23,7 @@ class PySparkBridgeSpec extends AnyFunSuite {
   private val python = sys.env.getOrElse("GRAFT_PYTHON", "python3")
 
   test("a separate PySpark process reads a bucket by signature and emits a verified result") {
-    val dir = Files.createTempDirectory("graft_pybridge")
+    val dir = Paths.get(Scratch.dir("graft_pybridge"))
     val store = new BucketStore(spark, dir.toString)
     val bucket = Bucket("/test/py_bridge")
     val data = spark.range(1000)

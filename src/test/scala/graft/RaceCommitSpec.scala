@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.store.PartitionedStore
+import graft.util.Scratch
 
 /** TRUE multi-process commit arbitration: a REAL second JVM (own
   * SparkSession, own — and therefore useless — in-process commit lock)
@@ -82,8 +83,8 @@ class RaceCommitSpec extends AnyFunSuite {
   test("hard-link arbiter, cross-PROCESS: of two real JVMs racing one " +
       "version, exactly one wins; the loser's error names the arbiter, its " +
       "teardown spares the winner's files, and its retry commits (3 rounds)") {
-    val root = Files.createTempDirectory("graft_race_arb").toString
-    val ctrl = Files.createTempDirectory("graft_race_arb_ctrl")
+    val root = Scratch.dir("graft_race_arb")
+    val ctrl = Paths.get(Scratch.dir("graft_race_arb_ctrl"))
     val store = new PartitionedStore(spark, root, Seq("k"), 4)
     store.init(kv(1))
     val proc = spawnChild(root, ctrl, rounds = 3, perRound = 1, retain = 2)
@@ -119,8 +120,8 @@ class RaceCommitSpec extends AnyFunSuite {
       "retention window re-links an already-swept manifest.v<N> but must " +
       "NOT roll the pointer backwards — the post-link re-check aborts it " +
       "(2 rounds at retainVersions=1)") {
-    val root = Files.createTempDirectory("graft_race_stale").toString
-    val ctrl = Files.createTempDirectory("graft_race_stale_ctrl")
+    val root = Scratch.dir("graft_race_stale")
+    val ctrl = Paths.get(Scratch.dir("graft_race_stale_ctrl"))
     val store = new PartitionedStore(spark, root, Seq("k"), 4,
       retainVersions = 1)
     store.init(kv(1))

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.similarity.{Ann, KMeans, PqCodec, RawCodec, RotatingIvf}
+import graft.util.Scratch
 
 /** Online rebuild with serving continuity (q:ann17): the pointer swap is
   * the promote, serves resolve old-or-new generations atomically (never a
@@ -29,7 +30,7 @@ class RotatingIvfSpec extends AnyFunSuite {
   test("build → serve is exact; rebuild with a RETRAINED quantizer swaps " +
       "atomically; appends land in the live generation; old gens reclaimed " +
       "with one-predecessor grace") {
-    val root = Files.createTempDirectory("graft_rotivf").toString
+    val root = Scratch.dir("graft_rotivf")
     val rot = new RotatingIvf(spark, root, nPartitions = 8, RawCodec)
     val half = emb.filter(col("vec_id") % 2 === 0)
     rot.build(half, KMeans.train(half, "vec_id", "embedding", k = 8, iters = 2))
@@ -67,7 +68,7 @@ class RotatingIvfSpec extends AnyFunSuite {
   test("PQ rotator: retrain re-freezes quantizer AND codebooks together; " +
       "serves stay exact across the swap; appends land in the new " +
       "generation under its own frozen models") {
-    val root = Files.createTempDirectory("graft_rotpq").toString
+    val root = Scratch.dir("graft_rotpq")
     val rot = new RotatingIvf(spark, root, nPartitions = 8,
       PqCodec(m = 8, k = 16))
     val half = emb.filter(col("vec_id") % 2 === 0)
@@ -108,7 +109,7 @@ class RotatingIvfSpec extends AnyFunSuite {
       "after every op, across generation swaps") {
     val rnd = new scala.util.Random(101)
     val allIds = emb.select("vec_id").collect().map(_.getLong(0)).toVector
-    val root = Files.createTempDirectory("graft_rotpq_life").toString
+    val root = Scratch.dir("graft_rotpq_life")
     val rot = new RotatingIvf(spark, root, nPartitions = 8,
       PqCodec(m = 8, k = 16))
     var present = allIds.filter(_ % 4 == 0).toSet
@@ -164,7 +165,7 @@ class RotatingIvfSpec extends AnyFunSuite {
   test("an append racing a live rebuild SERIALIZES behind it and lands in " +
       "the PROMOTED generation — never silently stranded in the superseded " +
       "one") {
-    val root = Files.createTempDirectory("graft_rotivf").toString
+    val root = Scratch.dir("graft_rotivf")
     val rot = new RotatingIvf(spark, root, nPartitions = 4, RawCodec)
     val half = emb.filter(col("vec_id") % 2 === 0)
     rot.build(half, KMeans.train(half, "vec_id", "embedding", k = 4, iters = 2))
@@ -207,7 +208,7 @@ class RotatingIvfSpec extends AnyFunSuite {
   test("a cross-PROCESS promote mid-append (pointer tampered under the " +
       "writer lock, as a second writer process would) fails the append " +
       "LOUDLY naming the stranded batch — never a silent vanish") {
-    val root = Files.createTempDirectory("graft_rotivf").toString
+    val root = Scratch.dir("graft_rotivf")
     val rot = new RotatingIvf(spark, root, nPartitions = 4, RawCodec)
     val half = emb.filter(col("vec_id") % 2 === 0)
     rot.build(half, KMeans.train(half, "vec_id", "embedding", k = 4, iters = 2))
@@ -243,7 +244,7 @@ class RotatingIvfSpec extends AnyFunSuite {
 
   test("a serve racing a live rebuild reads the OLD generation or the NEW " +
       "one end-to-end — never a mix of quantizer and data") {
-    val root = Files.createTempDirectory("graft_rotivf").toString
+    val root = Scratch.dir("graft_rotivf")
     val rot = new RotatingIvf(spark, root, nPartitions = 4, RawCodec)
     val a = emb.filter(col("vec_id") % 2 === 0)
     rot.build(a, KMeans.train(a, "vec_id", "embedding", k = 4, iters = 2))
@@ -300,7 +301,7 @@ class RotatingIvfSpec extends AnyFunSuite {
       .select(col("c.vec_id").as("corpus_id"), col("q.vec_id").as("new_id")))
     assert(want.nonEmpty, "threshold too high — vacuous test")
     val rot = new RotatingIvf(spark,
-      Files.createTempDirectory("graft_rotivf_nw").toString, nPartitions = 8,
+      Scratch.dir("graft_rotivf_nw"), nPartitions = 8,
       RawCodec)
     rot.build(corpus, KMeans.train(corpus, "vec_id", "embedding", k = 4, iters = 2))
     assert(pset(rot.neighborsWithin(batch, minSim = 0.30, nprobe = 4)) === want)
@@ -309,7 +310,7 @@ class RotatingIvfSpec extends AnyFunSuite {
     rot.rebuild(corpus, KMeans.train(corpus, "vec_id", "embedding", k = 8, iters = 2))
     assert(pset(rot.neighborsWithin(batch, minSim = 0.30, nprobe = 8)) === want)
     val rotPq = new RotatingIvf(spark,
-      Files.createTempDirectory("graft_rotivfpq_nw").toString,
+      Scratch.dir("graft_rotivfpq_nw"),
       nPartitions = 8, PqCodec(m = 8, k = 16))
     rotPq.build(corpus, KMeans.train(corpus, "vec_id", "embedding", k = 4, iters = 2))
     assert(pset(rotPq.neighborsWithin(batch, minSim = 0.30, nprobe = 4,

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.{MergeInto, SnapshotDiff}
+import graft.util.Scratch
 
 /** Snapshot diff vs a naive reference (null transitions included — the
   * case SQL `<>` would silently drop), and the order-guarded merge's
@@ -119,7 +120,7 @@ class SnapshotDiffSpec extends AnyFunSuite {
       .toSeq // (key, ts, uid)
     def applyBatches(batches: Seq[Seq[(Long, Long, Long)]]) = {
       val store = new graft.store.PartitionedStore(spark,
-        Files.createTempDirectory("graft_st30spec").toString, Seq("k"), 4)
+        Scratch.dir("graft_st30spec"), Seq("k"), 4)
       store.init(Seq.empty[(Long, Long, Long)].toDF("k", "ts", "uid"))
       batches.filter(_.nonEmpty).foreach { b =>
         val latest = b.groupBy(_._1).map(_._2.maxBy(r => (r._2, r._3))).toSeq

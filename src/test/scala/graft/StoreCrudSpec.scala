@@ -9,12 +9,13 @@ import graft.crud.CrudService
 import graft.dsl.{Query, Update}
 import graft.model._
 import graft.store.BucketStore
+import graft.util.Scratch
 
 class StoreCrudSpec extends AnyFunSuite {
   private lazy val spark = TestSession.spark
 
   private def freshStore(): BucketStore =
-    new BucketStore(spark, Files.createTempDirectory("graft_store").toString)
+    new BucketStore(spark, Scratch.dir("graft_store"))
 
   private val eventsBucket = Bucket("/test/events", DataSchema(
     temporal = Some(TemporalSchema("ts", GroupingPeriod.Daily)),
@@ -339,7 +340,7 @@ class StoreCrudSpec extends AnyFunSuite {
   }
 
   test("crud: mergeInto commits through buffer+promote, atomically on failure") {
-    val root = Files.createTempDirectory("graft_store")
+    val root = java.nio.file.Paths.get(Scratch.dir("graft_store"))
     val store = new BucketStore(spark, root.toString)
     val b = Bucket("/test/merge")
     val crud = new CrudService(store, b)

@@ -4,6 +4,8 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.util.Scratch
+
 /** Streaming queries (ST1-ST3) must actually run end-to-end — these drive
   * the same SparkEntry entries Verify/Bench use, over the single-file
   * parquet layout the driver ships (a regression here once hid behind
@@ -77,9 +79,9 @@ class StreamingSpec extends AnyFunSuite {
 
     // a keyed running aggregation: its state (per-key counts/sums) must
     // survive the stop and NOT double-count batch-1 rows on restart
-    val src = Files.createTempDirectory("graft_restart_src").toString
-    val out = Files.createTempDirectory("graft_restart_out").toString
-    val ckpt = Files.createTempDirectory("graft_restart_ckpt").toString
+    val src = Scratch.dir("graft_restart_src")
+    val out = Scratch.dir("graft_restart_out")
+    val ckpt = Scratch.dir("graft_restart_ckpt")
     def runOnce(): Unit = {
       val stream = spark.readStream
         .schema("k LONG, v LONG")
@@ -121,8 +123,8 @@ class StreamingSpec extends AnyFunSuite {
     val mgr = new StreamManager
     val src = s"${TestSession.sf}/events.parquet"
     val stream = Streams.parquetStream(spark, src, spark.read.parquet(src).schema)
-    val out = java.nio.file.Files.createTempDirectory("graft_st5_out").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_st5_ck").toString
+    val out = Scratch.dir("graft_st5_out")
+    val ckpt = Scratch.dir("graft_st5_ck")
     val writer = stream.writeStream.format("parquet")
       .option("path", out).option("checkpointLocation", ckpt)
       .trigger(Trigger.AvailableNow())

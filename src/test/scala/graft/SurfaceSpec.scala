@@ -8,6 +8,7 @@ import graft.model._
 import graft.multimodal.Multimodal
 import graft.sources.{XmlSource, XmlSourceConfig}
 import graft.sql.SqlSurface
+import graft.util.Scratch
 
 class SurfaceSpec extends AnyFunSuite {
   private lazy val spark = TestSession.spark
@@ -102,7 +103,7 @@ class SurfaceSpec extends AnyFunSuite {
   }
 
   test("Q3 executed DDL registers a NESTED structural table in the catalog") {
-    val root = java.nio.file.Files.createTempDirectory("graft_whn").toString
+    val root = Scratch.dir("graft_whn")
     val store = new graft.store.BucketStore(spark, root)
     val b = Bucket("/wh/nested", DataSchema(dataWarehouse = Some(
       WarehouseSchema(mainTableJson = Some(
@@ -124,7 +125,7 @@ class SurfaceSpec extends AnyFunSuite {
   }
 
   test("Q3 executed DDL registers the bucket in the session catalog") {
-    val root = java.nio.file.Files.createTempDirectory("graft_wh").toString
+    val root = Scratch.dir("graft_wh")
     val store = new graft.store.BucketStore(spark, root)
     val b = Bucket("/wh/regions", DataSchema(dataWarehouse = Some(
       WarehouseSchema(scala.collection.immutable.ListMap(
@@ -143,7 +144,7 @@ class SurfaceSpec extends AnyFunSuite {
   }
 
   test("X5 catalog bridge: buckets become session tables PySpark can read") {
-    val root = java.nio.file.Files.createTempDirectory("graft_px").toString
+    val root = Scratch.dir("graft_px")
     val store = new graft.store.BucketStore(spark, root)
     val br = Bucket("/py/region")
     val bn = Bucket("/py/nation")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.store.ZOrder
+import graft.util.Scratch
 
 /** Z-order layout contract: after clustering, every output file's
   * bounding box is tight on BOTH dimensions — the property parquet
@@ -47,7 +48,7 @@ class ZOrderSpec extends AnyFunSuite {
       .select(col("o_orderkey"), col("o_custkey"),
         datediff(col("o_orderdate"), to_date(lit("2020-01-01")))
           .cast("long").as("d_days"))
-    val dir = java.nio.file.Files.createTempDirectory("graft_zorder").toString
+    val dir = Scratch.dir("graft_zorder")
     // write each layout ONCE; measure both dimensions from the same files
     ZOrder.clustered(orders, "o_custkey", "d_days", numFiles = 16)
       .write.mode("overwrite").parquet(s"$dir/z")
@@ -90,7 +91,7 @@ class ZOrderSpec extends AnyFunSuite {
     }
     val (c1, c2) = mid(cLo, cHi); val (d1, d2) = mid(dLo, dHi)
     val box = col("o_custkey").between(c1, c2) && col("d_days").between(d1, d2)
-    val dir = java.nio.file.Files.createTempDirectory("graft_zskip").toString
+    val dir = Scratch.dir("graft_zskip")
     ZOrder.clustered(orders, Seq("o_custkey", "d_days"), numFiles = 32)
       .write.mode("overwrite").parquet(s"$dir/z")
     val written = spark.read.parquet(s"$dir/z")
@@ -115,7 +116,7 @@ class ZOrderSpec extends AnyFunSuite {
 
   test("compact(preserveZOrder) keeps skipping; plain compact destroys it") {
     val store = new graft.store.BucketStore(spark,
-      java.nio.file.Files.createTempDirectory("graft_zcompact").toString)
+      Scratch.dir("graft_zcompact"))
     val b = graft.model.Bucket("/z/compact", graft.model.DataSchema())
     val orders = Tables.t(spark, TestSession.sf, "orders")
       .select(col("o_orderkey"), col("o_custkey"),
@@ -150,7 +151,7 @@ class ZOrderSpec extends AnyFunSuite {
         when(col("o_orderkey") % 10 < 9, col("o_orderkey") % 10)
           .otherwise((col("o_orderkey") % 100000L) * lit(100000L))
           .cast("long").as("skew"))
-    val dir = java.nio.file.Files.createTempDirectory("graft_zrank").toString
+    val dir = Scratch.dir("graft_zrank")
     ZOrder.clusteredByRank(orders, Seq("o_custkey", "skew"), numFiles = 16)
       .write.mode("overwrite").parquet(s"$dir/r")
     ZOrder.clustered(orders, Seq("o_custkey", "skew"), numFiles = 16)
@@ -172,7 +173,7 @@ class ZOrderSpec extends AnyFunSuite {
 
   test("writeZOrdered keeps the bounding-box property through the store path") {
     val store = new graft.store.BucketStore(spark,
-      java.nio.file.Files.createTempDirectory("graft_zstore").toString)
+      Scratch.dir("graft_zstore"))
     val b = graft.model.Bucket("/z/orders", graft.model.DataSchema())
     val orders = Tables.t(spark, TestSession.sf, "orders")
       .select(col("o_orderkey"), col("o_custkey"),
