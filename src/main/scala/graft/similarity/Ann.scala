@@ -1,10 +1,16 @@
 package graft.similarity
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.expressions.{GenericRowWithSchema, Literal,
+  SortArray}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.functions.VectorFunctions._
+import graft.functions.VectorMath
 
 /** Similarity search over an embedding column (`Array[Float]`).
   *
@@ -169,8 +175,8 @@ object Ann {
     *     cartesian.
     *  2. **No corpus-sized window — and no assignment shuffle at all**:
     *     cell assignment and probing are per-ROW argmin / top-nprobe
-    *     expressions over the broadcast cells row
-    *     ([[graft.functions.NearestCell]]/[[graft.functions.ProbeCellsExpr]]
+    *     expressions over the constant cells array ([[cellsCol]],
+    *     [[graft.functions.NearestCell]]/[[graft.functions.ProbeCellsExpr]]
     *     — narrow projections; the corpus is never re-keyed just to
     *     assign it), and the final per-vector ranking is the bounded-heap
     *     [[graft.functions.TopKAgg]] with k = k — candidate rows are
@@ -247,40 +253,65 @@ object Ann {
       nprobe: Int, idCol: String, vecCol: String,
       centId: String, centVec: String): (DataFrame, DataFrame) = {
     import graft.functions.VectorExprFunctions.{nearest_cell, probe_cells}
-    // per-row argmin / top-nprobe over the broadcast 1-row cells array
-    // (see [[centsRow]]) — same (d2, cent) total order the join+aggregate
+    // per-row argmin / top-nprobe over the constant cells array (see
+    // [[cellsCol]]) — same (d2, cent) total order the join+aggregate
     // formulation minimized, with NO corpus shuffle on either side
-    val cs = broadcast(centsRow(centroids, centId, centVec))
+    val cs = cellsCol(centroids, centId, centVec)
     val assigned = corpus
-      .select(col(idCol).as("c_id"), col(vecCol).as("c_vec"))
-      .crossJoin(cs)
-      .select(col("c_id"),
-        nearest_cell(col("c_vec"), col("__cs")).getField("cent").as("cent"),
-        col("c_vec"))
+      .select(col(idCol).as("c_id"),
+        nearest_cell(col(vecCol), cs).getField("cent").as("cent"),
+        col(vecCol).as("c_vec"))
     val probes = corpus
-      .select(col(idCol).as("q_id"), col(vecCol).as("q_vec"))
-      .crossJoin(cs)
-      .select(col("q_id"),
-        explode(probe_cells(col("q_vec"), col("__cs"), nprobe)).as("p"),
-        col("q_vec"))
+      .select(col(idCol).as("q_id"),
+        explode(probe_cells(col(vecCol), cs, nprobe)).as("p"),
+        col(vecCol).as("q_vec"))
       .select(col("q_id"), col("p.cent").as("cent"), col("q_vec"))
     (assigned, probes)
   }
 
-  /** The k cells as ONE broadcastable row — `sort_array(collect_list(
-    * struct(cent, cv)))`, cent-ascending so the per-row argmin scan order
-    * IS the (d2, cent) tie-break order. Model-sized by contract (k·dim
-    * doubles), the same payload the old per-site `broadcast(cent)` join
-    * side carried. */
-  private[similarity] def centsRow(centroids: DataFrame,
-      centId: String, centVec: String): DataFrame =
-    centroids.agg(sort_array(collect_list(struct(
-      col(centId).as("cent"), col(centVec).as("cv")))).as("__cs"))
+  /** The k cells as (cent, cv) structs, one per row of `centroids`. */
+  private def cellStructs(centroids: DataFrame, centId: String,
+      centVec: String): DataFrame =
+    centroids.select(struct(col(centId).as("cent"), col(centVec).as("cv"))
+      .as("c"))
+
+  /** The k cells, built ON THE DRIVER: the centroid frame is collected
+    * (model-sized by contract, k·dim doubles; a driver-local frame such as
+    * KMeans' output collects with no job) and `sort_array`ed
+    * cent-ascending, so the per-row argmin/probe scan order IS the
+    * (d2, cent) tie-break order. Catalyst form plus its type — the input
+    * [[graft.functions.VectorMath.probeCells]] scans. */
+  private def cells(cs: DataFrame): (ArrayData, ArrayType) = {
+    val t = ArrayType(cs.schema.head.dataType, containsNull = false)
+    val unsorted = CatalystTypeConverters.createToCatalystConverter(t)(
+      cs.collect().map(_.get(0)).toSeq)
+    (SortArray(Literal(unsorted, t), Literal(true)).eval()
+      .asInstanceOf[ArrayData], t)
+  }
+
+  /** The k cells as ONE constant column, the same cent-ascending array on
+    * every row, scanned by every per-row argmin/probe caller (assignment,
+    * KMeans, IvfPq, ivfTopK, knnJoin). A driver-local centroid frame
+    * (KMeans' output, a rotating index's cached generation) becomes
+    * [[cells]] shipped as a Spark broadcast variable
+    * ([[graft.functions.BroadcastValue]]): no aggregate, join or broadcast
+    * job builds or ships it. Any other frame stays lazy — the same
+    * `sort_array(collect_list(..))` as a scalar subquery, run only if the
+    * plan needs it (an eager collect would cost a job even where the
+    * consumer prunes the assignment away, as a `count()` over ann10 does). */
+  private[similarity] def cellsCol(centroids: DataFrame,
+      centId: String, centVec: String): Column = {
+    val cs = cellStructs(centroids, centId, centVec)
+    if (cs.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]) {
+      val (data, t) = cells(cs)
+      graft.functions.BroadcastValue.column(centroids.sparkSession, data, t)
+    } else cs.agg(sort_array(collect_list(col("c")))).scalar()
+  }
 
   /** Nearest-cell assignment — THE index-build step shared by the
     * persisted-IVF path (q:ann13) and its spec: a per-row argmin over the
-    * (d2, cell) total order (deterministic ties) against the broadcast
-    * cells row — a narrow projection; no join, no shuffle, no window. */
+    * (d2, cell) total order (deterministic ties) against the constant
+    * cells array — a narrow projection; no join, no shuffle, no window. */
   def assignCells(corpus: DataFrame, centroids: DataFrame,
       idCol: String = "vec_id", vecCol: String = "embedding",
       centId: String = "cent_id", centVec: String = "cent_vec",
@@ -303,16 +334,15 @@ object Ann {
       centId: String = "cent_id", centVec: String = "cent_vec",
       cellCol: String = "cell"): DataFrame = {
     import graft.functions.VectorExprFunctions.nearest_cell
-    // per-row argmin over the broadcast cells row — the same (d2, cent)
+    // per-row argmin over the constant cells array — the same (d2, cent)
     // winner the broadcast-join + min_by aggregate produced, with no
-    // corpus shuffle (see [[centsRow]])
+    // corpus shuffle (see [[cellsCol]])
+    val cs = cellsCol(centroids, centId, centVec)
     corpus.select(col(idCol), col(vecCol))
-      .crossJoin(broadcast(centsRow(centroids, centId, centVec)))
-      // centsRow's agg always yields one row, an EMPTY array for an empty
-      // centroid frame: drop those rows (the empty-centroids contract)
-      .filter(size(col("__cs")) > 0)
-      .select(col(idCol), col(vecCol),
-        nearest_cell(col(vecCol), col("__cs")).as("__nc"))
+      // an EMPTY centroid frame is an empty array: drop every row (the
+      // empty-centroids contract)
+      .filter(size(cs) > 0)
+      .select(col(idCol), col(vecCol), nearest_cell(col(vecCol), cs).as("__nc"))
       .select(col(idCol), col(vecCol),
         when(col("__nc").isNotNull, col("__nc.cent")).otherwise(raise_error(
           concat(lit("IVF assignment: the vector of id "),
@@ -331,13 +361,13 @@ object Ann {
     * touches O(√n) vectors of storage, and st27-style streaming serving
     * gets the same layout for free.
     *
-    * The probe union is collected to the driver — bounded control state
-    * (≤ nprobe × |queries| ints, never data-sized). Per-query correctness
-    * rides the (cell) equi-join against the broadcast probe set; the
-    * `isin` filter is the scan-level superset prune. `nprobe = |cells|`
-    * probes everything (provably exact — the oracle config, the ann4
-    * pattern); bounded nprobe is the approximate path whose recall and
-    * pruned-scan shape IvfPrunedSpec pins. */
+    * The probes are derived on the driver ([[collectProbes]]) — bounded
+    * control state (≤ nprobe × |queries| rows, never data-sized).
+    * Per-query correctness rides the per-cell match against the broadcast
+    * probe rows; the `isin` filter is the scan-level superset prune.
+    * `nprobe = |cells|` probes everything (provably exact — the oracle
+    * config, the ann4 pattern); bounded nprobe is the approximate path
+    * whose recall and pruned-scan shape IvfPrunedSpec pins. */
   def ivfTopKPruned(stored: DataFrame, queries: DataFrame,
       centroids: DataFrame, k: Int, nprobe: Int = 2,
       cellCol: String = "cell",
@@ -345,46 +375,68 @@ object Ann {
       cId: String = "vec_id", cVec: String = "embedding",
       centId: String = "cent_id", centVec: String = "cent_vec"): DataFrame = {
     require(k >= 1 && nprobe >= 1, s"k/nprobe must be >= 1: $k/$nprobe")
-    // ONE execution of the assignment pipeline: the collected rows feed
-    // both the driver-side probe-cell list AND (as a local relation) the
-    // broadcast join side — the query batch is broadcast-sized by
-    // contract, so materializing it on the driver costs what the
+    // ONE probe derivation: the driver-side rows feed both the probe-cell
+    // list AND the broadcast probe side — the query batch is
+    // broadcast-sized by contract, so collecting it costs what the
     // broadcast costs anyway
     val (probeRows, probeSchema) =
       collectProbes(queries, centroids, nprobe, qId, qVec, centId, centVec)
     rankOverProbes(stored, probeRows, probeSchema, k, cellCol, cId, cVec)
   }
 
-  /** The collected probe side of a pruned IVF serve: per query, its
-    * `nprobe` nearest cells — (q_id, q_vec, cent) rows plus their schema.
-    * Bounded driver state by the broadcast-query contract (≤ nprobe ×
-    * |queries| rows). ONE derivation shared by [[ivfTopKPruned]] and
-    * [[IvfCore.serve]], so the cells the store-side partition prune reads
-    * and the cells the candidate join matches can never fork. */
-  private[similarity] def collectProbes(queries: DataFrame,
+  /** The probe side of a pruned IVF serve, derived ON THE DRIVER: per
+    * query, its `nprobe` nearest cells — (q_id, q_vec, cent, cv) rows plus
+    * their schema. The query batch is collected (broadcast-sized by
+    * contract: one job, the only one before scoring), and each vector is
+    * probed by [[graft.functions.VectorMath.probeCells]] — the
+    * `probe_cells` expression's own kernel — over [[cells]], so no
+    * aggregate, broadcast or explode job runs. Bounded driver state:
+    * |queries| vectors in, ≤ nprobe × |queries| rows out. ONE derivation
+    * shared by [[ivfTopKPruned]] and [[IvfCore.serve]], so the cells the
+    * store-side partition prune reads and the cells the candidate join
+    * matches can never fork.
+    *
+    * A null query vector, or one whose dimension matches no centroid,
+    * fails naming the query id (it would otherwise probe no cell and
+    * silently return no rows). Only an EMPTY centroid set probes nothing. */
+  private[graft] def collectProbes(queries: DataFrame,
       centroids: DataFrame, nprobe: Int, qId: String, qVec: String,
-      centId: String, centVec: String)
-      : (Array[org.apache.spark.sql.Row],
-         org.apache.spark.sql.types.StructType) = {
-    import graft.functions.VectorExprFunctions.probe_cells
-    // per-row top-nprobe over the broadcast cells row — same (d2, cent)
-    // rank order as the window formulation, no shuffle (see [[centsRow]])
-    val probesDf = queries.select(col(qId).as("q_id"), col(qVec).as("q_vec"))
-      .crossJoin(broadcast(centsRow(centroids, centId, centVec)))
-      .select(col("q_id"), col("q_vec"),
-        explode(probe_cells(col("q_vec"), col("__cs"), nprobe)
-          .getField("cent")).as("cent"))
-    (probesDf.collect(), probesDf.schema)
+      centId: String, centVec: String): (Array[Row], StructType) = {
+    val (cs, csType) = cells(cellStructs(centroids, centId, centVec))
+    val (centLong, cvType, cvF) = VectorMath.centsMeta(csType)
+    val q = queries.select(col(qId).as("q_id"), col(qVec).as("q_vec"))
+    val vecType = q.schema("q_vec").dataType
+    val vF = VectorMath.isFloatArray(vecType)
+    val toVec = CatalystTypeConverters.createToCatalystConverter(vecType)
+    val toCv = CatalystTypeConverters.createToScalaConverter(cvType)
+    val schema = StructType(q.schema.fields ++ Seq(
+      StructField("cent", if (centLong) LongType else IntegerType,
+        nullable = false),
+      StructField("cv", cvType, nullable = false)))
+    val rows = q.collect().flatMap { r =>
+      val probes = Option(r.get(1)).map(v => VectorMath.probeCells(
+        toVec(v).asInstanceOf[ArrayData], cs, nprobe, vF, cvF, centLong)
+        .asInstanceOf[ArrayData])
+      require(cs.numElements() == 0 || probes.exists(_.numElements() > 0),
+        s"IVF serve: the vector of query id ${r.get(0)} is null or does " +
+          "not match the centroid dimension")
+      probes.toSeq.flatMap(p => (0 until p.numElements()).map { i =>
+        val c = p.getStruct(i, 2)
+        new GenericRowWithSchema(Array(r.get(0), r.get(1),
+          if (centLong) c.getLong(0) else c.getInt(0), toCv(c.getArray(1))),
+          schema): Row
+      })
+    }
+    (rows, schema)
   }
 
   /** Candidate join + exact rerank over an already-collected probe side:
     * row-filter the stored corpus to the probed cells (the scan-level
     * prune — a partition-directory prune when `stored` is cell-partitioned
-    * parquet), equi-join the broadcast probe set on the cell, exact cosine,
-    * per-query window top-k. */
+    * parquet), match each row to the broadcast probes of its cell, exact
+    * cosine, per-query bounded-heap top-k. */
   private[similarity] def rankOverProbes(stored: DataFrame,
-      probeRows: Array[org.apache.spark.sql.Row],
-      probeSchema: org.apache.spark.sql.types.StructType, k: Int,
+      probeRows: Array[Row], probeSchema: StructType, k: Int,
       cellCol: String, cId: String, cVec: String): DataFrame = {
     val cand = scoreOverProbes(stored, probeRows, probeSchema,
       cellCol, cId, cVec)
@@ -393,16 +445,17 @@ object Ann {
 
   /** The scored-candidate half of a probed serve, shared by the ranked
     * ([[rankOverProbes]]) and threshold ([[IvfCore.neighborsWithin]])
-    * consumers: prune the stored corpus to the probed cells, equi-join the
-    * broadcast probe set on the cell key, exact cosine per (query,
-    * candidate) — `(q_id, c_id, sim)`. */
+    * consumers: prune the stored corpus to the probed cells, match each
+    * stored row to the probes of its cell, exact cosine per (query,
+    * candidate) — `(q_id, c_id, sim)`. The probe side is already on the
+    * driver, so it ships as a broadcast variable
+    * ([[graft.functions.BroadcastLookup]]) with its norms computed in a
+    * projection over the local relation: the serve runs no broadcast
+    * job, only the scoring stage. */
   private[similarity] def scoreOverProbes(stored: DataFrame,
-      probeRows: Array[org.apache.spark.sql.Row],
-      probeSchema: org.apache.spark.sql.types.StructType,
+      probeRows: Array[Row], probeSchema: StructType,
       cellCol: String, cId: String, cVec: String): DataFrame = {
     val spark = stored.sparkSession
-    val probesLocal = spark.createDataFrame(
-      java.util.Arrays.asList(probeRows: _*), probeSchema)
     // probe literals take the PARTITION column's own type (string or a
     // narrower integer than the centroid ids) — a mismatch would wrap the
     // partition column in a CAST, and a cast-wrapped IN can land as a
@@ -410,24 +463,25 @@ object Ann {
     // silently unpruned
     val cellType = stored.schema(cellCol).dataType
     val probes = probeCells(probeRows, cellType)
+    val probeSide = spark.createDataFrame(
+        java.util.Arrays.asList(probeRows: _*), probeSchema)
+      .select(col("cent").cast(cellType).as("__cell"), col("q_id"),
+        col("q_vec"), norm(col("q_vec")).as("__q_nrm"))
     stored
       .filter(col(cellCol).isInCollection(probes)) // partition-dir prune
-      .withColumn("__c_nrm", norm(col(cVec)))
-      .join(broadcast(probesLocal.select(col("q_id"), col("q_vec"),
-        norm(col("q_vec")).as("__q_nrm"),
-        col("cent").cast(cellType).as(cellCol))), Seq(cellCol))
-      .select(col("q_id"), col(cId).as("c_id"),
-        cosinePre(dot(col("q_vec"), col(cVec)),
-          col("__q_nrm"), col("__c_nrm")).as("sim"))
+      .select(col(cId), col(cVec), norm(col(cVec)).as("__c_nrm"),
+        explode(graft.functions.BroadcastLookup.join(probeSide, "__cell",
+          col(cellCol))).as("__p"))
+      .select(col("__p.q_id").as("q_id"), col(cId).as("c_id"),
+        cosinePre(dot(col("__p.q_vec"), col(cVec)),
+          col("__p.__q_nrm"), col("__c_nrm")).as("sim"))
   }
 
   /** Distinct probed cells, coerced to the stored cell column's exact
     * type (see the CAST note in [[rankOverProbes]]). */
-  private[similarity] def probeCells(
-      probeRows: Array[org.apache.spark.sql.Row],
-      cellType: org.apache.spark.sql.types.DataType): Seq[Any] = {
+  private[similarity] def probeCells(probeRows: Array[Row],
+      cellType: DataType): Seq[Any] = {
     val probesRaw = probeRows.map(_.getAs[Any]("cent")).distinct
-    import org.apache.spark.sql.types._
     (cellType match {
       case StringType => probesRaw.map(String.valueOf)
       case IntegerType => probesRaw.map(_.asInstanceOf[Number].intValue)
@@ -446,14 +500,12 @@ object Ann {
       cId: String = "vec_id", cVec: String = "embedding",
       centId: String = "cent_id", centVec: String = "cent_vec"): DataFrame = {
     import graft.functions.VectorExprFunctions.probe_cells
-    // per-row top-keep cells over the broadcast cells row — same
+    // per-row top-keep cells over the constant cells array — same
     // (d2, cent) rank order as the window formulation, no shuffle
-    val cs = broadcast(centsRow(centroids, centId, centVec))
+    val cs = cellsCol(centroids, centId, centVec)
     def assign(df: DataFrame, id: String, vec: String, keep: Int): DataFrame =
-      df.crossJoin(cs)
-        .select(df.columns.map(col) :+
-          explode(probe_cells(col(vec), col("__cs"), keep)
-            .getField("cent")).as("cent"): _*)
+      df.select(df.columns.toIndexedSeq.map(col) :+
+        explode(probe_cells(col(vec), cs, keep).getField("cent")).as("cent"): _*)
     val c = assign(corpus.select(col(cId).as("c_id"), col(cVec).as("c_vec")),
       "c_id", "c_vec", 1)
     val q = assign(queries.select(col(qId).as("q_id"), col(qVec).as("q_vec")),

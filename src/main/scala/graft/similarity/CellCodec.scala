@@ -7,6 +7,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
+import graft.functions.BroadcastLookup
+
 /** What an [[IvfCore]] cell stores beside (id, vec, cell, d2), the model
   * frozen with it at build, and how the probed candidates are scored into
   * `(q_id, c_id, sim)`. The defaults are the raw codec's identities. */
@@ -33,9 +35,10 @@ sealed trait CellCodec {
   /** The persisted model; fails loudly while the index is not built. */
   def load(ix: IvfCore[_]): Model
   def encode(rows: DataFrame, model: Model): DataFrame = rows
+  /** Score the pruned partitions against the driver-derived probe rows
+    * (q_id, q_vec, cent, cv) of [[Ann.collectProbes]]. */
   def score(ix: IvfCore[_], pruned: DataFrame, probeRows: Array[Row],
-      probeSchema: StructType, centroids: DataFrame, model: Model,
-      rerank: Int): DataFrame
+      probeSchema: StructType, model: Model, rerank: Int): DataFrame
 }
 
 /** Raw vectors, scored by exact cosine; no model beyond the centroids. */
@@ -46,9 +49,8 @@ object RawCodec extends CellCodec {
   def train(ix: IvfCore[_], rows: DataFrame): Unit = ()
   def load(ix: IvfCore[_]): Unit = ()
   def score(ix: IvfCore[_], pruned: DataFrame, probeRows: Array[Row],
-      probeSchema: StructType, centroids: DataFrame, model: Unit,
-      rerank: Int): DataFrame =
-    Ann.scoreOverProbes(pruned.drop("d2"), probeRows, probeSchema,
+      probeSchema: StructType, model: Unit, rerank: Int): DataFrame =
+    Ann.scoreOverProbes(pruned, probeRows, probeSchema,
       ix.cellCol, ix.idCol, ix.vecCol)
 }
 
@@ -76,15 +78,15 @@ final case class PqCodec(m: Int, k: Int) extends CellCodec {
     s""""m":$m,"k":$k,"sub_dim":${books.subDim},"""
 
   /** The residual against the ASSIGNED cell's centroid — the corpus side
-    * of the asymmetric distance. */
+    * of the asymmetric distance; the centroids ship as a broadcast
+    * variable keyed by cell, so no broadcast job runs per action. */
   override def prepare(ix: IvfCore[_], assigned: DataFrame,
       centroids: DataFrame): DataFrame = {
-    val cent = centroids.select(col(ix.centId).as(ix.cellCol),
+    val cent = centroids.select(col(ix.centId).as("__cell"),
       col(ix.centVec).cast("array<double>").as("__cv"))
-    assigned.join(broadcast(cent), Seq(ix.cellCol))
-      .withColumn("__res", zip_with(col(ix.vecCol).cast("array<double>"),
-        col("__cv"), (a, b) => a - b))
-      .drop("__cv")
+    assigned.withColumn("__res", zip_with(col(ix.vecCol).cast("array<double>"),
+      BroadcastLookup.join(cent, "__cell", col(ix.cellCol)).getItem(0)
+        .getField("__cv"), (a, b) => a - b))
   }
 
   def train(ix: IvfCore[_], rows: DataFrame): Pq.Codebooks =
@@ -99,9 +101,12 @@ final case class PqCodec(m: Int, k: Int) extends CellCodec {
     ix.onStep("codebooksWritten")
   }
 
+  /** The frozen codebooks, read through the driver's model cache
+    * ([[IvfCore.modelRows]]): a serve of an unchanged build reads them
+    * with no job. */
   def load(ix: IvfCore[_]): Pq.Codebooks = {
     val d = ix.metaField("sub_dim").toInt
-    val rows = ix.spark.read.parquet(booksPath(ix)).collect()
+    val (rows, _) = IvfCore.modelRows(ix.spark, booksPath(ix))
     require(rows.length == m * k,
       s"codebooks at ${ix.root} hold ${rows.length} entries, expected ${m * k}")
     val arr = Array.fill(m, k)(Seq.empty[Double])
@@ -114,46 +119,48 @@ final case class PqCodec(m: Int, k: Int) extends CellCodec {
 
   /** ADC cut + exact rerank: per (query, probed cell) the query's residual
     * against THAT cell → one m×k distance table; keep `rerank` candidates
-    * per query by quantized distance; `sim` is the EXACT cosine. */
+    * per query by quantized distance; `sim` is the EXACT cosine. The
+    * distance tables are computed in a projection over the driver-side
+    * probe rows (each carries its cell's centroid), so their broadcast
+    * runs no job. An exhaustive `rerank` keeps every candidate, so the
+    * quantized distances decide nothing: the probed partitions' vectors
+    * are scored exactly, the raw codec's one scan, with no code scan and
+    * no candidate join. */
   def score(ix: IvfCore[_], pruned: DataFrame, probeRows: Array[Row],
-      probeSchema: StructType, centroids: DataFrame, books: Pq.Codebooks,
+      probeSchema: StructType, books: Pq.Codebooks,
       rerank: Int): DataFrame = {
+    if (rerank == Int.MaxValue)
+      return RawCodec.score(ix, pruned, probeRows, probeSchema, (), rerank)
     val cellType = pruned.schema(ix.cellCol).dataType
     val probesLocal = ix.spark.createDataFrame(
       java.util.Arrays.asList(probeRows: _*), probeSchema)
-    val cent = centroids.select(col(ix.centId).as("cent"),
-      col(ix.centVec).cast("array<double>").as("__cv"))
-    val probes = probesLocal.join(broadcast(cent), Seq("cent"))
-      .withColumn("__qres", zip_with(col("q_vec").cast("array<double>"),
-        col("__cv"), (a, b) => a - b))
-      .select(col("q_id"), col("cent").cast(cellType).as(ix.cellCol),
-        Pq.distanceTable(col("__qres"), books).as("__dtab"))
+    val probes = probesLocal.select(col("cent").cast(cellType).as("__cell"),
+      col("q_id"), Pq.distanceTable(zip_with(col("q_vec").cast("array<double>"),
+        col("cv").cast("array<double>"), (a, b) => a - b), books).as("__dtab"))
     // ADC scan: ONLY (cell, id, code) of the probed partitions — the
     // parquet reader prunes the raw-vector column out of this stage
-    val scored = pruned.select(col(ix.cellCol), col(ix.idCol).as("c_id"),
-        col("code"))
-      .join(broadcast(probes), Seq(ix.cellCol))
-      .withColumn("__adc", graft.functions.VectorExprFunctions
-        .pq_adc(col("code"), col("__dtab")))
-    // exhaustive rerank keeps every candidate — skip the rank window
-    // entirely (see [[Pq.adcTopK]])
-    val candidates =
-      if (rerank == Int.MaxValue) scored.select("q_id", "c_id")
-      else scored
-        .withColumn("__cr", row_number().over(
-          Window.partitionBy("q_id").orderBy(col("__adc"), col("c_id"))))
-        .filter(col("__cr") <= rerank)
-        .select("q_id", "c_id")
+    val candidates = pruned.select(col(ix.idCol).as("c_id"), col("code"),
+        explode(BroadcastLookup.join(probes, "__cell", col(ix.cellCol)))
+          .as("__p"))
+      .select(col("__p.q_id").as("q_id"), col("c_id"),
+        graft.functions.VectorExprFunctions
+          .pq_adc(col("code"), col("__p.__dtab")).as("__adc"))
+      .withColumn("__cr", row_number().over(
+        Window.partitionBy("q_id").orderBy(col("__adc"), col("c_id"))))
+      .filter(col("__cr") <= rerank)
+      .select("q_id", "c_id")
     // exact rerank: |queries|·rerank raw vectors, equi-joined from the
-    // probed partitions after the cut
-    val qVecs = probesLocal.select(col("q_id"),
-      col("q_vec").cast("array<double>").as("q_vec")).dropDuplicates("q_id")
+    // probed partitions after the cut; one vector per query id
+    val qVecs = ix.spark.createDataFrame(
+        java.util.Arrays.asList(probeRows.distinctBy(_.get(0)): _*), probeSchema)
+      .select(col("q_id"), col("q_vec").cast("array<double>").as("q_vec"))
     candidates
       .join(pruned.select(col(ix.idCol).as("c_id"),
         col(ix.vecCol).cast("array<double>").as("__cvec")), Seq("c_id"))
-      .join(broadcast(qVecs), Seq("q_id"))
-      .withColumn("sim", graft.functions.VectorFunctions.cosine(
-        col("q_vec"), col("__cvec")))
-      .select(col("q_id"), col("c_id"), col("sim"))
+      .select(col("q_id"), col("c_id"), col("__cvec"),
+        explode(BroadcastLookup.join(qVecs, "q_id", col("q_id"))).as("__q"))
+      .select(col("q_id"), col("c_id"),
+        graft.functions.VectorFunctions.cosine(col("__q.q_vec"),
+          col("__cvec")).as("sim"))
   }
 }

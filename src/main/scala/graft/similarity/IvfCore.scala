@@ -1,6 +1,7 @@
 package graft.similarity
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
+import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -212,10 +213,15 @@ class IvfCore[C <: CellCodec](val spark: SparkSession, val root: String,
         col("sim"))
   }
 
-  /** Probe + prune + score, `(q_id, c_id, sim)`: derive each query's
-    * `nprobe` nearest cells ONCE, route them through the store's own
-    * partitioning expression to a directory-level prune, and let the
-    * codec score the pruned candidates. */
+  /** Probe + prune + score, `(q_id, c_id, sim)`. Probing and routing run
+    * on the driver: [[Ann.collectProbes]] collects the query batch (the one
+    * job before scoring) and derives each query's `nprobe` nearest cells
+    * with the `probe_cells` kernel, and [[PartitionedStore.touchedBy]]
+    * routes those cells through the store's own partitioning expression
+    * over a local relation (no job). Bounded driver state: the batch is
+    * broadcast-sized by contract, and the centroids and the codec's model
+    * are model-sized. Spark then runs only the codec's scoring of the
+    * pruned partitions. */
   private def scored(queries: DataFrame, centroids: DataFrame, nprobe: Int,
       rerank: Int): DataFrame = {
     val model = codec.load(this)
@@ -234,7 +240,51 @@ class IvfCore[C <: CellCodec](val spark: SparkSession, val root: String,
     // the empty result keeps the full output schema
     val ids = if (cells.isEmpty) Seq(0) else store.touchedBy(cellsDf)
     codec.score(this, store.readPartitions(ids), probeRows, probeSchema,
-      centroids, model, rerank)
+      model, rerank)
+  }
+}
+
+object IvfCore {
+  private type Listing = Vector[(String, Long)]
+
+  /** [[modelRows]]' entries: model file path → (its data-file listing,
+    * rows, schema). */
+  private val models =
+    new ConcurrentHashMap[String, (Listing, Array[Row], StructType)]()
+
+  /** The data files of a parquet model dir, (name, size), sorted; names
+    * Spark skips (`_SUCCESS`, `.crc` sidecars) are left out. Empty when the
+    * dir is missing or changes under the listing: such a read is not
+    * cached. */
+  private def listing(dir: Path): Listing =
+    try Commit.list(dir).map(p => p.getFileName.toString)
+      .filterNot(n => n.startsWith(".") || n.startsWith("_"))
+      .map(n => (n, Files.size(dir.resolve(n)))).toVector.sorted
+    catch { case _: java.io.IOException | _: java.io.UncheckedIOException => Vector.empty }
+
+  /** The rows of a small parquet model file a serve reads — the PQ
+    * codebooks, a rotating index's generation centroids — cached on the
+    * driver per path and reused while the file's data-file listing is
+    * unchanged. The listing is the commit the index already makes: a
+    * build writes its model once, and Spark names every written file with
+    * a fresh UUID, so a rebuild's model (in place, or in a new generation
+    * dir) never matches an old entry; nothing is keyed by time. A miss
+    * drops the entries whose file is gone (reclaimed generations), so the
+    * cache holds one model-sized entry per live model file. */
+  private[similarity] def modelRows(spark: SparkSession,
+      path: String): (Array[Row], StructType) = {
+    val dir = Paths.get(path).toAbsolutePath.normalize
+    val seen = listing(dir)
+    Option(models.get(dir.toString)).filter(e => seen.nonEmpty && e._1 == seen)
+      .map(e => (e._2, e._3)).getOrElse {
+        val df = spark.read.parquet(path)
+        val rows = df.collect()
+        models.keySet.removeIf(p => !Files.exists(Paths.get(p)))
+        // a write that raced the read leaves no entry
+        if (seen.nonEmpty && listing(dir) == seen)
+          models.put(dir.toString, (seen, rows, df.schema))
+        (rows, df.schema)
+      }
   }
 }
 

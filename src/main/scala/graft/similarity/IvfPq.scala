@@ -36,13 +36,13 @@ object IvfPq {
       centroids: DataFrame, centId: String = "cent_id",
       centVec: String = "cent_vec"): DataFrame = {
     import graft.functions.VectorExprFunctions.nearest_cell
-    // per-row argmin over the broadcast cells row ([[Ann.centsRow]]):
+    // per-row argmin over the constant cells array ([[Ann.cellsCol]]):
     // same (d2, cent) winner as the rank-1 window, no corpus shuffle;
     // the winner's cv rides in the argmin struct for the residual
     df.select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("v"))
-      .crossJoin(broadcast(Ann.centsRow(centroids, centId, centVec)))
       .select(col("id"), col("v"),
-        nearest_cell(col("v"), col("__cs")).as("__nc"))
+        nearest_cell(col("v"), Ann.cellsCol(centroids, centId, centVec))
+          .as("__nc"))
       .select(col("id"), col("__nc.cent").as("cent"),
         zip_with(col("v"), col("__nc.cv"), (a, b) => a - b).as("res"))
   }
@@ -60,14 +60,13 @@ object IvfPq {
       centId: String = "cent_id", centVec: String = "cent_vec"): DataFrame = {
     import graft.functions.VectorExprFunctions.probe_cells
     // per (query, probed cell): residual vs that cell -> m×k ADC table.
-    // Probes per-row over the broadcast cells row ([[Ann.centsRow]]) —
+    // Probes per-row over the constant cells array ([[Ann.cellsCol]]) —
     // same (d2, cent) rank order as the old window, no shuffle; each
     // probe struct carries its cell's cv for the residual
     val q = queries
       .select(col(qId).as("q_id"), col(qVec).cast("array<double>").as("q_vec"))
-      .crossJoin(broadcast(Ann.centsRow(centroids, centId, centVec)))
-      .select(col("q_id"), col("q_vec"),
-        explode(probe_cells(col("q_vec"), col("__cs"), nprobe)).as("p"))
+      .select(col("q_id"), col("q_vec"), explode(probe_cells(col("q_vec"),
+        Ann.cellsCol(centroids, centId, centVec), nprobe)).as("p"))
       .withColumn("q_res",
         zip_with(col("q_vec"), col("p.cv"), (a, b) => a - b))
       .select(col("q_id"), col("p.cent").as("cent"),

@@ -14,7 +14,7 @@ import graft.functions.VectorFunctions._
   * (`df.sample(...)` upstream — standard IVF practice: centroids from a few
   * hundred thousand vectors quantize billions). Per iteration:
   *
-  *  - assignment = a per-row argmin over the broadcast cells row
+  *  - assignment = a per-row argmin over the constant cells array
   *    ([[graft.functions.NearestCell]], ties to the lower cent id) — a
   *    narrow projection: no join, no shuffle, no window sort;
   *  - mean update = posexplode to (cell, dim) partial sums — map-side
@@ -86,15 +86,15 @@ object KMeans {
   }
 
   /** Nearest-cell assignment: (id, vec, cent, d2) with d2 = min over cells,
-    * ties to the lower cent_id — per-row argmin over the broadcast cells
-    * row ([[Ann.centsRow]]): same (d2, cent) winner as the old
+    * ties to the lower cent_id — per-row argmin over the constant cells
+    * array ([[Ann.cellsCol]]): same (d2, cent) winner as the old
     * broadcast-join + min(struct) aggregate, with no shuffle of the
-    * sample per Lloyd's round. */
+    * sample and no broadcast job per Lloyd's round. */
   private def assignCells(sample: DataFrame, cents: DataFrame): DataFrame =
-    sample.crossJoin(broadcast(Ann.centsRow(cents, "cent_id", "cent_vec")))
+    sample
       .select(col("id"), col("vec"),
-        graft.functions.VectorExprFunctions
-          .nearest_cell(col("vec"), col("__cs")).as("__nc"))
+        graft.functions.VectorExprFunctions.nearest_cell(col("vec"),
+          Ann.cellsCol(cents, "cent_id", "cent_vec")).as("__nc"))
       .select(col("id"), col("vec"),
         col("__nc.cent").as("cent"), col("__nc.d2").as("d2"))
 }

@@ -71,8 +71,14 @@ final class RotatingIvf[C <: CellCodec](val spark: SparkSession,
   private def centroidsPath(gen: String): String =
     rootPath.resolve(gen).resolve("centroids.parquet").toString
 
-  private def genCentroids(gen: String): DataFrame =
-    spark.read.parquet(centroidsPath(gen))
+  /** The generation's frozen centroids as a driver-local frame, read
+    * through the driver's model cache ([[IvfCore.modelRows]]; the
+    * generation dir name is unique per rebuild), so a serve of the live
+    * generation reads them with no job. */
+  private def genCentroids(gen: String): DataFrame = {
+    val (rows, schema) = IvfCore.modelRows(spark, centroidsPath(gen))
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+  }
 
   /** The live generation's index plus its frozen centroids — resolved
     * together, so every composed operation is self-consistent. */

@@ -171,7 +171,7 @@ final class BucketStore(spark: SparkSession, rootDir: String) {
       buffer: Option[String] = None): DataFrame = {
     val root = stageRoot(b, stage)
     val dir = stageDir(b, stage, buffer)
-    val key = (root.toAbsolutePath.normalize.toString, roleName(buffer))
+    val key = schemaKey(root, buffer)
     val cache = schemaCache(spark)
     val files = dataFiles(root, dir)
     Option(cache.get(key)).filter(e => files.contains(e._1)) match {
@@ -182,6 +182,9 @@ final class BucketStore(spark: SparkSession, rootDir: String) {
         df
     }
   }
+
+  private def schemaKey(root: Path, buffer: Option[String]): (String, String) =
+    (root.toAbsolutePath.normalize.toString, roleName(buffer))
 
   /** The files a scan of `dir` reads, as (path under `root`, size), sorted:
     * names Spark skips (`_temporary` output, `.crc` sidecars) are left out.
@@ -287,9 +290,10 @@ final class BucketStore(spark: SparkSession, rootDir: String) {
   def promote(b: Bucket, stage: String, buffer: String): Unit =
     promoteThen(b, stage, buffer)(())
 
-  /** [[promote]], then `reclaim` inside its best-effort post-switch block. */
+  /** [[promote]], then `reclaim` inside its best-effort post-switch block.
+    * Returns the name of the dir `current` now resolves to. */
   private def promoteThen(b: Bucket, stage: String, buffer: String)(
-      reclaim: => Unit): Unit = {
+      reclaim: => Unit): String = {
     val root = stageRoot(b, stage)
     Commit.lock(root).synchronized {
       val curName = readPointer(root, "current").getOrElse("current")
@@ -316,6 +320,7 @@ final class BucketStore(spark: SparkSession, rootDir: String) {
         sweepOrphans(root)
         reclaim
       }
+      newName
     }
   }
 
@@ -363,10 +368,31 @@ final class BucketStore(spark: SparkSession, rootDir: String) {
 
   /** Rewrite a stage in place with writer/reader atomicity: write the new
     * content to a fresh buffer, then promote. This is the engine's
-    * update/delete commit path (SURVEY §7 hard-part 2). */
-  def rewrite(b: Bucket, stage: String)(f: DataFrame => DataFrame): Unit =
-    bufferAndPromote(b, stage, "rewrite_")(buf =>
-      write(b, f(read(b, stage)), stage, buf, SaveMode.Overwrite))
+    * update/delete commit path (SURVEY §7 hard-part 2).
+    *
+    * When `f` keeps the read schema (same names, types and order,
+    * nullability aside: a Parquet read is all-nullable), the promoted
+    * dir's files read back with exactly that schema, so its listing goes
+    * into [[read]]'s schema cache with it and the next read infers
+    * nothing. Any other rewrite re-infers as before. With partition type
+    * inference on, the time-partition column's type follows the values
+    * written, so such a stage is never seeded. */
+  def rewrite(b: Bucket, stage: String)(f: DataFrame => DataFrame): Unit = {
+    val cur = read(b, stage)
+    val next = f(cur)
+    val promoted = bufferAndPromote(b, stage, "rewrite_")(buf =>
+      write(b, next, stage, buf, SaveMode.Overwrite))
+    val typedPartitions = cur.columns.contains(PartitionCol) &&
+      spark.conf.get("spark.sql.sources.partitionColumnTypeInference.enabled",
+        "true").toBoolean
+    if (!typedPartitions &&
+        org.apache.spark.sql.graftbridge.ColumnBridge.asNullable(next.schema) ==
+          cur.schema) {
+      val root = stageRoot(b, stage)
+      dataFiles(root, root.resolve(promoted)).foreach(files =>
+        schemaCache(spark).put(schemaKey(root, None), (files, cur.schema)))
+    }
+  }
 
   /** Commit discipline shared by [[rewrite]]/[[writeZOrdered]]/[[compact]]:
     * run the buffer write, promote only if it succeeded, and tear the
@@ -377,7 +403,7 @@ final class BucketStore(spark: SparkSession, rootDir: String) {
     * the write's own error, and once the switch landed the reclaim is
     * best-effort (the PartitionedStore rule). */
   private def bufferAndPromote(b: Bucket, stage: String, prefix: String)(
-      writeBuf: Option[String] => Unit): Unit = {
+      writeBuf: Option[String] => Unit): String = {
     val buf = prefix + System.nanoTime()
     // register as in-flight BEFORE any data lands: a concurrent promote's
     // orphan sweep must not reclaim this commit's live buffer as crash

@@ -634,12 +634,19 @@ final class PartitionedStore(val spark: SparkSession, val root: String,
   }
 
   /** Touched-partition ids of a delta, derived WITHOUT touching state —
-    * bounded by nPartitions, so the driver-side collect is a few ints. */
+    * bounded by nPartitions, so the driver-side collect is a few ints.
+    * A driver-local delta (a local relation, such as an IVF serve's probed
+    * cells) is routed on the driver: the [[partitionId]] projection folds
+    * into the local relation, so no job runs and the ids come from the
+    * same expression the writes route by. */
   def touchedBy(delta: DataFrame): Seq[Int] = {
     require(keyCols.forall(delta.columns.contains),
       s"delta must carry the key columns $keyCols")
-    delta.select(partitionId.as(PartCol)).distinct()
-      .collect().map(_.getInt(0)).toSeq.sorted
+    val ids = delta.select(partitionId.as(PartCol))
+    val local = ids.queryExecution.optimizedPlan
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+    (if (local) ids else ids.distinct()).collect().map(_.getInt(0))
+      .distinct.toSeq.sorted
   }
 
   /** Compact every partition whose dir list grew past `maxDirs` appends

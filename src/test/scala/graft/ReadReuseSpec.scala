@@ -16,7 +16,8 @@ import graft.util.Scratch
   * set is unchanged — a repeat read starts no Spark job — and every change
   * to the file set is seen by the next read, with no invalidation call:
   * appends, rewrite/promote, compaction, age-out, a write by another store
-  * instance on the same root, and a schema-evolving append. */
+  * instance on the same root, and a schema-evolving append. A rewrite that
+  * keeps the schema hands its own schema to the next read. */
 class ReadReuseSpec extends AnyFunSuite {
   private lazy val spark = TestSession.spark
 
@@ -112,6 +113,47 @@ class ReadReuseSpec extends AnyFunSuite {
 
     store.write(bucket, rows(300, 310).withColumn("extra", lit("x")))
     assertSees(store, range(48, 152) ++ range(200, 210) ++ range(300, 310),
+      "a schema-evolving append")
+  }
+
+  test("a rewrite that keeps the stage schema seeds the next read; one that " +
+      "changes it re-infers") {
+    val store = new BucketStore(spark, Scratch.dir("graft_reuse"))
+    val crud = new graft.crud.CrudService(store, bucket)
+    crud.storeObjects(rows(0, 100))
+    assertSees(store, range(0, 100), "the first store")
+    // after a rewrite that keeps the schema: the FIRST read starts no job
+    // and its schema equals a fresh inference over the promoted dir
+    def seeded(want: Set[String], what: String): Unit = {
+      val (back, jobs) = jobsDuring(store.read(bucket))
+      assert(jobs === 0, s"the first read after $what started $jobs jobs")
+      assert(back.schema === spark.read.parquet(store.stagePath(bucket)).schema,
+        s"after $what")
+      assert(ids(back) === want, s"after $what")
+    }
+    crud.storeObjects(rows(90, 120), replacePresent = true)
+    seeded(range(0, 120), "an upsert")
+    assert(crud.updateObjectsBySpec(graft.dsl.Query.allOf().when("n", 5L),
+      graft.dsl.Update.update().set("n", 500L)) === 1L)
+    seeded(range(0, 120), "an update")
+    assert(store.read(bucket).filter(col("n") === 500L).count() === 1L)
+    assert(crud.deleteObjectsBySpec(graft.dsl.Query.allOf().when("n", 7L)) === 1L)
+    seeded(range(0, 120) - "r7", "a delete")
+    crud.mergeInto(rows(110, 130).select(col("_id"), col("n").as("src_n"),
+        col("ts").as("src_ts")), Seq("_id"),
+      matchedUpdate = Map("n" -> (col("src_n") + 1000L)),
+      notMatchedInsert = Some(Map("n" -> col("src_n"), "ts" -> col("src_ts"))))
+    seeded(range(0, 130) - "r7", "a merge")
+    assert(store.read(bucket).filter(col("n") >= 1000L).count() === 10L)
+    // a schema-evolving upsert writes a new column: the next read infers
+    crud.storeObjects(rows(200, 210).withColumn("extra", lit("x")),
+      replacePresent = true)
+    val (_, evolving) = jobsDuring(store.read(bucket))
+    assert(evolving > 0, "the read after a schema-evolving rewrite inferred nothing")
+    assertSees(store, range(0, 130) - "r7" ++ range(200, 210),
+      "a schema-evolving upsert")
+    store.write(bucket, rows(300, 310).withColumn("more", lit(1)))
+    assertSees(store, range(0, 130) - "r7" ++ range(200, 210) ++ range(300, 310),
       "a schema-evolving append")
   }
 
