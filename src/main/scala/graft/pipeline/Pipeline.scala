@@ -77,14 +77,8 @@ object Pipeline {
 
   /** Run the stage chain. Validates the reference's job-graph rule of at most
     * one grouping stage (`HadoopTechnologyUtils.java:58-229`). */
-  def run(input: DataFrame, stages: Seq[PipelineStage]): DataFrame = {
-    require(stages.count(_.cfg.groupingFields.nonEmpty) <= 1,
-      "at most one grouping stage per pipeline")
-    stages.foldLeft(input) { (df, ps) =>
-      if (ps.cfg.groupingFields.isEmpty) runMapStage(df, ps)
-      else runGroupedStage(df, ps)
-    }
-  }
+  def run(input: DataFrame, stages: Seq[PipelineStage]): DataFrame =
+    runChain(input, stages.map(ModuleStage))
 
   /** Mixed chain: module stages and expression script stages interleave
     * freely; script stages stay fully declarative (Catalyst sees through

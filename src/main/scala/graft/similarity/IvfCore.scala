@@ -1,6 +1,6 @@
 package graft.similarity
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Paths}
 import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
@@ -252,16 +252,6 @@ object IvfCore {
   private val models =
     new ConcurrentHashMap[String, (Listing, Array[Row], StructType)]()
 
-  /** The data files of a parquet model dir, (name, size), sorted; names
-    * Spark skips (`_SUCCESS`, `.crc` sidecars) are left out. Empty when the
-    * dir is missing or changes under the listing: such a read is not
-    * cached. */
-  private def listing(dir: Path): Listing =
-    try Commit.list(dir).map(p => p.getFileName.toString)
-      .filterNot(n => n.startsWith(".") || n.startsWith("_"))
-      .map(n => (n, Files.size(dir.resolve(n)))).toVector.sorted
-    catch { case _: java.io.IOException | _: java.io.UncheckedIOException => Vector.empty }
-
   /** The rows of a small parquet model file a serve reads — the PQ
     * codebooks, a rotating index's generation centroids — cached on the
     * driver per path and reused while the file's data-file listing is
@@ -274,15 +264,15 @@ object IvfCore {
   private[similarity] def modelRows(spark: SparkSession,
       path: String): (Array[Row], StructType) = {
     val dir = Paths.get(path).toAbsolutePath.normalize
-    val seen = listing(dir)
-    Option(models.get(dir.toString)).filter(e => seen.nonEmpty && e._1 == seen)
+    val seen = Commit.dataFiles(dir, dir)
+    Option(models.get(dir.toString)).filter(e => seen.contains(e._1))
       .map(e => (e._2, e._3)).getOrElse {
         val df = spark.read.parquet(path)
         val rows = df.collect()
         models.keySet.removeIf(p => !Files.exists(Paths.get(p)))
         // a write that raced the read leaves no entry
-        if (seen.nonEmpty && listing(dir) == seen)
-          models.put(dir.toString, (seen, rows, df.schema))
+        if (seen.nonEmpty && Commit.dataFiles(dir, dir) == seen)
+          models.put(dir.toString, (seen.get, rows, df.schema))
         (rows, df.schema)
       }
   }

@@ -173,7 +173,7 @@ final class BucketStore(spark: SparkSession, rootDir: String) {
     val dir = stageDir(b, stage, buffer)
     val key = schemaKey(root, buffer)
     val cache = schemaCache(spark)
-    val files = dataFiles(root, dir)
+    val files = Commit.dataFiles(dir, root)
     Option(cache.get(key)).filter(e => files.contains(e._1)) match {
       case Some((_, schema)) => spark.read.schema(schema).parquet(dir.toString)
       case None =>
@@ -185,22 +185,6 @@ final class BucketStore(spark: SparkSession, rootDir: String) {
 
   private def schemaKey(root: Path, buffer: Option[String]): (String, String) =
     (root.toAbsolutePath.normalize.toString, roleName(buffer))
-
-  /** The files a scan of `dir` reads, as (path under `root`, size), sorted:
-    * names Spark skips (`_temporary` output, `.crc` sidecars) are left out.
-    * None when the dir holds no data file or cannot be listed (say, a
-    * concurrent rewrite reclaimed it); such a read infers as before. */
-  private def dataFiles(root: Path, dir: Path): Option[Vector[(String, Long)]] =
-    try {
-      def hidden(n: String) = n.startsWith(".") || (n.startsWith("_") && !n.contains("="))
-      val s = Files.walk(dir)
-      val files =
-        try s.iterator().asScala.filter(p => Files.isRegularFile(p) &&
-            dir.relativize(p).iterator().asScala.forall(n => !hidden(n.toString)))
-          .map(p => (root.relativize(p).toString, Files.size(p))).toVector.sorted
-        finally s.close() // Files.walk holds directory fds until closed
-      Some(files).filter(_.nonEmpty)
-    } catch { case _: java.io.IOException | _: java.io.UncheckedIOException => None }
 
   /** Storage path of a stage's current dir — the cross-process handle the
     * python bridge manifests by signature (X5,
@@ -389,7 +373,7 @@ final class BucketStore(spark: SparkSession, rootDir: String) {
         org.apache.spark.sql.graftbridge.ColumnBridge.asNullable(next.schema) ==
           cur.schema) {
       val root = stageRoot(b, stage)
-      dataFiles(root, root.resolve(promoted)).foreach(files =>
+      Commit.dataFiles(root.resolve(promoted), root).foreach(files =>
         schemaCache(spark).put(schemaKey(root, None), (files, cur.schema)))
     }
   }
@@ -463,7 +447,7 @@ final class BucketStore(spark: SparkSession, rootDir: String) {
 
   /** Count of parquet data files in a stage (diagnostic for compaction). */
   def parquetFileCount(b: Bucket, stage: String): Long =
-    dataFiles(stageRoot(b, stage), stageDir(b, stage, None))
+    Commit.dataFiles(stageDir(b, stage, None), stageRoot(b, stage))
       .fold(0L)(_.count(_._1.endsWith(".parquet")).toLong)
 
   /** Retention: drop whole time partitions older than `existAgeMax`

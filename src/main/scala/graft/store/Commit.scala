@@ -21,7 +21,9 @@ import scala.jdk.CollectionConverters._
   *  - [[deleteTree]]: the one walk-and-delete ([[deleteTreeQuiet]] wraps
   *    it for teardowns);
   *  - [[bestEffort]]: post-switch maintenance that never changes a landed
-  *    commit's outcome.
+  *    commit's outcome;
+  *  - [[dataFiles]]: the files a scan reads, which keys the driver caches
+  *    that outlive a commit only while the files are unchanged.
   */
 private[graft] object Commit {
 
@@ -76,6 +78,24 @@ private[graft] object Commit {
       val s = Files.list(root)
       try s.iterator().asScala.toList finally s.close()
     }
+
+  /** The files a Spark scan of `dir` reads, as (path under `base`, size),
+    * sorted. Names Spark skips, at any level under `dir`, are left out: a
+    * leading `.` (`.crc` sidecars) or `_` (`_SUCCESS`, `_temporary`
+    * output), except a `k=v` partition dir. None when `dir` holds no data
+    * file or cannot be listed (say, a concurrent rewrite reclaimed it):
+    * a cache keyed by the listing then neither hits nor stores. */
+  def dataFiles(dir: Path, base: Path): Option[Vector[(String, Long)]] =
+    try {
+      def hidden(n: String) = n.startsWith(".") || (n.startsWith("_") && !n.contains("="))
+      val s = Files.walk(dir)
+      val files =
+        try s.iterator().asScala.filter(p => Files.isRegularFile(p) &&
+            dir.relativize(p).iterator().asScala.forall(n => !hidden(n.toString)))
+          .map(p => (base.relativize(p).toString, Files.size(p))).toVector.sorted
+        finally s.close() // Files.walk holds directory fds until closed
+      Some(files).filter(_.nonEmpty)
+    } catch { case _: java.io.IOException | _: java.io.UncheckedIOException => None }
 
   /** Reclaim, in the order given, the entries `debris` picks from the
     * listing of `root`; names in flight are never offered. The first

@@ -286,11 +286,14 @@ object BenchScale {
     java.nio.file.Files.write(marker.toPath, fingerprint.getBytes)
   }
 
-  private def time(body: => Unit): Double = {
+  /** `body`'s wall seconds and value. */
+  private def timed[A](body: => A): (Double, A) = {
     val t0 = System.nanoTime()
-    body
-    (System.nanoTime() - t0) / 1e9
+    val out = body
+    ((System.nanoTime() - t0) / 1e9, out)
   }
+
+  private def time(body: => Unit): Double = timed(body)._1
 
   private def bestOf(n: Int)(body: => Unit): Double =
     (1 to n).map(_ => time(body)).min
@@ -299,6 +302,65 @@ object BenchScale {
   // (hotKeyDf / maxOverMean), shared with PlanSpec's balance test so the
   // gate and the spec measure the same skew model
   import graft.ops.Skew.{hotKeyDf, maxOverMean}
+
+  /** A probe's reading at sf0.1 and at sf1. */
+  final case class Scaled[A](sf01: A, sf1: A) {
+    /** The growth sf1 / sf0.1, as [[over]] guards it. */
+    def ratio(implicit n: Numeric[A]): Double = over(n.toDouble(sf1), n.toDouble(sf01))
+  }
+
+  /** `num / den`; -1 when `den` is not positive or `num` is a failed
+    * (negative) reading. */
+  def over(num: Double, den: Double): Double =
+    if (den > 0 && num >= 0) num / den else -1.0
+
+  // one reading per multi-figure probe below; [[Results]] gathers them
+  final case class SkewAb(aggUnsalted: Double, aggSalted: Double, joinUnsalted: Double,
+      joinSalted: Double, balUnsalted: Double, balSalted: Double)
+  final case class StateRun(sec: Double, rows: Long, stateRows: Long, stateMemBytes: Long)
+  final case class Percolation(first8: Double, exec8: Double, first512: Double,
+      exec512: Double, unionExec512: Double)
+  final case class Append(build: Double, append: Double, rebuild: Double, serve: Double)
+  final case class Merge(touched: Double, full: Double, touchedBytes: Long, fullBytes: Long)
+  final case class SkewMerge(window: Double, salted: Double, merge: Double,
+      touchedBytes: Long, fullBytes: Long, correct: Boolean, balUnsalted: Double,
+      balSalted: Double)
+  final case class Rotation(rebuild: Double, before: Double, duringMax: Double,
+      after: Double, duringN: Int)
+
+  /** Everything one gate run measured; [[artifact]] turns it into
+    * `BENCH_SCALE.json`. `pipelines` holds one entry per [[Pipelines]]
+    * section, in that order. */
+  final case class Results(runs: Int, queries: Seq[(String, Scaled[Double])],
+      skew: SkewAb, st13Hdfs: StateRun, st13RocksDb: StateRun,
+      ss1Candidates: Scaled[Long], dd16Candidates: Scaled[Long],
+      percolator: Percolation, knnCandidates: Scaled[Long],
+      knnTime: Scaled[Double], append: Scaled[Append],
+      pipelines: Seq[(String, Scaled[Double])], merge: Scaled[Merge],
+      skewMerge: Scaled[SkewMerge], rotation: Scaled[Rotation])
+
+  /** The composed approximate pipelines, each timed end to end at both
+    * scales under its artifact section, flagged at ann12's 47× line (n^1.5
+    * model 31.6 × 1.5 slack): each rides ann12's gated n^1.5 candidate path.
+    *  - dd17 SemDeDup: √n cells, nprobe=2 knnJoin edges (cos >= 0.40,
+    *    top-3) → pointer-jumping CC → keep-set. CC rounds are
+    *    lineage-truncated and shrink with density. DedupAnnSpec pins the
+    *    approximate keep-set's disagreement vs the exhaustive keep-set.
+    *  - pp8 curation: the whole five-stage plan (dd18 mask → approximate
+    *    √n-cell SemDeDup drop → tx34 gate → tx36 sample → tx7 pack). The
+    *    keep-set stage dominates growth; every other stage is token-linear.
+    *    It composes dd17's ONE approximate-config definition
+    *    (DedupQueries.semdedupKeepApprox), so the two gates can never
+    *    measure different configs.
+    *  - dd20 maintained semantic-dedup index (√n cells, nprobe=4): build +
+    *    frozen-quantizer append + erasure rewrite + threshold serve. Its
+    *    driver-oracle config (nprobe=|cells|) is the deliberately-exhaustive
+    *    exactness proof and is NOT what scales. */
+  val Pipelines: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
+    "dd17_semdedup_scale" -> graft.queries.DedupQueries.semdedupKeepApprox _,
+    "pp8_curation_scale" -> graft.queries.TextQueries.curationPipelineApprox _,
+    "dd20_semdedup_index_scale" ->
+      graft.queries.AnnQueries.semanticIndexDedupApprox _)
 
   def main(args: Array[String]): Unit = {
     val spark = GraftSession.local()
@@ -309,6 +371,20 @@ object BenchScale {
 
     System.err.println(s"[scale] building sf1 at $sf1 (idempotent)")
     buildSf1(spark, sf01, sf1)
+
+    /** `probe(dir, tag)` at sf0.1, then at sf1 (`tag` names its scratch),
+      * with one progress line on stderr. */
+    def atBothScales[A](label: String)(probe: (String, String) => A): Scaled[A] = {
+      def show(v: Any): String = v match {
+        case d: Double => "%.3f".format(d)
+        case p: Product => p.productElementNames.zip(p.productIterator)
+          .map { case (k, x) => s"$k=${show(x)}" }.mkString(" ")
+        case other => other.toString
+      }
+      val s = Scaled(probe(sf01, "01"), probe(sf1, "1"))
+      System.err.println(s"[scale] $label sf0.1 ${show(s.sf01)} | sf1 ${show(s.sf1)}")
+      s
+    }
 
     // JIT/codegen warm-up on the smallest SF, like Bench
     // warm on the sibling sf0.001 when the standard layout is present;
@@ -328,16 +404,12 @@ object BenchScale {
         System.err.println(s"[scale] warm $q failed: ${e.getMessage}") }
     }
 
-    val rows = Heavy.map { q =>
-      def run(dir: String): Double =
+    val queries = Heavy.map { q =>
+      q -> atBothScales(q) { (dir, _) =>
         try bestOf(runs)(SparkEntry.queries(q)(spark, dir).count())
         catch { case e: Throwable =>
           System.err.println(s"[scale] $q failed: ${e.getMessage}"); -1.0 }
-      val t01 = run(sf01)
-      val t1 = run(sf1)
-      val ratio = if (t01 > 0 && t1 > 0) t1 / t01 else -1.0
-      System.err.println(f"[scale] $q%-24s sf0.1 $t01%7.2fs  sf1 $t1%7.2fs  ratio $ratio%6.2f")
-      (q, t01, t1, ratio)
+      }
     }
 
     // ---- skew lever A/B on the hot-key synthetic (sf1-sized) ------------
@@ -371,6 +443,8 @@ object BenchScale {
         spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
       }
     hot.unpersist()
+    val skew = SkewAb(aggUnsalted, aggSalted, joinUnsalted, joinSalted,
+      balUnsalted, balSalted)
 
     // ---- streaming state-store provider pair at sf1 (st13: session_window
     // carries the biggest state of the stream family). Same pipeline, both
@@ -384,70 +458,55 @@ object BenchScale {
     // unloaded, so the estimate can read near-zero (observed: 954k state
     // rows reported at a few KB; the same query has also reported ~315 MB
     // when the event caught the map loaded). rows_equal + state_rows +
-    // the RocksDB bound are the stable claims. ---------------------------
-    def st13Run(provider: Option[String]): (Double, Long, Long, Long) = {
-      val cap = new graft.tools.StateCapListener
-      spark.streams.addListener(cap)
-      try {
-        var rows = 0L
-        val sec = time {
-          val raw = Streams.parquetStream(spark, s"$sf1/events.parquet",
-            spark.read.parquet(s"$sf1/events.parquet").schema)
-          val out = Streams.runToParquet(Tables.normalizeTs(raw), st =>
-              st.withWatermark("ts", "30 minutes")
-                .groupBy(col("user_id"),
-                  session_window(col("ts"), "30 minutes"))
-                .agg(count(lit(1)).as("n_events")),
-              statePartitions = Some(8), stateStoreProvider = provider)
-          rows = out.count()
-        }
-        Thread.sleep(2000) // progress events post async; let the bus drain
-        (sec, rows, cap.maxStateRows, cap.maxStateMem)
-      } finally spark.streams.removeListener(cap)
+    // the RocksDB bound are the stable claims. Progress events ride the
+    // listener bus, so QueryMetrics' closing drain has seen them all. ----
+    def st13Run(provider: Option[String]): StateRun = {
+      val ((sec, rows), c) = QueryMetrics.during(spark)(timed {
+        val raw = Streams.parquetStream(spark, s"$sf1/events.parquet",
+          spark.read.parquet(s"$sf1/events.parquet").schema)
+        Streams.runToParquet(Tables.normalizeTs(raw), st =>
+            st.withWatermark("ts", "30 minutes")
+              .groupBy(col("user_id"),
+                session_window(col("ts"), "30 minutes"))
+              .agg(count(lit(1)).as("n_events")),
+            statePartitions = Some(8), stateStoreProvider = provider).count()
+      })
+      StateRun(sec, rows, c.maxStateRows, c.maxStateMemBytes)
     }
-    val (hdfsSec, hdfsRows, hdfsStateRows, hdfsStateMem) = st13Run(None)
-    val (rockSec, rockRows, rockStateRows, rockStateMem) =
-      st13Run(Some(Streams.RocksDbStateStore))
-    System.err.println(f"[scale] st13@sf1 hdfs $hdfsSec%.2fs rocksdb $rockSec%.2fs " +
-      s"rows $hdfsRows/$rockRows stateMem $hdfsStateMem/$rockStateMem")
+    val hdfs = st13Run(None)
+    val rock = st13Run(Some(Streams.RocksDbStateStore))
+    System.err.println(f"[scale] st13@sf1 hdfs ${hdfs.sec}%.2fs rocksdb ${rock.sec}%.2fs " +
+      s"rows ${hdfs.rows}/${rock.rows} stateMem ${hdfs.stateMemBytes}/${rock.stateMemBytes}")
 
-    // ---- ss1 candidate-growth counter: the pre-verify candidate-pair
-    // count at sf0.1 vs sf1 — the mechanism behind ss1's worst-in-gate
-    // time ratio. Counted with one extra count() on the exposed candidate
-    // stage (same shingle prep as the query). -----------------------------
-    def shingled(dir: String) = Tables.t(spark, dir, "documents")
-      .withColumn("__toks", split(col("text"), " "))
-      .withColumn("__sh", graft.dedup.TextDedup.wordShingles(col("__toks"), 5))
-    def ss1Candidates(dir: String): Long =
-      graft.dedup.OverlapJoin.candidates(shingled(dir), "doc_id", "__sh",
-        minOverlap = 10).count()
-    // dd16's candidate stage (same machinery, the containment parameters:
-    // size gate >= 20 distinct shingles, absolute floor T = ceil(90%·20) =
+    // ---- candidate-growth counters: the pre-verify candidate-pair count
+    // at sf0.1 vs sf1, counted with one extra count() on the exposed
+    // candidate stage (same shingle prep as the query; the stage itself
+    // keeps each doc's distinct shingles, so one probe serves both). ss1's
+    // is the mechanism behind its worst-in-gate time ratio. dd16's
+    // candidate stage is the same machinery at the containment parameters
+    // (size gate >= 20 distinct shingles, absolute floor T = ceil(90%·20) =
     // 18) — counted so a time-ratio move (2.8 in the r8 gate → ~11 on the
     // r9 corpus) is attributable: if candidates grew ~linearly with data
     // while absolute counts rose with the corpus's duplicate structure,
-    // the operator is linear-in-candidates, not super-linear in data
-    def dd16Candidates(dir: String): Long = {
-      // the q:dd16 parameters, with T derived by containmentJoin's own
-      // formula — an edit to the query's constants shows up here instead
-      // of silently counting a stage the query no longer computes
+    // the operator is linear-in-candidates, not super-linear in data. -----
+    def candidates(label: String, minSize: Int, minOverlap: Int): Scaled[Long] =
+      atBothScales(label) { (dir, _) =>
+        val sets = Tables.t(spark, dir, "documents")
+          .select(col("doc_id"), array_distinct(graft.dedup.TextDedup
+            .wordShingles(split(col("text"), " "), 5)).as("__set"))
+          .filter(size(col("__set")) >= minSize)
+        graft.dedup.OverlapJoin.candidates(sets, "doc_id", "__set",
+          minOverlap).count()
+      }
+    val ss1Cand = candidates("ss1 candidates", minSize = 0, minOverlap = 10)
+    // the q:dd16 parameters, with T derived by containmentJoin's own
+    // formula — an edit to the query's constants shows up here instead
+    // of silently counting a stage the query no longer computes
+    val dd16Cand = {
       val (minContainPct, minSize) = (90, 20)
-      val t = math.max(1, math.ceil(minContainPct * minSize / 100.0).toInt)
-      val sets = shingled(dir)
-        .select(col("doc_id").as("__cid"),
-          array_distinct(col("__sh")).as("__cset"))
-        .filter(size(col("__cset")) >= minSize)
-      graft.dedup.OverlapJoin.candidates(sets, "__cid", "__cset",
-        minOverlap = t).count()
+      candidates("dd16 candidates", minSize,
+        math.max(1, math.ceil(minContainPct * minSize / 100.0).toInt))
     }
-    val cand01 = ss1Candidates(sf01)
-    val cand1 = ss1Candidates(sf1)
-    val candRatio = if (cand01 > 0) cand1.toDouble / cand01 else -1.0
-    System.err.println(f"[scale] ss1 candidates sf0.1 $cand01 sf1 $cand1 ratio $candRatio%.2f")
-    val dd16c01 = dd16Candidates(sf01)
-    val dd16c1 = dd16Candidates(sf1)
-    val dd16Ratio = if (dd16c01 > 0) dd16c1.toDouble / dd16c01 else -1.0
-    System.err.println(f"[scale] dd16 candidates sf0.1 $dd16c01 sf1 $dd16c1 ratio $dd16Ratio%.2f")
 
     // ---- percolator REGISTRY growth at fixed corpus: 8 -> 512 stored
     // queries over sf0.1 events. 64× queries must cost far less than 64×
@@ -485,15 +544,10 @@ object BenchScale {
     // single-pass default must not lose to the legacy union-of-scans —
     // same per-record predicate work, one scan instead of two
     val (_, percUnion512) = percRun(512, unionShards = true)
-    val percRatio = if (perc8 > 0) perc512 / perc8 else -1.0
-    // per-query cost growth: exec ratio normalized by the 64× registry
-    // growth — 1.0 = perfectly linear in queries; ~2 = constant-factor
-    // codegen-locality degradation; >4 would indicate a genuinely
-    // superlinear (registry-quadratic) regression
-    val percPerQuery = if (percRatio > 0) percRatio / 64.0 else -1.0
+    val perc = Percolation(percFirst8, perc8, percFirst512, perc512,
+      percUnion512)
     System.err.println(
       f"[scale] percolator registry 8q $perc8%.2fs 512q $perc512%.2fs " +
-        f"exec ratio $percRatio%.2f per-query $percPerQuery%.2f " +
         f"union-shards 512q $percUnion512%.2fs " +
         f"(first runs $percFirst8%.2f/$percFirst512%.2f)")
 
@@ -510,31 +564,23 @@ object BenchScale {
     // measurement; the candidate counter pass doubles as the warm-up, so
     // each dir trains exactly twice). Single timed run: the flag line is
     // 47×, far above timing noise.
-    def ann12Pipeline(dir: String): Long = {
+    def ann12Model(dir: String): (DataFrame, DataFrame) = {
       val e = Tables.t(spark, dir, "embeddings")
       val n = e.count()
       val cells = math.max(8, math.ceil(math.sqrt(n.toDouble)).toInt)
-      val cents = graft.similarity.KMeans.train(e, "vec_id", "embedding",
-        k = cells, iters = 2)
-      graft.similarity.Ann.knnJoin(e, cents, k = 3, nprobe = 2).count()
+      (e, graft.similarity.KMeans.train(e, "vec_id", "embedding",
+        k = cells, iters = 2))
     }
-    def ann12Candidates(dir: String): Long = {
-      val e = Tables.t(spark, dir, "embeddings")
-      val n = e.count()
-      val cells = math.max(8, math.ceil(math.sqrt(n.toDouble)).toInt)
-      val cents = graft.similarity.KMeans.train(e, "vec_id", "embedding",
-        k = cells, iters = 2)
+    val knnCand = atBothScales("ann12 candidates") { (dir, _) =>
+      val (e, cents) = ann12Model(dir)
       graft.similarity.Ann.knnJoinCandidates(e, cents, nprobe = 2).count()
     }
-    val knnC01 = ann12Candidates(sf01)
-    val knnC1 = ann12Candidates(sf1)
-    val knnCRatio = if (knnC01 > 0) knnC1.toDouble / knnC01 else -1.0
-    val knnT01 = time(ann12Pipeline(sf01))
-    val knnT1 = time(ann12Pipeline(sf1))
-    val knnTRatio = if (knnT01 > 0) knnT1 / knnT01 else -1.0
-    System.err.println(
-      f"[scale] ann12 candidates sf0.1 $knnC01 sf1 $knnC1 ratio $knnCRatio%.2f " +
-        f"time $knnT01%.2fs/$knnT1%.2fs ratio $knnTRatio%.2f (n^1.5 model: 31.6)")
+    val knnTime = atBothScales("ann12 time") { (dir, _) =>
+      time {
+        val (e, cents) = ann12Model(dir)
+        graft.similarity.Ann.knnJoin(e, cents, k = 3, nprobe = 2).count()
+      }
+    }
 
     // ---- ann14 incremental IVF maintenance: the append path's WHOLE cost
     // (assign batch + drift check + replay guard + O(batch) append commit)
@@ -544,8 +590,7 @@ object BenchScale {
     // growth must stay ~data-linear (the batch is a fixed 1/8 of the
     // corpus). Serve (bounded nprobe over the maintained store) reported
     // for the pruned-read story. --------------------------------------------
-    def ann14Gate(dir: String, tag: String)
-        : (Double, Double, Double, Double) = {
+    val append = atBothScales("ann14 append") { (dir, tag) =>
       // best-of-N by re-running the WHOLE body (an append is once-only
       // per index — the replay guard forbids re-appending the same batch
       // — so each sample builds its own index pair); the first sample
@@ -574,68 +619,17 @@ object BenchScale {
         // best-of-N over two SFs, deferring to JVM exit stacks 4N copies
         graft.util.Scratch.drop(idxRoot)
         graft.util.Scratch.drop(rebuiltRoot)
-        (tBuild, tAppend, tRebuild, tServe)
+        Append(tBuild, tAppend, tRebuild, tServe)
       }
-      (samples.map(_._1).min, samples.map(_._2).min,
-        samples.map(_._3).min, samples.map(_._4).min)
+      Append(samples.map(_.build).min, samples.map(_.append).min,
+        samples.map(_.rebuild).min, samples.map(_.serve).min)
     }
-    val (ivB01, ivA01, ivR01, ivS01) = ann14Gate(sf01, "01")
-    val (ivB1, ivA1, ivR1, ivS1) = ann14Gate(sf1, "1")
-    val ivARatio = if (ivA01 > 0) ivA1 / ivA01 else -1.0
-    System.err.println(
-      f"[scale] ann14 build $ivB01%.2fs/$ivB1%.2fs append $ivA01%.2fs/$ivA1%.2fs " +
-        f"(ratio $ivARatio%.2f) rebuild $ivR01%.2fs/$ivR1%.2fs serve $ivS01%.2fs/$ivS1%.2fs")
 
-    // ---- dd17 composed approximate SemDeDup: the FULL pipeline at the
-    // scale config — √n cells, nprobe=2 knnJoin edges (cos >= 0.40, top-3)
-    // → pointer-jumping CC → keep-set — timed end to end. The edge stage
-    // rides ann12's gated n^1.5 path; CC rounds are lineage-truncated and
-    // shrink with density; flag at the same 47× line as ann12 (n^1.5
-    // model 31.6 × 1.5 slack). DedupAnnSpec pins the approximate
-    // keep-set's disagreement vs the exhaustive keep-set. -----------------
-    // the ONE approximate-config definition (DedupQueries.semdedupKeepApprox)
-    // is what this gate times — pp8_curation_scale composes the same one,
-    // so the two gates can never measure different configs
-    def dd17Pipeline(dir: String): Unit =
-      graft.queries.DedupQueries.semdedupKeepApprox(spark, dir).count(): Unit
-    val sdT01 = time(dd17Pipeline(sf01))
-    val sdT1 = time(dd17Pipeline(sf1))
-    val sdRatio = if (sdT01 > 0) sdT1 / sdT01 else -1.0
-    System.err.println(
-      f"[scale] dd17 approx pipeline sf0.1 $sdT01%.2fs sf1 $sdT1%.2fs " +
-        f"ratio $sdRatio%.2f (n^1.5 model: 31.6)")
-
-    // ---- dd20 maintained semantic-dedup index at the scale config (the
-    // ONE approximate definition, AnnQueries.semanticIndexDedupApprox:
-    // √n cells, nprobe=4): full lifecycle — build + frozen-quantizer
-    // append + erasure rewrite + threshold serve — end to end. Candidate
-    // work rides the same n^1.5 model as dd17/ann12; the same 47× flag
-    // line applies. The driver-oracle config (nprobe=|cells|) is the
-    // deliberately-exhaustive exactness proof and is NOT what scales. ------
-    def dd20Pipeline(dir: String): Unit =
-      graft.queries.AnnQueries.semanticIndexDedupApprox(spark, dir)
-        .count(): Unit
-    val siT01 = time(dd20Pipeline(sf01))
-    val siT1 = time(dd20Pipeline(sf1))
-    val siRatio = if (siT01 > 0) siT1 / siT01 else -1.0
-    System.err.println(
-      f"[scale] dd20 approx index lifecycle sf0.1 $siT01%.2fs sf1 $siT1%.2fs " +
-        f"ratio $siRatio%.2f (n^1.5 model: 31.6)")
-
-    // ---- pp8 COMPOSED curation pipeline at the scale config: the whole
-    // five-stage plan (dd18 mask → approximate √n-cell SemDeDup drop →
-    // tx34 gate → tx36 sample → tx7 pack) timed end to end. The keep-set
-    // stage rides ann12's gated n^1.5 path and dominates growth; every
-    // other stage is token-linear — so the same 47× flag line (n^1.5
-    // model 31.6 × 1.5 slack) applies to the composition. ------------------
-    val ppT01 = time(
-      graft.queries.TextQueries.curationPipelineApprox(spark, sf01).count())
-    val ppT1 = time(
-      graft.queries.TextQueries.curationPipelineApprox(spark, sf1).count())
-    val ppRatio = if (ppT01 > 0) ppT1 / ppT01 else -1.0
-    System.err.println(
-      f"[scale] pp8 approx curation sf0.1 $ppT01%.2fs sf1 $ppT1%.2fs " +
-        f"ratio $ppRatio%.2f (n^1.5 model: 31.6)")
+    // ---- the composed approximate pipelines ([[Pipelines]]) ---------------
+    val pipelines = Pipelines.map { case (section, pipeline) =>
+      section -> atBothScales(section)((dir, _) =>
+        time(pipeline(spark, dir).count()))
+    }
 
     // ---- u20 partitioned-merge A/B: a delta CONFINED to 2 of 32
     // partitions merged via the touched-partition path vs the SAME delta
@@ -646,79 +640,69 @@ object BenchScale {
     // so the LOAD-BEARING measurement is write VOLUME — the byte delta of
     // one instrumented merge on a no-reclaim store, where touched/full
     // must be ≈ the partition fraction (2/32) independent of timer noise.
-    def mergeBytes(dir: String): Long = {
-      import scala.jdk.CollectionConverters._
-      val w = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-      try w.iterator().asScala
-        .filter(java.nio.file.Files.isRegularFile(_))
-        .map(java.nio.file.Files.size).sum
-      finally w.close()
+    import graft.ops.MergeInto
+    import graft.store.PartitionedStore
+    def orders(dir: String) = spark.read.parquet(s"$dir/orders.parquet")
+      .select(col("o_orderkey"), col("o_totalprice"), col("o_orderstatus"))
+    def store(name: String, orders: DataFrame, // 2: the store's own default
+        retainVersions: Int = 2): PartitionedStore = {
+      val st = new PartitionedStore(spark, graft.util.Scratch.dir(name),
+        Seq("o_orderkey"), 32, retainVersions = retainVersions)
+      st.init(orders)
+      st
     }
-    def mergeGate(dir: String, tag: String): (Double, Double, Long, Long) = {
-      import graft.ops.MergeInto
-      import graft.store.PartitionedStore
-      val orders = spark.read.parquet(s"$dir/orders.parquet")
-        .select(col("o_orderkey"), col("o_totalprice"), col("o_orderstatus"))
-      def freshStore(sfx: String) = {
-        val st = new PartitionedStore(spark,
-          graft.util.Scratch.dir(s"graft_sc_u20_${tag}_$sfx"),
-          Seq("o_orderkey"), 32)
-        st.init(orders)
-        st
+    // the delta's price lands on match and on insert
+    val price = Map("o_totalprice" -> col("src_price"))
+    def touchedMerge(st: PartitionedStore, delta: DataFrame): Unit = {
+      MergeInto.mergePartitioned(st, delta, matchedUpdate = price,
+        notMatchedInsert = Some(price))
+      ()
+    }
+    def fullMerge(st: PartitionedStore, delta: DataFrame): Unit =
+      st.refresh(0 until 32, MergeInto.merge(st.read(), delta,
+        Seq("o_orderkey"), matchedUpdate = price,
+        notMatchedInsert = Some(price)))
+    // bytes `body` adds under a no-reclaim store's root (retainVersions
+    // high → nothing swept → root growth = bytes written)
+    def written(st: PartitionedStore)(body: => Unit): Long = {
+      def bytes(): Long = {
+        import scala.jdk.CollectionConverters._
+        val w = java.nio.file.Files.walk(java.nio.file.Paths.get(st.root))
+        try w.iterator().asScala
+          .filter(java.nio.file.Files.isRegularFile(_))
+          .map(java.nio.file.Files.size).sum
+        finally w.close()
       }
-      val st1 = freshStore("t")
-      val delta = orders.filter(col("o_orderkey") % 7 === 0)
+      val b0 = bytes()
+      body
+      bytes() - b0
+    }
+    // one whole-store rewrite's write volume: the byte ratios' denominator
+    def fullRewriteBytes(name: String, orders: DataFrame,
+        delta: DataFrame): Long = {
+      val st = store(name, orders, retainVersions = 1000)
+      try written(st)(fullMerge(st, delta))
+      finally graft.util.Scratch.drop(st.root)
+    }
+    val merge = atBothScales("u20 merge") { (dir, tag) =>
+      val o = orders(dir)
+      val st1 = store(s"graft_sc_u20_${tag}_t", o)
+      val delta = o.filter(col("o_orderkey") % 7 === 0)
         .select(col("o_orderkey"),
           (col("o_totalprice") + 1000).as("src_price"))
         .filter(st1.partitionId.isInCollection(Set(0, 1)))
-      def clausesMerge(st: PartitionedStore): Unit = {
-        MergeInto.mergePartitioned(st, delta,
-          matchedUpdate = Map("o_totalprice" -> col("src_price")),
-          notMatchedInsert = Some(Map("o_totalprice" -> col("src_price"))))
-        ()
-      }
-      clausesMerge(st1) // warm (codegen + first-touch)
-      val tTouched = bestOf(runs)(clausesMerge(st1))
-      val st2 = freshStore("f")
-      def fullMerge(): Unit = st2.refresh((0 until 32),
-        MergeInto.merge(st2.read(), delta, Seq("o_orderkey"),
-          matchedUpdate = Map("o_totalprice" -> col("src_price")),
-          notMatchedInsert = Some(Map("o_totalprice" -> col("src_price")))))
-      fullMerge() // warm
-      val tFull = bestOf(runs)(fullMerge())
+      touchedMerge(st1, delta) // warm (codegen + first-touch)
+      val tTouched = bestOf(runs)(touchedMerge(st1, delta))
+      val st2 = store(s"graft_sc_u20_${tag}_f", o)
+      fullMerge(st2, delta) // warm
+      val tFull = bestOf(runs)(fullMerge(st2, delta))
       // write VOLUME: one instrumented merge each on no-reclaim stores
-      // (retainVersions high → nothing swept → root growth = bytes written)
-      val stB1 = new PartitionedStore(spark,
-        graft.util.Scratch.dir(s"graft_sc_u20_${tag}_bt"),
-        Seq("o_orderkey"), 32, retainVersions = 1000)
-      stB1.init(orders)
-      val b0 = mergeBytes(stB1.root)
-      MergeInto.mergePartitioned(stB1, delta,
-        matchedUpdate = Map("o_totalprice" -> col("src_price")),
-        notMatchedInsert = Some(Map("o_totalprice" -> col("src_price"))))
-      val touchedBytes = mergeBytes(stB1.root) - b0
-      val stB2 = new PartitionedStore(spark,
-        graft.util.Scratch.dir(s"graft_sc_u20_${tag}_bf"),
-        Seq("o_orderkey"), 32, retainVersions = 1000)
-      stB2.init(orders)
-      val b1 = mergeBytes(stB2.root)
-      stB2.refresh((0 until 32),
-        MergeInto.merge(stB2.read(), delta, Seq("o_orderkey"),
-          matchedUpdate = Map("o_totalprice" -> col("src_price")),
-          notMatchedInsert = Some(Map("o_totalprice" -> col("src_price")))))
-      val fullBytes = mergeBytes(stB2.root) - b1
-      Seq(st1, st2, stB1, stB2).foreach(s => graft.util.Scratch.drop(s.root))
-      (tTouched, tFull, touchedBytes, fullBytes)
+      val stB1 = store(s"graft_sc_u20_${tag}_bt", o, retainVersions = 1000)
+      val touchedBytes = written(stB1)(touchedMerge(stB1, delta))
+      val fullBytes = fullRewriteBytes(s"graft_sc_u20_${tag}_bf", o, delta)
+      Seq(st1, st2, stB1).foreach(s => graft.util.Scratch.drop(s.root))
+      Merge(tTouched, tFull, touchedBytes, fullBytes)
     }
-    val (mgT01, mgF01, mgB01, mgBF01) = mergeGate(sf01, "01")
-    val (mgT1, mgF1, mgB1, mgBF1) = mergeGate(sf1, "1")
-    val mgRatio1 = if (mgT1 > 0) mgF1 / mgT1 else -1.0
-    val mgByteRatio1 = if (mgB1 > 0) mgBF1.toDouble / mgB1 else -1.0
-    System.err.println(
-      f"[scale] u20 merge touched $mgT01%.2fs/$mgT1%.2fs " +
-        f"full-rewrite $mgF01%.2fs/$mgF1%.2fs " +
-        f"(sf1 full/touched time $mgRatio1%.2f, bytes $mgByteRatio1%.2f; " +
-        "2 of 32 partitions touched)")
 
     // ---- u20 SKEWED-key merge: a real upsert stream has hot keys — here
     // ONE key carries 50% of the batch (the rest spread over a key pool
@@ -731,24 +715,18 @@ object BenchScale {
     // (2) merge write bytes still track the TOUCHED partitions (a hot key
     // CONCENTRATES the delta, it must not widen the write); (3) the
     // order-guarded merge lands exactly the hot key's latest row. --------
-    def mergeSkewGate(dir: String, tag: String):
-        (Double, Double, Double, Long, Long, Boolean, Double, Double) = {
-      import graft.ops.{MergeInto, Skew}
-      import graft.store.PartitionedStore
+    val skewMerge = atBothScales("u20 skew merge") { (dir, tag) =>
+      import graft.ops.Skew
       import org.apache.spark.sql.expressions.Window
-      val orders = spark.read.parquet(s"$dir/orders.parquet")
-        .select(col("o_orderkey"), col("o_totalprice"), col("o_orderstatus"))
-      val st = new PartitionedStore(spark,
-        graft.util.Scratch.dir(s"graft_sc_u20sk_$tag"), Seq("o_orderkey"), 32,
-        retainVersions = 1000)
-      st.init(orders)
+      val o = orders(dir)
+      val st = store(s"graft_sc_u20sk_$tag", o, retainVersions = 1000)
       // key pool confined to partitions {0,1}; the hot key is the least
-      val pool = orders.filter(st.partitionId.isInCollection(Set(0, 1)))
+      val pool = o.filter(st.partitionId.isInCollection(Set(0, 1)))
         .select("o_orderkey").limit(2000).collect()
         .map(_.getLong(0)).sorted
       val hot = pool.head
       val cold = pool.tail.toSeq
-      val nB = orders.count() // batch sized like the store, scales with SF
+      val nB = o.count() // batch sized like the store, scales with SF
       val batch = spark.range(nB).select(
         when(col("id") % 2 === 0, lit(hot)).otherwise(element_at(
           typedLit(cold), (pmod(col("id"), lit(cold.size.toLong)) + 1)
@@ -767,7 +745,7 @@ object BenchScale {
         Skew.saltedLatestBy(batch, Seq("o_orderkey"), "ord", Seq("src_price"))
       val tWin = bestOf(runs)(winReduce().count())
       val tSalt = bestOf(runs)(saltReduce().count())
-      def collected(df: org.apache.spark.sql.DataFrame) =
+      def collected(df: DataFrame) =
         df.collect().map(r => (r.getLong(0), r.getDouble(1), r.getLong(2))).toSet
       val winRows = collected(winReduce())
       val saltRows = collected(saltReduce())
@@ -781,40 +759,18 @@ object BenchScale {
       // (2)+(3) the merge itself: bytes instrumented on the no-reclaim
       // store, touched derived from the 2001-key delta = 2 partitions
       val delta = saltReduce().select(col("o_orderkey"), col("src_price"))
-      val b0 = mergeBytes(st.root)
-      val tMerge = time(MergeInto.mergePartitioned(st, delta,
-        matchedUpdate = Map("o_totalprice" -> col("src_price")),
-        notMatchedInsert = Some(Map("o_totalprice" -> col("src_price")))))
-      val touchedBytes = mergeBytes(st.root) - b0
+      var tMerge = 0.0
+      val touchedBytes = written(st) { tMerge = time(touchedMerge(st, delta)) }
       val hotRow = st.read().filter(col("o_orderkey") === hot)
         .select("o_totalprice").collect()
       val mergeOk = hotRow.length == 1 &&
         math.abs(hotRow(0).getDouble(0) - hotExpected._2) < 1e-9
       // full-rewrite bytes for the fraction denominator
-      val stF = new PartitionedStore(spark,
-        graft.util.Scratch.dir(s"graft_sc_u20sk_${tag}_f"),
-        Seq("o_orderkey"), 32, retainVersions = 1000)
-      stF.init(orders)
-      val b1 = mergeBytes(stF.root)
-      stF.refresh(0 until 32,
-        MergeInto.merge(stF.read(), delta, Seq("o_orderkey"),
-          matchedUpdate = Map("o_totalprice" -> col("src_price")),
-          notMatchedInsert = Some(Map("o_totalprice" -> col("src_price")))))
-      val fullBytes = mergeBytes(stF.root) - b1
-      Seq(st, stF).foreach(s => graft.util.Scratch.drop(s.root))
-      (tWin, tSalt, tMerge, touchedBytes, fullBytes,
+      val fullBytes = fullRewriteBytes(s"graft_sc_u20sk_${tag}_f", o, delta)
+      graft.util.Scratch.drop(st.root)
+      SkewMerge(tWin, tSalt, tMerge, touchedBytes, fullBytes,
         reduceOk && mergeOk, balUnsalted, balSalted)
     }
-    val (skW01, skS01, skM01, skB01, skBF01, skOk01, skBu01, skBs01) =
-      mergeSkewGate(sf01, "01")
-    val (skW1, skS1, skM1, skB1, skBF1, skOk1, skBu1, skBs1) =
-      mergeSkewGate(sf1, "1")
-    val skByteRatio1 = if (skB1 > 0) skBF1.toDouble / skB1 else -1.0
-    System.err.println(
-      f"[scale] u20 skew reduce win $skW01%.2fs/$skW1%.2fs salted " +
-        f"$skS01%.2fs/$skS1%.2fs merge $skM01%.2fs/$skM1%.2fs " +
-        f"(sf1 bytes full/touched $skByteRatio1%.2f, balance " +
-        f"$skBu1%.1f→$skBs1%.1f, correct ${skOk01 && skOk1})")
 
     // ---- rotate_scale: rebuild-WHILE-serving — the "no blackout" claim
     // as a measurement, not just a race spec. Build the rotating index,
@@ -824,8 +780,7 @@ object BenchScale {
     // during-rebuild latency is recorded against the solo baseline
     // (CPU contention on one box makes some slowdown legitimate; a
     // BLACKOUT would show as during ≈ the whole rebuild wall time). ------
-    def rotateGate(dir: String, tag: String):
-        (Double, Double, Double, Double, Int) = {
+    val rotation = atBothScales("rotate") { (dir, tag) =>
       import graft.similarity.{KMeans, RawCodec, RotatingIvf}
       val e = spark.read.parquet(s"$dir/embeddings.parquet")
       val rot = new RotatingIvf(spark,
@@ -848,130 +803,152 @@ object BenchScale {
       rebuilder.join()
       val after = (1 to 3).map(_ => serveOnce()).min
       graft.util.Scratch.drop(rot.root)
-      (rebuildSec, before,
+      Rotation(rebuildSec, before,
         if (during.isEmpty) -1.0 else during.max, after, during.size)
     }
-    val (roR01, roB01, roD01, roA01, roN01) = rotateGate(sf01, "01")
-    val (roR1, roB1, roD1, roA1, roN1) = rotateGate(sf1, "1")
-    val roRatio = if (roR01 > 0) roR1 / roR01 else -1.0
-    System.err.println(
-      f"[scale] rotate rebuild $roR01%.2fs/$roR1%.2fs (ratio $roRatio%.2f) " +
-        f"sf1 serve before $roB1%.2fs during(max of $roN1) $roD1%.2fs " +
-        f"after $roA1%.2fs")
 
-    def f(d: Double): String = "%.3f".format(d)
-    // marginal-cost gate: subtract the fixed per-query floor before the
-    // quotient so amortization can't mask a super-linear operator
-    val MarginalFlag = 12.0 // 10× data + 20% slack
-    val FloorEps = 0.05     // s; denominator guard for the floor definer
-    val MaterialSec = 1.0   // s; sub-second sf1 marginals are noise
-    val okTimes = rows.filter { case (_, t01, t1, _) => t01 > 0 && t1 > 0 }
-    val floor = if (okTimes.isEmpty) 0.0
-      else okTimes.map(_._2).min min okTimes.map(_._3).min
-    val queryJson = rows.map { case (q, t01, t1, r) =>
-      val m1 = t1 - floor
-      val marginal = if (t01 > 0 && t1 > 0)
-        m1 / math.max(t01 - floor, FloorEps) else -1.0
-      val flagged = marginal > MarginalFlag && m1 > MaterialSec
-      s""""$q":{"sf01":${f(t01)},"sf1":${f(t1)},"ratio":${f(r)},""" +
-        s""""marginal_ratio":${f(marginal)},"superlinear":$flagged}"""
-    }.mkString("{", ",", "}")
-    val skewJson =
-      s"""{"agg_unsalted_sec":${f(aggUnsalted)},"agg_salted_sec":${f(aggSalted)},""" +
-      s""""join_unsalted_sec":${f(joinUnsalted)},"join_salted_sec":${f(joinSalted)},""" +
-      s""""balance_max_over_mean_unsalted":${f(balUnsalted)},""" +
-      s""""balance_max_over_mean_salted":${f(balSalted)}}"""
-    val stateJson =
-      s"""{"hdfs":{"sec":${f(hdfsSec)},"rows":$hdfsRows,""" +
-      s""""state_rows":$hdfsStateRows,"state_mem_bytes":$hdfsStateMem},""" +
-      s""""rocksdb":{"sec":${f(rockSec)},"rows":$rockRows,""" +
-      s""""state_rows":$rockStateRows,"state_mem_bytes":$rockStateMem},""" +
-      s""""rows_equal":${hdfsRows == rockRows}}"""
-    val candJson =
-      s"""{"sf01":$cand01,"sf1":$cand1,"ratio":${f(candRatio)},""" +
-      s""""superlinear":${candRatio > 15.0}}"""
-    val dd16Json =
-      s"""{"sf01":$dd16c01,"sf1":$dd16c1,"ratio":${f(dd16Ratio)},""" +
-      s""""superlinear":${dd16Ratio > 15.0}}"""
-    val percJson =
-      s"""{"n8_exec_sec":${f(perc8)},"n512_exec_sec":${f(perc512)},""" +
-      s""""exec_cost_ratio":${f(percRatio)},""" +
-      s""""per_query_cost_ratio":${f(percPerQuery)},""" +
-      s""""n8_first_run_sec":${f(percFirst8)},"n512_first_run_sec":${f(percFirst512)},""" +
-      s""""n512_union_shards_exec_sec":${f(percUnion512)},""" +
-      s""""single_pass_slower_than_union":${perc512 > percUnion512 * 1.5},""" +
-      s""""registry_cost_superlinear":${percPerQuery > 4.0}}"""
-    val knnJson =
-      s"""{"cand_sf01":$knnC01,"cand_sf1":$knnC1,"cand_ratio":${f(knnCRatio)},""" +
-      s""""time_sf01":${f(knnT01)},"time_sf1":${f(knnT1)},"time_ratio":${f(knnTRatio)},""" +
-      s""""expected_model_ratio":31.6,""" +
-      s""""superlinear":${knnCRatio > 47.0 || knnTRatio > 47.0}}"""
-    val ivJson =
-      s"""{"build_sf01":${f(ivB01)},"build_sf1":${f(ivB1)},""" +
-      s""""append_sf01":${f(ivA01)},"append_sf1":${f(ivA1)},""" +
-      s""""append_ratio":${f(ivARatio)},""" +
-      s""""rebuild_sf01":${f(ivR01)},"rebuild_sf1":${f(ivR1)},""" +
-      s""""serve_sf01":${f(ivS01)},"serve_sf1":${f(ivS1)},""" +
-      s""""append_slower_than_rebuild":${ivA1 > ivR1},""" +
-      s""""append_superlinear":${ivARatio > 20.0}}"""
-    val sdJson =
-      s"""{"time_sf01":${f(sdT01)},"time_sf1":${f(sdT1)},""" +
-      s""""time_ratio":${f(sdRatio)},"expected_model_ratio":31.6,""" +
-      s""""superlinear":${sdRatio > 47.0}}"""
-    val ppJson =
-      s"""{"time_sf01":${f(ppT01)},"time_sf1":${f(ppT1)},""" +
-      s""""time_ratio":${f(ppRatio)},"expected_model_ratio":31.6,""" +
-      s""""superlinear":${ppRatio > 47.0}}"""
-    val siJson =
-      s"""{"time_sf01":${f(siT01)},"time_sf1":${f(siT1)},""" +
-      s""""time_ratio":${f(siRatio)},"expected_model_ratio":31.6,""" +
-      s""""superlinear":${siRatio > 47.0}}"""
-    val mgJson =
-      s"""{"touched_sf01":${f(mgT01)},"touched_sf1":${f(mgT1)},""" +
-      s""""full_rewrite_sf01":${f(mgF01)},"full_rewrite_sf1":${f(mgF1)},""" +
-      s""""touched_partitions":2,"n_partitions":32,""" +
-      s""""sf1_full_over_touched":${f(mgRatio1)},""" +
-      s""""touched_write_bytes_sf01":$mgB01,"full_write_bytes_sf01":$mgBF01,""" +
-      s""""touched_write_bytes_sf1":$mgB1,"full_write_bytes_sf1":$mgBF1,""" +
-      s""""sf1_full_over_touched_bytes":${f(mgByteRatio1)},""" +
-      s""""touched_not_cheaper":${mgT1 >= mgF1},""" +
-      s""""bytes_not_partition_fraction":${mgByteRatio1 > 0 && mgByteRatio1 < 4.0}}"""
-    val skJson =
-      s"""{"hot_fraction":0.5,"touched_partitions":2,"n_partitions":32,""" +
-      s""""reduce_window_sf01":${f(skW01)},"reduce_window_sf1":${f(skW1)},""" +
-      s""""reduce_salted_sf01":${f(skS01)},"reduce_salted_sf1":${f(skS1)},""" +
-      s""""merge_sf01":${f(skM01)},"merge_sf1":${f(skM1)},""" +
-      s""""touched_write_bytes_sf1":$skB1,"full_write_bytes_sf1":$skBF1,""" +
-      s""""sf1_full_over_touched_bytes":${f(skByteRatio1)},""" +
-      s""""balance_max_over_mean_unsalted_sf1":${f(skBu1)},""" +
-      s""""balance_max_over_mean_salted_sf1":${f(skBs1)},""" +
-      s""""reduce_or_merge_wrong":${!(skOk01 && skOk1)},""" +
-      s""""bytes_not_partition_fraction":${skByteRatio1 > 0 && skByteRatio1 < 4.0}}"""
-    val roJson =
-      s"""{"rebuild_sf01":${f(roR01)},"rebuild_sf1":${f(roR1)},""" +
-      s""""rebuild_ratio":${f(roRatio)},""" +
-      s""""serve_before_sf01":${f(roB01)},"serve_during_max_sf01":${f(roD01)},""" +
-      s""""serve_after_sf01":${f(roA01)},"serve_during_n_sf01":$roN01,""" +
-      s""""serve_before_sf1":${f(roB1)},"serve_during_max_sf1":${f(roD1)},""" +
-      s""""serve_after_sf1":${f(roA1)},"serve_during_n_sf1":$roN1,""" +
-      // a true blackout = serves queue behind the whole rebuild: the worst
-      // during-rebuild serve would approach the rebuild's own wall time
-      s""""blackout":${roD1 > 0 && roR1 > 2.0 && roD1 > roR1 * 0.8},""" +
-      s""""rebuild_superlinear":${roRatio > 20.0}}"""
-    val json =
-      s"""{"metric":"scale_gate","copies":$Copies,"runs":$runs,""" +
-      s""""marginal_floor_sec":${f(floor)},"marginal_flag_threshold":$MarginalFlag,""" +
-      s""""queries":$queryJson,"skew":$skewJson,""" +
-      s""""st13_state_store_sf1":$stateJson,"ss1_candidates":$candJson,""" +
-      s""""dd16_candidates":$dd16Json,"percolator_registry_growth":$percJson,""" +
-      s""""ann12_knn_scale":$knnJson,"ann14_append_scale":$ivJson,""" +
-      s""""dd17_semdedup_scale":$sdJson,"pp8_curation_scale":$ppJson,""" +
-      s""""dd20_semdedup_index_scale":$siJson,""" +
-      s""""u20_merge_scale":$mgJson,"u20_merge_skew":$skJson,""" +
-      s""""rotate_scale":$roJson}"""
+    val json = render(artifact(Results(runs, queries, skew, hdfs, rock,
+      ss1Cand, dd16Cand, perc, knnCand, knnTime, append, pipelines, merge,
+      skewMerge, rotation)))
     println(json)
     java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_SCALE.json"),
       (json + "\n").getBytes("UTF-8"))
     spark.stop()
+  }
+
+  /** The artifact's one writer. A value is an object (fields in order) or
+    * a leaf already in its JSON text: a measured figure to 3 decimals
+    * ([[dec]]), or a count, flag or fixed constant as written ([[plain]]). */
+  sealed trait Json
+  final case class Obj(fields: Seq[(String, Json)]) extends Json
+  final case class Leaf(text: String) extends Json
+  def obj(fields: (String, Json)*): Json = Obj(fields)
+  def dec(d: Double): Json = Leaf("%.3f".format(d))
+  def plain(v: Any): Json = Leaf(v.toString)
+  def render(j: Json): String = j match {
+    case Leaf(text) => text
+    case Obj(fields) => fields
+      .map { case (k, v) => s""""$k":${render(v)}""" }.mkString("{", ",", "}")
+  }
+
+  // marginal-cost gate: subtract the fixed per-query floor before the
+  // quotient so amortization can't mask a super-linear operator
+  val MarginalFlag = 12.0 // 10× data + 20% slack
+  val FloorEps = 0.05     // s; denominator guard for the floor definer
+  val MaterialSec = 1.0   // s; sub-second sf1 marginals are noise
+
+  /** `BENCH_SCALE.json`: the readings and every flag the gate derives from
+    * them. */
+  def artifact(r: Results): Json = {
+    val okTimes = r.queries.map(_._2).filter(t => t.sf01 > 0 && t.sf1 > 0)
+    val floor = if (okTimes.isEmpty) 0.0
+      else okTimes.map(_.sf01).min min okTimes.map(_.sf1).min
+    val queries = r.queries.map { case (q, t) =>
+      val m1 = t.sf1 - floor
+      val marginal = if (t.sf01 > 0 && t.sf1 > 0)
+        m1 / math.max(t.sf01 - floor, FloorEps) else -1.0
+      q -> obj("sf01" -> dec(t.sf01), "sf1" -> dec(t.sf1),
+        "ratio" -> dec(t.ratio), "marginal_ratio" -> dec(marginal),
+        "superlinear" -> plain(marginal > MarginalFlag && m1 > MaterialSec))
+    }
+    def stateRun(s: StateRun) = obj("sec" -> dec(s.sec), "rows" -> plain(s.rows),
+      "state_rows" -> plain(s.stateRows), "state_mem_bytes" -> plain(s.stateMemBytes))
+    def candidates(c: Scaled[Long]) = obj("sf01" -> plain(c.sf01),
+      "sf1" -> plain(c.sf1), "ratio" -> dec(c.ratio),
+      "superlinear" -> plain(c.ratio > 15.0))
+    val p = r.percolator
+    val percRatio = over(p.exec512, p.exec8)
+    // per-query cost growth: exec ratio normalized by the 64× registry
+    // growth — 1.0 = perfectly linear in queries; ~2 = constant-factor
+    // codegen-locality degradation; >4 would indicate a genuinely
+    // superlinear (registry-quadratic) regression
+    val percPerQuery = if (percRatio > 0) percRatio / 64.0 else -1.0
+    val (kc, kt) = (r.knnCandidates, r.knnTime)
+    val (a01, a1) = (r.append.sf01, r.append.sf1)
+    val appendRatio = over(a1.append, a01.append)
+    val (mg01, mg1) = (r.merge.sf01, r.merge.sf1)
+    val mgByteRatio1 = over(mg1.fullBytes.toDouble, mg1.touchedBytes.toDouble)
+    val (sk01, sk1) = (r.skewMerge.sf01, r.skewMerge.sf1)
+    val skByteRatio1 = over(sk1.fullBytes.toDouble, sk1.touchedBytes.toDouble)
+    val (ro01, ro1) = (r.rotation.sf01, r.rotation.sf1)
+    val roRatio = over(ro1.rebuild, ro01.rebuild)
+    Obj(Seq(
+      "metric" -> plain("\"scale_gate\""), "copies" -> plain(Copies),
+      "runs" -> plain(r.runs), "marginal_floor_sec" -> dec(floor),
+      "marginal_flag_threshold" -> plain(MarginalFlag), "queries" -> Obj(queries),
+      "skew" -> obj("agg_unsalted_sec" -> dec(r.skew.aggUnsalted),
+        "agg_salted_sec" -> dec(r.skew.aggSalted),
+        "join_unsalted_sec" -> dec(r.skew.joinUnsalted),
+        "join_salted_sec" -> dec(r.skew.joinSalted),
+        "balance_max_over_mean_unsalted" -> dec(r.skew.balUnsalted),
+        "balance_max_over_mean_salted" -> dec(r.skew.balSalted)),
+      "st13_state_store_sf1" -> obj("hdfs" -> stateRun(r.st13Hdfs),
+        "rocksdb" -> stateRun(r.st13RocksDb),
+        "rows_equal" -> plain(r.st13Hdfs.rows == r.st13RocksDb.rows)),
+      "ss1_candidates" -> candidates(r.ss1Candidates),
+      "dd16_candidates" -> candidates(r.dd16Candidates),
+      "percolator_registry_growth" -> obj("n8_exec_sec" -> dec(p.exec8),
+        "n512_exec_sec" -> dec(p.exec512), "exec_cost_ratio" -> dec(percRatio),
+        "per_query_cost_ratio" -> dec(percPerQuery),
+        "n8_first_run_sec" -> dec(p.first8), "n512_first_run_sec" -> dec(p.first512),
+        "n512_union_shards_exec_sec" -> dec(p.unionExec512),
+        "single_pass_slower_than_union" -> plain(p.exec512 > p.unionExec512 * 1.5),
+        "registry_cost_superlinear" -> plain(percPerQuery > 4.0)),
+      "ann12_knn_scale" -> obj("cand_sf01" -> plain(kc.sf01),
+        "cand_sf1" -> plain(kc.sf1), "cand_ratio" -> dec(kc.ratio),
+        "time_sf01" -> dec(kt.sf01), "time_sf1" -> dec(kt.sf1),
+        "time_ratio" -> dec(kt.ratio), "expected_model_ratio" -> plain(31.6),
+        "superlinear" -> plain(kc.ratio > 47.0 || kt.ratio > 47.0)),
+      "ann14_append_scale" -> obj(
+        "build_sf01" -> dec(a01.build), "build_sf1" -> dec(a1.build),
+        "append_sf01" -> dec(a01.append), "append_sf1" -> dec(a1.append),
+        "append_ratio" -> dec(appendRatio),
+        "rebuild_sf01" -> dec(a01.rebuild), "rebuild_sf1" -> dec(a1.rebuild),
+        "serve_sf01" -> dec(a01.serve), "serve_sf1" -> dec(a1.serve),
+        "append_slower_than_rebuild" -> plain(a1.append > a1.rebuild),
+        "append_superlinear" -> plain(appendRatio > 20.0))) ++
+      r.pipelines.map { case (section, t) =>
+        section -> obj("time_sf01" -> dec(t.sf01), "time_sf1" -> dec(t.sf1),
+          "time_ratio" -> dec(t.ratio), "expected_model_ratio" -> plain(31.6),
+          "superlinear" -> plain(t.ratio > 47.0))
+      } ++ Seq(
+      "u20_merge_scale" -> obj(
+        "touched_sf01" -> dec(mg01.touched), "touched_sf1" -> dec(mg1.touched),
+        "full_rewrite_sf01" -> dec(mg01.full), "full_rewrite_sf1" -> dec(mg1.full),
+        "touched_partitions" -> plain(2), "n_partitions" -> plain(32),
+        "sf1_full_over_touched" -> dec(over(mg1.full, mg1.touched)),
+        "touched_write_bytes_sf01" -> plain(mg01.touchedBytes),
+        "full_write_bytes_sf01" -> plain(mg01.fullBytes),
+        "touched_write_bytes_sf1" -> plain(mg1.touchedBytes),
+        "full_write_bytes_sf1" -> plain(mg1.fullBytes),
+        "sf1_full_over_touched_bytes" -> dec(mgByteRatio1),
+        "touched_not_cheaper" -> plain(mg1.touched >= mg1.full),
+        "bytes_not_partition_fraction" -> plain(mgByteRatio1 > 0 && mgByteRatio1 < 4.0)),
+      "u20_merge_skew" -> obj("hot_fraction" -> plain(0.5),
+        "touched_partitions" -> plain(2), "n_partitions" -> plain(32),
+        "reduce_window_sf01" -> dec(sk01.window), "reduce_window_sf1" -> dec(sk1.window),
+        "reduce_salted_sf01" -> dec(sk01.salted), "reduce_salted_sf1" -> dec(sk1.salted),
+        "merge_sf01" -> dec(sk01.merge), "merge_sf1" -> dec(sk1.merge),
+        "touched_write_bytes_sf1" -> plain(sk1.touchedBytes),
+        "full_write_bytes_sf1" -> plain(sk1.fullBytes),
+        "sf1_full_over_touched_bytes" -> dec(skByteRatio1),
+        "balance_max_over_mean_unsalted_sf1" -> dec(sk1.balUnsalted),
+        "balance_max_over_mean_salted_sf1" -> dec(sk1.balSalted),
+        "reduce_or_merge_wrong" -> plain(!(sk01.correct && sk1.correct)),
+        "bytes_not_partition_fraction" -> plain(skByteRatio1 > 0 && skByteRatio1 < 4.0)),
+      "rotate_scale" -> obj(
+        "rebuild_sf01" -> dec(ro01.rebuild), "rebuild_sf1" -> dec(ro1.rebuild),
+        "rebuild_ratio" -> dec(roRatio),
+        "serve_before_sf01" -> dec(ro01.before),
+        "serve_during_max_sf01" -> dec(ro01.duringMax),
+        "serve_after_sf01" -> dec(ro01.after), "serve_during_n_sf01" -> plain(ro01.duringN),
+        "serve_before_sf1" -> dec(ro1.before),
+        "serve_during_max_sf1" -> dec(ro1.duringMax),
+        "serve_after_sf1" -> dec(ro1.after), "serve_during_n_sf1" -> plain(ro1.duringN),
+        // a true blackout = serves queue behind the whole rebuild: the worst
+        // during-rebuild serve would approach the rebuild's own wall time
+        "blackout" -> plain(ro1.duringMax > 0 && ro1.rebuild > 2.0 &&
+          ro1.duringMax > ro1.rebuild * 0.8),
+        "rebuild_superlinear" -> plain(roRatio > 20.0))))
   }
 }

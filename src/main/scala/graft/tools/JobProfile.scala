@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-
 import graft.{GraftSession, SparkEntry}
 
 /** Per-query job/stage/task breakdown — tells job-submission-overhead-bound
@@ -9,57 +7,10 @@ import graft.{GraftSession, SparkEntry}
   * For each named query, runs it twice (first run = warm JIT/codegen; second
   * run is the reported one) and prints: wall seconds, #jobs, #stages, #tasks,
   * summed executor task time, summed shuffle read/write bytes, summed GC.
-  * Usage: runMain graft.tools.JobProfile [sfDir] <query>... */
+  * The counts come from [[QueryMetrics]]; `-v` adds the per-call-site job
+  * walls.
+  * Usage: runMain graft.tools.JobProfile [sfDir] [-v] <query>... */
 object JobProfile {
-  final class Acc extends SparkListener {
-    @volatile var jobs = 0
-    @volatile var stages = 0
-    @volatile var tasks = 0
-    @volatile var taskTimeMs = 0L
-    @volatile var gcMs = 0L
-    @volatile var shufReadB = 0L
-    @volatile var shufWriteB = 0L
-    @volatile var inputB = 0L
-    // per-job wall + callsite, for the -v breakdown (where do 150 jobs in a
-    // 7-task-second query come from?)
-    val jobStartNs = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
-    val jobSite = new java.util.concurrent.ConcurrentHashMap[Int, String]()
-    val jobWall = new java.util.concurrent.ConcurrentLinkedQueue[(String, Double)]()
-    override def onJobStart(j: SparkListenerJobStart): Unit = synchronized {
-      jobs += 1
-      jobStartNs.put(j.jobId, System.nanoTime())
-      val site = Option(j.properties)
-        .flatMap(p => Option(p.getProperty("callSite.short")))
-        .orElse(j.stageInfos.lastOption.map(_.name))
-        .getOrElse("?")
-      jobSite.put(j.jobId, site)
-    }
-    override def onJobEnd(j: SparkListenerJobEnd): Unit = {
-      val t0 = jobStartNs.remove(j.jobId)
-      if (t0 != 0L) jobWall.add(
-        (jobSite.getOrDefault(j.jobId, "?"), (System.nanoTime() - t0) / 1e9))
-      jobSite.remove(j.jobId); ()
-    }
-    override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
-      synchronized { stages += 1 }
-    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = synchronized {
-      tasks += 1
-      val m = t.taskMetrics
-      if (m != null) {
-        taskTimeMs += m.executorRunTime
-        gcMs += m.jvmGCTime
-        shufReadB += m.shuffleReadMetrics.totalBytesRead
-        shufWriteB += m.shuffleWriteMetrics.bytesWritten
-        inputB += m.inputMetrics.bytesRead
-      }
-    }
-    def reset(): Unit = synchronized {
-      jobs = 0; stages = 0; tasks = 0; taskTimeMs = 0; gcMs = 0
-      shufReadB = 0; shufWriteB = 0; inputB = 0
-      jobStartNs.clear(); jobSite.clear(); jobWall.clear()
-    }
-  }
-
   def main(args: Array[String]): Unit = {
     val verbose = args.contains("-v")
     val (sfDir, names) = args.toSeq.filterNot(_ == "-v") match {
@@ -69,31 +20,21 @@ object JobProfile {
     }
     val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
-    val acc = new Acc
-    spark.sparkContext.addSparkListener(acc)
     println(f"${"query"}%-28s ${"wall_s"}%7s ${"jobs"}%5s ${"stages"}%6s " +
       f"${"tasks"}%6s ${"task_s"}%7s ${"gc_s"}%5s ${"shR_MB"}%7s ${"shW_MB"}%7s ${"in_MB"}%7s")
     names.foreach { n =>
       val fn = SparkEntry.queries(n)
       fn(spark, sfDir).count() // warm run: JIT + codegen + catalog
-      // settle listener events from the warm run before resetting
-      org.apache.spark.sql.graftbridge.ListenerBridge.waitUntilEmpty(spark.sparkContext)
-      acc.reset()
-      val t0 = System.nanoTime()
-      fn(spark, sfDir).count()
-      val wall = (System.nanoTime() - t0) / 1e9
-      org.apache.spark.sql.graftbridge.ListenerBridge.waitUntilEmpty(spark.sparkContext)
-      println(f"$n%-28s $wall%7.2f ${acc.jobs}%5d ${acc.stages}%6d " +
-        f"${acc.tasks}%6d ${acc.taskTimeMs / 1e3}%7.1f ${acc.gcMs / 1e3}%5.1f " +
-        f"${acc.shufReadB / 1e6}%7.1f ${acc.shufWriteB / 1e6}%7.1f ${acc.inputB / 1e6}%7.1f")
-      if (verbose) {
-        import scala.jdk.CollectionConverters._
-        acc.jobWall.asScala.toSeq.groupBy(_._1).toSeq
-          .map { case (site, ws) => (site, ws.size, ws.map(_._2).sum) }
-          .sortBy(-_._3)
-          .foreach { case (site, cnt, tot) =>
-            println(f"    $site%-44s n=$cnt%4d  sum=$tot%7.2f s")
-          }
+      val (wall, c) = QueryMetrics.during(spark) {
+        val t0 = System.nanoTime()
+        fn(spark, sfDir).count()
+        (System.nanoTime() - t0) / 1e9
+      }
+      println(f"$n%-28s $wall%7.2f ${c.jobs}%5d ${c.stages}%6d " +
+        f"${c.tasks}%6d ${c.taskTimeMs / 1e3}%7.1f ${c.gcMs / 1e3}%5.1f " +
+        f"${c.shuffleReadBytes / 1e6}%7.1f ${c.shuffleWriteBytes / 1e6}%7.1f ${c.inputBytes / 1e6}%7.1f")
+      if (verbose) c.bySite.foreach { case (site, cnt, tot) =>
+        println(f"    $site%-44s n=$cnt%4d  sum=$tot%7.2f s")
       }
     }
     spark.stop()

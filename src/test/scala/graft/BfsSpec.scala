@@ -124,13 +124,6 @@ class BfsSpec extends AnyFunSuite {
         s"more shell files than hops survived: $files")
       // the returned DataFrame stays valid off the surviving final file
       assert(ckpt.count() === 12)
-    } finally {
-      val walk = java.nio.file.Files.walk(dir)
-      try {
-        import scala.jdk.CollectionConverters._
-        walk.sorted(java.util.Comparator.reverseOrder())
-          .iterator().asScala.foreach(java.nio.file.Files.deleteIfExists(_))
-      } finally walk.close()
-    }
+    } finally Scratch.drop(dir.toString)
   }
 }

@@ -25,15 +25,7 @@ class ClusteringSpec extends AnyFunSuite {
 
   private def withTempDir[A](prefix: String)(f: java.nio.file.Path => A): A = {
     val dir = java.nio.file.Paths.get(Scratch.dir(prefix))
-    try f(dir)
-    finally {
-      val walk = java.nio.file.Files.walk(dir)
-      try {
-        import scala.jdk.CollectionConverters._
-        walk.sorted(java.util.Comparator.reverseOrder())
-          .iterator().asScala.foreach(java.nio.file.Files.deleteIfExists(_))
-      } finally walk.close()
-    }
+    try f(dir) finally Scratch.drop(dir.toString)
   }
 
   test("checkpointDir labels are identical to the localCheckpoint labels") {

@@ -14,6 +14,12 @@ object TestSession {
     s
   }
   val sf = "/root/testdata/sf0.001"
+
+  /** `body`'s value and the Spark jobs it started. */
+  def jobsDuring[A](body: => A): (A, Int) = {
+    val (out, c) = graft.tools.QueryMetrics.during(spark)(body)
+    (out, c.jobs)
+  }
 }
 
 class DslSpec extends AnyFunSuite {

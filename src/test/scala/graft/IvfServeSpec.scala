@@ -1,13 +1,11 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TestSession.jobsDuring
 import graft.similarity.{Ann, IvfCore, IvfIndex, KMeans, PqCodec, RawCodec, RotatingIvf}
 import graft.util.Scratch
 
@@ -19,23 +17,6 @@ import graft.util.Scratch
 class IvfServeSpec extends AnyFunSuite {
   private lazy val spark = TestSession.spark
   private lazy val emb = Tables.t(spark, TestSession.sf, "embeddings").cache()
-
-  private def jobsDuring[A](body: => A): (A, Int) = {
-    val sc = spark.sparkContext
-    val jobs = new AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    org.apache.spark.sql.graftbridge.ListenerBridge.waitUntilEmpty(sc)
-    sc.addSparkListener(listener)
-    try {
-      val out = body
-      org.apache.spark.sql.graftbridge.ListenerBridge.waitUntilEmpty(sc)
-      (out, jobs.get)
-    } finally sc.removeSparkListener(listener)
-  }
 
   private def pairs(df: DataFrame) =
     df.select("q_id", "c_id", "rank").collect()

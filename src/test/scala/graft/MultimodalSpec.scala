@@ -273,23 +273,13 @@ class MultimodalSpec extends AnyFunSuite {
       "Zips.readZips" -> (Zips.readZips(_, _, _)))
     val blobs = mediaDf(Seq(2 -> null, 3 -> Array[Byte](9, 9, 9, 9)))
     val strings = Seq((1, "not bytes")).toDF("id", "text_blob")
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val (_, jobs) = TestSession.jobsDuring {
       for ((name, op) <- facts ++ explodes) {
         val e = intercept[IllegalArgumentException](op(strings, "id", "text_blob"))
         assert(e.getMessage.contains("text_blob must be BINARY"), s"$name: $e")
       }
-      org.apache.spark.sql.graftbridge.ListenerBridge
-        .waitUntilEmpty(spark.sparkContext)
-      assert(jobs.get === 0, "a STRING content column ran a job")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(jobs === 0, "a STRING content column ran a job")
     for ((name, op) <- facts) {
       val rows = op(blobs, "id", "content").collect()
       assert(rows.map(_.getInt(0)).sorted.toSeq === Seq(2, 3), name)

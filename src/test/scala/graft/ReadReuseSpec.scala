@@ -1,13 +1,12 @@
 package graft
 
 import java.nio.file.Paths
-import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TestSession.jobsDuring
 import graft.model._
 import graft.store.BucketStore
 import graft.util.Scratch
@@ -31,23 +30,6 @@ class ReadReuseSpec extends AnyFunSuite {
       concat(lit("r"), col("id")).as("_id"),
       timestamp_seconds(lit(1704067200L) + col("id") * 3600).as("ts"),
       col("id").as("n"))
-
-  private def jobsDuring[A](body: => A): (A, Int) = {
-    val sc = spark.sparkContext
-    val jobs = new AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    org.apache.spark.sql.graftbridge.ListenerBridge.waitUntilEmpty(sc)
-    sc.addSparkListener(listener)
-    try {
-      val out = body
-      org.apache.spark.sql.graftbridge.ListenerBridge.waitUntilEmpty(sc)
-      (out, jobs.get)
-    } finally sc.removeSparkListener(listener)
-  }
 
   private def ids(df: DataFrame): Set[String] =
     df.select("_id").collect().map(_.getString(0)).toSet
