@@ -21,7 +21,7 @@ import graft.store.BucketStore
   *    `=false` is create-if-absent (D3, ES `OpType.CREATE` semantics,
   *    `ElasticsearchCrudService.java:241`);
   *  - updates/deletes are declarative rewrites via [[UpdateCompiler]]
-  *    committed with the store's buffer-promote (atomic swap);
+  *    committed by [[BucketStore.rewrite]] (one atomic `_ROLES` replace);
   *  - `optimizeQuery` (U13) is a no-op returning true: the time-partition
   *    pruning above and Parquet min-max stats stand in for Mongo's
   *    background index builds (`MongoDbCrudService.java:298-348`); no index
@@ -179,19 +179,25 @@ final class CrudService(store: BucketStore, bucket: Bucket, stage: String = "pro
           UpdateCompiler.applyUpdate(cur, QueryCompiler.compile(q), u))
       }
       matched
-    } else {
-      // cheap existence probe first (pushed-down filter, first-match exit):
-      // a zero-match update must not pay a full-table rewrite
-      if (matching(t, q0).isEmpty) return 0L
-      val obs = org.apache.spark.sql.Observation()
-      store.rewrite(bucket, stage) { cur =>
-        val observed = cur.observe(obs, sum(
-          when(coalesce(QueryCompiler.compile(q), lit(false)), 1L)
-            .otherwise(0L)).as("matched"))
-        UpdateCompiler.applyUpdate(observed, QueryCompiler.compile(q), u)
-      }
-      Option(obs.get("matched")).collect { case n: Long => n }.getOrElse(0L)
+    } else
+      rewriteCounted(t, q0, q)(UpdateCompiler.applyUpdate(_, QueryCompiler.compile(q), u))
+  }
+
+  /** Rewrite the stage with `transform` and return how many rows `q`
+    * (`q0` date-coerced against `t`) matched. A cheap existence probe runs
+    * first (pushed-down filter, first-match exit), so a zero-match call
+    * pays no full-table rewrite; the count is an [[Observation]] on the
+    * rewrite's own scan — one pass, not a separate count scan. */
+  private def rewriteCounted(t: DataFrame, q0: QueryComponent, q: QueryComponent)(
+      transform: DataFrame => DataFrame): Long = {
+    if (matching(t, q0).isEmpty) return 0L
+    val obs = org.apache.spark.sql.Observation()
+    store.rewrite(bucket, stage) { cur =>
+      transform(cur.observe(obs, sum(
+        when(coalesce(QueryCompiler.compile(q), lit(false)), 1L)
+          .otherwise(0L)).as("matched")))
     }
+    Option(obs.get("matched")).collect { case n: Long => n }.getOrElse(0L)
   }
 
   /** Synthesize the upsert document: equality clauses of the query + set ops. */
@@ -209,16 +215,22 @@ final class CrudService(store: BucketStore, bucket: Bucket, stage: String = "pro
   }
 
   /** U10 updateAndReturnObjectBySpec — findAndModify: apply the update to
-    * the (single) match and return its before or after image, optionally
-    * projected (`MongoDbCrudService.java:531-555`). */
+    * one match and return its before or after image, optionally projected
+    * (`MongoDbCrudService.java:531-555`). The match is the first matching
+    * row the scan returns, and the rewrite changes only the row with its
+    * `_id`. A stage without `_id` has no row identity, so there the update
+    * applies to every row the spec matches. */
   def updateAndReturnObjectBySpec(q0: QueryComponent, u: UpdateComponent,
       returnBefore: Boolean = false, fields: Seq[String] = Nil): Option[Row] = {
     val t = table
     val q = QueryCompiler.coerceDates(t, q0)
     val before = matching(t, q0).head(1).headOption
     if (before.isEmpty) return None
-    store.rewrite(bucket, stage)(cur =>
-      UpdateCompiler.applyUpdate(cur, QueryCompiler.compile(q), u))
+    val pred = QueryCompiler.compile(q)
+    val one =
+      if (t.columns.contains(IdCol)) pred && col(IdCol) === before.get.getAs[Any](IdCol)
+      else pred
+    store.rewrite(bucket, stage)(UpdateCompiler.applyUpdate(_, one, u))
     val image =
       if (returnBefore) before
       else {
@@ -247,32 +259,24 @@ final class CrudService(store: BucketStore, bucket: Bucket, stage: String = "pro
     val q = QueryCompiler.coerceDates(t, q0)
     q.meta.limit match {
     case None =>
-      // existence probe: a miss (e.g. deleteObjectById of an absent id)
-      // must not rewrite the whole table
-      if (matching(t, q0).isEmpty) return 0L
-      val obs = org.apache.spark.sql.Observation()
-      store.rewrite(bucket, stage) { cur =>
-        val observed = cur.observe(obs, sum(
-          when(coalesce(QueryCompiler.compile(q), lit(false)), 1L)
-            .otherwise(0L)).as("deleted"))
-        UpdateCompiler.deleteBySpec(observed, q)
-      }
-      Option(obs.get("deleted")).collect { case n: Long => n }.getOrElse(0L)
+      // the probe spares a miss (e.g. deleteObjectById of an absent id) a
+      // whole-table rewrite
+      rewriteCounted(t, q0, q)(UpdateCompiler.deleteBySpec(_, q))
     case Some(k) =>
       val deleted = matching(t, q0).limit(k).count()
       store.rewrite(bucket, stage)(cur => UpdateCompiler.deleteBySpec(cur, q))
       deleted
   } }
 
-  /** Three-clause MERGE INTO committed through the store's buffer+promote —
+  /** Three-clause MERGE INTO committed through [[BucketStore.rewrite]] —
     * the batch reconciliation analog of the reference's per-document
     * upsert-or-delete round trips (`ElasticsearchCrudService.java:241`,
     * `MongoDbCrudService.java:493-525`), but atomic at STORE granularity:
-    * the merged table lands in a fresh secondary buffer and swaps in via
-    * [[BucketStore.promote]]'s metadata-only renames, so concurrent readers
-    * see the old snapshot until the instant the promote lands, and any
-    * failure mid-merge (cardinality violation, a poisoned source row) leaves
-    * the current stage untouched. Clause semantics are [[graft.ops.MergeInto]]'s.
+    * the merged table lands in a fresh version dir and swaps in with one
+    * `_ROLES` replace, so concurrent readers see the old snapshot until the
+    * instant the replace lands, and any failure mid-merge (cardinality
+    * violation, a poisoned source row) leaves the current stage untouched.
+    * Clause semantics are [[graft.ops.MergeInto]]'s.
     *
     * I/O shape: this path is whole-table copy-on-write — right for
     * dashboard-sized keyed state, WRONG past ~10⁷ keys. The scale shape is

@@ -10,7 +10,8 @@ import org.apache.spark.sql.types._
   *
   * Physical layout (see [[graft.store.BucketStore]]): one directory root per
   * bucket holding `raw/ json/ processed/` stage dirs, each with a `current`
-  * and optional named secondary buffers (ping-pong promote).
+  * and optional named secondary buffers (ping-pong promote), resolved
+  * through the stage's `_ROLES` file.
   */
 final case class Bucket(
     fullName: String, // e.g. "/test/events" — slash-path like the reference

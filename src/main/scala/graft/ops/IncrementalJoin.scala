@@ -28,7 +28,7 @@ import org.apache.spark.sql.functions._
   * shuffles `A ⋈ B` — per-batch compute is O(|V| + |ΔA|·fanout(B) +
   * |ΔB|·fanout(A)), never O(|A|·|B| / |k|). Like cdc4's rollup, the
   * REWRITE of V is copy-on-write O(|V|) I/O per refresh through
-  * buffer+promote — the same boundary and partitioned-rewrite upgrade
+  * BucketStore.rewrite — the same boundary and partitioned-rewrite upgrade
   * path documented in SCALE.md §5 (and shipped for keyed state by
   * [[graft.store.PartitionedStore]], q:cdc6).
   *

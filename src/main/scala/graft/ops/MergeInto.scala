@@ -11,8 +11,8 @@ import org.apache.spark.sql.functions._
   * (`MongoDbCrudService.java` updateObjectBySpec / deleteObjectBySpec);
   * here the whole batch is a single co-keyed FULL OUTER shuffle join plus
   * one clause-dispatch projection — no per-row round trips, no driver
-  * state, and the rewrite composes with [[graft.store.BucketStore]]'s
-  * secondary-buffer promote for atomic swap-in.
+  * state, and the rewrite composes with [[graft.store.BucketStore.rewrite]]
+  * for an atomic swap-in.
   *
   * Contracts: `source` has at most one row per key (MERGE's standard
   * cardinality rule — duplicate source keys would apply a nondeterministic

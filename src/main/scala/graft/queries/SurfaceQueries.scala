@@ -749,7 +749,7 @@ object SurfaceQueries {
     // through the store's reader-atomic rewrite — refresh cost per batch
     // is O(|batch| + |agg keys|), never O(history). Exactly-once effects
     // over at-least-once foreachBatch: the applied batch id commits as a
-    // sentinel row INSIDE the same buffer+promote as the rollup (one
+    // sentinel row INSIDE the same rewrite commit as the rollup (one
     // atomic visibility switch covers both), and replayed ids skip. The
     // oracle recomputes the rollup from all events at once — maintained
     // == recomputed across an arbitrary batch history. COMPUTE is
@@ -794,7 +794,7 @@ object SurfaceQueries {
         .orderBy("user_id")
     },
     // ---- streaming upsert sink: per micro-batch, reduce to the latest
-    // event per user and MERGE it into the bucket store (buffer+promote →
+    // event per user and MERGE it into the bucket store (rewrite commit →
     // each batch lands atomically). The merge's order guard — update only
     // if (ts, event_id) is newer — makes the final state independent of
     // how the source was split into batches AND idempotent under replay:

@@ -22,8 +22,8 @@ import graft.store.Commit
   * 335-391`).
   *
   * Retention: the PREVIOUS generation outlives the swap (an in-flight
-  * serve may still be reading it — BucketStore.bufferAndPromote's bounded
-  * reader-grace contract); older generations, crash-orphaned builds and
+  * serve may still be reading it — the bounded reader race
+  * BucketStore.rewrite documents); older generations, crash-orphaned builds and
   * crashed writers' pointer tmp files are reclaimed at the next rebuild.
   *
   * Centroids ownership: callers hand centroids to [[build]]/[[rebuild]]

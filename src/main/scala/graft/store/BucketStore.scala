@@ -1,6 +1,6 @@
 package graft.store
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 import java.util.concurrent.ConcurrentHashMap
 
 import scala.jdk.CollectionConverters._
@@ -27,16 +27,27 @@ import graft.model._
   *    `HdfsStorageService.java:458-542`),
   *  - retention/age-out by partition (`HdfsStorageService.java:593-601`).
   *
-  * At cluster scale the layout is a plain object-store prefix per bucket;
-  * nothing here is driver-local except directory renames (metadata ops).
+  * Roles: a stage's primary (`current`) and each named buffer
+  * (`buffer_<name>`) resolve only through the stage root's one small
+  * `_ROLES` file, one `<role> v_<n>` line per role. Every commit is a
+  * read-modify-write of that file under the root's [[Commit.lock]],
+  * landed by ONE [[Commit.replaceFile]] — the reference's alias swap —
+  * so a concurrent reader resolves the old roles or the new, never a
+  * half-swapped state. Data dirs are never renamed; a rewrite writes a
+  * fresh `v_` dir, swaps the file, and sweeps the `v_` dirs it no longer
+  * names (the [[PartitionedStore]] and
+  * [[graft.similarity.RotatingIvf]] shape). The same discipline holds on
+  * an object store, where directory renames are O(files) copies and not
+  * atomic, but one small object CAN be replaced atomically.
   */
 final class BucketStore(spark: SparkSession, rootDir: String) {
   import BucketStore._
 
-  /** Test-only fault-injection seam: invoked after each ordered step of a
-    * buffer/promote commit (`bufferWritten`, `bufMoved`,
-    * `currentSwitched`, `bufferRepointed`) so FaultInjectionSpec can
-    * snapshot the exact state a crash at that point would leave. No-op in
+  /** Test-only fault-injection seam, invoked at `versionWritten` (a
+    * rewrite-style commit's new `v_` dir is written, `_ROLES` not yet
+    * replaced) and `rolesReplaced` (inside the best-effort block after
+    * any commit's replace, before its sweep), so FaultInjectionSpec can
+    * snapshot the exact state a crash there would leave. No-op in
     * production. */
   private[graft] var onStep: String => Unit = _ => ()
 
@@ -44,38 +55,34 @@ final class BucketStore(spark: SparkSession, rootDir: String) {
   private def stageRoot(b: Bucket, stage: String): Path =
     bucketRoot(b).resolve(stage)
 
-  // ---- pointer-file indirection -----------------------------------------
-  // A stage's primary ("current") and each named buffer resolve through a
-  // small `_PTR_<role>` file naming the physical data dir. Data dirs are
-  // NEVER renamed while addressable — promote swaps the two pointer files,
-  // each replaced by an atomic rename, so a concurrent reader resolves
-  // either the old dir or the new dir, never a half-swapped state and never
-  // a missing path (the old two-directory-rename swap had a window with no
-  // `current` at all). The same discipline is what holds on an object
-  // store, where directory renames are O(files) copies and not atomic, but
-  // a single small pointer object CAN be replaced atomically.
-  // Legacy layout (no pointer file) falls back to the literal dir name.
+  // ---- the roles file ----------------------------------------------------
 
   private def roleName(buffer: Option[String]): String =
     buffer.map("buffer_" + _).getOrElse("current")
 
-  private def readPointer(root: Path, role: String): Option[String] = {
-    val p = root.resolve("_PTR_" + role)
-    if (Files.exists(p))
-      Some(new String(Files.readAllBytes(p), "UTF-8").trim)
-    else None
-  }
+  private def readRoles(root: Path): Map[String, String] =
+    try new String(Files.readAllBytes(root.resolve(RolesFile)), "UTF-8")
+      .linesIterator.filter(_.nonEmpty).map { l =>
+        val i = l.lastIndexOf(' ')
+        l.take(i) -> l.drop(i + 1)
+      }.toMap
+    catch { case _: java.nio.file.NoSuchFileException => Map.empty }
 
-  private def writePointer(root: Path, role: String, target: String): Unit = {
+  /** Land `roles` as the stage's one visibility switch; the caller holds
+    * the root's lock. */
+  private def writeRoles(root: Path, roles: Map[String, String]): Unit = {
     Files.createDirectories(root)
-    Commit.replaceFile(root.resolve("_PTR_" + role), "_PTR_" + role + ".tmp",
-      target.getBytes("UTF-8"))
+    Commit.replaceFile(root.resolve(RolesFile), RolesFile + ".tmp",
+      roles.toSeq.sorted.map { case (r, d) => s"$r $d\n" }.mkString
+        .getBytes("UTF-8"))
   }
 
+  /** The dir a role resolves to; a role with no entry resolves to a path
+    * that does not exist (no data dir is named after a role). */
   private def stageDir(b: Bucket, stage: String, buffer: Option[String]): Path = {
     val root = stageRoot(b, stage)
     val role = roleName(buffer)
-    root.resolve(readPointer(root, role).getOrElse(role))
+    root.resolve(readRoles(root).getOrElse(role, role))
   }
 
   /** Derive the partition column from the temporal schema. Lexicographic
@@ -91,16 +98,31 @@ final class BucketStore(spark: SparkSession, rootDir: String) {
     }
 
   /** Write a batch into a bucket stage. Partitioned by derived time column
-    * when a temporal schema is declared; codec from the storage schema. */
+    * when a temporal schema is declared; codec from the storage schema.
+    * A role's first write adds a fresh `v_` entry for it to `_ROLES`. */
   def write(b: Bucket, df: DataFrame, stage: String = "processed",
-      buffer: Option[String] = None, mode: SaveMode = SaveMode.Append,
+      buffer: Option[String] = None, mode: SaveMode = SaveMode.Append): Unit = {
+    val root = stageRoot(b, stage)
+    val role = roleName(buffer)
+    val dir = Commit.lock(root).synchronized {
+      val roles = readRoles(root)
+      roles.getOrElse(role, {
+        val v = "v_" + System.nanoTime()
+        writeRoles(root, roles + (role -> v))
+        v
+      })
+    }
+    writeDir(b, df, root.resolve(dir), mode)
+  }
+
+  private def writeDir(b: Bucket, df: DataFrame, dir: Path, mode: SaveMode,
       extraOptions: Map[String, String] = Map.empty): Unit = {
     val out = withTimePartition(b, df)
     val codec = b.dataSchema.storage.flatMap(_.codec).getOrElse("snappy")
     var w = out.write.mode(mode).option("compression", normalizeCodec(codec))
       .options(extraOptions)
     if (out.columns.contains(PartitionCol)) w = w.partitionBy(PartitionCol)
-    w.parquet(stageDir(b, stage, buffer).toString)
+    w.parquet(dir.toString)
   }
 
   /** Hash-bucketed write registered in the session catalog — the co-located
@@ -137,15 +159,12 @@ final class BucketStore(spark: SparkSession, rootDir: String) {
     * prune scans filtered on any subset. One file per z-range; the
     * multi-column sibling of [[writeBucketed]]'s single-key co-location.
     *
-    * Writes to a fresh buffer and promotes (same commit discipline as
-    * [[rewrite]]/[[compact]]): `df` may therefore originate from the target
-    * stage itself (re-layout in place), and concurrent readers see the old
-    * snapshot until the atomic promote. */
+    * Commits like [[rewrite]]/[[compact]]: `df` may therefore originate
+    * from the target stage itself (re-layout in place), and concurrent
+    * readers see the old snapshot until the one `_ROLES` replace. */
   def writeZOrdered(b: Bucket, df: DataFrame, cols: Seq[String],
       numFiles: Int, stage: String): Unit =
-    bufferAndPromote(b, stage, "zorder_")(
-      write(b, ZOrder.clustered(df, cols, numFiles), stage, _,
-        SaveMode.Overwrite))
+    commitCurrent(b, stage, ZOrder.clustered(df, cols, numFiles))
 
   /** Two-column [[writeZOrdered]] (compat signature). */
   def writeZOrdered(b: Bucket, df: DataFrame, colA: String, colB: String,
@@ -162,7 +181,7 @@ final class BucketStore(spark: SparkSession, rootDir: String) {
     * inferring again ([[PartitionedStore.read]]'s explicit-schema form).
     * No invalidation is needed: every writer lands new files (Spark names
     * each output file uniquely) or removes some — an append, a
-    * rewrite/promote to a fresh `v_` dir, [[compact]], [[ageOut]], a write
+    * rewrite to a fresh `v_` dir, a promote, [[compact]], [[ageOut]], a write
     * by another store instance or process — so any change to the stage
     * changes the listing and re-infers. One entry per root and role, so
     * superseded `v_` dirs leave nothing behind. Each call still builds a
@@ -250,113 +269,61 @@ final class BucketStore(spark: SparkSession, rootDir: String) {
   }
 
   /** Atomic promote of a secondary buffer to primary — the ping-pong swap
-    * (`ElasticsearchIndexService.java:495-520`): after it, `current`
-    * resolves to the buffer's data and `buffer_<name>` to the old primary's.
-    * Readers are never broken mid-swap: the buffer's physical dir first
-    * gets a stable versioned name (legal — a buffer is a staging area, no
-    * reader addresses it during its own promote), then the `current`
-    * pointer is replaced in ONE atomic rename (the visibility switch), then
-    * the buffer pointer is re-aimed at the demoted dir. A reader that
-    * resolved `current` just before the switch keeps reading the old dir,
-    * which nothing here renames or deletes — StoreCrudSpec's concurrent
-    * promote test runs this race for real.
-    *
-    * In-process promotes of one stage serialize on the stage root's
-    * [[Commit.lock]] (cross-process, one writer process is the supported
-    * deployment), which makes the closing ORPHAN SWEEP safe: a crash
-    * between the ordered steps strands a `v_*` dir no pointer references
-    * (and possibly a `_PTR_*.tmp*` file) — unreachable, since v_ dirs are
-    * only ever addressed through pointers — and the next promote of the
-    * stage reclaims them, so crashes never leak data-sized dirs
-    * (FaultInjectionSpec executes each window). Once the buffer pointer is
-    * re-aimed the promote stands: the sweep is best-effort, and a failed
-    * one is logged and retried by the next promote. */
-  def promote(b: Bucket, stage: String, buffer: String): Unit =
-    promoteThen(b, stage, buffer)(())
-
-  /** [[promote]], then `reclaim` inside its best-effort post-switch block.
-    * Returns the name of the dir `current` now resolves to. */
-  private def promoteThen(b: Bucket, stage: String, buffer: String)(
-      reclaim: => Unit): String = {
+    * (`ElasticsearchIndexService.java:495-520`): one `_ROLES` replace
+    * swaps the two entries, so `current` resolves to the buffer's data and
+    * `buffer_<name>` to the old primary's (or to nothing, if the stage had
+    * no primary). A reader that resolved `current` just before the replace
+    * keeps reading the old dir, which the promote neither renames nor
+    * deletes — StoreCrudSpec's concurrent promote test runs this race for
+    * real. The two roles never name one dir, so a later buffer write can
+    * never land in the live primary. */
+  def promote(b: Bucket, stage: String, buffer: String): Unit = {
     val root = stageRoot(b, stage)
+    val bufRole = roleName(Some(buffer))
     Commit.lock(root).synchronized {
-      val curName = readPointer(root, "current").getOrElse("current")
-      val bufRole = roleName(Some(buffer))
-      val bufName = readPointer(root, bufRole).getOrElse(bufRole)
-      val buf = root.resolve(bufName)
+      val roles = readRoles(root)
+      val buf = root.resolve(roles.getOrElse(bufRole, bufRole))
       require(Files.exists(buf), s"no such buffer: $buf")
-      val newName =
-        if (bufName.startsWith("v_")) bufName
-        else {
-          val v = "v_" + System.nanoTime()
-          Files.move(buf, root.resolve(v), StandardCopyOption.ATOMIC_MOVE)
-          v
-        }
-      onStep("bufMoved")
-      writePointer(root, "current", newName) // the atomic visibility switch
-      onStep("currentSwitched")
-      writePointer(root, bufRole, curName)
-      Commit.bestEffort(s"[BucketStore] post-promote reclaim at $root failed " +
-          "(the promote stands; the next promote's sweep retries)") {
-        // seam inside the best-effort block: the promote is already
-        // visible, so even a throwing hook must not fail it
-        onStep("bufferRepointed")
-        sweepOrphans(root)
-        reclaim
-      }
-      newName
+      commitRoles(root, roles - bufRole ++ roles.get("current").map(bufRole -> _) +
+        ("current" -> roles(bufRole)))
     }
   }
 
-  /** Reclaim crash debris under `root`: `v_*` dirs referenced by NO
-    * pointer file (a crash between a promote's rename and its pointer
-    * write strands exactly one), pointer tmp files (a crash inside
-    * writePointer's two steps), and INTERNAL transient buffers — the
-    * `buffer_rewrite_/zorder_/compact_` dirs and pointers bufferAndPromote
-    * always deletes on completion, so any survivor not registered in
-    * [[Commit.inFlight]] is a crashed commit's leftovers (a registry lost
-    * with a crashed PROCESS just defers the reclaim to the next process's
-    * promote). Runs under the promote lock; never touches
-    * literal-named dirs (legacy layout), USER-named buffers (ping-pong
-    * parking is long-lived by design), or anything a live pointer
-    * references. */
+  /** Replace `_ROLES` (the caller holds the root's lock), then sweep. Once
+    * the replace landed the commit stands: the sweep is best-effort, and a
+    * failed one is logged and retried by the next commit of the stage. */
+  private def commitRoles(root: Path, roles: Map[String, String]): Unit = {
+    writeRoles(root, roles)
+    Commit.bestEffort(s"[BucketStore] post-commit sweep at $root failed " +
+        "(the commit stands; the next commit's sweep retries)") {
+      // seam inside the best-effort block: the commit is already visible,
+      // so even a throwing hook must not fail it
+      onStep("rolesReplaced")
+      sweepOrphans(root)
+    }
+  }
+
+  /** Reclaim crash debris and superseded versions under `root`: `_ROLES`
+    * tmp files (a crash inside a replace) and `v_*` dirs `_ROLES` does not
+    * name (a superseded primary, or a crashed commit's new version).
+    * Runs under the root's lock, so no role gains an entry meanwhile;
+    * [[Commit.sweep]] never offers a commit's in-flight version, and
+    * nothing else (`bucketed/`) is touched. */
   private def sweepOrphans(root: Path): Unit = Commit.sweep(root) { entries =>
-    def internal(n: String) = BucketStore.InternalBufferPrefixes.exists(n.startsWith)
-    def role(p: Path) = p.getFileName.toString.stripPrefix("_PTR_")
-    // stale internal buffer pointers go first: each names the demoted dir a
-    // crashed bufferAndPromote would have deleted, so that dir counts as
-    // unreferenced below (the sweep skips in-flight dirs itself; a pointer
-    // is in flight under its role name)
-    val (stalePtrs, livePtrs) = entries.filter { p =>
+    val named = readRoles(root).values.toSet
+    entries.filter { p =>
       val n = p.getFileName.toString
-      n.startsWith("_PTR_") && !n.contains(".tmp")
-    }.partition(p => internal(role(p)) && !Commit.isInFlight(root, role(p)))
-    val referenced = livePtrs
-      .map(p => new String(Files.readAllBytes(p), "UTF-8").trim).toSet
-    stalePtrs ++ entries.filter { p =>
-      val name = p.getFileName.toString
-      (name.contains("_PTR_") && name.contains(".tmp")) ||
-        (Files.isDirectory(p) && !referenced.contains(name) &&
-          (name.startsWith("v_") || internal(name)))
+      n.startsWith(RolesFile + ".tmp") || (n.startsWith("v_") && !named(n))
     }
-  }
-
-  /** Tear a buffer down: its resolved data dir AND its pointer (a dangling
-    * pointer would make the next buffer write and read resolve to
-    * different dirs). */
-  private def deleteBuffer(b: Bucket, stage: String, buffer: String): Unit = {
-    val root = stageRoot(b, stage)
-    Commit.deleteTree(stageDir(b, stage, Some(buffer)))
-    Files.deleteIfExists(root.resolve("_PTR_" + roleName(Some(buffer))))
   }
 
   /** Rewrite a stage in place with writer/reader atomicity: write the new
-    * content to a fresh buffer, then promote. This is the engine's
+    * content to a fresh version, then swap it in. This is the engine's
     * update/delete commit path (SURVEY §7 hard-part 2).
     *
     * When `f` keeps the read schema (same names, types and order,
-    * nullability aside: a Parquet read is all-nullable), the promoted
-    * dir's files read back with exactly that schema, so its listing goes
+    * nullability aside: a Parquet read is all-nullable), the new version's
+    * files read back with exactly that schema, so its listing goes
     * into [[read]]'s schema cache with it and the next read infers
     * nothing. Any other rewrite re-infers as before. With partition type
     * inference on, the time-partition column's type follows the values
@@ -364,8 +331,7 @@ final class BucketStore(spark: SparkSession, rootDir: String) {
   def rewrite(b: Bucket, stage: String)(f: DataFrame => DataFrame): Unit = {
     val cur = read(b, stage)
     val next = f(cur)
-    val promoted = bufferAndPromote(b, stage, "rewrite_")(buf =>
-      write(b, next, stage, buf, SaveMode.Overwrite))
+    val committed = commitCurrent(b, stage, next)
     val typedPartitions = cur.columns.contains(PartitionCol) &&
       spark.conf.get("spark.sql.sources.partitionColumnTypeInference.enabled",
         "true").toBoolean
@@ -373,42 +339,41 @@ final class BucketStore(spark: SparkSession, rootDir: String) {
         org.apache.spark.sql.graftbridge.ColumnBridge.asNullable(next.schema) ==
           cur.schema) {
       val root = stageRoot(b, stage)
-      Commit.dataFiles(root.resolve(promoted), root).foreach(files =>
+      Commit.dataFiles(root.resolve(committed), root).foreach(files =>
         schemaCache(spark).put(schemaKey(root, None), (files, cur.schema)))
     }
   }
 
-  /** Commit discipline shared by [[rewrite]]/[[writeZOrdered]]/[[compact]]:
-    * run the buffer write, promote only if it succeeded, and tear the
-    * partial buffer down if it failed — a throwing write job (bad source
-    * row, merge cardinality violation, executor loss) must leave the
-    * current stage byte-identical AND not accumulate orphan buffer dirs.
-    * Cleanup never changes the outcome: a failing teardown cannot replace
-    * the write's own error, and once the switch landed the reclaim is
-    * best-effort (the PartitionedStore rule). */
-  private def bufferAndPromote(b: Bucket, stage: String, prefix: String)(
-      writeBuf: Option[String] => Unit): String = {
-    val buf = prefix + System.nanoTime()
-    // register as in-flight BEFORE any data lands: a concurrent promote's
-    // orphan sweep must not reclaim this commit's live buffer as crash
-    // debris (the PartitionedStore in-flight-stamp shape)
-    Commit.inFlight(stageRoot(b, stage), roleName(Some(buf))) {
-      try writeBuf(Some(buf))
+  /** Commit shared by [[rewrite]]/[[writeZOrdered]]/[[compact]]: write `df`
+    * to a fresh `v_` dir, point `current` at it in one `_ROLES` replace only if
+    * the write succeeded, and tear the partial dir down if it failed — a
+    * throwing write job (bad source row, merge cardinality violation,
+    * executor loss) must leave the current stage byte-identical AND not
+    * accumulate orphan dirs. A failing teardown cannot replace the write's
+    * own error. The closing sweep reclaims the superseded primary at once:
+    * in-flight jobs that resolved the OLD current before the replace race
+    * only with this deletion — the same window the reference has between
+    * alias swap and old-index delete; a deployment wanting zero-race long
+    * readers defers this to a retention sweep. Returns the new dir's name. */
+  private def commitCurrent(b: Bucket, stage: String, df: DataFrame,
+      extraOptions: Map[String, String] = Map.empty): String = {
+    val root = stageRoot(b, stage)
+    val v = "v_" + System.nanoTime()
+    // registered as in-flight BEFORE any data lands: a concurrent commit's
+    // sweep must not reclaim this live version as crash debris
+    Commit.inFlight(root, v) {
+      try writeDir(b, df, root.resolve(v), SaveMode.Overwrite, extraOptions)
       catch {
         case e: Throwable =>
-          // promote never ran
-          try deleteBuffer(b, stage, buf)
+          try Commit.deleteTree(root.resolve(v))
           catch { case c: Exception => e.addSuppressed(c) }
           throw e
       }
-      onStep("bufferWritten")
-      // reclaim the superseded primary immediately (post-promote, the buffer
-      // role resolves to it). In-flight jobs that resolved the OLD current
-      // before the switch race only with this deletion — the same window the
-      // reference has between alias swap and old-index delete; a deployment
-      // wanting zero-race long readers defers this to a retention sweep.
-      promoteThen(b, stage, buf)(deleteBuffer(b, stage, buf))
+      onStep("versionWritten")
+      Commit.lock(root).synchronized(
+        commitRoles(root, readRoles(root) + ("current" -> v)))
     }
+    v
   }
 
   /** Small-file compaction: rewrite a stage so each time partition lands in
@@ -419,8 +384,8 @@ final class BucketStore(spark: SparkSession, rootDir: String) {
     * TIME-PARTITION VALUE — so each partition value's rows co-locate and
     * emit one file (plain `repartition(n)` would do the opposite: every
     * task touches every partition value, multiplying files) — while
-    * `maxRecordsPerFile` still splits oversized partitions. Buffer+promote
-    * keeps concurrent readers atomic. Returns parquet files before/after.
+    * `maxRecordsPerFile` still splits oversized partitions. The
+    * [[rewrite]] commit keeps concurrent readers atomic. Returns parquet files before/after.
     *
     * `preserveZOrder`: a plain compaction re-packs by partition value and
     * DESTROYS any z-clustered layout ([[writeZOrdered]]) — the repacked
@@ -439,9 +404,8 @@ final class BucketStore(spark: SparkSession, rootDir: String) {
         cur.repartition(shufflePartitions, col(PartitionCol))
       case None => cur.repartition(shufflePartitions)
     }
-    bufferAndPromote(b, stage, "compact_")(
-      write(b, packed, stage, _, SaveMode.Overwrite,
-        Map("maxRecordsPerFile" -> maxRecordsPerFile.toString)))
+    commitCurrent(b, stage, packed,
+      Map("maxRecordsPerFile" -> maxRecordsPerFile.toString))
     (before, parquetFileCount(b, stage))
   }
 
@@ -489,11 +453,8 @@ object BucketStore {
   private[graft] def cachedSchemaKeys(spark: SparkSession): Set[(String, String)] =
     schemaCache(spark).keySet.asScala.toSet
 
-  /** The TRANSIENT buffer prefixes bufferAndPromote creates and always
-    * deletes on completion — the only buffer names the orphan sweep may
-    * reclaim. User-named buffers (ping-pong parking) are never touched. */
-  private[store] val InternalBufferPrefixes =
-    Seq("buffer_rewrite_", "buffer_zorder_", "buffer_compact_")
+  /** The stage root's one role-to-dir file. */
+  private val RolesFile = "_ROLES"
 
   /** Reference codecs gzip/snappy/framed-snappy
     * (`HfdsDataWriteService.java:642-660`) → parquet compression codecs. */

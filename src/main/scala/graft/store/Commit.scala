@@ -6,7 +6,7 @@ import java.util.concurrent.ConcurrentHashMap
 import scala.jdk.CollectionConverters._
 
 /** The mechanics every pointer-swap commit protocol shares: the
-  * [[BucketStore]] stage pointers, the [[PartitionedStore]] manifest, the
+  * [[BucketStore]] `_ROLES` file, the [[PartitionedStore]] manifest, the
   * [[graft.similarity.IvfCore]] meta file and the
   * [[graft.similarity.RotatingIvf]] generation pointer. All four follow
   * the reference's one swap discipline for a live dataset, the ping-pong
@@ -68,7 +68,7 @@ private[graft] object Commit {
     try body finally live.remove(k)
   }
 
-  def isInFlight(root: Path, name: String): Boolean =
+  private def isInFlight(root: Path, name: String): Boolean =
     live.contains(liveKey(root, name))
 
   /** The entries of `root`; a missing root has none. */

@@ -23,8 +23,8 @@ import org.apache.spark.sql.functions._
   * (old untouched dirs + new touched dirs) — never a mix of view
   * versions, never a missing path. The same discipline holds on an object
   * store (big dir renames are O(files) copies, one small manifest object
-  * CAN be swapped atomically) — this is exactly [[BucketStore]]'s pointer
-  * indirection generalized from one pointer to a partition map, the
+  * CAN be swapped atomically) — this is exactly [[BucketStore]]'s `_ROLES`
+  * indirection generalized from one dir per role to a partition map, the
   * "manifest-file indirection — one more small pointer level, same
   * discipline" SCALE.md sketches. One caveat: the cross-process commit
   * arbiter below is a hard link (local/NFS/HDFS-style filesystems); an
@@ -602,7 +602,7 @@ final class PartitionedStore(val spark: SparkSession, val root: String,
         evolvedTo.foreach(sc =>
           writeFileAtomic(schemaPath, sc.json.getBytes("UTF-8")))
         // retention sweep (same bounded race with in-flight readers as
-        // BucketStore.bufferAndPromote): versions older than the last
+        // BucketStore.rewrite's sweep): versions older than the last
         // `retainVersions` lose their manifest.v file, then any stamp dir
         // referenced by NO retained manifest is reclaimed — so readAsOf
         // stays total over exactly the retained window. retainVersions = 1

@@ -161,7 +161,7 @@ object Streams {
   /** Run an arbitrary per-micro-batch action to completion — the seam for
     * streaming writes that go through a transactional sink (e.g.
     * `CrudService.mergeInto` per batch: each micro-batch lands atomically
-    * via the store's buffer+promote, so readers never see a torn batch).
+    * via the store's rewrite commit, so readers never see a torn batch).
     * The action must itself be idempotent-or-ordered against replays; pair
     * it with an order guard (e.g. merge only if newer) for exactly-once
     * EFFECTS on top of Structured Streaming's at-least-once foreachBatch. */
@@ -177,7 +177,7 @@ object Streams {
     * at-least-once, and an idempotence guard keyed on the batch id (skip
     * ids already applied, recorded atomically WITH the sink write) is the
     * standard discipline; st19 commits the id inside the same
-    * buffer+promote as the rollup itself. */
+    * rewrite commit as the rollup itself. */
   def runForeachBatchIds(stream: DataFrame,
       statePartitions: Option[Int] = None,
       stateStoreProvider: Option[String] = None)(

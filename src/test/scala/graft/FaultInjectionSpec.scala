@@ -230,7 +230,7 @@ class FaultInjectionSpec extends AnyFunSuite {
       assert(store.version() === 2 && rows(store.read()) === rows(kv(40, 2)))
       assert(rows(store.readAsOf(1)) === rows(kv(40, 1)))
     }
-    // BucketStore: a throwing bufferRepointed hook
+    // BucketStore: a throwing rolesReplaced hook
     locally {
       import graft.model.Bucket
       import graft.store.BucketStore
@@ -244,23 +244,24 @@ class FaultInjectionSpec extends AnyFunSuite {
       store.write(b, gen(0))
       store.rewrite(b, "processed")(_ => gen(1))
       store.onStep = s =>
-        if (s == "bufferRepointed") throw new RuntimeException("planted@bufferRepointed")
+        if (s == "rolesReplaced") throw new RuntimeException("planted@rolesReplaced")
       store.rewrite(b, "processed")(_ => gen(2)) // the switch landed: no error
       store.onStep = _ => ()
       assert(content === Seq((2, 100L)))
-      // the skipped reclaim left the demoted primary and its stale pointer
+      // the skipped sweep left the demoted primary beside the one _ROLES names
+      def live = Paths.get(store.stagePath(b)).getFileName.toString
       assert(listNames(stage, "v_").size === 2)
-      assert(listNames(stage, "_PTR_buffer_rewrite_").nonEmpty)
+      assert(listNames(stage, "v_").contains(live))
       // the next rewrite commits and sweeps that debris
       store.rewrite(b, "processed")(_ => gen(3))
       assert(content === Seq((3, 100L)))
-      assert(listNames(stage, "v_").size === 1)
-      assert(listNames(stage, "").filter(n => n.startsWith("buffer_rewrite_") ||
-        n.startsWith("_PTR_buffer_rewrite_") || n.contains(".tmp")).isEmpty)
+      assert(listNames(stage, "v_") === Set(live))
+      assert(listNames(stage, "").filter(n => n != "_ROLES" &&
+        !n.startsWith("v_")).isEmpty)
     }
   }
 
-  // ---- BucketStore buffer/promote windows ----------------------------------
+  // ---- BucketStore commit windows ------------------------------------------
 
   test("BucketStore rewrite killed after EACH ordered step: readers resolve " +
       "a whole generation (old until the pointer switch, new after), and the " +
@@ -286,50 +287,81 @@ class FaultInjectionSpec extends AnyFunSuite {
         .filter(pred).toSet finally s.close()
     }
     store.write(b, gen(0))
-    store.rewrite(b, "processed")(_ => gen(1)) // current now a v_* dir
+    store.rewrite(b, "processed")(_ => gen(1))
     assert(tagOf(store) === ((1, 100L)))
     val snaps = scala.collection.mutable.Map[String, Path]()
     store.onStep = s =>
-      if (Set("bufferWritten", "bufMoved", "currentSwitched",
-          "bufferRepointed")(s))
+      if (Set("versionWritten", "rolesReplaced")(s))
         snaps.getOrElseUpdate(s, crashImage(rootDir, s))
     store.rewrite(b, "processed")(_ => gen(2)) // completes on the original
     store.onStep = _ => ()
-    assert(snaps.keySet.size === 4)
+    assert(snaps.keySet === Set("versionWritten", "rolesReplaced"))
 
     for ((step, snap) <- snaps) {
       val s = new BucketStore(spark, snap.toString)
-      // visibility contract: the pointer switch is the ONE boundary
-      val expectedTag =
-        if (step == "bufferWritten" || step == "bufMoved") 1 else 2
+      // visibility contract: the _ROLES replace is the ONE boundary
+      val expectedTag = if (step == "versionWritten") 1 else 2
       assert(tagOf(s) === ((expectedTag, 100L)),
         s"$step: reader did not resolve a whole generation")
-      // the crash left exactly the debris the step implies
-      if (step == "bufferWritten")
-        assert(names(snap.toString, _.startsWith("buffer_rewrite_")).nonEmpty,
-          s"$step fixture: expected the stranded buffer dir")
-      if (step == "bufMoved")
-        assert(names(snap.toString, _.startsWith("v_")).size === 2,
-          s"$step fixture: expected the orphan moved buffer")
-      if (step == "bufferRepointed")
-        assert(names(snap.toString, _.startsWith("_PTR_buffer_rewrite_")).nonEmpty,
-          s"$step fixture: expected the stale internal pointer")
+      // the crash left exactly the debris the step implies: the new version
+      // _ROLES does not name yet, or the demoted primary it no longer names
+      assert(names(snap.toString, _.startsWith("v_")).size === 2,
+        s"$step fixture: expected one unnamed v_ dir beside the live one")
       // recovery: one more rewrite both commits AND sweeps the debris
       s.rewrite(b, "processed")(_ => gen(9))
       assert(tagOf(s) === ((9, 100L)), s"$step: recovery rewrite wrong")
       assert(names(snap.toString, _.startsWith("v_")).size === 1,
         s"$step: crash debris v_ dirs survived the recovery sweep: " +
           names(snap.toString, _.startsWith("v_")))
-      assert(names(snap.toString, n => n.startsWith("buffer_rewrite_") ||
-          n.startsWith("_PTR_buffer_rewrite_")).isEmpty,
-        s"$step: internal buffer debris survived the recovery sweep")
       assert(names(snap.toString, _.contains(".tmp")).isEmpty,
-        s"$step: pointer tmp debris survived")
+        s"$step: _ROLES tmp debris survived")
     }
-    // the original (uncrashed) store ends clean too
+    // the original (uncrashed) store ends clean too: _ROLES and the one
+    // dir it names
     assert(tagOf(store) === ((2, 100L)))
-    assert(names(rootDir, n => n.startsWith("buffer_rewrite_") ||
-      n.startsWith("_PTR_buffer_rewrite_")).isEmpty)
+    assert(names(rootDir, _ => true) ===
+      Set("_ROLES", Paths.get(store.stagePath(b)).getFileName.toString))
+  }
+
+  test("a buffer's second promote never aliases the primary: at every " +
+      "crash point the roles name different dirs, and a buffer overwrite " +
+      "leaves the primary's data unchanged") {
+    import graft.model.Bucket
+    import graft.store.BucketStore
+    val rootDir = Scratch.dir("graft_fault_promote")
+    val store = new BucketStore(spark, rootDir)
+    val b = Bucket("/test/fault_promote")
+    def gen(tag: Int) = spark.range(50).select(lit(tag).as("g"), col("id"))
+    def dirs(df: org.apache.spark.sql.DataFrame) =
+      df.inputFiles.map(f => Paths.get(new java.net.URI(f)).getParent).toSet
+    def content(s: BucketStore, buffer: Option[String] = None) =
+      s.read(b, buffer = buffer).groupBy("g").count().collect()
+        .map(r => (r.getInt(0), r.getLong(1))).toSet
+    store.write(b, gen(0))
+    store.rewrite(b, "processed")(_ => gen(1))
+    store.write(b, gen(2), buffer = Some("staging"))
+    store.promote(b, "processed", "staging")
+    store.write(b, gen(3), buffer = Some("staging"), mode =
+      org.apache.spark.sql.SaveMode.Overwrite)
+    val snaps = scala.collection.mutable.Map[String, Path]()
+    store.onStep = s => snaps.getOrElseUpdate(s, crashImage(rootDir, s))
+    store.promote(b, "processed", "staging")
+    store.onStep = _ => ()
+    assert(snaps.nonEmpty)
+    assert(content(store) === Set((3, 50L)))
+    assert(content(store, Some("staging")) === Set((2, 50L)))
+
+    for ((step, snap) <- snaps) {
+      val s = new BucketStore(spark, snap.toString)
+      val primary = content(s)
+      assert(dirs(s.read(b)).intersect(
+        dirs(s.read(b, buffer = Some("staging")))).isEmpty,
+        s"$step: current and buffer_staging resolve to one dir")
+      s.write(b, gen(9), buffer = Some("staging"), mode =
+        org.apache.spark.sql.SaveMode.Overwrite)
+      assert(content(s) === primary,
+        s"$step: a buffer write changed the primary")
+    }
   }
 
   // ---- IvfIndex build window (meta invalidated before init) ---------------

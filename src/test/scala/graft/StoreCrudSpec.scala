@@ -82,7 +82,7 @@ class StoreCrudSpec extends AnyFunSuite {
     reader.start()
     try {
       // fresh buffer name per cycle: promote parks each superseded primary
-      // under that buffer's pointer, so no dir is overwritten or deleted
+      // under that buffer's `_ROLES` entry, so no dir is overwritten or deleted
       // while the reader races — the PROMOTE is the only thing under test
       (1 to 10).foreach { i =>
         store.write(b, gen(i), buffer = Some(s"pp$i"))
@@ -212,6 +212,25 @@ class StoreCrudSpec extends AnyFunSuite {
     // full (non-top-k) delete count comes from the same-pass observation
     val d = crud.deleteObjectsBySpec(Query.allOf().rangeAbove("n_regionkey", 100))
     assert(d === expected)
+  }
+
+  test("crud: findAndModify changes one of several matches and returns it") {
+    val store = freshStore()
+    val crud = new CrudService(store, Bucket("/test/findmod"))
+    import spark.implicits._
+    crud.storeObjects(Seq(("a", 1, 10L), ("b", 1, 20L), ("c", 2, 30L))
+      .toDF("_id", "grp", "v"))
+    val after = crud.updateAndReturnObjectBySpec(
+      Query.allOf().when("grp", 1), Update.update().increment("v", 100)).get
+    val rows = store.read(Bucket("/test/findmod")).select("_id", "v").collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    val changed = rows.filter { case (id, v) =>
+      v != Map("a" -> 10L, "b" -> 20L, "c" -> 30L)(id) }
+    assert(changed.size === 1, s"findAndModify changed $rows")
+    val (id, v) = changed.head
+    assert(Set("a", "b")(id))
+    assert(after.getAs[String]("_id") === id && after.getAs[Long]("v") === v)
+    assert(v === Map("a" -> 110L, "b" -> 120L)(id))
   }
 
   test("query DSL rejects withAll/exists on _id metadata field") {
@@ -382,7 +401,7 @@ class StoreCrudSpec extends AnyFunSuite {
       .collect().map(r => r.getInt(0) -> r.getInt(1)).toMap
     assert(stable === Map(1 -> 10, 2 -> 25, 4 -> 40))
     // no buffer dirs or stale version dirs may survive any of the three
-    // calls: the only data dir left is the one the current pointer names
+    // calls: the only data dir left is the one _ROLES names
     val ls = Files.list(root.resolve(b.signature).resolve("processed"))
     val entries = try {
       val it = ls.iterator(); val buf = scala.collection.mutable.Buffer[String]()
@@ -391,9 +410,9 @@ class StoreCrudSpec extends AnyFunSuite {
     } finally ls.close()
     val activeName =
       java.nio.file.Paths.get(store.stagePath(b)).getFileName.toString
-    assert(entries.filterNot(_.startsWith("_PTR_")) === Seq(activeName),
+    assert(entries.filterNot(_ == "_ROLES") === Seq(activeName),
       s"orphan buffers: $entries")
-    assert(entries.filterNot(_.startsWith("_PTR_")).forall(!_.startsWith("buffer_")),
+    assert(entries.filterNot(_ == "_ROLES").forall(_.startsWith("v_")),
       s"buffer dir survived: $entries")
   }
 }

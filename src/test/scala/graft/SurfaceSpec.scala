@@ -112,7 +112,7 @@ class SurfaceSpec extends AnyFunSuite {
     store.write(b, Tables.t(spark, TestSession.sf, "region")
       .select(col("r_regionkey"),
         struct(col("r_name").as("name"), array(col("r_name")).as("tags")).as("meta")))
-    val loc = store.stagePath(b) // resolved through the stage pointer
+    val loc = store.stagePath(b) // resolved through the stage's _ROLES file
     try {
       val t = SqlSurface.registerWarehouseTable(spark, b, loc)
       assert(spark.catalog.tableExists(b.signature))
@@ -132,7 +132,7 @@ class SurfaceSpec extends AnyFunSuite {
         "r_regionkey" -> "BIGINT", "r_name" -> "STRING")))))
     store.write(b, Tables.t(spark, TestSession.sf, "region")
       .select("r_regionkey", "r_name"))
-    val loc = store.stagePath(b) // resolved through the stage pointer
+    val loc = store.stagePath(b) // resolved through the stage's _ROLES file
     try {
       val t = SqlSurface.registerWarehouseTable(spark, b, loc)
       assert(spark.catalog.tableExists(b.signature))
