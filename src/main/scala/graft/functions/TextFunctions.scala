@@ -45,7 +45,7 @@ object TextFunctions {
     // languages win ties
 
     def pick(rest: Seq[(String, Column)]): Column = rest match {
-      case (l, s) +: Nil => lit(l)
+      case (l, _) +: Nil => lit(l)
       case (l, s) +: tail =>
         val maxTail = tail.map(_._2).reduce((a, b) => greatest(a, b))
         when(s >= maxTail, lit(l)).otherwise(pick(tail))

@@ -977,9 +977,7 @@ object AnalyticsQueries {
     // literal 1 — a bucket-mapping or merge regression is a hash failure.
     // γ, γ+1, α interpolated from ONE constant into engine AND oracle ----
     "approx9_ddsketch" -> { (s, dir) =>
-      val D6 = org.apache.spark.sql.types.DecimalType(18, 6)
       val g = DdGamma
-      val alpha = (g - 1.0) / (g + 1.0)
       val v = Tables.t(s, dir, "orders")
         .select(col("o_orderpriority").as("grp"),
           col("o_totalprice").cast("double").as("v"))

@@ -680,7 +680,6 @@ object SurfaceQueries {
     // failure: reprocessing duplicates ids, a lost log drops them — the
     // oracle is simply the full table --------------------------------
     "st17_stream_resume" -> { (s, dir) =>
-      import java.nio.file.Files
       val events = s.read.parquet(s"$dir/events.parquet")
       val src = graft.util.Scratch.dir("graft_resume_src")
       val out = graft.util.Scratch.dir("graft_resume_out")

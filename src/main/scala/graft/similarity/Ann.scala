@@ -15,9 +15,10 @@ import graft.functions.VectorMath
 /** Similarity search over an embedding column (`Array[Float]`).
   *
   *  - [[bruteForceTopK]]: exact cosine top-k — broadcast the (small) query
-  *    set against the corpus, rank per query via window row_number (a
-  *    per-query sort; fine while |queries|·|corpus| rows fit a shuffle —
-  *    the LSH/IVF variants below are the scale path past that).
+  *    set against the corpus, rank per query by the bounded `top_k` heap
+  *    ([[rankTopK]]; every query × corpus pair is scored, so it is fine
+  *    while that product is affordable — the LSH/IVF variants below are the
+  *    scale path past that).
   *  - [[lshTopK]]: sign-random-projection LSH — bucket corpus and queries by
   *    hyperplane sign bits, rerank exactly *within* matching buckets. The
   *    scale path: the corpus-side shuffle is on small bucket keys, the
@@ -74,21 +75,34 @@ object Ann {
         (col("pos") + 1).cast("int").as("rank"))
   }
 
+  /** Exact-cosine candidate pairs of the broadcast-queries surfaces
+    * ([[bruteForceTopK]], [[rangeSearch]], [[hardNegatives]], [[lshTopK]],
+    * [[ivfTopK]]) — ONE builder, so their scoring cannot fork: the query
+    * side (q_id, q_vec, `qExtra`, q_nrm) is broadcast against the corpus
+    * side (c_id, c_vec, `cExtra`, c_nrm) under `on`, and each pair is
+    * scored by [[cosinePre]] over the per-row norms — `(q_id, c_id, sim)`.
+    * The extra columns (a bucket, a label, a probed cell) are what `on`
+    * matches; the always-true default is the plain broadcast product. */
+  private def cosinePairs(queries: DataFrame, corpus: DataFrame,
+      qId: String, qVec: String, cId: String, cVec: String,
+      qExtra: Seq[Column] = Nil, cExtra: Seq[Column] = Nil,
+      on: Column = lit(true)): DataFrame = {
+    val q = queries.select(Seq(col(qId).as("q_id"), col(qVec).as("q_vec")) ++
+      qExtra :+ norm(col(qVec)).as("q_nrm"): _*)
+    val c = corpus.select(Seq(col(cId).as("c_id"), col(cVec).as("c_vec")) ++
+      cExtra :+ norm(col(cVec)).as("c_nrm"): _*)
+    c.join(broadcast(q), on).select(col("q_id"), col("c_id"),
+      cosinePre(dot(col("q_vec"), col("c_vec")), col("q_nrm"), col("c_nrm"))
+        .as("sim"))
+  }
+
   /** Exact top-k by cosine: queries × corpus → rank ≤ k.
     * `queries` is expected to be small (broadcast); ties broken by corpus id
     * for determinism. */
   def bruteForceTopK(queries: DataFrame, corpus: DataFrame, k: Int,
       qId: String = "vec_id", qVec: String = "embedding",
-      cId: String = "vec_id", cVec: String = "embedding"): DataFrame = {
-    val q = queries.select(col(qId).as("q_id"), col(qVec).as("q_vec"),
-      norm(col(qVec)).as("q_nrm"))
-    val c = corpus.select(col(cId).as("c_id"), col(cVec).as("c_vec"),
-      norm(col(cVec)).as("c_nrm"))
-    val scored = c.join(broadcast(q))
-      .withColumn("sim",
-        cosinePre(dot(col("q_vec"), col("c_vec")), col("q_nrm"), col("c_nrm")))
-    rankTopK(scored.select("q_id", "c_id", "sim"), k)
-  }
+      cId: String = "vec_id", cVec: String = "embedding"): DataFrame =
+    rankTopK(cosinePairs(queries, corpus, qId, qVec, cId, cVec), k)
 
   /** Exact cosine RADIUS search: every corpus item with `sim >= minSim`
     * per query — the retrieval primitive top-k can't express ("all near
@@ -107,18 +121,10 @@ object Ann {
   def rangeSearch(queries: DataFrame, corpus: DataFrame, minSim: Double,
       qId: String = "vec_id", qVec: String = "embedding",
       cId: String = "vec_id", cVec: String = "embedding",
-      excludeSelf: Boolean = true): DataFrame = {
-    val q = queries.select(col(qId).as("q_id"), col(qVec).as("q_vec"),
-      norm(col(qVec)).as("q_nrm"))
-    val c = corpus.select(col(cId).as("c_id"), col(cVec).as("c_vec"),
-      norm(col(cVec)).as("c_nrm"))
-    c.join(broadcast(q),
-        if (excludeSelf) col("q_id") =!= col("c_id") else lit(true))
-      .withColumn("sim",
-        cosinePre(dot(col("q_vec"), col("c_vec")), col("q_nrm"), col("c_nrm")))
+      excludeSelf: Boolean = true): DataFrame =
+    cosinePairs(queries, corpus, qId, qVec, cId, cVec,
+        on = if (excludeSelf) col("q_id") =!= col("c_id") else lit(true))
       .filter(col("sim") >= minSim)
-      .select("q_id", "c_id", "sim")
-  }
 
   /** Hard-negative mining for contrastive training: per query, the k most
     * cosine-similar corpus items with a DIFFERENT label (the classic
@@ -129,16 +135,10 @@ object Ann {
   def hardNegatives(queries: DataFrame, corpus: DataFrame, k: Int,
       qId: String = "vec_id", qVec: String = "embedding",
       qLabel: String = "label", cId: String = "vec_id",
-      cVec: String = "embedding", cLabel: String = "label"): DataFrame = {
-    val q = queries.select(col(qId).as("q_id"), col(qVec).as("q_vec"),
-      col(qLabel).as("q_label"), norm(col(qVec)).as("q_nrm"))
-    val c = corpus.select(col(cId).as("c_id"), col(cVec).as("c_vec"),
-      col(cLabel).as("c_label"), norm(col(cVec)).as("c_nrm"))
-    val scored = c.join(broadcast(q), col("c_label") =!= col("q_label"))
-      .withColumn("sim",
-        cosinePre(dot(col("q_vec"), col("c_vec")), col("q_nrm"), col("c_nrm")))
-    rankTopK(scored.select("q_id", "c_id", "sim"), k)
-  }
+      cVec: String = "embedding", cLabel: String = "label"): DataFrame =
+    rankTopK(cosinePairs(queries, corpus, qId, qVec, cId, cVec,
+      Seq(col(qLabel).as("q_label")), Seq(col(cLabel).as("c_label")),
+      col("c_label") =!= col("q_label")), k)
 
   /** Sign bits under `planes` deterministic pseudo-random hyperplanes →
     * bucket id (long); coef(p, d) = ((p*31 + d)*2654435761 mod 2^31) / 2^31
@@ -152,16 +152,11 @@ object Ann {
     * Recall < 1 by construction; `planes` trades recall vs bucket size. */
   def lshTopK(queries: DataFrame, corpus: DataFrame, k: Int, planes: Int = 8,
       qId: String = "vec_id", qVec: String = "embedding",
-      cId: String = "vec_id", cVec: String = "embedding"): DataFrame = {
-    val q = queries.select(col(qId).as("q_id"), col(qVec).as("q_vec"),
-      lshBucket(col(qVec), planes).as("bucket"), norm(col(qVec)).as("q_nrm"))
-    val c = corpus.select(col(cId).as("c_id"), col(cVec).as("c_vec"),
-      lshBucket(col(cVec), planes).as("bucket"), norm(col(cVec)).as("c_nrm"))
-    val scored = c.join(broadcast(q), Seq("bucket"))
-      .withColumn("sim",
-        cosinePre(dot(col("q_vec"), col("c_vec")), col("q_nrm"), col("c_nrm")))
-    rankTopK(scored.select("q_id", "c_id", "sim"), k)
-  }
+      cId: String = "vec_id", cVec: String = "embedding"): DataFrame =
+    rankTopK(cosinePairs(queries, corpus, qId, qVec, cId, cVec,
+      Seq(lshBucket(col(qVec), planes).as("q_bucket")),
+      Seq(lshBucket(col(cVec), planes).as("c_bucket")),
+      col("c_bucket") === col("q_bucket")), k)
 
   /** Corpus×corpus batched kNN join: EVERY vector's top-k cosine neighbors
     * against the whole corpus (self excluded) — the op that powers
@@ -198,28 +193,21 @@ object Ann {
   def knnJoin(corpus: DataFrame, centroids: DataFrame, k: Int, nprobe: Int,
       idCol: String = "vec_id", vecCol: String = "embedding",
       centId: String = "cent_id", centVec: String = "cent_vec"): DataFrame = {
-    import graft.functions.GraftFunctions.top_k
     require(k >= 1, s"knnJoin: k must be >= 1, got $k")
     require(nprobe >= 1, s"knnJoin: nprobe must be >= 1, got $nprobe")
     val (assigned, probes) =
       cellJoinSides(corpus, centroids, nprobe, idCol, vecCol, centId, centVec)
     // candidates: co-keyed equi-join on the cell; scored exactly; ranked
-    // by a second bounded heap — the join product feeds the partial
-    // aggregate inside one stage, so it never shuffles. Norms are hoisted
-    // to one per ROW before the join (see cosinePre): the ~n²·nprobe/C
-    // candidate pairs each cost ONE vector fold, not three.
-    assigned.withColumn("c_nrm", norm(col("c_vec")))
+    // by a second bounded heap ([[rankTopK]]) — the join product feeds the
+    // partial aggregate inside one stage, so it never shuffles. Norms are
+    // hoisted to one per ROW before the join (see cosinePre): the
+    // ~n²·nprobe/C candidate pairs each cost ONE vector fold, not three.
+    rankTopK(assigned.withColumn("c_nrm", norm(col("c_vec")))
       .join(probes.withColumn("q_nrm", norm(col("q_vec"))), Seq("cent"))
       .filter(col("q_id") =!= col("c_id"))
       .select(col("q_id"), col("c_id"),
         cosinePre(dot(col("q_vec"), col("c_vec")),
-          col("q_nrm"), col("c_nrm")).as("sim"))
-      .groupBy("q_id")
-      .agg(top_k(struct(col("sim").as("sim"), (-col("c_id")).as("ncid"),
-        col("c_id").as("c_id")), k).as("topk"))
-      .select(col("q_id"), posexplode(col("topk")))
-      .select(col("q_id"), col("col.c_id").as("c_id"), col("col.sim").as("sim"),
-        (col("pos") + 1).cast("int").as("rank"))
+          col("q_nrm"), col("c_nrm")).as("sim")), k)
   }
 
   /** The candidate-pair count of [[knnJoin]]'s cell join — the quantity
@@ -381,7 +369,8 @@ object Ann {
     // broadcast costs anyway
     val (probeRows, probeSchema) =
       collectProbes(queries, centroids, nprobe, qId, qVec, centId, centVec)
-    rankOverProbes(stored, probeRows, probeSchema, k, cellCol, cId, cVec)
+    rankTopK(scoreOverProbes(stored, probeRows, probeSchema,
+      cellCol, cId, cVec), k)
   }
 
   /** The probe side of a pruned IVF serve, derived ON THE DRIVER: per
@@ -430,21 +419,8 @@ object Ann {
     (rows, schema)
   }
 
-  /** Candidate join + exact rerank over an already-collected probe side:
-    * row-filter the stored corpus to the probed cells (the scan-level
-    * prune — a partition-directory prune when `stored` is cell-partitioned
-    * parquet), match each row to the broadcast probes of its cell, exact
-    * cosine, per-query bounded-heap top-k. */
-  private[similarity] def rankOverProbes(stored: DataFrame,
-      probeRows: Array[Row], probeSchema: StructType, k: Int,
-      cellCol: String, cId: String, cVec: String): DataFrame = {
-    val cand = scoreOverProbes(stored, probeRows, probeSchema,
-      cellCol, cId, cVec)
-    rankTopK(cand, k)
-  }
-
   /** The scored-candidate half of a probed serve, shared by the ranked
-    * ([[rankOverProbes]]) and threshold ([[IvfCore.neighborsWithin]])
+    * ([[ivfTopKPruned]]) and threshold ([[IvfCore.neighborsWithin]])
     * consumers: prune the stored corpus to the probed cells, match each
     * stored row to the probes of its cell, exact cosine per (query,
     * candidate) — `(q_id, c_id, sim)`. The probe side is already on the
@@ -478,7 +454,7 @@ object Ann {
   }
 
   /** Distinct probed cells, coerced to the stored cell column's exact
-    * type (see the CAST note in [[rankOverProbes]]). */
+    * type (see the CAST note in [[scoreOverProbes]]). */
   private[similarity] def probeCells(probeRows: Array[Row],
       cellType: DataType): Seq[Any] = {
     val probesRaw = probeRows.map(_.getAs[Any]("cent")).distinct
@@ -492,8 +468,10 @@ object Ann {
   }
 
   /** IVF-style: `centroids` (small, broadcast) define cells; every corpus
-    * vector is assigned to its nearest centroid once (narrow projection +
-    * small broadcast join); queries probe their `nprobe` nearest cells. */
+    * vector is assigned to its nearest centroid once and every query to its
+    * `nprobe` nearest cells — each a per-row `probe_cells` explode over the
+    * constant cells array, no join — and the broadcast queries match the
+    * corpus on the cell. */
   def ivfTopK(queries: DataFrame, corpus: DataFrame, centroids: DataFrame,
       k: Int, nprobe: Int = 2,
       qId: String = "vec_id", qVec: String = "embedding",
@@ -503,17 +481,10 @@ object Ann {
     // per-row top-keep cells over the constant cells array — same
     // (d2, cent) rank order as the window formulation, no shuffle
     val cs = cellsCol(centroids, centId, centVec)
-    def assign(df: DataFrame, id: String, vec: String, keep: Int): DataFrame =
-      df.select(df.columns.toIndexedSeq.map(col) :+
-        explode(probe_cells(col(vec), cs, keep).getField("cent")).as("cent"): _*)
-    val c = assign(corpus.select(col(cId).as("c_id"), col(cVec).as("c_vec")),
-      "c_id", "c_vec", 1)
-    val q = assign(queries.select(col(qId).as("q_id"), col(qVec).as("q_vec")),
-      "q_id", "q_vec", nprobe)
-    val scored = c.withColumn("c_nrm", norm(col("c_vec")))
-      .join(broadcast(q.withColumn("q_nrm", norm(col("q_vec")))), Seq("cent"))
-      .withColumn("sim",
-        cosinePre(dot(col("q_vec"), col("c_vec")), col("q_nrm"), col("c_nrm")))
-    rankTopK(scored.select("q_id", "c_id", "sim"), k)
+    def probed(vec: String, keep: Int): Column =
+      explode(probe_cells(col(vec), cs, keep).getField("cent"))
+    rankTopK(cosinePairs(queries, corpus, qId, qVec, cId, cVec,
+      Seq(probed(qVec, nprobe).as("q_cent")), Seq(probed(cVec, 1).as("c_cent")),
+      col("c_cent") === col("q_cent")), k)
   }
 }

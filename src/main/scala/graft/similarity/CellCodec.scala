@@ -3,7 +3,6 @@ package graft.similarity
 import java.nio.file.Paths
 
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -93,8 +92,8 @@ final case class PqCodec(m: Int, k: Int) extends CellCodec {
     Pq.train(rows.select(col(ix.idCol), col("__res")), ix.idCol, "__res",
       m, k, iters = 2)
 
-  // ONE definition of the (sub, cent, cv) codebook row layout — the same
-  // frame Pq's trainer joins against, so load() can't desynchronize
+  // ONE definition of the (sub, cent, cv) codebook row layout, shared
+  // with Pq, so what load() reads can't desynchronize from what was written
   override def persist(ix: IvfCore[_], books: Pq.Codebooks): Unit = {
     Pq.codebookFrame(ix.spark, books.cents)
       .coalesce(1).write.mode("overwrite").parquet(booksPath(ix))
@@ -139,28 +138,22 @@ final case class PqCodec(m: Int, k: Int) extends CellCodec {
         col("cv").cast("array<double>"), (a, b) => a - b), books).as("__dtab"))
     // ADC scan: ONLY (cell, id, code) of the probed partitions — the
     // parquet reader prunes the raw-vector column out of this stage
-    val candidates = pruned.select(col(ix.idCol).as("c_id"), col("code"),
+    val scored = pruned.select(col(ix.idCol).as("c_id"), col("code"),
         explode(BroadcastLookup.join(probes, "__cell", col(ix.cellCol)))
           .as("__p"))
       .select(col("__p.q_id").as("q_id"), col("c_id"),
         graft.functions.VectorExprFunctions
-          .pq_adc(col("code"), col("__p.__dtab")).as("__adc"))
-      .withColumn("__cr", row_number().over(
-        Window.partitionBy("q_id").orderBy(col("__adc"), col("c_id"))))
-      .filter(col("__cr") <= rerank)
-      .select("q_id", "c_id")
-    // exact rerank: |queries|·rerank raw vectors, equi-joined from the
-    // probed partitions after the cut; one vector per query id
+          .pq_adc(col("code"), col("__p.__dtab")).as("adc"))
+    // exact rerank ([[Pq.cutAndRerank]]): |queries|·rerank raw vectors from
+    // the probed partitions; the query vectors (one per query id) attach
+    // through a broadcast-variable lookup, so no broadcast job runs
     val qVecs = ix.spark.createDataFrame(
         java.util.Arrays.asList(probeRows.distinctBy(_.get(0)): _*), probeSchema)
       .select(col("q_id"), col("q_vec").cast("array<double>").as("q_vec"))
-    candidates
-      .join(pruned.select(col(ix.idCol).as("c_id"),
-        col(ix.vecCol).cast("array<double>").as("__cvec")), Seq("c_id"))
-      .select(col("q_id"), col("c_id"), col("__cvec"),
-        explode(BroadcastLookup.join(qVecs, "q_id", col("q_id"))).as("__q"))
-      .select(col("q_id"), col("c_id"),
-        graft.functions.VectorFunctions.cosine(col("__q.q_vec"),
-          col("__cvec")).as("sim"))
+    Pq.cutAndRerank(scored, rerank, pruned.select(col(ix.idCol).as("c_id"),
+        col(ix.vecCol).cast("array<double>").as("c_vec"))) {
+      _.select(col("*"),
+        inline(BroadcastLookup.join(qVecs, "q_id", col("q_id"))))
+    }
   }
 }

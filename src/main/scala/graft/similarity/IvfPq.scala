@@ -1,10 +1,7 @@
 package graft.similarity
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-
-import graft.functions.VectorFunctions._
 
 /** IVF-PQ: coarse inverted-file cells with product quantization of the
   * RESIDUALS (vector − its cell centroid) — the composition production ANN
@@ -76,26 +73,13 @@ object IvfPq {
       .join(broadcast(q), Seq("cent"))
       .withColumn("adc", graft.functions.VectorExprFunctions
         .pq_adc(col("code"), col("dtab")))
-    // exhaustive rerank keeps every candidate — skip the corpus-candidate
-    // rank window entirely (see [[Pq.adcTopK]]; guide §2.4)
-    val candidates =
-      if (rerank == Int.MaxValue) scored.select("q_id", "c_id")
-      else {
-        val wAdc = Window.partitionBy("q_id").orderBy(col("adc"), col("c_id"))
-        scored
-          .withColumn("crank", row_number().over(wAdc))
-          .filter(col("crank") <= rerank)
-          .select("q_id", "c_id")
-      }
-    // exact rerank: vectors fetched AFTER the cut (|queries|·rerank rows);
-    // the final k-rank is the bounded heap (Ann.rankTopK) — reranked
-    // candidates never cross a shuffle, only n_q·k ranked rows do
-    val reranked = candidates
-      .join(corpus.select(col(cId).as("c_id"),
-        col(cVec).cast("array<double>").as("c_vec")), Seq("c_id"))
-      .join(broadcast(queries.select(col(qId).as("q_id"),
-        col(qVec).cast("array<double>").as("q_vec"))), Seq("q_id"))
-      .withColumn("sim", cosine(col("q_vec"), col("c_vec")))
-    Ann.rankTopK(reranked.select("q_id", "c_id", "sim"), k)
+    // cut + exact rerank ([[Pq.cutAndRerank]]); the final k-rank is the
+    // bounded heap (Ann.rankTopK) — reranked candidates never cross a
+    // shuffle, only n_q·k ranked rows do
+    val vectors = corpus.select(col(cId).as("c_id"),
+      col(cVec).cast("array<double>").as("c_vec"))
+    Ann.rankTopK(Pq.cutAndRerank(scored, rerank, vectors)(
+      _.join(broadcast(queries.select(col(qId).as("q_id"),
+        col(qVec).cast("array<double>").as("q_vec"))), Seq("q_id"))), k)
   }
 }

@@ -4,8 +4,6 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.functions.VectorFunctions._
-
 /** Lloyd's k-means trainer for the IVF coarse quantizer ([[Ann.ivfTopK]]'s
   * `centroids` input) — the piece that turns caller-supplied cells into a
   * trained index.

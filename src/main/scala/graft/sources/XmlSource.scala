@@ -4,7 +4,7 @@ import javax.xml.stream.{XMLInputFactory, XMLStreamConstants}
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.{Dataset, Encoders}
 
 /** S3: config-driven XML→record source — same option surface as the
   * reference's XML parser (`aleph2_analytic_services_hadoop/.../services/

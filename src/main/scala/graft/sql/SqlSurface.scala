@@ -2,7 +2,6 @@ package graft.sql
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 import graft.model.{Bucket, TypeMapping}
 
@@ -80,7 +79,7 @@ object SqlSurface {
     * `spark.table("<signature>")` replaces `getRddInput`, an ordinary
     * DataFrame write through the store replaces `emitRdd` — no shim
     * process, no RDD serialization hop. Returns the registered names. */
-  def exposeBuckets(spark: SparkSession, store: graft.store.BucketStore,
+  def exposeBuckets(store: graft.store.BucketStore,
       buckets: Seq[Bucket], stage: String = "processed"): Seq[String] =
     buckets.map { b =>
       store.read(b, stage).createOrReplaceTempView(b.signature)
@@ -106,7 +105,7 @@ object SqlSurface {
   }
 
   /** Q3 `name_mappings` analog: view with renamed columns. */
-  def renamedView(spark: SparkSession, df: DataFrame, viewName: String,
+  def renamedView(df: DataFrame, viewName: String,
       mappings: Map[String, String]): Unit = {
     val renamed = mappings.foldLeft(df) { case (d, (from, to)) =>
       d.withColumnRenamed(from, to)

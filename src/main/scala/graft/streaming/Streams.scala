@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -55,7 +53,7 @@ object Streams {
     * `None` keeps the session setting. */
   private def withStreamConf[A](spark: SparkSession,
       statePartitions: Option[Int],
-      stateStoreProvider: Option[String] = None)(body: => A): A = {
+      stateStoreProvider: Option[String])(body: => A): A = {
     statePartitions.foreach(k =>
       require(k > 0, s"statePartitions must be positive: $k"))
     val overrides =

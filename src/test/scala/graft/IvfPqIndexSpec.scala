@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.similarity.{Ann, IvfCore, KMeans, PqCodec}
+import graft.similarity.{Ann, IvfCore, IvfPq, KMeans, Pq, PqCodec}
 import graft.util.Scratch
 
 /** The PQ-coded maintained index (q:ann16): exhaustive config is exact
@@ -76,6 +76,21 @@ class IvfPqIndexSpec extends AnyFunSuite {
     val touched = served.inputFiles.filter(all.contains).toSet
     assert(touched.nonEmpty && touched.size < all.size,
       s"nprobe=1 read ${touched.size} of ${all.size} index files — no prune")
+  }
+
+  test("bounded nprobe/rerank: the maintained serve returns the static " +
+      "IvfPq.adcTopK rows under the same cells and codebook training") {
+    val cents = KMeans.train(emb, "vec_id", "embedding", k = 8, iters = 2)
+    val idx = newIndex()
+    idx.build(emb, cents)
+    val q = emb.filter(col("vec_id") < 8)
+    val res = IvfPq.residuals(emb, "vec_id", "embedding", cents)
+    val books = Pq.train(res, "id", "res", m = 8, k = 16, iters = 2)
+    val static = pairs(IvfPq.adcTopK(q, Pq.encode(res, "res", books), emb,
+      cents, books, k = 3, nprobe = 2, rerank = 16))
+    assert(static.size === 24)
+    assert(pairs(idx.serve(q, cents, k = 3, nprobe = 2,
+      rerank = 16)) === static)
   }
 
   test("drift and replay guards fail BEFORE any write; a poisoned append " +

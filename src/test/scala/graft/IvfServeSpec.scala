@@ -47,6 +47,21 @@ class IvfServeSpec extends AnyFunSuite {
       s"a warm one-vector serve ran more than 3 jobs: $counts")
   }
 
+  test("a warm one-vector bounded-rerank PQ serve runs at most 5 jobs") {
+    // the ADC cut's exchange and the post-cut vector join add AQE stage
+    // jobs to the exhaustive serve's 3: the query collect plus 4 stages
+    val cents = KMeans.train(emb, "vec_id", "embedding", k = 8, iters = 2)
+    val pq = new IvfCore(spark, Scratch.dir("graft_serve_pq_bounded"), 8,
+      PqCodec(m = 8, k = 16))
+    pq.build(emb, cents)
+    def serve(q: DataFrame) =
+      pq.serve(q, cents, k = 3, nprobe = 2, rerank = 16).collect()
+    serve(emb.filter(col("vec_id") === 1L)) // warm
+    val (rows, jobs) = jobsDuring(serve(emb.filter(col("vec_id") === 2L)))
+    assert(rows.length === 3)
+    assert(jobs <= 5, s"a warm bounded PQ serve ran $jobs jobs")
+  }
+
   /** Rows `(id, vec)` as a frame whose vector column has `elem` elements. */
   private def vecFrame(rows: Seq[(Long, Seq[Double])], id: String, vec: String,
       elem: DataType): DataFrame =

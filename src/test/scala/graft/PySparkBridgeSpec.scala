@@ -32,7 +32,7 @@ class PySparkBridgeSpec extends AnyFunSuite {
 
     // in-session catalog half (the original X5 analog): the signature
     // resolves as a table for a PySpark REPL sharing this session
-    SqlSurface.exposeBuckets(spark, store, Seq(bucket))
+    SqlSurface.exposeBuckets(store, Seq(bucket))
     assert(spark.table(bucket.signature).count() === 1000)
 
     // cross-process half: manifest → python resolves the same signature

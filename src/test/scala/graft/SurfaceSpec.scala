@@ -150,7 +150,7 @@ class SurfaceSpec extends AnyFunSuite {
     val bn = Bucket("/py/nation")
     store.write(br, Tables.t(spark, TestSession.sf, "region"))
     store.write(bn, Tables.t(spark, TestSession.sf, "nation"))
-    val names = SqlSurface.exposeBuckets(spark, store, Seq(br, bn))
+    val names = SqlSurface.exposeBuckets(store, Seq(br, bn))
     assert(names === Seq("py_region", "py_nation"))
     // the shim contract, natively: table read + cross-bucket SQL join
     assert(spark.table("py_region").count() === 5)
