@@ -227,7 +227,7 @@ class IvfCore[C <: CellCodec](val spark: SparkSession, val root: String,
     val model = codec.load(this)
     val (probeRows, probeSchema) = Ann.collectProbes(
       queries, centroids, nprobe, idCol, vecCol, centId, centVec)
-    // cell type from the PINNED schema (two small files), never from a
+    // cell type from the PINNED schema (one small file), never from a
     // read() plan — a file index over every data dir per serve would be
     // O(store) Spark-driver metadata I/O. The probed cells must carry the
     // stored type exactly, or xxhash64 would route to other partitions

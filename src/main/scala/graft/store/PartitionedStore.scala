@@ -4,6 +4,7 @@ import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Manifest-committed, hash-partitioned keyed state — the partitioned-
   * rewrite upgrade path SCALE.md §5 names for maintained aggregates/views
@@ -12,8 +13,9 @@ import org.apache.spark.sql.functions._
   * O(touched partitions)).
   *
   * Layout: `root/manifest` is one small text file mapping partition id →
-  * its physical data dirs (`<id> <dir>[;<dir>…]` per line, plus a header
-  * row naming the partition count). Data dirs are NEVER renamed or mutated
+  * its physical data dirs (`<id> <dir>[;<dir>…]` per line, after header
+  * rows naming the partition count, the version and the state schema as
+  * `schema <json>`). Data dirs are NEVER renamed or mutated
   * while addressable — a refresh writes NEW dirs for the touched
   * partitions only (replacing their lists), an [[append]] ADDS one dir per
   * touched partition (O(delta) write I/O; the next refresh compacts), and
@@ -46,7 +48,8 @@ import org.apache.spark.sql.functions._
   *
   * Time travel (AS OF): every commit also writes an IMMUTABLE
   * `manifest.v<N>` copy before swapping the current pointer, so
-  * [[readAsOf]] resolves any retained version's exact partition map — the
+  * [[readAsOf]] resolves any retained version's exact partition map and
+  * the schema it was committed under, from that one file — the
   * lakehouse feature that makes a snapshot diff consumable without keeping
   * both tables around (diff(asOf n, asOf n+1) IS the committed changeset;
   * the spec pins that against the cdc-style anti-join). `retainVersions`
@@ -58,7 +61,7 @@ import org.apache.spark.sql.functions._
   * Schema evolution ([[evolve]]): additive only — new columns append
   * NULLABLE, committed like a refresh; untouched partitions' parquet is
   * never rewritten (the explicit read schema fills missing columns with
-  * NULL), and per-evolution `schema.v<n>.json` files keep every retained
+  * NULL), and the schema line every manifest carries keeps each retained
   * version decodable with the schema in force at its commit.
   *
   * Writer guard: commits carry a version CAS — each commit records the
@@ -99,7 +102,7 @@ final class PartitionedStore(val spark: SparkSession, val root: String,
   val PartCol = "__kp"
 
   /** Test-only fault-injection seam: invoked after each ordered step of a
-    * commit (`dataWritten`, `casChecked`, `linkedManifest`, `schemaStep`,
+    * commit (`dataWritten`, `casChecked`, `linkedManifest`,
     * `pointerSwapped`) so FaultInjectionSpec can snapshot the exact
     * on-disk state a crash at that point would leave — or throw, to
     * exercise the graceful-teardown path at that step. No-op in
@@ -108,38 +111,6 @@ final class PartitionedStore(val spark: SparkSession, val root: String,
 
   private def rootPath: Path = Paths.get(root)
   private def manifestPath: Path = rootPath.resolve("manifest")
-  private def schemaPath: Path = rootPath.resolve("schema.json")
-
-  private def readSchemaFile(p: Path): org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.types.DataType
-      .fromJson(new String(Files.readAllBytes(p), "UTF-8"))
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
-
-  /** Small-file write with the same atomicity discipline as the manifest,
-    * so a racing reader sees the old bytes or the new, never a truncated
-    * file. */
-  private def writeFileAtomic(p: Path, body: Array[Byte]): Unit =
-    Commit.replaceFile(p, ".tmp", body)
-
-  /** State schema as persisted at init. Every read supplies it explicitly:
-    * whether Spark emits a schema-bearing parquet file for an EMPTY write
-    * varies with the plan shape (an empty LocalRelation writes one, an
-    * empty aggregate may write none), so schema inference over a fresh or
-    * sparsely-populated store would be flaky — and a pinned schema also
-    * freezes the contract against inference drift across refreshes.
-    *
-    * Once a manifest exists, the AUTHORITATIVE source is the newest
-    * `schema.v<m>.json` with m ≤ the committed version, NOT the
-    * `schema.json` pointer: [[evolve]] writes the versioned schema BEFORE
-    * its manifest swap and the pointer after, so a crash in that window
-    * must not leave a committed evolution invisible to read()/refresh()
-    * while readAsOf(version()) already resolves it. `schema.json` remains
-    * the bootstrap/compat source for a store with no versioned files. */
-  private def storedSchema: org.apache.spark.sql.types.StructType = {
-    require(Files.exists(schemaPath), s"store at $root not initialized")
-    if (Files.exists(manifestPath)) schemaAsOf(parseManifest(manifestPath)._1)
-    else readSchemaFile(schemaPath)
-  }
 
   /** The partition id of a row, as a Catalyst column — same expression for
     * state and delta, so both sides agree on routing by construction. */
@@ -151,31 +122,13 @@ final class PartitionedStore(val spark: SparkSession, val root: String,
   private def versionedManifestPath(n: Int): Path =
     rootPath.resolve(s"manifest.v$n")
 
-  private def versionedSchemaPath(n: Int): Path =
-    rootPath.resolve(s"schema.v$n.json")
-
-  private def listVersionedSchemas(): Seq[Path] =
-    Commit.list(rootPath).filter(named(VersionedSchema))
-
   private def named(pattern: String)(p: Path): Boolean =
     p.getFileName.toString.matches(pattern)
 
-  /** The schema in force at `version`: the newest `schema.v<m>.json` with
-    * m ≤ version ([[evolve]] writes one per evolution; [[refresh]] writes
-    * none, so versions between evolutions resolve to the last one).
-    * Schema files are a few hundred bytes × evolution count — never
-    * data-sized — so they are retained for the store's whole lifetime
-    * and every retained manifest version stays decodable. */
-  private def schemaAsOf(version: Int): org.apache.spark.sql.types.StructType = {
-    val m = listVersionedSchemas()
-      .map(_.getFileName.toString.stripPrefix("schema.v").stripSuffix(".json").toInt)
-      .filter(_ <= version)
-    if (m.isEmpty) readSchemaFile(schemaPath) // pre-versioning store
-    else readSchemaFile(versionedSchemaPath(m.max))
-  }
-
-  private def manifestBody(entries: Map[Int, String], version: Int): String =
-    (Seq(s"nPartitions $nPartitions", s"version $version") ++
+  private def manifestBody(entries: Map[Int, String], version: Int,
+      schemaJson: String): String =
+    (Seq(s"nPartitions $nPartitions", s"version $version",
+      s"schema $schemaJson") ++
       entries.toSeq.sortBy(_._1).map { case (i, d) => s"$i $d" })
       .mkString("", "\n", "\n")
 
@@ -185,12 +138,12 @@ final class PartitionedStore(val spark: SparkSession, val root: String,
     * rename-based move cannot arbitrate — POSIX rename silently replaces
     * even under ATOMIC_MOVE), so of two writer PROCESSES racing the same
     * version, exactly one creates `manifest.v<N>` and the other fails
-    * HERE, loudly, before it can touch the version's schema file or
-    * last-write-win the pointer swap. A crash between this link and the
-    * pointer swap leaves an orphan `manifest.v<N>` that version() (read
-    * from the pointer) never acknowledges and that BLOCKS the next commit
-    * at this version with the same loud error (its message names the
-    * remediation: delete the unacknowledged orphan). */
+    * HERE, loudly, before it can last-write-win the pointer swap. A crash
+    * between this link and the pointer swap leaves an orphan
+    * `manifest.v<N>` that version() (read from the pointer) never
+    * acknowledges and that BLOCKS the next commit at this version with the
+    * same loud error (its message names the remediation: delete the
+    * unacknowledged orphan). */
   private def linkVersionedManifest(body: String, version: Int): Unit = {
     val tmpV = rootPath.resolve(s"manifest.vtmp${System.nanoTime()}")
     Files.write(tmpV, body.getBytes("UTF-8"))
@@ -212,9 +165,10 @@ final class PartitionedStore(val spark: SparkSession, val root: String,
   private def swapPointer(body: String): Unit =
     Commit.replaceFile(manifestPath, "manifest.tmp", body.getBytes("UTF-8"))
 
-  private def writeManifest(entries: Map[Int, String], version: Int): Unit = {
+  private def writeManifest(entries: Map[Int, String], version: Int,
+      schemaJson: String): Unit = {
     Files.createDirectories(rootPath)
-    val body = manifestBody(entries, version)
+    val body = manifestBody(entries, version, schemaJson)
     linkVersionedManifest(body, version)
     swapPointer(body)
   }
@@ -226,25 +180,34 @@ final class PartitionedStore(val spark: SparkSession, val root: String,
   private def entryDirs(entry: String): Seq[String] =
     entry.split(";").toSeq
 
-  private def parseManifest(p: Path): (Int, Map[Int, String]) = {
+  private def parseManifest(p: Path): Version = {
     val lines = new String(Files.readAllBytes(p), "UTF-8")
       .split("\n").filter(_.nonEmpty)
     require(lines.head == s"nPartitions $nPartitions",
       s"manifest header '${lines.head}' does not match nPartitions=$nPartitions " +
         "— the store was initialized with a different partition count")
-    val (verLines, entryLines) = lines.tail.partition(_.startsWith("version "))
-    val ver = verLines.headOption.map(_.substring("version ".length).toInt)
-      .getOrElse(0)
-    (ver, entryLines.map { l =>
+    val (entryLines, headers) = lines.tail.partition(_.head.isDigit)
+    def header(key: String) = headers.find(_.startsWith(s"$key "))
+      .getOrElse(throw new IllegalArgumentException(s"manifest $p has no $key line"))
+      .substring(key.length + 1)
+    Version(header("version").toInt, header("schema"), entryLines.map { l =>
       val sp = l.indexOf(' ')
       l.substring(0, sp).toInt -> l.substring(sp + 1)
     }.toMap)
   }
 
+  /** The version the `manifest` pointer names — None before [[init]]. */
+  private def committed(): Option[Version] =
+    if (Files.exists(manifestPath)) Some(parseManifest(manifestPath)) else None
+
+  private def current(): Version = {
+    val v = committed()
+    require(v.nonEmpty, s"store at $root not initialized")
+    v.get
+  }
+
   /** Current partition → data-dir map (empty before [[init]]). */
-  def manifest(): Map[Int, String] =
-    if (!Files.exists(manifestPath)) Map.empty
-    else parseManifest(manifestPath)._2
+  def manifest(): Map[Int, String] = committed().fold(Map.empty[Int, String])(_.entries)
 
   /** Per-partition data-dir count — the fragmentation metric an [[append]]
     * grows and a [[refresh]] collapses back to 1. Exposed so compaction
@@ -255,32 +218,37 @@ final class PartitionedStore(val spark: SparkSession, val root: String,
     manifest().map { case (i, e) => i -> entryDirs(e).size }
 
   /** The current committed version — 1 after [[init]], +1 per [[refresh]]. */
-  def version(): Int = {
-    require(Files.exists(manifestPath), s"store at $root not initialized")
-    parseManifest(manifestPath)._1
-  }
+  def version(): Int = current().number
 
   /** The pinned schema currently in force — the cheap metadata accessor
-    * (two small files) for callers that need column types WITHOUT
+    * (one small file) for callers that need column types WITHOUT
     * planning a read over every data dir ([[graft.similarity.IvfCore]]
     * resolves its cell type per serve through this). */
-  def schema: org.apache.spark.sql.types.StructType = storedSchema
+  def schema: StructType = current().schema
 
   private def dirFor(entry: String): String =
     rootPath.resolve(entry).toString
 
   // ---- read -------------------------------------------------------------
 
-  /** The whole maintained state (union of every partition's dir).
-    * Distinct dirs only: empty partitions SHARE one schema-carrying empty
-    * dir, and listing a shared dir once per partition would duplicate any
-    * rows it held. */
-  def read(): DataFrame = {
-    val m = manifest()
-    require(m.nonEmpty, s"store at $root not initialized")
-    spark.read.schema(storedSchema)
-      .parquet(m.values.toSeq.flatMap(entryDirs)
+  /** Scan the given partitions of one version under that version's own
+    * schema. Every read supplies the schema explicitly: whether Spark emits
+    * a schema-bearing parquet file for an EMPTY write varies with the plan
+    * shape (an empty LocalRelation writes one, an empty aggregate may write
+    * none), so schema inference over a fresh or sparsely-populated store
+    * would be flaky — and a pinned schema also freezes the contract against
+    * inference drift across refreshes. Distinct dirs only: empty partitions
+    * SHARE one schema-carrying empty dir, and listing a shared dir once per
+    * partition would duplicate any rows it held. */
+  private def scan(v: Version, ids: Iterable[Int]): DataFrame =
+    spark.read.schema(v.schema)
+      .parquet(ids.toSeq.flatMap(i => entryDirs(v.entries(i)))
         .distinct.sorted.map(dirFor): _*)
+
+  /** The whole maintained state (union of every partition's dir). */
+  def read(): DataFrame = {
+    val v = current()
+    scan(v, v.entries.keys)
   }
 
   /** Time-travel read: the store EXACTLY as committed at `version` — the
@@ -289,7 +257,9 @@ final class PartitionedStore(val spark: SparkSession, val root: String,
     * `retainVersions` versions. A version outside the retention window (or
     * never committed) fails loudly; so does an orphaned versioned file
     * from a crash between the two manifest writes (it is newer than the
-    * current pointer acknowledges). */
+    * current pointer acknowledges). The rows decode under the schema that
+    * version's own manifest names, so time travel never shows a column
+    * before it existed. */
   def readAsOf(version: Int): DataFrame = {
     val p = versionedManifestPath(version)
     require(Files.exists(p),
@@ -297,22 +267,19 @@ final class PartitionedStore(val spark: SparkSession, val root: String,
         s"committed, or reclaimed by the retainVersions=$retainVersions policy")
     require(version <= this.version(),
       s"version $version was never committed (current: ${this.version()})")
-    val (_, m) = parseManifest(p)
-    spark.read.schema(schemaAsOf(version))
-      .parquet(m.values.toSeq.flatMap(entryDirs)
-        .distinct.sorted.map(dirFor): _*)
+    val v = parseManifest(p)
+    scan(v, v.entries.keys)
   }
 
   /** The requested partitions' rows (refresh-side helper; empty
     * partitions read as empty frames via the shared schema-carrying empty
     * dir written by init). */
   def readPartitions(ids: Seq[Int]): DataFrame = {
-    val m = manifest()
+    val v = committed()
+    val m = v.fold(Map.empty[Int, String])(_.entries)
     require(ids.forall(m.contains), s"unknown partition ids: ${ids.filterNot(m.contains)}")
     require(ids.nonEmpty, "no partitions requested")
-    spark.read.schema(storedSchema)
-      .parquet(ids.flatMap(i => entryDirs(m(i)))
-        .distinct.sorted.map(dirFor): _*)
+    scan(v.get, ids) // ids ⊆ m is non-empty, so a version was committed
   }
 
   // ---- write ------------------------------------------------------------
@@ -332,7 +299,6 @@ final class PartitionedStore(val spark: SparkSession, val root: String,
     require(!df.columns.contains(PartCol), s"$PartCol is reserved")
     val stamp = s"init${System.nanoTime()}"
     Files.createDirectories(rootPath)
-    writeFileAtomic(schemaPath, df.schema.json.getBytes("UTF-8"))
     val routed = df.withColumn(PartCol, partitionId)
     // one job: repartition BY the id so each partition value lands
     // co-located and emits its own file set under <stamp>/__kp=<i>
@@ -348,11 +314,9 @@ final class PartitionedStore(val spark: SparkSession, val root: String,
       i -> (if (Files.exists(rootPath.resolve(sub))) sub else emptyDir)
     }.toMap
     // overwrite semantics: a re-init starts the lineage over at v1, so any
-    // versioned manifests/schemas from a previous life must not resolve
+    // versioned manifests from a previous life must not resolve
     listVersionedManifests().foreach(Files.deleteIfExists)
-    listVersionedSchemas().foreach(Files.deleteIfExists)
-    writeFileAtomic(versionedSchemaPath(1), df.schema.json.getBytes("UTF-8"))
-    writeManifest(written, version = 1)
+    writeManifest(written, version = 1, df.schema.json)
   }
 
   private def listVersionedManifests(): Seq[Path] =
@@ -392,7 +356,7 @@ final class PartitionedStore(val spark: SparkSession, val root: String,
     * corruption behind an "atomic" switch. Names and data types must match
     * exactly (nested nullability included, which the tree form shows). */
   private def requirePinnedSchema(op: String, df: DataFrame): Unit = {
-    val pinned = storedSchema
+    val pinned = schema
     require(df.schema.map(f => (f.name, f.dataType)) ==
       pinned.map(f => (f.name, f.dataType)),
       s"$op schema does not match the store's pinned schema (adding " +
@@ -408,17 +372,16 @@ final class PartitionedStore(val spark: SparkSession, val root: String,
     * fills columns missing from a file with NULL — so old data dirs decode
     * as "new column = NULL" at zero write cost, the lakehouse additive-
     * evolution contract. [[readAsOf]] earlier versions keeps decoding with
-    * the schema in force AT that commit (`schema.v<n>.json`, written per
-    * evolution), so time travel never shows a column before it existed.
+    * the schema in force AT that commit (each `manifest.v<n>` names its
+    * own), so time travel never shows a column before it existed.
     *
-    * Commit order: the immutable versioned schema lands BEFORE the
-    * manifest swap (a reader that sees the new manifest can always
-    * resolve its schema); the current-schema pointer updates after. The
-    * only transient a racing reader can observe is the OLD schema over
-    * the new manifest — old columns of new dirs, a column-pruned view,
-    * never a decode error. */
+    * Commit order: exactly a refresh's. The widened schema rides in the
+    * new manifest's `schema` line, so it passes the same hard-link arbiter
+    * and becomes visible in the same pointer swap as the dirs that carry
+    * the new column — a reader resolves the old schema over the old dirs
+    * or the new schema over the new ones, never a mix. */
   def evolve(touched: Seq[Int], newState: DataFrame): Unit = {
-    val old = storedSchema
+    val old = schema
     val byName = newState.schema.map(f => f.name -> f).toMap
     old.foreach { f =>
       val nf = byName.getOrElse(f.name, throw new IllegalArgumentException(
@@ -436,16 +399,16 @@ final class PartitionedStore(val spark: SparkSession, val root: String,
   }
 
   private def commitTouched(touched: Seq[Int], newState: DataFrame,
-      evolvedTo: Option[org.apache.spark.sql.types.StructType],
-      appendMode: Boolean): Unit = {
+      evolvedTo: Option[StructType], appendMode: Boolean): Unit = {
     require(touched.nonEmpty, "refresh with no touched partitions")
     require(touched.distinct == touched, "duplicate touched ids")
-    require(Files.exists(manifestPath), s"store at $root not initialized")
-    val (oldVersion, old) = parseManifest(manifestPath)
-    require(old.nonEmpty, s"store at $root not initialized")
+    val prev = current()
+    val (oldVersion, old) = (prev.number, prev.entries)
     require(touched.forall(old.contains), "touched ids outside the store")
+    // an evolution commits its widened schema; every other commit carries
+    // the previous version's schema line over byte for byte
+    val schemaJson = evolvedTo.fold(prev.schemaJson)(_.json)
     val stamp = s"refresh${System.nanoTime()}"
-    var schemaWrittenAt: Option[Int] = None
     var linkedVersion: Option[Int] = None
     // register the stamp as in-flight BEFORE any data lands, and keep it
     // there through this commit's own sweep: a concurrent winner's
@@ -493,13 +456,9 @@ final class PartitionedStore(val spark: SparkSession, val root: String,
         // exactly-one-wins; a cross-process racer that slips past the
         // re-read is caught by writeManifest's hard-link arbiter (exactly
         // one process can CREATE manifest.v<N+1>), closing the
-        // check-to-rename window the re-read alone would leave. The schema
-        // step sits
-        // INSIDE the lock, after the check: a CAS loser must never
-        // overwrite (evolve) or orphan-clear (refresh) the winner's
-        // just-committed schema.v<N+1>.json.
+        // check-to-rename window the re-read alone would leave.
         Commit.lock(rootPath).synchronized {
-          val nowVersion = parseManifest(manifestPath)._1
+          val nowVersion = parseManifest(manifestPath).number
           if (nowVersion != oldVersion)
             throw new java.util.ConcurrentModificationException(
               s"concurrent commit detected on store at $root: read version " +
@@ -508,13 +467,10 @@ final class PartitionedStore(val spark: SparkSession, val root: String,
                 "version and retry")
           onStep("casChecked")
           // the versioned-manifest link is BOTH the immutable copy and the
-          // cross-process arbiter — it lands BEFORE the schema step so a
-          // cross-process racer that slipped past the re-read dies before it
-          // can overwrite (evolve) or orphan-clear (refresh) the winner's
-          // just-committed schema.v<N+1>.json. The link is reader-invisible
-          // until the pointer swap (readAsOf refuses versions beyond the
-          // pointer), so the swap below stays the one visibility switch.
-          val body = manifestBody(entries, oldVersion + 1)
+          // cross-process arbiter. The link is reader-invisible until the
+          // pointer swap (readAsOf refuses versions beyond the pointer), so
+          // the swap below stays the one visibility switch.
+          val body = manifestBody(entries, oldVersion + 1, schemaJson)
           linkVersionedManifest(body, oldVersion + 1)
           linkedVersion = Some(oldVersion + 1)
           // stale-writer guard (cross-process): the arbiter only arbitrates
@@ -528,7 +484,7 @@ final class PartitionedStore(val spark: SparkSession, val root: String,
           // race-free — a moved pointer proves this writer stalled past the
           // retention window and must abort (teardown removes only its own
           // re-created link, which the sweep had already reclaimed).
-          val postLink = parseManifest(manifestPath)._1
+          val postLink = parseManifest(manifestPath).number
           if (postLink != oldVersion)
             throw new java.util.ConcurrentModificationException(
               s"stale writer on store at $root: read version $oldVersion " +
@@ -539,44 +495,19 @@ final class PartitionedStore(val spark: SparkSession, val root: String,
                 "it loses — re-derive the delta against the current " +
                 "version and retry")
           onStep("linkedManifest")
-          // an evolution's versioned schema is resolvable BEFORE any reader
-          // can see the manifest that needs it; a non-evolve commit clears
-          // any orphan at its version (a crash between an evolution's schema
-          // write and its manifest swap leaves one, which would otherwise
-          // mis-type this commit's time-travel reads)
-          evolvedTo match {
-            case Some(sc) =>
-              // a store initialized by pre-versioning code has no
-              // schema.v1.json; snapshot the current pointer as v1 BEFORE
-              // the first evolution's versioned schema lands, or readAsOf
-              // of pre-evolution versions would fall through schemaAsOf's
-              // pointer fallback and resolve the EVOLVED schema — showing
-              // the added column (as NULL) before it existed
-              if (listVersionedSchemas().isEmpty)
-                writeFileAtomic(versionedSchemaPath(1),
-                  Files.readAllBytes(schemaPath))
-              schemaWrittenAt = Some(oldVersion + 1)
-              writeFileAtomic(
-                versionedSchemaPath(oldVersion + 1), sc.json.getBytes("UTF-8"))
-            case None =>
-              Files.deleteIfExists(versionedSchemaPath(oldVersion + 1)); ()
-          }
-          onStep("schemaStep")
           swapPointer(body) // the single atomic visibility switch
         }
       } catch {
         case e: Throwable =>
           // commit never became visible (the pointer swap is the try's last
           // act): tear the partial refresh dirs down, plus the versioned
-          // manifest and schema IF THIS COMMIT created them — the link
-          // arbiter guarantees they are ours, and a CAS/arbiter loser that
-          // never linked must not delete a winner's files. Manifest pointer
-          // (and so every reader) stays on the old view.
+          // manifest IF THIS COMMIT created it — the link arbiter guarantees
+          // it is ours, and a CAS/arbiter loser that never linked must not
+          // delete a winner's file. Manifest pointer (and so every reader)
+          // stays on the old view.
           Commit.deleteTreeQuiet(rootPath.resolve(stamp))
           linkedVersion.foreach(v =>
             Files.deleteIfExists(versionedManifestPath(v)))
-          schemaWrittenAt.foreach(v =>
-            Files.deleteIfExists(versionedSchemaPath(v)))
           throw e
       }
       // POST-commit maintenance. The commit stands from here on — nothing
@@ -595,12 +526,6 @@ final class PartitionedStore(val spark: SparkSession, val root: String,
         // is already visible, so even a throwing hook must never trigger the
         // teardown above (which would delete a committed version's files)
         onStep("pointerSwapped")
-        // current-schema pointer: once the manifest swapped, the evolution
-        // is committed and must never be rolled back by the catch above. A
-        // reader between the two swaps sees the old schema over the new
-        // manifest — pruned columns, never a decode error.
-        evolvedTo.foreach(sc =>
-          writeFileAtomic(schemaPath, sc.json.getBytes("UTF-8")))
         // retention sweep (same bounded race with in-flight readers as
         // BucketStore.rewrite's sweep): versions older than the last
         // `retainVersions` lose their manifest.v file, then any stamp dir
@@ -613,7 +538,7 @@ final class PartitionedStore(val spark: SparkSession, val root: String,
           val (stale, retained) = entries.filter(named(VersionedManifest))
             .partition(p =>
               p.getFileName.toString.stripPrefix("manifest.v").toInt < keepFrom)
-          val keep = retained.flatMap(p => parseManifest(p)._2.values)
+          val keep = retained.flatMap(p => parseManifest(p).entries.values)
             .flatMap(entryDirs).map(e => e.split("/")(0)).toSet
           // reclaim candidates = EVERY stamp dir on disk, not just the
           // previous manifest's (whose dirs are still retained at
@@ -711,9 +636,17 @@ object PartitionedStore {
             lit("append batch replays an id already in the index: "),
             col(idCol).cast("string")))))
 
-  // root entry names: the immutable per-version manifests and schemas, and
-  // the stamp dirs init and each commit write their data under
+  /** One committed version as its manifest file records it: the version
+    * number, the state schema's JSON exactly as committed, and the
+    * partition → data-dir map. */
+  private final case class Version(number: Int, schemaJson: String,
+      entries: Map[Int, String]) {
+    lazy val schema: StructType =
+      DataType.fromJson(schemaJson).asInstanceOf[StructType]
+  }
+
+  // root entry names: the immutable per-version manifests, and the stamp
+  // dirs init and each commit write their data under
   private val VersionedManifest = "manifest\\.v\\d+"
-  private val VersionedSchema = "schema\\.v\\d+\\.json"
   private val StampDir = "(init|refresh)\\d+"
 }

@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.types.StructType
 
 import graft.pipeline.{Pipeline, PipelineStage}
@@ -71,6 +71,22 @@ object Streams {
     }
   }
 
+  /** Run the query `writer` configures to completion: checkpoint at
+    * `ckpt`, `Trigger.AvailableNow`, start, await — under
+    * [[withStreamConf]]. `writer` is built inside the conf override, so
+    * any frame it derives sees the same session settings as the run. */
+  private def runAvailableNow(spark: SparkSession, ckpt: String,
+      statePartitions: Option[Int] = None,
+      stateStoreProvider: Option[String] = None)(
+      writer: => DataStreamWriter[Row]): Unit =
+    withStreamConf(spark, statePartitions, stateStoreProvider) {
+      writer
+        .option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow())
+        .start()
+        .awaitTermination()
+    }
+
   /** File-based stream over parquet path(s) with a known schema.
     *
     * FileStreamSource requires its basePath to be a directory; a
@@ -125,14 +141,8 @@ object Streams {
       statePartitions: Option[Int] = None,
       stateStoreProvider: Option[String] = None): DataFrame = {
     val spark = stream.sparkSession
-    withStreamConf(spark, statePartitions, stateStoreProvider) {
-      val q = transform(stream).writeStream
-        .format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+    runAvailableNow(spark, ckpt, statePartitions, stateStoreProvider) {
+      transform(stream).writeStream.format("parquet").option("path", out)
     }
     spark.read.parquet(out)
   }
@@ -144,15 +154,12 @@ object Streams {
     val spark = stream.sparkSession
     val out = scratchDir("graft_stream_enrich")
     val ckpt = scratchDir("graft_stream_ckpt")
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+    runAvailableNow(spark, ckpt) {
+      stream.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
         Pipeline.run(batch, stages)
           .write.mode("append").parquet(out)
       }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    }
     spark.read.parquet(out)
   }
 
@@ -180,15 +187,11 @@ object Streams {
       statePartitions: Option[Int] = None,
       stateStoreProvider: Option[String] = None)(
       f: (DataFrame, Long) => Unit): Unit = {
-    val spark = stream.sparkSession
     val ckpt = scratchDir("graft_fb_ckpt")
-    withStreamConf(spark, statePartitions, stateStoreProvider) {
-      val q = stream.writeStream
+    runAvailableNow(stream.sparkSession, ckpt, statePartitions,
+        stateStoreProvider) {
+      stream.writeStream
         .foreachBatch { (batch: DataFrame, id: Long) => f(batch, id) }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
     }
   }
 
@@ -364,17 +367,13 @@ object Streams {
     val out = scratchDir("graft_win_out")
     val ckpt = scratchDir("graft_win_ckpt")
     val aggregated = agg(stream)
-    withStreamConf(spark, statePartitions, stateStoreProvider) {
-      val q = aggregated.writeStream
+    runAvailableNow(spark, ckpt, statePartitions, stateStoreProvider) {
+      aggregated.writeStream
         .outputMode("update")
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           batch.withColumn("__batch", lit(batchId))
             .write.mode("append").parquet(out)
         }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
     }
     val w = Window.partitionBy(keyCols.map(col): _*).orderBy(col("__batch").desc)
     // explicit schema: an empty stream writes no files, and schema

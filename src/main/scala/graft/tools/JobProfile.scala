@@ -8,7 +8,9 @@ import graft.{GraftSession, SparkEntry}
   * run is the reported one) and prints: wall seconds, #jobs, #stages, #tasks,
   * summed executor task time, summed shuffle read/write bytes, summed GC.
   * The counts come from [[QueryMetrics]]; `-v` adds the per-call-site job
-  * walls.
+  * walls. Compare jobs and stages across commits: the byte columns of one
+  * query vary with the queries run before it in the same session (see
+  * [[QueryMetrics]]), so they match only between runs of one query list.
   * Usage: runMain graft.tools.JobProfile [sfDir] [-v] <query>... */
 object JobProfile {
   def main(args: Array[String]): Unit = {

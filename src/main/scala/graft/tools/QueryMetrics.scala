@@ -8,7 +8,15 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
 /** The one Spark listener behind every job, task and stream-state count:
   * [[JobProfile]]'s per-query table, [[BenchScale]]'s st13 state evidence
   * and the specs that pin a job count. Use it through [[QueryMetrics.during]],
-  * which scopes it to one body. */
+  * which scopes it to one body.
+  *
+  * Only the job and stage counts repeat exactly for one plan over the same
+  * data. The byte counters (shuffle read/write, input) move with what ran
+  * earlier in the session: `Ann.knnJoin(k = 3, nprobe = 2)` at sf0.01 on
+  * local[4] wrote 31,379 shuffle bytes after one sequence of other queries
+  * and 31,341 after a shorter one, with equal jobs, stages and results. So
+  * a job or stage count can gate a change; a byte count can only when the
+  * workload that precedes it is pinned too. */
 final class QueryMetrics extends SparkListener {
   private var c = QueryMetrics.Counts()
   // per-job call site and start time, for the -v breakdown (where do 150

@@ -11,7 +11,8 @@ import graft.util.Scratch
 
 /** Crash-point injection over the commit protocols: every documented
   * crash window in [[PartitionedStore]] commits (orphan `manifest.v<N>`,
-  * link-before-schema ordering, sweep-after-visibility), [[IvfIndex]]
+  * an evolution's schema visible only with its manifest,
+  * sweep-after-visibility), [[IvfIndex]]
   * build (meta-invalidated-before-init) and
   * [[graft.similarity.RotatingIvf]] rebuild (build-before-swap,
   * pointer-tmp, promote-before-reclaim) is EXECUTED, not just reasoned
@@ -151,41 +152,55 @@ class FaultInjectionSpec extends AnyFunSuite {
     }
   }
 
-  test("evolve killed between its versioned-schema write and the pointer " +
-      "swap: no phantom column, the orphan schema is cleared by recovery") {
+  test("evolve killed after EACH ordered step: the evolved columns show " +
+      "only once the pointer swap lands, and a plain refresh after the " +
+      "remediation commits the pre-evolution schema") {
     val root = Scratch.dir("graft_fault_evolve")
     val store = newStore(root)
     store.init(kv(40, 1)) // v1
     val c1 = rows(store.read())
-    var snap: Path = null
+    val snaps = scala.collection.mutable.Map[String, Path]()
     store.onStep = s =>
-      if (s == "schemaStep" && snap == null) snap = crashImage(root, "evolve")
+      if (Set("dataWritten", "linkedManifest", "pointerSwapped")(s))
+        snaps.getOrElseUpdate(s, crashImage(root, s))
     store.evolve(0 until 4,
       kv(40, 2).withColumn("extra", lit(null).cast("long"))) // v2 commits
     store.onStep = _ => ()
-    assert(snap != null)
+    assert(snaps.keySet === Set("dataWritten", "linkedManifest", "pointerSwapped"))
 
-    val s = newStore(snap.toString)
-    assert(s.version() === 1)
-    // the schema in force is the PRE-evolution one — a reader must never
-    // see the added column before the manifest that carries it
-    assert(s.schema.fieldNames.toSeq === Seq("k", "v"),
-      s"phantom column: ${s.schema.simpleString}")
-    assert(rows(s.read()) === c1)
-    assert(Files.exists(Paths.get(s.root, "schema.v2.json")) &&
-      Files.exists(Paths.get(s.root, "manifest.v2")),
-      "fixture: expected the crashed evolve's orphan pair")
-    // remediation (delete the orphan manifest), then a PLAIN refresh at
-    // version 2 must clear the crashed evolution's orphan schema — or
-    // this commit's time-travel reads would be mis-typed
-    Files.delete(Paths.get(s.root, "manifest.v2"))
-    s.refresh(0 until 4, kv(40, 5))
-    assert(s.version() === 2)
-    assert(!Files.exists(Paths.get(s.root, "schema.v2.json")),
-      "recovery left the crashed evolution's schema.v2 to mis-type readAsOf(2)")
-    assert(s.schema.fieldNames.toSeq === Seq("k", "v"))
-    assert(s.readAsOf(2).schema.fieldNames.toSeq === Seq("k", "v"))
-    assert(rows(s.readAsOf(2)) === rows(kv(40, 5)))
+    for (step <- Seq("dataWritten", "linkedManifest")) {
+      val s = newStore(snaps(step).toString)
+      assert(s.version() === 1, s"$step: the evolution was acknowledged")
+      // the schema in force is the PRE-evolution one — a reader must never
+      // see the added column before the manifest that carries it
+      for (sc <- Seq(s.schema, s.read().schema, s.readAsOf(1).schema))
+        assert(sc.fieldNames.toSeq === Seq("k", "v"),
+          s"$step: phantom column: ${sc.simpleString}")
+      assert(rows(s.read()) === c1)
+      intercept[IllegalArgumentException] { s.readAsOf(2) }
+      val orphan = Paths.get(s.root, "manifest.v2")
+      assert(Files.exists(orphan) === (step == "linkedManifest"),
+        s"$step fixture: the orphan manifest.v2 is the link's alone")
+      // remediation (delete the orphan manifest, if the crash left one),
+      // then a PLAIN refresh at version 2 commits the pre-evolution schema
+      Files.deleteIfExists(orphan)
+      s.refresh(0 until 4, kv(40, 5))
+      assert(s.version() === 2)
+      assert(s.schema.fieldNames.toSeq === Seq("k", "v"))
+      assert(s.readAsOf(2).schema.fieldNames.toSeq === Seq("k", "v"))
+      assert(rows(s.readAsOf(2)) === rows(kv(40, 5)))
+    }
+
+    // -- killed after the pointer swap: the evolution IS committed ---------
+    locally {
+      val s = newStore(snaps("pointerSwapped").toString)
+      assert(s.version() === 2)
+      assert(s.schema.fieldNames.toSeq === Seq("k", "v", "extra"))
+      assert(s.read().schema.fieldNames.toSeq === Seq("k", "v", "extra"))
+      assert(s.readAsOf(2).schema.fieldNames.toSeq === Seq("k", "v", "extra"))
+      assert(s.readAsOf(1).schema.fieldNames.toSeq === Seq("k", "v"))
+      assert(rows(s.readAsOf(1)) === c1)
+    }
   }
 
   test("GRACEFUL failure at each step (hook throws): teardown removes only " +

@@ -236,7 +236,18 @@ class PartitionedRollupSpec extends AnyFunSuite {
     val root = Scratch.dir("graft_pstore")
     val ps = new PartitionedStore(spark, root, Seq("k"), 8,
       retainVersions = 4)
+    // each version's schema rides in its own manifest: the root never
+    // holds a separate schema file
+    def assertNoSchemaFile(after: String): Unit = {
+      import scala.jdk.CollectionConverters._
+      val s = Files.list(Paths.get(root))
+      val names = try s.iterator().asScala.map(_.getFileName.toString).toList
+        finally s.close()
+      assert(!names.exists(_.startsWith("schema")),
+        s"schema file at the root after $after: $names")
+    }
     ps.init(state(Seq((1L, 10L), (2L, 20L), (3L, 30L), (4L, 40L)))) // v1
+    assertNoSchemaFile("init")
     // v2: EVOLVE — add nullable w, rewriting only keys-1,2's partitions
     val touched = ps.touchedBy(Seq(Tuple1(1L), Tuple1(2L)).toDF("k"))
     val evolved = ps.readPartitions(touched).withColumn("w",
@@ -244,6 +255,7 @@ class PartitionedRollupSpec extends AnyFunSuite {
         .otherwise(lit(null).cast("long")))
     ps.evolve(touched, evolved)
     assert(ps.version() === 2)
+    assertNoSchemaFile("evolve")
     // current read: evolved schema everywhere; untouched partitions'
     // parquet was NOT rewritten — their rows surface w = NULL
     assert(ps.read().columns.toSeq === Seq("k", "v", "w"))
@@ -260,11 +272,12 @@ class PartitionedRollupSpec extends AnyFunSuite {
       ps.refresh(touched, state(Seq((1L, 12L))))
     }
     assert(e.getMessage.contains("does not match"))
-    // ...and a new-shape refresh (v3, no schema version written) keeps
+    // ...and a new-shape refresh (v3, carrying v2's schema over) keeps
     // resolving the evolved schema for both current and as-of reads
     val t2 = ps.touchedBy(Seq(Tuple1(1L)).toDF("k"))
     ps.refresh(t2, ps.readPartitions(t2).withColumn("w",
       when(col("k") === 1, 101L).otherwise(col("w"))))
+    assertNoSchemaFile("refresh")
     assert(ps.readAsOf(3).columns.toSeq === Seq("k", "v", "w"))
     assert(ps.readAsOf(1).columns.toSeq === Seq("k", "v"))
     // guards: dropped column / type change / non-nullable add / no-op
@@ -410,27 +423,6 @@ class PartitionedRollupSpec extends AnyFunSuite {
     assert(ps.version() === 2)
     assert(ps.read().filter(col("v") >= 1000).count() ===
       ps.readPartitions(Seq(0)).count())
-  }
-
-  test("first evolve of a pre-versioning store snapshots v1's schema — " +
-      "time travel never shows a column before it existed") {
-    val root = Scratch.dir("graft_pstore")
-    val ps = new PartitionedStore(spark, root, Seq("k"), 4,
-      retainVersions = 4)
-    ps.init(state(Seq((1L, 10L), (2L, 20L)))) // v1
-    // simulate a store initialized by pre-evolution code: no versioned
-    // schema files exist, only the mutable schema.json pointer
-    Files.deleteIfExists(Paths.get(root, "schema.v1.json"))
-    applyDelta(ps, Seq((1L, 11L))) // v2 — still no versioned schema
-    val touched = ps.touchedBy(Seq(Tuple1(1L)).toDF("k"))
-    ps.evolve(touched, ps.readPartitions(touched)
-      .withColumn("w", lit(null).cast("long"))) // v3 adds w
-    // pre-evolution versions resolve the PRE-evolution schema (without the
-    // first-evolve snapshot they would fall through to the evolved pointer)
-    assert(ps.readAsOf(1).columns.toSeq === Seq("k", "v"))
-    assert(ps.readAsOf(2).columns.toSeq === Seq("k", "v"))
-    assert(ps.readAsOf(3).columns.toSeq === Seq("k", "v", "w"))
-    assert(ps.read().columns.toSeq === Seq("k", "v", "w"))
   }
 
   test("randomized append/refresh/evolve sequences track an in-memory " +
